@@ -60,10 +60,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # One extraction pass and one tokenize pass shared across the gate queries
-# (VERDICT r02 item 8: the gate was running the Python UDF stage 4× per
-# corpus — extract_turns, extract_metrics, tokens_kind_counts and
-# display_roundtrip each re-executed it).  Keyed by session identity so a
-# restarted session never sees a stale plan.
+# (extract_turns, extract_metrics, tokens_kind_counts and
+# display_roundtrip would each re-execute the Python UDF stage otherwise).
+# Keyed by session identity so a restarted session never sees a stale plan.
 _FRAME_CACHE: dict = {}
 
 
@@ -105,7 +104,7 @@ def _extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship extraction, driver-facing projection.
 
     The driver's canonicalizer sorts/hashes columns via pandas and cannot
-    factorize an ``array<struct>`` column (round-1 hard err), so the spans
+    factorize an ``array<struct>`` column, so the spans
     column is serialized to a stable JSON scalar here; ``run_extraction``
     keeps the typed struct column for real consumers.  Value-oracled
     against the committed reference-binary goldens (goldens.py)."""
@@ -148,7 +147,7 @@ def _extract_links_oracle() -> str:
 
 def _link_target_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-target link-graph signals (inlink count, distinct source
-    conversations, anchor consensus) — round 4.  Spark derives the stats
+    conversations, anchor consensus).  Spark derives the stats
     from the live harvest; the DuckDB twin re-derives them entirely from
     the committed engine-golden link rows, so both the harvest AND the
     aggregation/tie-break logic sit under the hash."""
@@ -167,8 +166,8 @@ def _link_target_stats_oracle() -> str:
 
 def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point-integer PageRank over the doc→url link graph — the
-    gate form of the float production scorer (round 5; VERDICT r4 item
-    4).  Integer mass makes the per-round sums order-independent, so
+    gate form of the float production scorer.  Integer mass makes the
+    per-round sums order-independent, so
     the md5 value gate holds bit-exactly; the float twin stays
     pytest-pinned vs an independent dense NumPy iteration."""
     from html_parser_spark.operators.linkrank import link_pagerank_fp
@@ -207,8 +206,8 @@ def _display_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Display-format serialization (token.rs:163-181, 210-222 Display
     impls) over the transcript corpus: per-turn md5 of the concatenated
     Display string, value-oracled against md5 of the REFERENCE BINARY's
-    own Display output (VERDICT r02 item 2 — the former length-only
-    projection let two wrong serializations of equal length pass)."""
+    own Display output (a length-only projection would let two wrong
+    serializations of equal length pass)."""
     tk = _tokenized(spark, _sf_of(sf_dir))
     return tk.select(
         "conv_id",
@@ -225,10 +224,6 @@ def _gate_mh():
     return {"n_hashes": dedup.GATE_N_HASHES, "n_bands": dedup.GATE_N_BANDS}
 
 
-def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_candidates(spark, sf_dir, **_gate_mh())
-
-
 def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard(spark, sf_dir, **_gate_mh())
 
@@ -237,7 +232,7 @@ def _embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with the deterministic planted set unioned in —
     the raw testdata embeddings are i.i.d. (max pairwise cosine 0.513),
     so without planting the gate row hash-matched on an EMPTY result
-    and proved nothing (VERDICT r4 item 1).  Both engines union the
+    and proved nothing.  Both engines union the
     same k/64-grid literals (similarity.planted_near_dup_vectors)."""
     return similarity.embedding_near_dups(spark, sf_dir, include_planted=True)
 
@@ -270,7 +265,7 @@ def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _conv_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation-level corpus assembly (ordered turn concatenation,
     md5-fingerprinted for the gate; output capped at max_turns=4096 with
-    an overflow flag — VERDICT r03 item 7)."""
+    an overflow flag)."""
     return assemble_conversations(_transcripts(spark, _sf_of(sf_dir)))
 
 
@@ -299,7 +294,7 @@ def _conv_assemble_oracle(max_turns: int = 4096) -> str:
 
 
 def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming gate query (VERDICT r03 item 8): run the
+    """Structured Streaming gate query: run the
     extraction stream as a Trigger.AvailableNow backfill over the same
     transcripts the batch path reads, into a fresh sink, and return the
     sink contents projected exactly like ``extract_turns`` — the oracle
@@ -314,7 +309,7 @@ def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.dirname(ensure_transcripts(sf))
     # deterministic per-sf sink, wiped before each run: repeated gate/
     # snapshot invocations reuse ONE directory instead of accumulating
-    # a corpus copy + checkpoint per call under /tmp (self-review r4)
+    # a corpus copy + checkpoint per call under /tmp
     out = os.path.join(tempfile.gettempdir(), f"stream_gate_sf{sf}")
     shutil.rmtree(out, ignore_errors=True)
     paths = run_stream_backfill(spark, in_dir, out, with_metrics=False)
@@ -446,47 +441,27 @@ def _dom_turns_oracle() -> str:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 queries — the driver snapshot truncates past 50
-    (CORRECTNESS_r03 had 50 rows for 55 exposed queries, leaving 5
-    operators silently untested; VERDICT r03 item 1).  Five redundant
-    rows were retired into stronger homes rather than dropped:
+    """EXACTLY 50 queries — the gate snapshot truncates past 50, so a
+    new row must replace one.  Operators without a row of their own are
+    value-covered elsewhere:
 
-    - ``dedup_minhash_signatures`` — subsumed by ``_candidates`` (same
-      signature expressions feed the band join); DuckDB parity still
-      pytest-pinned (tests/test_dedup_clusters.py::
-      test_minhash_geometry_is_parameterized).
-    - ``dedup_simhash`` — subsumed by ``dedup_simhash_pairs``; sketch
-      values still DuckDB-parity-pinned (tests/test_textnorm_parity.py).
-    - ``dedup_decontaminate_bloom`` — provably output-identical to
+    - MinHash signatures and LSH candidates: inside
+      ``dedup_ngram_jaccard`` (at gate threshold 0.0 it verifies the
+      identical candidate pair set plus exact Jaccard scores); signature
+      DuckDB parity in tests/test_dedup_clusters.py::
+      test_minhash_geometry_is_parameterized.
+    - SimHash sketches and pairs: sketch values DuckDB-parity-pinned
+      (tests/test_textnorm_parity.py); pairing semantics inside
+      ``dedup_cluster_keep_list``'s recursive-CTE component twin.
+    - ``decontaminate_bloom``: provably output-identical to
       ``dedup_decontaminate`` (no false negatives + exact verify join);
       equivalence pytest-pinned (tests/test_corpus_ops.py).
-    - ``text_distinct_approx`` / ``text_quantiles_approx`` — their error
-      contracts are now VALUE-oracled inside the exact twins
-      (``approx_within_5pct`` / ``approx_rank_ok`` columns) instead of
-      riding as ``no_oracle`` rows.
-    - ``corpus_sample`` — its exact membership expression is now an
-      oracled column of ``corpus_splits`` (``in_sample``).
-
-    - ``text_fingerprints`` — its md5-normalized fingerprint + norm_len
-      are now oracled columns of ``text_token_stats`` (same scan, same
-      projection class; round 4).
-
-    New rows: ``stream_extract`` (Structured Streaming backfill vs the
-    reference-binary golden) and ``link_target_stats`` (link-graph
-    inlink/anchor-consensus signals vs the committed link goldens).
-
-    Round-5 folds (freeing the two slots for ``link_pagerank`` and
-    ``stream_sessionize``):
-
-    - ``dedup_minhash_candidates`` — at gate threshold 0.0 the
-      ``dedup_ngram_jaccard`` row verifies the IDENTICAL candidate pair
-      set plus its exact Jaccard scores (the candidates are its strict
-      sub-computation), so the fold loses no value coverage.
-    - ``dedup_simhash_pairs`` — sketch values stay DuckDB-parity-pinned
-      (tests/test_textnorm_parity.py) and the threshold/pairing
-      semantics stay inside ``dedup_cluster_keep_list``'s recursive-CTE
-      component twin (a simhash pairing bug diverges the components);
-      the full-pair reporting op itself remains pytest-covered.
+    - approximate distinct/quantiles: error contracts value-oracled
+      inside the exact twins (``approx_within_5pct`` /
+      ``approx_rank_ok`` columns).
+    - corpus sampling: the ``in_sample`` column of ``corpus_splits``.
+    - text fingerprints: md5-normalized fingerprint + norm_len columns
+      of ``text_token_stats``.
     """
     return {
         # flagship extraction (value-oracled vs reference-binary goldens)
@@ -501,9 +476,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conversation_stats": _conv_stats,
         "conversation_assembly": _conv_assemble,
         # deduplication family
-        # dedup_exact retired r4 (0 rows on the gate corpus; its hash-
-        # groupBy core is exercised with values by dedup_keep_list) to
-        # stay inside the 50-row snapshot while adding substring dedup
+        # (exact-duplicate detection's hash-groupBy core is exercised
+        # with values by dedup_keep_list)
         "dedup_keep_list": dedup.dedup_keep_list,
         "dedup_shared_substrings": dedup.shared_substrings,
         "dedup_ngram_jaccard": _ngram_jaccard,
@@ -551,7 +525,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_range_join": temporal.range_join_activity,
         "rel_sessionize": temporal.sessionize,
         "udaf_value_median": udx.user_value_median,
-        # round 5: the two §2.6 categories that had no driver evidence
+        # §2.6 categories: iterative graph analytics, stateful streaming
         "link_pagerank": _link_pagerank,
         "stream_sessionize": stateful.run_sessionize_backfill,
     }
@@ -611,7 +585,6 @@ def oracle_sql() -> dict[str, str]:
         "udaf_value_median": udx.user_value_median_sql(),
         "link_pagerank": _link_pagerank_oracle(),
         "stream_sessionize": stateful.stream_sessionize_sql(),
-        # every exposed query has an oracle (the former no_oracle approx
-        # sketches are value-checked via error-band columns inside their
-        # exact twins — see queries() docstring)
+        # every exposed query has an oracle (approx sketches are
+        # value-checked via error-band columns inside their exact twins)
     }

@@ -101,9 +101,9 @@ def _segment(
             if cur.parts:
                 blocks.append(cur)
             # a block element nested under an <a> is still link content —
-            # its whole block inherits in_link (reviewer-found: the old
-            # run-diff accounting gave <a><div>…</div></a> link_chars=0
-            # and kept pure-link CTAs as prose)
+            # its whole block inherits in_link (otherwise
+            # <a><div>…</div></a> gets link_chars=0 and pure-link CTAs
+            # are kept as prose)
             inner = _Block(c_boiler, c_drop)
             inner = _segment(child, c_boiler, c_drop, in_link, blocks, inner)
             if inner.parts:
@@ -191,10 +191,9 @@ def dom_extract_from_tokens(
     max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
 ) -> dict:
     """DOM policy over an already-produced token stream — the seam the
-    fused one-tokenize pipeline (pipeline.run_extraction_full) uses so
-    the token policy, the DOM policy, and the link harvest share one
-    tokenize pass.  Identical output to :func:`dom_extract` on the same
-    text's stream."""
+    extraction stage (pipeline.extract_stage) uses so the token policy,
+    the DOM policy, and the link harvest share one tokenize pass.
+    Identical output to :func:`dom_extract` on the same text's stream."""
     from .treebuilder import build_tree
 
     return dom_extract_from_tree(

@@ -111,8 +111,8 @@ class Text(str):
     site and the html5lib-style dump behave unchanged) that additionally
     carries the source character ranges of the tokenizer runs that
     produced it — the provenance the flagship's ``spans`` contract
-    exposes (pipeline.py SPAN schema), now threaded through the DOM path
-    too (VERDICT r02 item 5)."""
+    exposes (array<struct<start,end>>), threaded through the DOM path
+    too."""
 
     __slots__ = ("spans",)
 

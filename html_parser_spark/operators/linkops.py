@@ -1,13 +1,10 @@
 """Spark surface for hyperlink harvesting (the corpus link graph).
 
 Same physical shape as the flagship extraction (`pipeline.py`): pruned
-scan → salted repartition with an EXPLICIT partition count → ordered
-Arrow mapInPandas emitting FLAT columnar link rows (round 4: 2.2× over
-the previous array<struct> UDF + JVM explode — Arrow converts flat
-column lists at array speed instead of walking a per-row object graph).
-One shuffle total for 10^12 turns; the flatten is local, so long
-link-dense turns fan out without a second exchange.  Output is
-link-graph-shaped: one row per (turn, link).
+scan → the stage's salted exchange → ordered Arrow mapInPandas emitting
+FLAT columnar link rows.  One shuffle total for 10^12 turns; the flatten
+is local, so long link-dense turns fan out without a second exchange.
+Output is link-graph-shaped: one row per (turn, link).
 """
 
 from __future__ import annotations
@@ -15,52 +12,17 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import DataFrame
 
 from ..functions.links import extract_links
-
-# per-link struct carried by the FUSED extraction paths
-# (pipeline.run_extraction_with_links / run_extraction_full), which emit
-# text + links from one tokenize pass; the standalone harvest below uses
-# flat columns instead (2.2× — module docstring)
-LINK = StructType(
-    [
-        StructField("link_idx", IntegerType()),
-        StructField("href", StringType()),
-        StructField("anchor_text", StringType()),
-        StructField("src_start", IntegerType()),
-        StructField("src_end", IntegerType()),
-    ]
-)
+from .pipeline import salted_exchange
 
 
 def run_link_extraction(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
+    df: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
     """transcripts DataFrame → (conv_id, turn_idx, link_idx, href,
     anchor_text, src_start, src_end), one row per harvested link."""
-    pruned = df.select("conv_id", "turn_idx", "text")
-    if num_partitions is None:
-        # 2× cores, matching pipeline._repartition policy (round-4
-        # clean-window sweep: task overhead overtook per-task Python
-        # after the tokenizer fast paths; see pipeline.py)
-        sc = pruned.sparkSession.sparkContext
-        num_partitions = max(
-            sc.defaultParallelism * 2,
-            int(pruned.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_k))
-
     # flat mapInPandas instead of array<struct> UDF + explode: building a
     # per-row Python list of link tuples makes Arrow walk an object graph
     # per turn; emitting flat columnar batches (one list per COLUMN)
@@ -89,14 +51,11 @@ def run_link_extraction(
                     rows["src_end"].append(r["src_end"])
             yield pd.DataFrame(rows)
 
-    return (
-        pruned.repartition(num_partitions, F.col("conv_id"), salt)
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .mapInPandas(
-            _flat,
-            schema=(
-                "conv_id string, turn_idx int, link_idx int, href string, "
-                "anchor_text string, src_start int, src_end int"
-            ),
-        )
+    pruned = df.select("conv_id", "turn_idx", "text")
+    return salted_exchange(pruned, num_partitions).mapInPandas(
+        _flat,
+        schema=(
+            "conv_id string, turn_idx int, link_idx int, href string, "
+            "anchor_text string, src_start int, src_end int"
+        ),
     )

@@ -14,19 +14,20 @@ Scale shape:
   over pre-shrunk (href, anchor) counts) + one href equi-join +
   TakeOrderedAndProject.  Everything that shuffles is ids/counts; text
   crosses the wire only as the anchor strings being aggregated.
-- ``pagerank``: the classic ids-only iteration — edges join ranks on
-  the source key, contributions aggregate on the destination key,
-  ``localCheckpoint`` per round truncates lineage (the
-  connected-components lesson, BENCH.md r3).  The only driver-side
-  values per round are two scalars (total/dangling mass), the same
-  class of post-agg metric scalar as resume.py's.
+- ``pagerank`` / ``pagerank_fixed``: one ids-only power iteration in
+  float or int64 fixed-point arithmetic — edges join ranks on the
+  source key, contributions aggregate on the destination key,
+  ``localCheckpoint`` every few rounds truncates lineage (the
+  connected-components lesson, BENCH.md r3).  The dangling mass is a
+  lazy 1-row aggregate, so no round runs a Spark action of its own.
 
-PageRank is deliberately NOT a driver-gate row: it is float-valued and
-cross-engine float summation order differs, so a bit-exact md5 hash
-would be flaky by construction (CLAUDE.md: never ROUND on doubles).
-Its correctness is pytest-pinned instead against an independent dense
-NumPy power iteration on the same edge list (test_linkrank.py), plus
-invariants (mass conservation, teleport floor).
+Float PageRank is NOT a gate row: cross-engine float summation
+order differs, so a bit-exact md5 hash would be flaky by construction
+(and the gate never ROUNDs doubles).  It is pytest-pinned against an
+independent dense NumPy power iteration on the same edge list
+(test_linkrank.py), plus invariants (mass conservation, teleport
+floor).  The fixed-point form is the gate row (``link_pagerank_fp`` vs
+the unrolled DuckDB recurrence ``link_pagerank_sql``).
 """
 
 from __future__ import annotations
@@ -123,29 +124,90 @@ def link_target_stats_sql(golden_path: str, top_k: int = 100) -> str:
     """
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """PageRank over an edge list ``(src, dst)`` (any node id type).
+# Total rank mass of the fixed-point arithmetic, in units of 1/FP_SCALE.
+# Integer arithmetic is associative — unlike the float iteration, the
+# per-round sums are order-independent, so Spark and DuckDB produce
+# bit-identical ranks and the operator can ride the md5 value gate
+# (the gate never ROUNDs doubles — so keep the mass integral).
+FP_SCALE = 10**12
+FP_DAMP_NUM = 85
+FP_DAMP_DEN = 100
+DAMPING = FP_DAMP_NUM / FP_DAMP_DEN
+# localCheckpoint every this many rounds — without it Catalyst
+# re-analyzes a k-deep join tree every round (measured on connected
+# components: per-round wall GREW 18→104 s under bare persist, BENCH.md r3)
+CHECKPOINT_EVERY = 3
 
-    Standard power iteration with uniform teleport and dangling-mass
-    redistribution:
 
-        r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/deg(u) + dangling/N)
+class _FloatRanks:
+    """r'(v) = (1-d)/N + d * (S(v) + D/N) in doubles."""
+
+    col, sql_type = "rank", "double"
+
+    @staticmethod
+    def start(n: int):
+        return F.lit(1.0 / n)
+
+    @staticmethod
+    def share():
+        return F.col("rank") / F.col("deg")
+
+    @staticmethod
+    def dangling():
+        return F.coalesce(F.sum("rank"), F.lit(0.0))
+
+    @staticmethod
+    def update(n: int):
+        return F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * (
+            F.coalesce(F.col("s"), F.lit(0.0))
+            + F.col("dangling") / F.lit(float(n))
+        )
+
+
+class _FixedRanks:
+    """r'(v) = (15·M div 100) div N + (85 · (S(v) + D div N)) div 100 in
+    int64 units of ``1/FP_SCALE`` (M = FP_SCALE).  Integer division loses
+    ≤1 unit per term (≤ deg·1e-12 of the mass per round); every
+    intermediate ≤ 85·M < 2^47, so nothing overflows."""
+
+    col, sql_type = "rank_fp", "long"
+
+    @staticmethod
+    def start(n: int):
+        return F.lit(FP_SCALE // n).cast("long")
+
+    @staticmethod
+    def share():
+        return F.expr("rank_fp div deg")
+
+    @staticmethod
+    def dangling():
+        return F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long")
+
+    @staticmethod
+    def update(n: int):
+        teleport = ((FP_SCALE * (FP_DAMP_DEN - FP_DAMP_NUM)) // FP_DAMP_DEN) // n
+        return (
+            F.lit(teleport).cast("long")
+            + F.expr(
+                f"({FP_DAMP_NUM} * (coalesce(s, 0L)"
+                f" + (dangling div {n}))) div {FP_DAMP_DEN}"
+            )
+        ).cast("long")
+
+
+def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
+    """PageRank over an edge list ``(src, dst)`` (any node id type) in
+    the arithmetic ``arith``: uniform teleport and dangling-mass
+    redistribution,
+
+        r'(v) = (1-d)/N + d * (S(v) + D/N),
+        S(v) = Σ_{u→v} r(u)/deg(u),  D = Σ_{deg(u)=0} r(u).
 
     Physical shape per round: edges ⋈ ranks on src (both sides keyed by
-    node id), groupBy dst partial+final agg, one scalar agg for the
-    dangling mass.  ``localCheckpoint`` every ``checkpoint_every``
-    rounds — without it Catalyst re-analyzes a k-deep join tree every
-    round (measured on connected components: per-round wall GREW 18→104 s
-    under bare persist, BENCH.md r3).
-
-    Returns (node, rank) for every node that appears in the graph.
-    """
+    node id), groupBy dst partial+final agg, one lazy 1-row dangling
+    aggregate.  Returns (node, ``arith.col``) for every node that
+    appears in the graph."""
     spark = edges.sparkSession
     edges = edges.select(
         F.col(edges.columns[0]).cast("string").alias("src"),
@@ -159,17 +221,17 @@ def pagerank(
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
-        return spark.createDataFrame([], "node string, rank double")
+        return spark.createDataFrame([], f"node string, {arith.col} {arith.sql_type}")
     out_deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("deg")
     ).localCheckpoint()
 
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    teleport = (1.0 - damping) / n_nodes
+    rank = arith.col
+    ranks = nodes.select("node", arith.start(n_nodes).alias(rank))
     prev_ckpt = None
     for i in range(iterations):
         # ONE ranks⋈out_deg join per round feeds both the dangling mass
-        # and the per-edge shares (the old code planned it twice)
+        # and the per-edge shares
         with_deg = ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
         # dangling mass: rank held by nodes with no out-edges — a lazy
         # 1-row aggregate broadcast into the update instead of a per-round
@@ -177,11 +239,10 @@ def pagerank(
         # uncheckpointed lineage is evaluated once per checkpoint window
         # rather than re-run by every round's driver scalar
         dangling = with_deg.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
+            arith.dangling().alias("dangling")
         )
         shares = with_deg.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("u"),
-            (F.col("rank") / F.col("deg")).alias("share"),
+            F.col("node").alias("u"), arith.share().alias("share")
         )
         contribs = edges.join(shares, edges["src"] == F.col("u")).select(
             F.col("dst").alias("node"), F.col("share")
@@ -190,19 +251,9 @@ def pagerank(
         ranks = (
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
-            )
+            .select("node", arith.update(n_nodes).alias(rank))
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
             new_ranks = ranks.localCheckpoint()
             # the new checkpoint is materialized; the superseded one's
             # blocks are dead weight (unpersist() alone is a no-op on
@@ -220,116 +271,35 @@ def pagerank(
     return ranks
 
 
+def pagerank(edges: DataFrame, *, iterations: int = 10) -> DataFrame:
+    """Float PageRank, damping ``DAMPING``: (node, rank)."""
+    return _power_iteration(edges, iterations, _FloatRanks)
+
+
+def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
+    """Fixed-point-integer PageRank: (node, rank_fp), the same iteration
+    with all mass carried as int64 units of ``1/FP_SCALE``.  The float
+    form stays the production scorer; this one lets the gate verify the
+    ITERATION (joins, dangling redistribution, teleport) exactly."""
+    return _power_iteration(edges, iterations, _FixedRanks)
+
+
+def _doc_url_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bipartite (turn-document → href) corpus link graph: node ids
+    ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``."""
+    return _links(spark, sf_dir).select(
+        F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias("src"),
+        F.concat(F.lit("url:"), "href").alias("dst"),
+    )
+
+
 def link_pagerank(
     spark: SparkSession, sf_dir: str, iterations: int = 10
 ) -> DataFrame:
-    """PageRank over the bipartite (turn-document → href) corpus link
-    graph: documents contribute their rank to the targets they cite;
-    targets are sinks whose mass recirculates via the dangling term.
-    Node ids: ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``."""
-    links = _links(spark, sf_dir)
-    edges = links.select(
-        F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias(
-            "src"
-        ),
-        F.concat(F.lit("url:"), "href").alias("dst"),
-    )
-    return pagerank(edges, iterations=iterations)
-
-
-# ----------------------------------------------- fixed-point gate variant
-
-# Total rank mass in fixed-point units.  Integer arithmetic is
-# associative — unlike the float iteration above, the per-round sums are
-# order-independent, so Spark and DuckDB produce bit-identical ranks and
-# the operator can ride the md5 value gate (VERDICT r4 item 4; CLAUDE.md:
-# never ROUND on doubles — so don't: keep the mass integral end to end).
-FP_SCALE = 10**12
-FP_DAMP_NUM = 85
-FP_DAMP_DEN = 100
-
-
-def pagerank_fixed(
-    edges: DataFrame,
-    *,
-    iterations: int = 4,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Fixed-point-integer PageRank: the same power iteration and the
-    same physical shape as :func:`pagerank` (edges ⋈ ranks on src,
-    groupBy dst, lazy 1-row dangling aggregate) with all mass carried
-    as int64 units of ``1/FP_SCALE``:
-
-        r'(v) = (15·M div 100) div N
-                + (85 · (S(v) + D div N)) div 100
-
-    where ``M = FP_SCALE``, ``S(v) = Σ_{u→v} r(u) div deg(u)`` and
-    ``D = Σ_{deg(u)=0} r(u)``.  Integer division loses ≤1 unit per
-    term (≤ deg·1e-12 of the mass per round) — the float twin remains
-    the production scorer; this form exists so the gate can verify the
-    ITERATION (joins, dangling redistribution, teleport) exactly.
-    Overflow-safe: every intermediate ≤ 85·M < 2^47.
-    """
-    spark = edges.sparkSession
-    edges = edges.select(
-        F.col(edges.columns[0]).cast("string").alias("src"),
-        F.col(edges.columns[1]).cast("string").alias("dst"),
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return spark.createDataFrame([], "node string, rank_fp long")
-    out_deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint()
-
-    ranks = nodes.select(
-        "node", F.lit(FP_SCALE // n_nodes).cast("long").alias("rank_fp")
-    )
-    teleport = ((FP_SCALE * (FP_DAMP_DEN - FP_DAMP_NUM)) // FP_DAMP_DEN) // n_nodes
-    prev_ckpt = None
-    for i in range(iterations):
-        with_deg = ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
-        dangling = with_deg.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling")
-        )
-        shares = with_deg.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("u"),
-            F.expr("rank_fp div deg").alias("share"),
-        )
-        contribs = edges.join(shares, edges["src"] == F.col("u")).select(
-            F.col("dst").alias("node"), F.col("share")
-        )
-        summed = contribs.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(teleport).cast("long")
-                    + F.expr(
-                        f"({FP_DAMP_NUM} * (coalesce(s, 0L)"
-                        f" + (dangling div {n_nodes}))) div {FP_DAMP_DEN}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_ranks = ranks.localCheckpoint()
-            if prev_ckpt is not None:
-                free_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_ranks
-            ranks = new_ranks
-    if iterations > 0:
-        free_local_checkpoint(nodes)
-        free_local_checkpoint(out_deg)
-    return ranks
+    """PageRank over the doc→url link graph: documents contribute their
+    rank to the targets they cite; targets are sinks whose mass
+    recirculates via the dangling term."""
+    return pagerank(_doc_url_edges(spark, sf_dir), iterations=iterations)
 
 
 def link_pagerank_fp(
@@ -338,12 +308,7 @@ def link_pagerank_fp(
     """Gate form of :func:`link_pagerank`: fixed-point ranks over the
     same doc→url bipartite graph, top ``top_k`` by (rank_fp DESC, node
     ASC) — TakeOrderedAndProject, never a global sort."""
-    links = _links(spark, sf_dir)
-    edges = links.select(
-        F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias("src"),
-        F.concat(F.lit("url:"), "href").alias("dst"),
-    )
-    ranks = pagerank_fixed(edges, iterations=iterations)
+    ranks = pagerank_fixed(_doc_url_edges(spark, sf_dir), iterations=iterations)
     return ranks.orderBy(F.desc("rank_fp"), F.asc("node")).limit(top_k)
 
 

@@ -1,10 +1,15 @@
-"""The flagship operator: transcripts table → extracted main-content table.
+"""The flagship operator: transcripts table → extracted table.
 
 Spark-first design (SURVEY.md §3.4): the whole job is scan → salted
 repartition → sortWithinPartitions → one vectorized pandas UDF → project.
 No RDDs, no custom Catalyst rules — Catalyst keeps column pruning and
 predicate pushdown on the scan because the UDF consumes exactly one column
 (``text``) and everything else passes through untouched.
+
+:func:`extract_stage` is the one per-turn stage: each turn is tokenized
+once and the token stream feeds every requested policy — ``"main"``
+(functions/extract.py), ``"dom"`` (functions/domextract.py) and
+``"links"`` (functions/links.py).
 
 Scale notes (10^12-turn target, BASELINE.json north_rule):
 
@@ -13,8 +18,8 @@ Scale notes (10^12-turn target, BASELINE.json north_rule):
   arbitrarily.  Conversation skew (1% of conversations have 100× turns)
   and text-length skew (64 KB P99 tail) are both *compute* skew inside the
   Python worker — invisible to AQE, which only rebalances shuffle bytes.
-  The salted repartition below spreads any single conversation over
-  ``salt_k`` partitions while keeping (conv_id, salt) groups intact, and
+  The salted repartition spreads any single conversation over ``SALT_K``
+  partitions while keeping (conv_id, salt) groups intact, and
   ``sortWithinPartitions(conv_id, turn_idx)`` restores the stable turn
   ordering the north_star requires.
 - **One shuffle total.**  The repartition is the only exchange in the
@@ -38,269 +43,234 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.extract import extract
+# partitions one conversation's turns can spread over
+SALT_K = 8
 
-# NB: no per-span `kind` string — every span the current policy emits is
-# 'main', and a constant Python str per span cost ~30% of the UDF stage
-# in Arrow serialization (measured sf0.1: 8.0k → 11.1k turns/s dropping
-# it).  The pure-Python extract() API keeps kind; a future multi-kind
-# policy should add a dictionary-encoded small-int column, not strings.
-SPAN = StructType(
-    [
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-    ]
-)
+OUTPUTS = ("main", "dom", "links")
 
-# Span TRANSPORT encoding (round-4 A/B, VERDICT r03 item 6): the UDFs
-# emit each span as ONE int64 (start<<32 | end) and the projection on
-# top of the UDF unpacks to the public array<struct<start,end>> with a
-# codegen'd transform().  Arrow then moves a primitive list<int64>
-# instead of a list<struct<int32,int32>> built from Python tuples —
-# the tuple→StructArray conversion inside the Python worker was the
-# measurable cost, not the bytes.  The PUBLIC schema (and the driver
-# contract / goldens) is unchanged: `spans` is still
-# array<struct<start,end>> on every DataFrame this module returns.
-# start/end are source offsets < 2^31, so the packed value is always a
-# non-negative int64.
+# Spans travel from the Python worker as ONE int64 per span (start<<32 |
+# end) and the projection unpacks them JVM-side to the public
+# array<struct<start:int,end:int>>: Arrow then moves a primitive
+# list<int64> instead of building a StructArray from Python tuples, which
+# was the measurable cost in the worker (start/end < 2^31, so the packed
+# value is a non-negative int64).  No per-span ``kind`` string either: a
+# Python str per span cost ~30% of the UDF stage in Arrow serialization.
 SPAN_PACKED = ArrayType(LongType())
 
-
-def _span_unpack(col):
-    """packed array<long> → public array<struct<start:int,end:int>>."""
-    return F.transform(
-        col,
-        lambda p: F.struct(
-            F.shiftright(p, 32).cast("int").alias("start"),
-            p.bitwiseAND(F.lit(0xFFFFFFFF)).cast("int").alias("end"),
-        ),
-    )
-
-
-def _proj_ext(name):
-    """Project ``ext.<name>`` out of the UDF struct, unpacking spans
-    (any ``*spans`` column carries the packed-int64 transport)."""
-    c = F.col(f"ext.{name}")
-    if name.endswith("spans"):
-        c = _span_unpack(c)
-    return c.alias(name)
-
-
-EXTRACT_SCHEMA = StructType(
+LINK = StructType(
     [
-        StructField("main_text", StringType()),
-        StructField("spans", SPAN_PACKED),
-        StructField("err_count", IntegerType()),
-        StructField("parse_status", StringType()),
-        StructField("n_tokens", IntegerType()),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_kept_blocks", IntegerType()),
+        StructField("link_idx", IntegerType()),
+        StructField("href", StringType()),
+        StructField("anchor_text", StringType()),
+        StructField("src_start", IntegerType()),
+        StructField("src_end", IntegerType()),
     ]
 )
 
-_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
+# UDF struct fields: the tokenizer's status pair, then each requested
+# output's fields in OUTPUTS order.
+_STATUS_FIELDS = (("err_count", IntegerType()), ("parse_status", StringType()))
+_OUTPUT_FIELDS = {
+    "main": (
+        ("main_text", StringType()),
+        ("spans", SPAN_PACKED),
+        ("n_tokens", IntegerType()),
+        ("n_blocks", IntegerType()),
+        ("n_kept_blocks", IntegerType()),
+    ),
+    "dom": (
+        ("dom_main_text", StringType()),
+        ("dom_spans", SPAN_PACKED),
+        ("dom_n_blocks", IntegerType()),
+        ("dom_n_kept_blocks", IntegerType()),
+    ),
+    "links": (("links", ArrayType(LINK)),),
+}
 
 
-def _extract_frame(texts: pd.Series) -> pd.DataFrame:
-    rows = []
-    for t in texts:
-        if t is None:
-            rows.append(("", [], 0, "null_input", 0, 0, 0))
-            continue
-        r = extract(t)
-        rows.append(
-            (
-                r["main_text"],
-                [(s[0] << 32) | s[1] for s in r["spans"]],
-                r["err_count"],
-                r["parse_status"],
-                r["n_tokens"],
-                r["n_blocks"],
-                r["n_kept_blocks"],
-            )
+def _check_outputs(outputs) -> frozenset:
+    outputs = frozenset(outputs)
+    if not outputs or not outputs <= set(OUTPUTS):
+        raise ValueError(
+            f"outputs must be a non-empty subset of {OUTPUTS}: {sorted(outputs)}"
         )
-    return pd.DataFrame(rows, columns=_COLS)
+    return outputs
 
 
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """SCALAR_ITER pandas UDF: one Arrow batch of turn texts in, one batch
-    of extraction structs out.  Iterator form amortizes per-task setup
-    (entity dict + dispatch tables are module globals, imported once per
-    Python worker, ~100 KB — no broadcast needed, SURVEY.md §1.2)."""
-    for texts in batches:
-        yield _extract_frame(texts)
+def _stage_fields(outputs: frozenset) -> list:
+    return [
+        *_STATUS_FIELDS,
+        *(f for o in OUTPUTS if o in outputs for f in _OUTPUT_FIELDS[o]),
+    ]
 
 
-def _salted_udf_stage(
-    pruned: DataFrame,
-    udf_col,
-    out_cols: list,
-    cols: list,
-    num_partitions: int | None,
-    salt_k: int,
-) -> DataFrame:
-    """The shared physical shape of every per-turn UDF pipeline: salted
-    repartition with an EXPLICIT partition count (CLAUDE.md invariant —
-    column-only repartition is AQE-coalescible and compressed-text
-    shuffles get merged under the Python compute), sortWithinPartitions
-    for stable (conv_id, turn_idx) order, one Arrow UDF, project."""
-    if num_partitions is None:
-        # 2× cores.  4× was the r1 sweet spot (64→13.3k, 128→16.1k,
-        # 256→10.8k turns/s) when per-task Python time dominated; the
-        # round-4 fast paths (tag/entity memos, fused scan) shrank
-        # per-task compute enough that task overhead flipped the curve —
-        # re-measured clean-window sweep at local[32]/sf0.1: 32p→23.6k,
-        # 48p→26.1k, 64p→26.0k, 128p→22.9k turns/s.  2× keeps one wave
-        # of slack for text-length skew (the salt spreads hot
-        # conversations; a single straggler can't serialize the stage).
-        sc = pruned.sparkSession.sparkContext
-        num_partitions = max(
-            sc.defaultParallelism * 2,
-            int(pruned.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_k))
-    parted = pruned.repartition(num_partitions, F.col("conv_id"), salt)
-    ordered = parted.sortWithinPartitions("conv_id", "turn_idx")
-    ext = ordered.withColumn("ext", udf_col)
-    return ext.select(
-        *[c for c in cols if c != "text"],
-        *[_proj_ext(name) for name in out_cols],
+def _pack(spans) -> list:
+    return [(s[0] << 32) | s[1] for s in spans]
+
+
+def _row_builder(outputs: frozenset):
+    """Per-turn row function ``text → tuple`` in :func:`_stage_fields`
+    order: one tokenize, then each requested policy over its tokens.
+    Runs in the Python worker, so the tree builder is imported only by
+    stages that ask for ``"dom"``."""
+    from ..functions.tokenizer import tokenize
+
+    policies = []
+    if "main" in outputs:
+        from ..functions.extract import extract_from_tokens
+
+        def main(tokens):
+            r = extract_from_tokens(tokens)
+            return (r["main_text"], _pack(r["spans"]), r["n_tokens"],
+                    r["n_blocks"], r["n_kept_blocks"])
+
+        policies.append(main)
+    if "dom" in outputs:
+        from ..functions.domextract import dom_extract_from_tokens
+
+        def dom(tokens):
+            r = dom_extract_from_tokens(tokens)
+            return (r["main_text"], _pack(r["spans"]), r["n_blocks"],
+                    r["n_kept_blocks"])
+
+        policies.append(dom)
+    if "links" in outputs:
+        from ..functions.links import links_from_tokens
+
+        def links(tokens):
+            return ([(lk["link_idx"], lk["href"], lk["anchor_text"],
+                      lk["src_start"], lk["src_end"])
+                     for lk in links_from_tokens(tokens)],)
+
+        policies.append(links)
+    null_row = (0, "null_input") + tuple(
+        "" if isinstance(t, StringType) else [] if isinstance(t, ArrayType) else 0
+        for _, t in _stage_fields(outputs)[2:]
     )
+
+    def row(text):
+        if text is None:
+            return null_row
+        tokens, status, err = tokenize(text)
+        out = (err, status)
+        for policy in policies:
+            out += policy(tokens)
+        return out
+
+    return row
+
+
+def _stage_udf(outputs: frozenset):
+    """SCALAR_ITER pandas UDF: one Arrow batch of turn texts in, one
+    batch of ``outputs`` structs out.  Iterator form amortizes per-task
+    setup (entity dict + dispatch tables are module globals, imported
+    once per Python worker — no broadcast needed, SURVEY.md §1.2)."""
+    fields = _stage_fields(outputs)
+    names = [n for n, _ in fields]
+
+    @pandas_udf(StructType([StructField(n, t) for n, t in fields]))
+    def stage_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        row = _row_builder(outputs)
+        for texts in batches:
+            yield pd.DataFrame([row(t) for t in texts], columns=names)
+
+    return stage_udf
+
+
+def _projection(outputs: frozenset) -> list:
+    """``ext`` struct → public columns: the leading policy's
+    (main_text, spans), err_count, parse_status, then the rest.  A
+    DOM-only stage drops the ``dom_`` prefix (run_dom_extraction's
+    contract); packed spans are unpacked JVM-side."""
+    names = [n for n, _ in _stage_fields(outputs)]
+    lead = 2 if outputs & {"main", "dom"} else 0
+    cols = []
+    for n in names[2:][:lead] + names[:2] + names[2:][lead:]:
+        c = F.col(f"ext.{n}")
+        if n.endswith("spans"):
+            c = F.transform(
+                c,
+                lambda p: F.struct(
+                    F.shiftright(p, 32).cast("int").alias("start"),
+                    p.bitwiseAND(F.lit(0xFFFFFFFF)).cast("int").alias("end"),
+                ),
+            )
+        cols.append(
+            c.alias(n if "main" in outputs else n.removeprefix("dom_"))
+        )
+    return cols
+
+
+def salted_exchange(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Repartition on (conv_id, salt) into an EXPLICIT partition count,
+    then sort each partition by (conv_id, turn_idx).
+
+    The count must be explicit: a column-only
+    repartition is AQE-coalescible, and AQE merges compressed-text
+    shuffle partitions under the Python compute it cannot see.  The
+    default is 2× cores: fewer tasks than that leave no slack for
+    text-length skew, more and task overhead outweighs per-task Python
+    time (local[32]/sf0.1 sweep: 32p→23.6k, 64p→26.0k, 128p→22.9k
+    turns/s)."""
+    if num_partitions is None:
+        spark = df.sparkSession
+        num_partitions = max(
+            spark.sparkContext.defaultParallelism * 2,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
+    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_K))
+    parted = df.repartition(num_partitions, F.col("conv_id"), salt)
+    return parted.sortWithinPartitions("conv_id", "turn_idx")
+
+
+def extract_columns(df: DataFrame, outputs) -> DataFrame:
+    """Replace ``df``'s ``text`` column with the ``outputs`` columns,
+    keeping every other column and the row layout — no exchange.  Use
+    directly where the input is already spread well (a file-source
+    stream, a conv_id-bucketed source); :func:`extract_stage` adds the
+    salted exchange."""
+    outputs = _check_outputs(outputs)
+    ext = df.withColumn("ext", _stage_udf(outputs)(F.col("text")))
+    return ext.select(
+        *[c for c in df.columns if c != "text"], *_projection(outputs)
+    )
+
+
+def extract_stage(
+    df: DataFrame, outputs, *, num_partitions: int | None = None
+) -> DataFrame:
+    """transcripts DataFrame → (conv_id, turn_idx, <outputs columns>).
+
+    ``outputs`` is a non-empty subset of ``{"main", "dom", "links"}``:
+
+    - ``"main"``: main_text, spans, err_count, parse_status, n_tokens,
+      n_blocks, n_kept_blocks (token-stream policy);
+    - ``"dom"``: the DOM policy's main_text, spans, n_blocks,
+      n_kept_blocks — prefixed ``dom_`` when ``"main"`` is also asked
+      for (err_count/parse_status are shared: one tokenize);
+    - ``"links"``: ``links`` array<struct<link_idx, href, anchor_text,
+      src_start, src_end>> (explode it for the per-link table).
+
+    One salted exchange, one Arrow UDF stage, whatever the outputs."""
+    pruned = df.select("conv_id", "turn_idx", "text")
+    return extract_columns(salted_exchange(pruned, num_partitions), outputs)
 
 
 def run_extraction(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-    passthrough: tuple = ("conv_id", "turn_idx"),
-    long_text_threshold: int | None = None,
-    source_partitioned: bool = False,
+    df: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
-    """transcripts DataFrame → extracted DataFrame.
-
-    Output columns: ``passthrough + (main_text, spans, err_count,
-    parse_status, n_tokens, n_blocks, n_kept_blocks)``.
-
-    ``salt_k`` splits each conversation across up to ``salt_k`` shuffle
-    partitions (long-conversation skew); within a partition rows are
-    sorted by (conv_id, turn_idx) — the north_star's stable turn ordering.
-
-    ``long_text_threshold``: per-row COMPUTE skew (the 64 KB-P99 text
-    tail) is invisible to AQE, which only rebalances shuffle bytes.
-    When set, rows with ``length(text) > threshold`` are routed to a
-    dedicated round-robin-balanced pass (few rows per partition, so no
-    single task drags the stage tail) and unioned back.  At the 10^12
-    target set it near the corpus P99.
-
-    ``source_partitioned=True`` drops the salted repartition entirely —
-    ZERO exchanges in the plan.  Use when the source layout already
-    spreads conversations (the Iceberg DDL's ``bucket(512, conv_id)``
-    transform, or any layout where no single input split is hot): at
-    100 TB this saves shuffling the whole corpus once (~25 TB of lz4'd
-    shuffle I/O).  Rows are still sorted by (conv_id, turn_idx) within
-    each split.
-    """
-    cols = list(dict.fromkeys([*passthrough, "text"]))
-    pruned = df.select(*cols)
-    if source_partitioned:
-        ordered = pruned.sortWithinPartitions("conv_id", "turn_idx")
-        ext = ordered.withColumn("ext", extract_udf(F.col("text")))
-        return ext.select(
-            *[c for c in cols if c != "text"],
-            *[_proj_ext(name) for name in _COLS],
-        )
-    if long_text_threshold is not None:
-        is_long = F.length("text") > long_text_threshold
-        short = run_extraction(
-            pruned.filter(~is_long),
-            num_partitions=num_partitions,
-            salt_k=salt_k,
-            passthrough=passthrough,
-        )
-        sc = pruned.sparkSession.sparkContext
-        long_rows = (
-            pruned.filter(is_long)
-            .repartition(sc.defaultParallelism)  # round-robin: balanced by count
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .withColumn("ext", extract_udf(F.col("text")))
-        )
-        long_out = long_rows.select(
-            *[c for c in cols if c != "text"],
-            *[_proj_ext(name) for name in _COLS],
-        )
-        return short.unionByName(long_out)
-    return _salted_udf_stage(
-        pruned, extract_udf(F.col("text")), _COLS, cols, num_partitions, salt_k
-    )
-
-
-DOM_EXTRACT_SCHEMA = StructType(
-    [
-        StructField("main_text", StringType()),
-        StructField("spans", SPAN_PACKED),
-        StructField("err_count", IntegerType()),
-        StructField("parse_status", StringType()),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_kept_blocks", IntegerType()),
-    ]
-)
-
-_DOM_COLS = [f.name for f in DOM_EXTRACT_SCHEMA.fields]
-
-
-@pandas_udf(DOM_EXTRACT_SCHEMA)
-def dom_extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """SCALAR_ITER pandas UDF over the DOM-heuristic extraction
-    (functions/domextract.py: tree builder + text-density scoring).
-    ``spans`` carries the same provenance contract as the flagship
-    (source ranges of the text runs in kept blocks)."""
-    from ..functions.domextract import dom_extract
-
-    for texts in batches:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(("", [], 0, "null_input", 0, 0))
-                continue
-            r = dom_extract(t)
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                )
-            )
-        yield pd.DataFrame(rows, columns=_DOM_COLS)
+    """(conv_id, turn_idx, main_text, spans, err_count, parse_status,
+    n_tokens, n_blocks, n_kept_blocks) — the flagship extraction."""
+    return extract_stage(df, {"main"}, num_partitions=num_partitions)
 
 
 def run_dom_extraction(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-    passthrough: tuple = ("conv_id", "turn_idx"),
+    df: DataFrame, *, num_partitions: int | None = None
 ) -> DataFrame:
-    """transcripts DataFrame → DOM-extracted DataFrame.
-
-    Same partitioning discipline as :func:`run_extraction` (salted
-    repartition with an EXPLICIT partition count, sortWithinPartitions
-    for stable turn order, one Arrow UDF stage); the per-turn compute is
-    the tree-building scorer instead of the token-stream policy."""
-    cols = list(dict.fromkeys([*passthrough, "text"]))
-    pruned = df.select(*cols)
-    return _salted_udf_stage(
-        pruned,
-        dom_extract_udf(F.col("text")),
-        _DOM_COLS,
-        cols,
-        num_partitions,
-        salt_k,
-    )
+    """(conv_id, turn_idx, main_text, spans, err_count, parse_status,
+    n_blocks, n_kept_blocks) — the DOM-heuristic extraction (tree
+    builder + text-density scoring)."""
+    return extract_stage(df, {"dom"}, num_partitions=num_partitions)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
@@ -334,7 +304,7 @@ def assemble_conversations(df: DataFrame, max_turns: int = 4096) -> DataFrame:
     atomic output unit here, so it must land on one reducer by
     definition.
 
-    ``max_turns`` caps the assembled output (VERDICT r03: one
+    ``max_turns`` caps the assembled output (one
     pathological conversation must not widen downstream rows without
     bound): only the first ``max_turns`` turns are concatenated and
     ``overflow=1`` flags the truncation — the parse_status-style signal
@@ -358,166 +328,3 @@ def assemble_conversations(df: DataFrame, max_turns: int = 4096) -> DataFrame:
         F.length(full_text).cast("long").alias("n_chars"),
         (F.size("turns") > max_turns).cast("long").alias("overflow"),
     ).orderBy("conv_id")
-
-
-def run_extraction_with_links(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-) -> DataFrame:
-    """Single-pass extraction + link harvest: one tokenize per turn feeds
-    BOTH the main-content policy and the link policy, so a pipeline that
-    wants text and the link graph pays one UDF stage instead of two —
-    tokenization dominates both operators (bench: extract 6.7 s +
-    links 12.9 s separately at sf0.1; this fuses the common pass).
-
-    Output = ``run_extraction`` columns + a ``links`` array column with
-    the ``run_link_extraction`` struct contract (explode it for the
-    per-link table).  Same salted one-shuffle physical shape."""
-    from ..functions.extract import extract_from_tokens
-    from ..functions.links import links_from_tokens
-    from ..functions.tokenizer import tokenize
-    from .linkops import LINK
-
-    schema = StructType(
-        EXTRACT_SCHEMA.fields + [StructField("links", ArrayType(LINK))]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _frame(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(("", [], 0, "null_input", 0, 0, 0, []))
-                continue
-            tokens, status, err = tokenize(t)
-            r = extract_from_tokens(tokens, status, err)
-            links = [
-                (
-                    lk["link_idx"],
-                    lk["href"],
-                    lk["anchor_text"],
-                    lk["src_start"],
-                    lk["src_end"],
-                )
-                for lk in links_from_tokens(tokens)
-            ]
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_tokens"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                    links,
-                )
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    @pandas_udf(schema)
-    def fused_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            yield _frame(texts)
-
-    in_cols = ["conv_id", "turn_idx", "text"]
-    return _salted_udf_stage(
-        df.select(*in_cols),
-        fused_udf(F.col("text")),
-        cols,
-        in_cols,
-        num_partitions,
-        salt_k,
-    )
-
-
-def run_extraction_full(
-    df: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    salt_k: int = 8,
-) -> DataFrame:
-    """Everything from one tokenize: the flagship token-stream policy,
-    the DOM-heuristic policy, and the link harvest share a SINGLE
-    tokenize pass per turn — tokenization dominates all three, so a
-    pipeline wanting text + DOM-quality signals + the link graph pays
-    roughly the DOM pass alone instead of three UDF stages (bench:
-    4.1 + 7.6 + 3.5 s separately at sf0.1).
-
-    Output = ``run_extraction`` columns + ``dom_main_text``/``dom_spans``
-    /``dom_n_blocks``/``dom_n_kept_blocks`` (the ``run_dom_extraction``
-    contract; err/status are shared — same tokenize, same stream) + the
-    ``links`` array column.  Same salted one-shuffle physical shape."""
-    from ..functions.domextract import dom_extract_from_tokens
-    from ..functions.extract import extract_from_tokens
-    from ..functions.links import links_from_tokens
-    from ..functions.tokenizer import tokenize
-    from .linkops import LINK
-
-    schema = StructType(
-        EXTRACT_SCHEMA.fields
-        + [
-            StructField("dom_main_text", StringType()),
-            StructField("dom_spans", SPAN_PACKED),
-            StructField("dom_n_blocks", IntegerType()),
-            StructField("dom_n_kept_blocks", IntegerType()),
-            StructField("links", ArrayType(LINK)),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _frame(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(
-                    ("", [], 0, "null_input", 0, 0, 0, "", [], 0, 0, [])
-                )
-                continue
-            tokens, status, err = tokenize(t)
-            r = extract_from_tokens(tokens, status, err)
-            d = dom_extract_from_tokens(tokens, status, err)
-            links = [
-                (
-                    lk["link_idx"],
-                    lk["href"],
-                    lk["anchor_text"],
-                    lk["src_start"],
-                    lk["src_end"],
-                )
-                for lk in links_from_tokens(tokens)
-            ]
-            rows.append(
-                (
-                    r["main_text"],
-                    [(s[0] << 32) | s[1] for s in r["spans"]],
-                    r["err_count"],
-                    r["parse_status"],
-                    r["n_tokens"],
-                    r["n_blocks"],
-                    r["n_kept_blocks"],
-                    d["main_text"],
-                    [(s[0] << 32) | s[1] for s in d["spans"]],
-                    d["n_blocks"],
-                    d["n_kept_blocks"],
-                    links,
-                )
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    @pandas_udf(schema)
-    def full_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for texts in batches:
-            yield _frame(texts)
-
-    in_cols = ["conv_id", "turn_idx", "text"]
-    return _salted_udf_stage(
-        df.select(*in_cols),
-        full_udf(F.col("text")),
-        cols,
-        in_cols,
-        num_partitions,
-        salt_k,
-    )

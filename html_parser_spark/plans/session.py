@@ -14,11 +14,11 @@ spark-submit job all run the same plan shape (SURVEY.md §4.2):
 - ``shuffle_partitions`` is still set explicitly (AQE coalesces down from
   it, never up): cluster formula ≈ input_bytes / 128 MB; in the local[32]
   sandbox 32–64 is right.
-- task-slot sizing: for Python-UDF-dominated stages leave ~12% of cores
-  slot-free for the JVM's shuffle/Arrow threads (measured: local[28] >
-  local[32] on a 32-core box, BENCH.md) — on a cluster,
-  ``spark.executor.cores`` ≈ 0.85–0.9 × vcores.  Applied as the DEFAULT
-  via :func:`default_task_slots` (round 3); explicit masters bypass it.
+- task slots: one per core of the ``SPARK_GRAFT_CPUS`` budget
+  (local[32] ≥ local[28] in 3 of 4 clean-window ABAB pairs on a
+  32-core box, BENCH.md r4); on a real cluster keep
+  ``spark.executor.cores`` ≈ 0.9 × vcores only when profiling shows JVM
+  service threads contended.  Explicit masters are honored verbatim.
 """
 
 from __future__ import annotations
@@ -30,21 +30,6 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def default_task_slots(cpus: int) -> int:
-    """Task slots for a ``cpus``-core budget.
-
-    History: rounds 2-3 reserved ~12% of cores for the JVM's
-    shuffle/Arrow/GC threads (ABAB-measured local[28] > local[32] then).
-    Round 4's tag memo cut per-task Python time ~20%, which shrank the
-    wave tail that reservation was compensating for — re-measured ABAB
-    in clean windows (≤3% steal): local[32] 23.8k/24.7k turns/s vs
-    local[28] 19.8-21.5k, and local[32] ≥ local[28] in 3 of 4 valid
-    pairs (BENCH.md r4).  Default is now the FULL budget; on a real
-    cluster keep ``spark.executor.cores`` ≈ 0.9 × vcores only when
-    profiling shows JVM service threads contended."""
-    return cpus
-
-
 def get_spark(
     app_name: str = "html-parser-spark",
     master: str | None = None,
@@ -53,8 +38,8 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # an explicit master (tests, scaling harness) is honored verbatim;
-    # the default applies the measured slot reservation to the CPU budget
-    master = master or f"local[{default_task_slots(int(DEFAULT_CPUS))}]"
+    # the default uses one task slot per core of the CPU budget
+    master = master or f"local[{int(DEFAULT_CPUS)}]"
     shuffle_partitions = shuffle_partitions or int(DEFAULT_CPUS)
     b = (
         SparkSession.builder.appName(app_name)

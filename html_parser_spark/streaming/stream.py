@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.pipeline import _COLS, _proj_ext, extract_udf
+from ..operators.pipeline import extract_columns
 from ..sources.tables import TRANSCRIPT_SCHEMA
 
 
@@ -42,14 +42,8 @@ def extract_stream(stream: DataFrame) -> DataFrame:
     """Same UDF, same output schema as the batch pipeline.  No
     repartition: file-source micro-batches parallelize by input split,
     and per-turn compute is stateless."""
-    ext = stream.select("conv_id", "turn_idx", "ts", "text").withColumn(
-        "ext", extract_udf(F.col("text"))
-    )
-    return ext.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        *[_proj_ext(name) for name in _COLS],
+    return extract_columns(
+        stream.select("conv_id", "turn_idx", "ts", "text"), {"main"}
     )
 
 

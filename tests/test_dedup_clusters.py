@@ -256,22 +256,35 @@ def test_iterative_checkpoints_release_storage(spark):
 
 
 def test_pagerank_releases_superseded_checkpoints(spark):
-    from html_parser_spark.operators.linkrank import pagerank
+    """Both arithmetics of the one power iteration (float ``pagerank``,
+    fixed-point ``pagerank_fixed``) free every superseded checkpoint."""
+    from html_parser_spark.operators.linkrank import (
+        FP_SCALE,
+        pagerank,
+        pagerank_fixed,
+    )
 
     jsc = spark.sparkContext._jsc.sc()
 
     def n_stored():
         return len(jsc.getRDDStorageInfo())
 
-    spark.catalog.clearCache()
-    base = n_stored()
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
     )
-    # 9 rounds at checkpoint_every=3 → 3 checkpoints; only the final
-    # one (the returned frame) may remain, nodes/out_deg must be freed
-    ranks = pagerank(edges, iterations=9)
-    total = sum(r.rank for r in ranks.collect())
-    assert abs(total - 1.0) < 1e-9
-    leaked = n_stored() - base
-    assert leaked <= 1, f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"
+    for run, col, mass, tol in (
+        (pagerank, "rank", 1.0, 1e-9),
+        (pagerank_fixed, "rank_fp", FP_SCALE, FP_SCALE * 1e-3),
+    ):
+        spark.catalog.clearCache()
+        base = n_stored()
+        # 9 rounds at CHECKPOINT_EVERY=3 → 3 checkpoints; only the final
+        # one (the returned frame) may remain, nodes/out_deg must be freed
+        ranks = run(edges, iterations=9)
+        total = sum(r[col] for r in ranks.collect())
+        assert abs(total - mass) <= tol, run.__name__
+        leaked = n_stored() - base
+        assert leaked <= 1, (
+            f"{run.__name__}: {leaked} RDDs left in storage "
+            "(expected ≤1: the returned frame)"
+        )

@@ -5,6 +5,8 @@ Corpus-level value truth lives in the entry-contract mirror
 policy on inputs where the expected output is known by hand.
 """
 
+import pytest
+
 from html_parser_spark.functions.links import extract_links
 
 
@@ -117,90 +119,22 @@ def test_links_robustness_fuzz():
                 assert 0 <= s <= e <= len(text), (text, r)
 
 
-def test_fused_extraction_links_matches_separate(spark):
-    """run_extraction_with_links must reproduce both separate operators
-    exactly — same extraction columns, same exploded link rows."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize(
+    "outputs",
+    [("main",), ("dom",), ("main", "links"), ("main", "dom", "links")],
+    ids="+".join,
+)
+def test_extract_stage_matches_single_process(spark, check_stage, outputs):
+    """One tokenize per turn feeds every requested policy: each output
+    set reproduces the single-process extract / dom_extract /
+    extract_links values for every turn, under the stage's column
+    contract (dom_ prefix only next to main; links as an array)."""
     from html_parser_spark.fixtures import ensure_transcripts
-    from html_parser_spark.operators.linkops import run_link_extraction
-    from html_parser_spark.operators.pipeline import (
-        run_extraction,
-        run_extraction_with_links,
-    )
+    from html_parser_spark.operators.pipeline import extract_stage
 
     df = spark.read.parquet(ensure_transcripts(0.001))
-    fused = run_extraction_with_links(df, num_partitions=8)
-    ext_cols = [c for c in fused.columns if c != "links"]
-
-    got_ext = sorted(map(str, fused.select(*ext_cols).collect()))
-    want_ext = sorted(map(str, run_extraction(df, num_partitions=8).collect()))
-    assert got_ext == want_ext
-
-    got_links = sorted(
-        map(
-            tuple,
-            fused.select(
-                "conv_id", "turn_idx", F.explode("links").alias("lk")
-            ).select("conv_id", "turn_idx", "lk.*").collect(),
-        )
-    )
-    want_links = sorted(
-        map(tuple, run_link_extraction(df, num_partitions=8).collect())
-    )
-    assert got_links == want_links
-
-
-def test_full_fused_extraction_matches_all_three(spark):
-    """run_extraction_full must reproduce the token policy, the DOM
-    policy, AND the link harvest exactly from its single tokenize."""
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.fixtures import ensure_transcripts
-    from html_parser_spark.operators.linkops import run_link_extraction
-    from html_parser_spark.operators.pipeline import (
-        run_dom_extraction,
-        run_extraction,
-        run_extraction_full,
-    )
-
-    df = spark.read.parquet(ensure_transcripts(0.001))
-    fused = run_extraction_full(df, num_partitions=8)
-
-    ext_cols = ["conv_id", "turn_idx", "main_text", "spans", "err_count",
-                "parse_status", "n_tokens", "n_blocks", "n_kept_blocks"]
-    got_ext = sorted(map(str, fused.select(*ext_cols).collect()))
-    want_ext = sorted(map(str, run_extraction(df, num_partitions=8).collect()))
-    assert got_ext == want_ext
-
-    dom = run_dom_extraction(df, num_partitions=8)
-    got_dom = sorted(
-        map(
-            str,
-            fused.select(
-                "conv_id",
-                "turn_idx",
-                F.col("dom_main_text").alias("main_text"),
-                F.col("dom_spans").alias("spans"),
-                "err_count",
-                "parse_status",
-                F.col("dom_n_blocks").alias("n_blocks"),
-                F.col("dom_n_kept_blocks").alias("n_kept_blocks"),
-            ).collect(),
-        )
-    )
-    want_dom = sorted(map(str, dom.collect()))
-    assert got_dom == want_dom
-
-    got_links = sorted(
-        map(
-            tuple,
-            fused.select(
-                "conv_id", "turn_idx", F.explode("links").alias("lk")
-            ).select("conv_id", "turn_idx", "lk.*").collect(),
-        )
-    )
-    want_links = sorted(
-        map(tuple, run_link_extraction(df, num_partitions=8).collect())
-    )
-    assert got_links == want_links
+    texts = {
+        (r.conv_id, r.turn_idx): r.text
+        for r in df.select("conv_id", "turn_idx", "text").collect()
+    }
+    check_stage(extract_stage(df, outputs, num_partitions=8), texts, outputs)

@@ -13,7 +13,10 @@ import pytest
 from html_parser_spark.fixtures import ensure_transcripts
 from html_parser_spark.functions.extract import extract
 from html_parser_spark.operators.pipeline import (
+    extract_columns,
+    extract_stage,
     extraction_metrics,
+    run_dom_extraction,
     run_extraction,
 )
 
@@ -48,37 +51,27 @@ def test_row_level_equality_vs_pure_python(transcripts, extracted):
         assert row.parse_status == want["parse_status"]
 
 
-def test_plan_shape(transcripts):
-    """Scan must prune to the 3 needed columns; UDF must run on the Arrow
-    path; exactly one exchange (the salted repartition).
+@pytest.mark.parametrize(
+    "runner", [run_extraction, run_dom_extraction], ids=lambda f: f.__name__
+)
+def test_plan_shape(transcripts, runner):
+    """Scan must prune to the 3 needed columns; exactly one exchange (the
+    salted repartition), then the in-partition sort, then the UDF on the
+    Arrow path.
 
     clearCache first: if an earlier test persisted a matching plan
     subtree (the entry-contract frame cache does), Spark substitutes an
     InMemoryRelation whose stored plan text carries its own Exchange —
     the assertion is about the FRESH plan."""
     transcripts.sparkSession.catalog.clearCache()
-    plan = run_extraction(transcripts)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
+    plan = runner(transcripts)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
-    scan_line = next(l for l in plan.splitlines() if "FileScan" in l)
-    read_schema = scan_line.split("ReadSchema: ")[1]
-    assert read_schema == "struct<conv_id:string,turn_idx:int,text:string>"
-
-
-def test_dom_plan_shape(transcripts):
-    """The DOM pipeline keeps the flagship's plan discipline: pruned
-    scan, one exchange, Arrow UDF path."""
-    from html_parser_spark.operators.pipeline import run_dom_extraction
-
-    transcripts.sparkSession.catalog.clearCache()  # see test_plan_shape
-    plan = (
-        run_dom_extraction(transcripts)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    # the plan prints top-down: UDF above Sort above Exchange
+    assert (
+        plan.index("ArrowEvalPython")
+        < plan.index("Sort [")
+        < plan.index("Exchange")
     )
-    assert "ArrowEvalPython" in plan
-    assert plan.count("Exchange") == 1
     scan_line = next(l for l in plan.splitlines() if "FileScan" in l)
     read_schema = scan_line.split("ReadSchema: ")[1]
     assert read_schema == "struct<conv_id:string,turn_idx:int,text:string>"
@@ -106,7 +99,7 @@ def test_salting_spreads_hot_conversations(spark, transcripts):
     if hot["count"] < 16:
         pytest.skip("fixture too small to contain a hot conversation")
     parts = (
-        run_extraction(transcripts, num_partitions=8, salt_k=8)
+        run_extraction(transcripts, num_partitions=8)
         .filter(F.col("conv_id") == hot.conv_id)
         .withColumn("pid", F.spark_partition_id())
         .select("pid")
@@ -141,10 +134,15 @@ def test_stable_turn_ordering_within_partitions(spark, transcripts):
 
 
 def test_source_partitioned_skips_shuffle(spark, transcripts):
-    """Bucketed-source mode: zero exchanges, identical results."""
-    from pyspark.sql import functions as F
-
-    noshuffle = run_extraction(transcripts, source_partitioned=True)
+    """Bucketed-source mode (``extract_columns`` over a frame that is
+    only sorted within its input partitions): zero exchanges, results
+    identical to the salted stage."""
+    noshuffle = extract_columns(
+        transcripts.select("conv_id", "turn_idx", "text").sortWithinPartitions(
+            "conv_id", "turn_idx"
+        ),
+        {"main"},
+    )
     plan = noshuffle._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
@@ -157,9 +155,10 @@ def test_source_partitioned_skips_shuffle(spark, transcripts):
     assert got == want
 
 
-def test_edge_inputs_flow_through(spark):
+def test_edge_inputs_flow_through(spark, check_stage):
     """NULL / empty / whitespace / markup-only / huge-token turns survive
-    the full distributed path with sane outputs."""
+    the full distributed path with sane outputs, for every output set
+    (the NULL row is built from the requested outputs)."""
     rows = [
         ("c0", 0, None),
         ("c0", 1, ""),
@@ -167,6 +166,7 @@ def test_edge_inputs_flow_through(spark):
         ("c0", 3, "<div></div>"),
         ("c0", 4, "x" * 100_000),
         ("c0", 5, "<p>" + "y" * 50_000 + "</p>"),
+        ("c0", 6, '<p>see <a href="/u">the docs</a> here</p>'),
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     got = {r.turn_idx: r for r in run_extraction(df, num_partitions=2).collect()}
@@ -176,6 +176,10 @@ def test_edge_inputs_flow_through(spark):
     assert got[3].main_text == "" and got[3].n_blocks == 0
     assert got[4].main_text == "x" * 100_000
     assert got[5].main_text == "y" * 50_000
+
+    texts = {(c, t): text for c, t, text in rows}
+    for outputs in ({"main"}, {"dom"}, {"main", "links"}, {"main", "dom", "links"}):
+        check_stage(extract_stage(df, outputs, num_partitions=2), texts, outputs)
 
 
 def test_assemble_conversations_orders_turns(spark):

@@ -74,7 +74,7 @@ def test_salted_repartition_spreads_hot_conversation(spark):
         (f"c{j % 100}", j // 100, f"<p>cold {j}</p>") for j in range(n_cold)
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    ext = run_extraction(df, num_partitions=32, salt_k=8)
+    ext = run_extraction(df, num_partitions=32)
     per_part = (
         ext.withColumn("pid", F.spark_partition_id())
         .filter(F.col("conv_id") == "c_hot")

@@ -121,8 +121,7 @@ def main() -> None:
         help="spark.io.compression.codec for shuffle/spill blocks "
         "(CLAUDE.md invariant: heavy jobs need zstd — the sf10 dedup "
         "stage's transient scratch is ~38 GB zstd vs >80 GB lz4 = "
-        "disk-full on the single sandbox disk; round 4 ran it via the "
-        "session conf, round 5 makes the job self-sufficient).",
+        "disk-full on the single sandbox disk).",
     )
     args = ap.parse_args()
 
@@ -133,7 +132,7 @@ def main() -> None:
         dedup_cluster_keep_list,
         decontaminate,
     )
-    from html_parser_spark.operators.pipeline import run_extraction_with_links
+    from html_parser_spark.operators.pipeline import extract_stage
     from html_parser_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -242,19 +241,12 @@ def main() -> None:
     else:
         transcripts = spark.read.parquet(args.input)
         n_turns = transcripts.count()
-        if args.with_dom:
-            # the three-way fusion: the SAME tokenize also runs the
-            # DOM-heuristic policy; dom_* columns ride the fused
-            # checkpoint for downstream quality models (cost ≈ the DOM
-            # pass alone instead of a second full UDF stage — BENCH.md
-            # round 4)
-            from html_parser_spark.operators.pipeline import (
-                run_extraction_full,
-            )
-
-            extracted = run_extraction_full(transcripts)
-        else:
-            extracted = run_extraction_with_links(transcripts)
+        # --with-dom: the SAME tokenize also runs the DOM-heuristic
+        # policy; dom_* columns ride the fused checkpoint for downstream
+        # quality models (cost ≈ the DOM pass alone instead of a second
+        # full UDF stage — BENCH.md round 4)
+        outputs = {"main", "dom", "links"} if args.with_dom else {"main", "links"}
+        extracted = extract_stage(transcripts, outputs)
         extracted.write.mode("overwrite").parquet(
             os.path.join(args.work, "fused")
         )
@@ -295,11 +287,9 @@ def main() -> None:
         stage("linkrank", n_links, n_targets, t0)
 
     # 2. QUALITY — Gopher/C4 repetition gates, computed INLINE on the
-    # document rows (scan → project → filter, zero shuffle).  The old
-    # keep-list + left_semi form scanned the stage input twice and
-    # shuffled the full text through a SortMergeJoin — the one
-    # super-linear stage in the decade curve (7.8× per 10× at sf1.0,
-    # BENCH.md) until this.
+    # document rows (scan → project → filter, zero shuffle).  A keep-list
+    # + left_semi form scans the stage input twice and shuffles the full
+    # text through a SortMergeJoin (7.8× per 10× at sf1.0, BENCH.md).
     t0 = time.time()
     d2 = docs_dir("quality")
     if committed(f"{d2}/documents.parquet"):
