@@ -43,6 +43,7 @@ from html_parser_spark.operators.pipeline import (
     extraction_metrics,
     run_dom_extraction,
     run_extraction,
+    salted_exchange,
 )
 
 
@@ -78,21 +79,14 @@ def _extracted(spark: SparkSession, sf: float) -> DataFrame:
 
 
 def _tokenized(spark: SparkSession, sf: float) -> DataFrame:
-    """(conv_id, turn_idx, tokens) with the same explicit-partition-count
-    discipline as the extraction path (CLAUDE.md invariant)."""
+    """(conv_id, turn_idx, tokens) behind the extraction stage's salted
+    exchange (CLAUDE.md explicit-partition-count invariant)."""
     key = ("tokens", id(spark), sf)
     df = _FRAME_CACHE.get(key)
     if df is None:
-        t = _transcripts(spark, sf)
-        n_parts = max(
-            t.sparkSession.sparkContext.defaultParallelism * 4,
-            int(t.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
-        salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(8))
+        t = _transcripts(spark, sf).select("conv_id", "turn_idx", "text")
         df = (
-            t.select("conv_id", "turn_idx", "text")
-            .repartition(n_parts, F.col("conv_id"), salt)
-            .sortWithinPartitions("conv_id", "turn_idx")
+            salted_exchange(t)
             .select("conv_id", "turn_idx", tokenize_udf(F.col("text")).alias("tokens"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )

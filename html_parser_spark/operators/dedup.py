@@ -2,9 +2,9 @@
 
 Four families, scale-ranked:
 
-- **exact** — hash-groupBy on a normalized fingerprint.  One shuffle on a
-  16-byte key; at 100 TB this is the cheapest possible dedup and the
-  partial aggregation (map-side combine) means only (hash, count, min_id)
+- **exact** — hash-groupBy on a normalized fingerprint
+  (:func:`dedup_keep_list`).  One shuffle on a 16-byte key; the partial
+  aggregation (map-side combine) means only (hash, count, min_id)
   tuples ever shuffle, never text.
 - **MinHash + LSH** — word-3-shingles → k min-hashes → banded keys →
   bucket self-join.  The self-join is on band keys, so candidate
@@ -12,9 +12,17 @@ Four families, scale-ranked:
   then computed only for bucket collisions.
 - **SimHash** — 64-bit sign-sketch over word hashes; near-dups have small
   Hamming distance.  Computed in a vectorized pandas UDF (bit-twiddling
-  is not expressible as cheap built-ins); driver check is rows-only, the
-  pytest oracle is a pure-Python reimplementation.
+  is not expressible as cheap built-ins); the pytest oracle is a
+  pure-Python reimplementation.
 - **embedding cosine** — see :mod:`.similarity`.
+
+Cluster resolution (:func:`dedup_cluster_keep_list`) unions the
+verified MinHash and SimHash edges of :func:`near_dup_edges` and labels
+components with the one min-label propagation loop
+(:func:`_propagate_min_labels`); the same loop resolves the distinct
+sketch graph inside :func:`simhash_component_edges`.  Incremental
+ingest has one body, :func:`incremental_dedup_against`;
+:func:`incremental_dedup` is its single-table front.
 
 Parity rule for SQL-oracled ops: hashing is md5 hex (identical in Spark
 and DuckDB), min over hex strings is lexicographic in both, shingling is
@@ -33,7 +41,7 @@ from pyspark.sql.types import StringType
 from ..functions.textnorm import ascii_words
 from ..plans.session import free_local_checkpoint, swap_persist as _swap_persist
 
-# Default MinHash geometry (VERDICT r02 item 4): 128 hashes / 16 bands
+# Default MinHash geometry: 128 hashes / 16 bands
 # (r=8 rows per band) — the classic corpus-dedup operating point: band
 # collision probability J^r gives an S-curve centered near J≈(1/16)^(1/8)
 # ≈ 0.71 with ~0.4% collision rate at J=0.4, so candidate volume stays
@@ -49,12 +57,27 @@ N_BANDS = 16
 GATE_N_HASHES = 8
 GATE_N_BANDS = 4
 
-# Upper bound on candidate-member ids eligible for a broadcast
-# semi-join build side (ngram_jaccard_of).  50M int64 ids ≈ 400 MB
-# pre-serialization — comfortably under the 8 GB broadcast hard cap
-# with headroom for the hashed-relation overhead; past it the verify
-# semi-join degrades to a shuffled join rather than failing (ADVICE r4).
+# Upper bound on the rows of an id table broadcast as a join build
+# side: candidate members in the verify semi-join (_verify_candidates),
+# (sh64, comp) labels in the sketch label propagation
+# (_sketch_components).  50M int64 ids ≈ 400 MB pre-serialization (the
+# labels twice that) — under the 8 GB broadcast hard cap with headroom
+# for the hashed-relation overhead; past it both degrade to a shuffled
+# form rather than failing.
 BROADCAST_MEMBER_LIMIT = 50_000_000
+
+# Cluster-resolution and incremental-ingest operating point: the exact
+# Jaccard a MinHash candidate must reach to count as a near-dup, the
+# SimHash radius, the pigeonhole block count of the sketch-component
+# buckets (m=6/h=3: ~32-bit keys, see _pigeonhole_keys), the
+# label-propagation round bound, and the seeded hash bucket that
+# selects the single-table incremental batch (1 in 10 doc_ids).
+JACCARD_THRESHOLD = 0.5
+MAX_HAMMING = 3
+N_BLOCKS = 6
+MAX_ITER = 25
+BATCH_SEED = "incr-v1"
+BATCH_BUCKETS = 10
 
 
 # seeded Carter-Wegman coefficients for the "fast" MinHash family
@@ -74,27 +97,6 @@ def _norm():
 
 
 NORM_SQL = "trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))"
-
-
-def exact_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Groups of exact (whitespace/case-normalized) duplicates."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.select("doc_id", F.md5(_norm()).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def exact_duplicates_sql(table: str = "documents") -> str:
-    return f"""
-    SELECT md5({NORM_SQL}) AS text_hash,
-           count(*) AS n_docs,
-           min(doc_id) AS keep_doc_id
-    FROM {table}
-    GROUP BY 1 HAVING count(*) > 1
-    """
 
 
 def _shingles():
@@ -328,21 +330,29 @@ def minhash_candidates(
     )
 
 
+def _band_structs_sql(n_hashes: int, n_bands: int) -> str:
+    """DuckDB twin of :func:`minhash_band_keys` (md5 family): the list
+    body of one ``{band, band_key}`` struct per band."""
+    rows_per_band = n_hashes // n_bands
+    return ", ".join(
+        "{'band': %d, 'band_key': md5(%s)}"
+        % (
+            b,
+            " || '|' || ".join(
+                f"mh{b * rows_per_band + r}" for r in range(rows_per_band)
+            ),
+        )
+        for b in range(n_bands)
+    )
+
+
 def minhash_candidates_sql(
     table: str = "documents",
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
 ) -> str:
     sig = minhash_signatures_sql(table, n_hashes)
-    rows_per_band = n_hashes // n_bands
-    band_structs = ", ".join(
-        "{'band': %d, 'band_key': md5(%s)}"
-        % (
-            b,
-            " || '|' || ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band)),
-        )
-        for b in range(n_bands)
-    )
+    band_structs = _band_structs_sql(n_hashes, n_bands)
     return f"""
     WITH sig AS ({sig}),
     keys AS (
@@ -363,32 +373,36 @@ def ngram_jaccard_of(
     hash_family: str = "md5",
 ) -> DataFrame:
     """DataFrame-input core of :func:`ngram_jaccard` — LSH candidates
-    over ``docs`` (doc_id, text) scored with exact shingle-set Jaccard.
-    Callers that have already collapsed exact-text groups
-    (:func:`near_dup_edges`) pass one representative per distinct text
-    here, so no exact-duplicate clique ever reaches the verify join.
-
-    The verify stage only ever touches docs that appear in some
-    candidate pair: the candidate frame is persisted (ids-only, tiny —
-    it is read once for the member-id set and once by the verify join)
-    and the shingle frame is built over a broadcast semi-join of
-    ``docs`` against those member ids, so verify-stage shuffle volume
-    is O(candidate members), never O(corpus).  Measured at sf1.0
-    (927k docs, post-collapse candidates = 0): the verify stage's
-    full-corpus shingle build + join was 23.5 s for zero output
-    (BENCH.md round 4 fine attribution); the incremental-ingest job
-    has used the same shrink-before-shingle shape since round 4.
-    Member count is bounded by 2·|candidates|; the broadcast hint is
-    GATED on that bound (the persisted candidate frame is counted —
-    free, verify materializes it anyway): past
-    ``BROADCAST_MEMBER_LIMIT`` ids the semi-join degrades to a shuffled
-    hash join on doc_id instead of blowing the driver broadcast cap
-    (ADVICE r4), the same degradation class as ``corpus_job.py
-    --bucket-docs``'s checkpointed form."""
+    over ``docs`` (doc_id, text) scored with exact shingle-set Jaccard
+    by :func:`_verify_candidates`.  Callers that have already collapsed
+    exact-text groups (:func:`near_dup_edges`) pass one representative
+    per distinct text here, so no exact-duplicate clique ever reaches
+    the verify join."""
     cand = _swap_persist(
         "ngram_jaccard_cand",
         minhash_candidates_of(docs, n_hashes, n_bands, hash_family),
     )
+    return _verify_candidates(docs, cand, threshold)
+
+
+def _verify_candidates(
+    docs: DataFrame, cand: DataFrame, threshold: float
+) -> DataFrame:
+    """Score the persisted candidate pairs ``cand`` (doc_a, doc_b) with
+    exact shingle-set Jaccard over ``docs`` (doc_id, text); keep pairs
+    at/above ``threshold`` as (doc_a, doc_b, jaccard_bp).
+
+    Only docs that appear in some candidate pair are shingled: the
+    shingle frame is built over a semi-join of ``docs`` against the
+    candidate member ids, so verify-stage shuffle volume is O(candidate
+    members), never O(corpus).  Measured at sf1.0 (927k docs,
+    post-collapse candidates = 0): the full-corpus shingle build + join
+    was 23.5 s for zero output (BENCH.md round 4 fine attribution).
+    Member count is bounded by 2·|candidates| (the persisted frame is
+    counted — free, verify materializes it anyway); the semi-join is
+    broadcast while that bound is within ``BROADCAST_MEMBER_LIMIT`` and
+    a shuffled hash join on doc_id past it, instead of blowing the
+    driver broadcast cap."""
     members = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
@@ -396,20 +410,12 @@ def ngram_jaccard_of(
     )
     if 2 * cand.count() <= BROADCAST_MEMBER_LIMIT:
         members = F.broadcast(members)
-    sh_docs = docs.join(members, "doc_id", "left_semi").select(
+    sh = docs.join(members, "doc_id", "left_semi").select(
         "doc_id", _shingles().alias("sh")
     )
-    return _jaccard_verify(cand, sh_docs, threshold)
-
-
-def _jaccard_verify(
-    cand: DataFrame, docs: DataFrame, threshold: float
-) -> DataFrame:
-    """Score candidate pairs (doc_a, doc_b) with exact Jaccard over a
-    (doc_id, sh) shingle frame; keep pairs at/above ``threshold``."""
     j = (
-        cand.join(docs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
+        cand.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
+        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -663,23 +669,57 @@ def simhash_near_dups_sql(table: str = "documents", max_hamming: int = 3) -> str
 
 # ------------------------------------------------- cluster resolution
 #
-# VERDICT r02 item 3: candidate *pairs* alone don't dedupe anything —
-# every production dedup ends with connected components over the pair
-# graph and a per-cluster representative.
+# Candidate pairs alone don't dedupe anything: cluster resolution ends
+# with connected components over the verified pair graph and one
+# representative per cluster.
+
+
+def _exact_text_collapse(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate collapse of ``docs`` (doc_id, text) →
+    ``(stars, reps)``: ``stars`` (doc_a, doc_b) links every doc to the
+    min-doc_id of its md5(normalized text) group, ``reps`` (doc_id,
+    text) holds one persisted representative per distinct text.
+
+    The sf10 postmortem fix (BENCH.md round 4): exact-duplicate groups
+    share every band key, so LSH+verify over all docs emits the FULL
+    k(k−1)/2 clique per k-doc group (22M edges at sf1.0, disk-full at
+    sf10).  A star needs no verification (Jaccard 1.0, Hamming 0), and
+    LSH+verify over the reps finds the same components: shingles,
+    Jaccard and the SimHash sketch are functions of the normalized
+    text, so a verified edge (d, e) exists in the full formulation iff
+    (rep(d), rep(e)) is verified here.  Edge count drops from O(Σ k²)
+    to O(docs + verified distinct-text pairs).  min_by keeps ``reps``
+    deterministic; the map-side partial agg means raw text crosses the
+    exchange once per distinct text per input partition, never once
+    per doc."""
+    ids = docs.select("doc_id", F.md5(_norm()).alias("th"))
+    groups = ids.groupBy("th").agg(F.min("doc_id").alias("rep"))
+    stars = (
+        ids.join(groups, "th")
+        .filter(F.col("doc_id") != F.col("rep"))
+        .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    )
+    reps = _swap_persist(
+        "near_dup_reps",
+        docs.groupBy(F.md5(_norm()).alias("th")).agg(
+            F.min("doc_id").alias("doc_id"),
+            F.expr("min_by(text, doc_id)").alias("text"),
+        ).select("doc_id", "text"),
+    )
+    return stars, reps
 
 
 def near_dup_edges(
     spark: SparkSession,
     sf_dir: str,
-    jaccard_threshold: float = 0.5,
-    max_hamming: int = 3,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
 ) -> DataFrame:
     """Verified near-duplicate edges (doc_a < doc_b): MinHash-LSH
-    candidates that PASS the exact-Jaccard verify stage, unioned with
-    the SimHash COMPONENT-EQUIVALENT edge set within ``max_hamming``
+    candidates that PASS the exact-Jaccard verify stage at
+    ``JACCARD_THRESHOLD``, unioned with the SimHash
+    COMPONENT-EQUIVALENT edge set within ``MAX_HAMMING``
     (:func:`simhash_component_edges` — stars over identical-sketch
     groups plus representative edges, O(docs + sketch pairs) instead of
     the O(k²)-per-group full pair clique; connected components are
@@ -696,50 +736,18 @@ def near_dup_edges(
     components, without 146.4/139.8 s, keeper sets identical
     (BENCH.md round 4).
 
-    Exact-text collapse (the sf10 postmortem fix, BENCH.md round 4):
-    exact-duplicate groups share every band key, so running LSH+verify
-    over all docs emits the FULL k(k−1)/2 clique per k-doc group —
-    edge count grows quadratically in duplicate-group size (22M edges
-    at sf1.0, disk-full at sf10).  Instead, docs are grouped on
-    md5(normalized text) first; each group contributes a STAR to its
-    min-doc_id representative (Jaccard 1.0 and Hamming 0 by definition
-    — no verification needed), and LSH+verify runs over ONE
-    representative per distinct text.  Components are provably
-    identical: shingles and Jaccard are functions of the normalized
-    text, so a verified edge (d, e) exists in the full formulation iff
-    (rep(d), rep(e)) is verified here, and stars keep each exact group
-    connected.  Edge count drops from O(Σ k²) to O(docs + verified
-    distinct-text pairs)."""
+    Both near-dup families run over one representative per distinct
+    normalized text, with every other doc starred to its rep
+    (:func:`_exact_text_collapse`), so no exact-duplicate clique is
+    ever emitted."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ids = docs.select("doc_id", F.md5(_norm()).alias("th"))
-    groups = ids.groupBy("th").agg(F.min("doc_id").alias("rep"))
-    stars = (
-        ids.join(groups, "th")
-        .filter(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    # one representative text per distinct normalized text — min_by keeps
-    # the frame deterministic; the map-side partial agg means raw text
-    # crosses the exchange once per distinct text per input partition,
-    # never once per doc.  BOTH expensive per-text computations (MinHash
-    # signatures AND the SimHash sketch UDF) run over this frame: the
-    # sketch is a function of the same whitespace-normalized word
-    # sequence the group key hashes (simhash_sketches_of docstring), so
-    # sketching a group's rep sketches the whole group.
-    reps = _swap_persist(
-        "near_dup_reps",
-        docs.groupBy(F.md5(_norm()).alias("th")).agg(
-            F.min("doc_id").alias("doc_id"),
-            F.expr("min_by(text, doc_id)").alias("text"),
-        ).select("doc_id", "text"),
-    )
+    stars, reps = _exact_text_collapse(docs)
     mh = ngram_jaccard_of(
-        reps, threshold=jaccard_threshold,
+        reps, threshold=JACCARD_THRESHOLD,
         n_hashes=n_hashes, n_bands=n_bands, hash_family=hash_family,
     ).select("doc_a", "doc_b")
     sh = simhash_component_edges_of(
-        simhash_sketches_of(reps).select("doc_id", _sh64().alias("sh64")),
-        max_hamming=max_hamming,
+        simhash_sketches_of(reps).select("doc_id", _sh64().alias("sh64"))
     ).select("doc_a", "doc_b")
     return stars.unionByName(mh).unionByName(sh)
 
@@ -747,7 +755,7 @@ def near_dup_edges(
 def dedup_cluster_keep_list(
     spark: SparkSession,
     sf_dir: str,
-    max_iter: int = 25,
+    max_iter: int = MAX_ITER,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
@@ -776,30 +784,69 @@ def dedup_cluster_keep_list(
     return connected_components(docs, edges, max_iter)
 
 
-def connected_components(
-    docs: DataFrame, edges: DataFrame, max_iter: int = 25
+def _propagate_min_labels(
+    vertices: DataFrame, key: str, label: str, neighbours, max_iter: int
 ) -> DataFrame:
-    """Min-label propagation + path halving over ``edges`` (doc_a, doc_b
-    undirected); returns ``(doc_id, cluster_id, is_keeper)`` for every
-    row of ``docs`` (singletons keep themselves).
+    """Min-label propagation with path halving over the ``key`` column of
+    ``vertices``; returns the converged, checkpointed ``(key, label)``
+    frame, ``label`` being the minimum ``key`` of the component.
+    Raises ``RuntimeError`` when ``max_iter`` rounds do not converge.
 
-    Two hard-won iteration rules (measured on a template-heavy extracted
-    corpus whose simhash edges form long CHAINS — 922 docs, 565 edges):
+    ``neighbours(labels)`` maps the current ``(key, label)`` frame to
+    ``(key, label)`` rows offering each vertex its neighbours' labels —
+    the caller's graph lives only in that function.  Each round merges
+    them by a map-side-combinable min-aggregation, then resolves every
+    label through the label table (``label[v] ← label[label[v]]``, one
+    extra ids-only equi join that always hits): chain convergence is
+    O(log diameter) — a template-heavy chain corpus (922 docs, 565
+    edges) converges in 4 rounds instead of 9+.
 
-    - ``localCheckpoint`` each round, not bare ``persist``: persist
-      caches the DATA but the logical plan still deepens every round,
-      and re-analysis made round cost GROW 18→104 s by round 4.
-      Truncating lineage holds rounds at join-cost.  (On a multi-
-      executor cluster with dynamic allocation, prefer a reliable
-      ``checkpoint()`` dir — localCheckpoint blocks die with their
-      executor; same plan shape either way.)
-    - path halving: each round also resolves every label through the
-      label table (``label[d] ← label[label[d]]``, one extra ids-only
-      equi join — cluster labels are themselves doc ids, so the lookup
-      always hits).  Chain convergence becomes O(log diameter) instead
-      of O(diameter): the measured chain corpus converges in 4 rounds
-      instead of 9+.
-    """
+    ``localCheckpoint`` each round, not bare ``persist``: the plan of a
+    persisted frame still deepens every round, and re-analysis made
+    round cost GROW 18→104 s by round 4 on that corpus.  (On a
+    multi-executor cluster with dynamic allocation, prefer a reliable
+    ``checkpoint()`` dir — localCheckpoint blocks die with their
+    executor.)  ``.unpersist()`` is a NO-OP on a localCheckpoint()ed
+    frame, so the previous round's labels are released through
+    ``free_local_checkpoint``."""
+    labels = vertices.select(key, F.col(key).alias(label)).localCheckpoint()
+    for _ in range(max_iter):
+        merged = (
+            labels.unionByName(neighbours(labels))
+            .groupBy(key)
+            .agg(F.min(label).alias(label))
+        )
+        parent = merged.select(
+            F.col(key).alias("p_id"), F.col(label).alias("p_label")
+        )
+        new_labels = (
+            merged.join(parent, merged[label] == parent["p_id"])
+            .select(key, F.least(label, "p_label").alias(label))
+            .localCheckpoint()
+        )
+        changed = (
+            labels.alias("o")
+            .join(new_labels.alias("n"), key)
+            .filter(F.col(f"o.{label}") != F.col(f"n.{label}"))
+            .count()
+        )
+        free_local_checkpoint(labels)
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"label propagation did not converge in {max_iter} rounds — "
+        "component diameter exceeds the bound; use pointer doubling"
+    )
+
+
+def connected_components(
+    docs: DataFrame, edges: DataFrame, max_iter: int = MAX_ITER
+) -> DataFrame:
+    """Connected components of ``edges`` (doc_a, doc_b undirected) by
+    :func:`_propagate_min_labels` over the doc adjacency table; returns
+    ``(doc_id, cluster_id, is_keeper)`` for every row of ``docs``
+    (singletons keep themselves)."""
     edges = edges.persist()  # adj's two union branches share one compute
     adj = (
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -809,50 +856,15 @@ def connected_components(
         .localCheckpoint()
     )
     edges.unpersist()
-    labels = docs.select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        neighbor_min = adj.join(
-            labels, adj["dst"] == labels["doc_id"]
-        ).select(F.col("src").alias("doc_id"), "cluster_id")
-        merged = (
-            labels.unionByName(neighbor_min)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
+
+    def neighbours(labels: DataFrame) -> DataFrame:
+        return adj.join(labels, adj["dst"] == labels["doc_id"]).select(
+            F.col("src").alias("doc_id"), "cluster_id"
         )
-        parent = merged.select(
-            F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_cid")
-        )
-        new_labels = (
-            merged.join(parent, merged["cluster_id"] == parent["p_id"])
-            .select(
-                "doc_id",
-                F.least("cluster_id", "p_cid").alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("n"), "doc_id")
-            .filter(F.col("o.cluster_id") != F.col("n.cluster_id"))
-            .count()
-        )
-        # free the previous round's checkpointed blocks eagerly — relying
-        # on ContextCleaner lets storage accumulate across high-iteration
-        # runs (ADVICE r03).  NB: plain .unpersist() is a NO-OP on a
-        # localCheckpoint()ed frame (nothing is registered in the
-        # CacheManager) — the blocks are only reachable through the
-        # LogicalRDD plan node, which is what the helper releases
-        free_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds — "
-            "component diameter exceeds the bound; use pointer doubling"
-        )
+
+    labels = _propagate_min_labels(
+        docs, "doc_id", "cluster_id", neighbours, max_iter
+    )
     # the surviving labels frame is checkpointed, so the adjacency
     # table's blocks are dead weight from here on
     free_local_checkpoint(adj)
@@ -865,18 +877,16 @@ def connected_components(
 
 def dedup_cluster_keep_list_sql(
     table: str = "documents",
-    jaccard_threshold: float = 0.5,
-    max_hamming: int = 3,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
 ) -> str:
     """DuckDB twin: the same verified edge set, transitive closure via a
     recursive CTE, min reachable id per document."""
-    jac_bp = int(jaccard_threshold * 10000)
+    jac_bp = int(JACCARD_THRESHOLD * 10000)
     return f"""
     WITH RECURSIVE
     jac AS ({ngram_jaccard_sql(table, n_hashes, n_bands)}),
-    shp AS ({simhash_near_dups_sql(table, max_hamming)}),
+    shp AS ({simhash_near_dups_sql(table, MAX_HAMMING)}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM jac WHERE jaccard_bp >= {jac_bp}
       UNION SELECT doc_b, doc_a FROM jac WHERE jaccard_bp >= {jac_bp}
@@ -1018,107 +1028,68 @@ def simhash_near_dups(
     )
 
 
-def _sketch_components(
-    nodes: DataFrame,
-    max_hamming: int,
-    n_blocks: int,
-    max_iter: int = 25,
-    per_round_keys: bool = False,
-) -> DataFrame:
+def _sketch_components(nodes: DataFrame) -> DataFrame:
     """Connected components of the DISTINCT-sketch graph (vertices =
-    sh64 values, edges = pairs within ``max_hamming`` bits) WITHOUT
-    ever materializing the pair set: each min-label-propagation round
-    re-derives neighbor labels through the pigeonhole bucket self-join
-    and streams them straight into a map-side-combinable
+    sh64 values, edges = pairs within ``MAX_HAMMING`` bits) WITHOUT
+    ever materializing the pair set: each :func:`_propagate_min_labels`
+    round re-derives neighbour labels through the pigeonhole bucket
+    self-join and streams them straight into the map-side-combinable
     min-aggregation, so the (superlinear — 21.7M at sf1.0, ~22× per
     10×, BENCH.md sf10 postmortem) pair stream lives only inside the
     stage pipeline and the per-round shuffle stays O(distinct sketches
-    × C(n_blocks, n_blocks−h) keys).  Path halving + localCheckpoint
-    per round as in :func:`connected_components` (labels are sh64
-    values, so the parent lookup always hits).  Returns ``(sh64,
-    comp)`` with ``comp`` = the component's minimum sh64."""
+    × C(N_BLOCKS, N_BLOCKS−h) keys).  Returns ``(sh64, comp)`` with
+    ``comp`` = the component's minimum sh64.
+
+    The bucket STRUCTURE (sh64 → pigeonhole keys) is constant across
+    rounds; only labels change.  While the distinct-sketch count (the
+    label table's row count) is at most ``BROADCAST_MEMBER_LIMIT``, the
+    keyed frame is built and partitioned once and each round attaches
+    the fresh labels by a BROADCAST join ((sh64, comp) int64 pairs —
+    ~50 MB at sf10's 3.3M distinct sketches), so the bucket self-join
+    reads the resident partitions with no per-round exchange on either
+    side: on the sf1.0 quality reps (821,135 distinct sketches,
+    identical 440,734-component output) 68.0/64.5 s against 74.9/77.3 s
+    for re-exploding the keys every round, ~13% (BENCH.md round 5).
+    Past the limit the labels are too big to broadcast and each round
+    re-explodes and re-exchanges the keys with the labels attached."""
     n_part = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    keys = F.array(*_pigeonhole_keys(n_blocks, max_hamming))
+    keys = F.array(*_pigeonhole_keys(N_BLOCKS, MAX_HAMMING))
     ham = F.bit_count(F.col("a.sh64").bitwiseXOR(F.col("b.sh64")))
-    # The bucket STRUCTURE (sh64 → C(n_blocks, h) pigeonhole keys) is
-    # constant across rounds; only labels change.  Round 4 re-exploded
-    # and re-exchanged the ~20×|sketches| keyed frame EVERY round; the
-    # keyed frame is now built/partitioned once and persisted, and each
-    # round attaches the fresh labels by a BROADCAST join (labels are
-    # (sh64, comp) int64 pairs — ~50 MB at sf10's 3.3M distinct
-    # sketches), so the bucket self-join reads the resident partitions
-    # with no per-round exchange on either side.  Isolated A/B/A/B on
-    # the sf1.0 quality reps (821,135 distinct sketches, identical
-    # 440,734-component output): hoisted 68.0/64.5 s vs per-round
-    # 74.9/77.3 s — ~13%; the in-bucket join + min-agg dominate the
-    # remainder (BENCH.md round 5).  ``per_round_keys=True`` keeps the
-    # round-4 shape as the measurable control.
     keyed_static = None
-    if not per_round_keys:
-        keyed_static = _swap_persist(
-            "sketch_lp_keyed",
-            nodes.select("sh64", F.explode(keys).alias("k")).repartition(
-                n_part, "k"
-            ),
-        )
-    labels = nodes.select(
-        "sh64", F.col("sh64").alias("comp")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        if per_round_keys:
+    if nodes.count() <= BROADCAST_MEMBER_LIMIT:
+        keyed_static = nodes.select(
+            "sh64", F.explode(keys).alias("k")
+        ).repartition(n_part, "k").persist()
+
+    def neighbours(labels: DataFrame) -> DataFrame:
+        if keyed_static is not None:
+            keyed = keyed_static.join(F.broadcast(labels), "sh64")
+        else:
             keyed = labels.select(
                 "sh64", "comp", F.explode(keys).alias("k")
             ).repartition(n_part, "k")
-        else:
-            keyed = keyed_static.join(F.broadcast(labels), "sh64")
-        neigh = (
+        return (
             keyed.alias("a")
             .join(keyed.alias("b"), F.col("a.k") == F.col("b.k"))
-            .filter((ham >= 1) & (ham <= max_hamming))
+            .filter((ham >= 1) & (ham <= MAX_HAMMING))
             .select(F.col("a.sh64").alias("sh64"), F.col("b.comp").alias("comp"))
         )
-        merged = (
-            labels.unionByName(neigh)
-            .groupBy("sh64")
-            .agg(F.min("comp").alias("comp"))
-        )
-        parent = merged.select(
-            F.col("sh64").alias("p_id"), F.col("comp").alias("p_comp")
-        )
-        new_labels = (
-            merged.join(parent, merged["comp"] == parent["p_id"])
-            .select("sh64", F.least("comp", "p_comp").alias("comp"))
-            .localCheckpoint()
-        )
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("n"), "sh64")
-            .filter(F.col("o.comp") != F.col("n.comp"))
-            .count()
-        )
-        free_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"sketch label propagation did not converge in {max_iter} rounds"
-    )
+
+    try:
+        return _propagate_min_labels(nodes, "sh64", "comp", neighbours, MAX_ITER)
+    finally:
+        if keyed_static is not None:
+            keyed_static.unpersist()
 
 
-def simhash_component_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = 3,
-    n_blocks: int = 6,
-    max_iter: int = 25,
-) -> DataFrame:
+def simhash_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component-EQUIVALENT simhash edge set for cluster resolution:
     O(docs) stars, never pair cliques.  Two collapses compose:
 
     1. docs sharing a sketch attach to the group's min-doc_id
        representative by a STAR (identical sketches are hamming-0
        neighbors by definition);
-    2. sketch-value components within ``max_hamming`` are resolved by
+    2. sketch-value components within ``MAX_HAMMING`` are resolved by
        STREAMING label propagation (:func:`_sketch_components` — the
        pair set is never materialized; the earlier rep-EDGE
        formulation emitted one row per close sketch pair, which went
@@ -1128,25 +1099,17 @@ def simhash_component_edges(
 
     Connected components over stars(1) ∪ stars(2) equal components
     over the full :func:`simhash_near_dups` pair set: a full-graph
-    edge (x, y) exists iff their sketches are within ``max_hamming``,
+    edge (x, y) exists iff their sketches are within ``MAX_HAMMING``,
     which is exactly when rep(x) and rep(y) share a sketch component —
     and both are then starred to the same component representative.
     Every edge here links docs whose sketches are connected through
-    verified ≤``max_hamming`` hops, so no false merges are added."""
+    verified ≤``MAX_HAMMING`` hops, so no false merges are added."""
     return simhash_component_edges_of(
-        simhash_sketches(spark, sf_dir).select("doc_id", _sh64().alias("sh64")),
-        max_hamming,
-        n_blocks,
-        max_iter,
+        simhash_sketches(spark, sf_dir).select("doc_id", _sh64().alias("sh64"))
     )
 
 
-def simhash_component_edges_of(
-    sk: DataFrame,
-    max_hamming: int = 3,
-    n_blocks: int = 6,
-    max_iter: int = 25,
-) -> DataFrame:
+def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
     """Core of :func:`simhash_component_edges` over a ``(doc_id, sh64)``
     frame — :func:`near_dup_edges` feeds it sketches of one
     representative per distinct normalized text, so the Python sketch
@@ -1161,9 +1124,7 @@ def simhash_component_edges_of(
         .filter(F.col("doc_id") != F.col("rep"))
         .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     )
-    comp = _sketch_components(
-        groups.select("sh64"), max_hamming, n_blocks, max_iter
-    )
+    comp = _sketch_components(groups.select("sh64"))
     labeled = comp.join(groups, "sh64")
     comp_rep = labeled.groupBy("comp").agg(F.min("rep").alias("comp_rep"))
     rep_stars = (
@@ -1262,139 +1223,42 @@ def decontaminate_sql(
 def incremental_dedup(
     spark: SparkSession,
     sf_dir: str,
-    jaccard_threshold: float = 0.5,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
-    batch_seed: str = "incr-v1",
-    batch_buckets: int = 10,
 ) -> DataFrame:
-    """Dedupe a NEW ingest batch against the existing corpus without
-    re-clustering the corpus: one row per batch document —
-    ``(doc_id, status, dup_of)`` with status ``dup_of_corpus`` (verified
-    near-dup of an existing doc), ``dup_in_batch`` (verified near-dup of
-    a smaller-id batch doc), or ``kept``.  ``dup_of`` is the minimum
-    verified match id (corpus matches take precedence).
-
-    Batch-internal resolution is greedy by id (b drops if ANY smaller
-    batch doc verifies, whether or not that doc itself dropped) — the
-    standard incremental-ingest compromise; full transitive resolution
-    over history is :func:`dedup_cluster_keep_list`'s periodic job.
-
-    Scale shape: in production the corpus side is the STORED band-key
-    table (doc_id, band, band_key) maintained by prior ingests — here it
-    is derived in-plan from the same scan.  The new batch is ingest-sized
-    (≪ corpus), so its band keys are BROADCAST for the cross join: the
-    10^12-doc corpus key table is scanned once and never shuffles, and
-    the verify stage joins shingles for candidate ids only.  The batch
-    membership flag is a pure hash expression over doc_id (the sampling
-    family's seeded bucket), so no membership table is joined anywhere."""
+    """Single-table front of :func:`incremental_dedup_against`: the new
+    ingest batch is the doc_ids whose seeded hash bucket
+    (``BATCH_SEED``, ``BATCH_BUCKETS`` — the sampling family's pure hash
+    expression, so no membership table is joined anywhere) is 0, the
+    corpus is every other document of the same scan, and the corpus
+    band-key table is derived in-plan (md5 family, so the DuckDB twin
+    matches) where production reads the stored one."""
     from .sampling import _bucket
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    is_batch = _bucket(batch_seed, batch_buckets) == 0
-    keys = minhash_band_keys(
-        minhash_signatures(spark, sf_dir, n_hashes), n_hashes, n_bands
-    ).withColumn("is_batch", is_batch)
-    batch_keys = keys.filter("is_batch").drop("is_batch")
-    corpus_keys = keys.filter("NOT is_batch").drop("is_batch")
-
-    vs_corpus = (
-        F.broadcast(batch_keys.alias("b"))
-        .join(
-            corpus_keys.alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.band_key") == F.col("c.band_key")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("match_id"),
-            F.lit("corpus").alias("kind"),
-        )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
     )
-    vs_batch = (
-        batch_keys.alias("x")
-        .join(
-            batch_keys.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("y.doc_id").alias("batch_id"),
-            F.col("x.doc_id").alias("match_id"),
-            F.lit("batch").alias("kind"),
-        )
+    is_batch = _bucket(BATCH_SEED, BATCH_BUCKETS) == 0
+    corpus = docs.filter(~is_batch)
+    corpus_keys = minhash_band_keys(
+        minhash_signatures_of(corpus, n_hashes), n_hashes, n_bands
     )
-    cand = vs_corpus.unionByName(vs_batch).distinct()
-
-    sh = docs.select("doc_id", _shingles().alias("sh"))
-    verified = (
-        cand.join(
-            sh.withColumnRenamed("doc_id", "batch_id").withColumnRenamed(
-                "sh", "sh_b"
-            ),
-            "batch_id",
-        )
-        .join(
-            sh.withColumnRenamed("doc_id", "match_id").withColumnRenamed(
-                "sh", "sh_m"
-            ),
-            "match_id",
-        )
-        .filter(
-            F.size(F.array_intersect("sh_b", "sh_m")).cast("double")
-            / F.greatest(F.size(F.array_union("sh_b", "sh_m")), F.lit(1))
-            >= jaccard_threshold
-        )
-        .select("batch_id", "match_id", "kind")
-    )
-
-    batch_docs = docs.filter(is_batch).select("doc_id")
-    agg = verified.groupBy(F.col("batch_id").alias("doc_id")).agg(
-        F.min(F.when(F.col("kind") == "corpus", F.col("match_id"))).alias(
-            "corpus_min"
-        ),
-        F.min(F.when(F.col("kind") == "batch", F.col("match_id"))).alias(
-            "batch_min"
-        ),
-    )
-    return (
-        batch_docs.join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("corpus_min").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("batch_min").isNotNull(), F.lit("dup_in_batch"))
-            .otherwise(F.lit("kept"))
-            .alias("status"),
-            F.coalesce("corpus_min", "batch_min").cast("long").alias("dup_of"),
-        )
-        .orderBy("doc_id")
+    return incremental_dedup_against(
+        docs.filter(is_batch), corpus_keys, corpus, JACCARD_THRESHOLD,
+        n_hashes, n_bands, hash_family="md5",
     )
 
 
 def incremental_dedup_sql(
     table: str = "documents",
-    jaccard_threshold: float = 0.5,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
-    batch_seed: str = "incr-v1",
-    batch_buckets: int = 10,
 ) -> str:
     from .sampling import _bucket_sql
 
     sig = minhash_signatures_sql(table, n_hashes)
-    rows_per_band = n_hashes // n_bands
-    band_structs = ", ".join(
-        "{'band': %d, 'band_key': md5(%s)}"
-        % (
-            b,
-            " || '|' || ".join(
-                f"mh{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    flag = f"{_bucket_sql(batch_seed, batch_buckets)} = 0"
+    band_structs = _band_structs_sql(n_hashes, n_bands)
+    flag = f"{_bucket_sql(BATCH_SEED, BATCH_BUCKETS)} = 0"
     jac = (
         "len(list_intersect(sb.s, sm.s)) * 1.0 /"
         " greatest(len(list_distinct(sb.s || sm.s)), 1)"
@@ -1423,7 +1287,7 @@ def incremental_dedup_sql(
       FROM cand
       JOIN sh sb ON sb.doc_id = cand.batch_id
       JOIN sh sm ON sm.doc_id = cand.match_id
-      WHERE {jac} >= {jaccard_threshold}
+      WHERE {jac} >= {JACCARD_THRESHOLD}
     ),
     agg AS (
       SELECT batch_id AS doc_id,
@@ -1451,18 +1315,24 @@ def incremental_dedup_against(
     n_bands: int = N_BANDS,
     hash_family: str = "fast",
 ) -> DataFrame:
-    """Two-table :func:`incremental_dedup`: dedupe ``batch_docs``
-    (doc_id, text) against an existing corpus represented by its STORED
-    band-key table ``corpus_keys`` (doc_id, band, band_key — maintained
-    by prior ingests; ``hash_family`` must match how it was built) and
-    the corpus document store ``corpus_docs`` (doc_id, text).  Same
-    output contract as :func:`incremental_dedup`: one row per batch doc,
-    ``(doc_id, status, dup_of)`` with corpus precedence and greedy-by-id
-    batch-internal resolution.  Batch and corpus doc_id spaces must be
-    disjoint (salt ingest ids).
+    """Dedupe a NEW ingest batch ``batch_docs`` (doc_id, text) against
+    an existing corpus without re-clustering the corpus.  The corpus is
+    its STORED band-key table ``corpus_keys`` (doc_id, band, band_key —
+    maintained by prior ingests; ``hash_family`` must match how it was
+    built) plus its document store ``corpus_docs`` (doc_id, text).
+    Batch and corpus doc_id spaces must be disjoint (salt ingest ids).
 
-    Scale shape — what the single-table gate version derives in-plan,
-    this one does against real artifacts:
+    One row per batch document: ``(doc_id, status, dup_of)`` with status
+    ``dup_of_corpus`` (verified near-dup of an existing doc),
+    ``dup_in_batch`` (verified near-dup of a smaller-id batch doc), or
+    ``kept``.  ``dup_of`` is the minimum verified match id (corpus
+    matches take precedence).  Batch-internal resolution is greedy by
+    id (b drops if ANY smaller batch doc verifies, whether or not that
+    doc itself dropped) — the standard incremental-ingest compromise;
+    full transitive resolution over history is
+    :func:`dedup_cluster_keep_list`'s periodic job.
+
+    Scale shape:
     - batch band keys are ingest-sized → BROADCAST against one scan of
       the stored key table; the 10^12-row key table never shuffles and
       the corpus documents are not even touched for candidates,

@@ -153,45 +153,50 @@ def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
     src = f"{sf_dir}/events.parquet"
     ev = spark.read.parquet(src)
     stage = tempfile.mkdtemp(prefix="sess_stage_")
-    flat = os.path.join(stage, "flat")
-    os.makedirs(flat)
-    # 4 contiguous time ranges -> 4 files; percent_rank avoids a driver
-    # collect and keeps the split deterministic (ties broken by event_id)
-    from pyspark.sql import Window
+    # the memory sink holds the output; the staged files and the
+    # checkpoint are scratch once the query has terminated
+    try:
+        flat = os.path.join(stage, "flat")
+        os.makedirs(flat)
+        # 4 contiguous time ranges -> 4 files; percent_rank avoids a
+        # driver collect and keeps the split deterministic (ties broken
+        # by event_id)
+        from pyspark.sql import Window
 
-    w = Window.orderBy("ts", "event_id")
-    bucketed = ev.withColumn(
-        "_b", F.least(F.floor(F.percent_rank().over(w) * 4), F.lit(3))
-    )
-    k = 0
-    for b in range(4):
-        part_dir = os.path.join(stage, f"b{b}")
-        bucketed.filter(F.col("_b") == b).drop("_b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        for f in sorted(glob.glob(f"{part_dir}/part-*.parquet")):
-            dst = os.path.join(flat, f"{k:03d}.parquet")
-            shutil.copy(f, dst)
-            os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
-            k += 1
+        w = Window.orderBy("ts", "event_id")
+        bucketed = ev.withColumn(
+            "_b", F.least(F.floor(F.percent_rank().over(w) * 4), F.lit(3))
+        )
+        k = 0
+        for b in range(4):
+            part_dir = os.path.join(stage, f"b{b}")
+            part = bucketed.filter(F.col("_b") == b).drop("_b")
+            part.coalesce(1).write.mode("overwrite").parquet(part_dir)
+            for f in sorted(glob.glob(f"{part_dir}/part-*.parquet")):
+                dst = os.path.join(flat, f"{k:03d}.parquet")
+                shutil.copy(f, dst)
+                os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+                k += 1
 
-    _RUN_COUNTER[0] += 1
-    qname = f"sess_gate_{_RUN_COUNTER[0]}"
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        _RUN_COUNTER[0] += 1
+        qname = f"sess_gate_{_RUN_COUNTER[0]}"
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(flat)
+        )
+        q = (
+            sessionize_stream(stream)
+            .writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(stage, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     emitted = spark.table(qname)
 
     last = ev.groupBy("user_id").agg(

@@ -3,8 +3,8 @@
 The corpus-level truth for ``dedup_cluster_keep_list`` lives in the
 entry-contract mirror (recursive-CTE DuckDB twin); these tests pin the
 component solver on crafted graphs where the expected partition is known
-by hand, and prove the parameterized MinHash geometry (VERDICT r02
-item 4) actually varies with its arguments.
+by hand, and prove the parameterized MinHash geometry actually varies
+with its arguments.
 """
 
 import pytest
@@ -217,6 +217,26 @@ def test_incremental_against_empty_batch(spark):
     )
 
 
+def test_ngram_jaccard_member_limit_fallback(spark, monkeypatch):
+    """Past ``BROADCAST_MEMBER_LIMIT`` candidate members the verify
+    semi-join is a shuffled join instead of a broadcast; the scored
+    pairs are identical."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    # only the operator's own hint may broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got = []
+        for limit in (dedup.BROADCAST_MEMBER_LIMIT, 0):
+            monkeypatch.setattr(dedup, "BROADCAST_MEMBER_LIMIT", limit)
+            out = dedup.ngram_jaccard_of(docs, n_hashes=8, n_bands=4)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == bool(limit), limit
+            got.append(sorted(tuple(r) for r in out.collect()))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert got[0] and got[0] == got[1]
+
+
 def test_incremental_dedup_broadcasts_batch_side(spark):
     """The batch→corpus candidate join must broadcast the batch keys —
     the corpus band-key table never shuffles for it."""
@@ -230,29 +250,41 @@ def test_incremental_dedup_broadcasts_batch_side(spark):
 
 
 def test_iterative_checkpoints_release_storage(spark):
-    """Each round's superseded label table (and the adjacency table)
-    must actually leave executor storage.  Plain .unpersist() is a
-    NO-OP on localCheckpoint()ed frames — nothing registers in the
-    CacheManager — so this pins the LogicalRDD-level release
-    (plans.session.free_local_checkpoint): after a multi-round run,
-    at most the RETURNED frame's own blocks remain."""
+    """Each round's superseded label table (and each caller's static
+    graph frame: the doc adjacency, the keyed sketch buckets) must
+    actually leave executor storage, for both users of the shared
+    label-propagation loop.  Plain .unpersist() is a NO-OP on
+    localCheckpoint()ed frames — nothing registers in the CacheManager —
+    so this pins the LogicalRDD-level release
+    (plans.session.free_local_checkpoint): after a multi-round run, at
+    most the RETURNED frame's own blocks remain."""
     jsc = spark.sparkContext._jsc.sc()
 
     def n_stored():
         return len(jsc.getRDDStorageInfo())
 
-    spark.catalog.clearCache()
-    base = n_stored()
-    # a diameter-4 chain forces ≥3 propagation rounds → ≥3 superseded
-    # checkpoints + adj would leak without the release
+    # a diameter-7 doc chain and a 16-sketch chain (consecutive values
+    # one bit apart, so neighbours reach 3 steps) force ≥3 propagation
+    # rounds → ≥3 superseded checkpoints would leak without the release
     docs = spark.createDataFrame([(d,) for d in range(1, 9)], "doc_id long")
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
-    out = dedup.connected_components(docs, edges)
-    out.collect()
-    leaked = n_stored() - base
-    assert leaked <= 1, f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"
+    sketches = spark.createDataFrame(
+        [((1 << i) - 1,) for i in range(16)], "sh64 long"
+    )
+    for name, run in (
+        ("connected_components", lambda: dedup.connected_components(docs, edges)),
+        ("_sketch_components", lambda: dedup._sketch_components(sketches)),
+    ):
+        spark.catalog.clearCache()
+        base = n_stored()
+        out = run().collect()
+        assert len({r[1] for r in out}) == 1, name
+        leaked = n_stored() - base
+        assert leaked <= 1, (
+            f"{name}: {leaked} RDDs left in storage (expected ≤1: the returned frame)"
+        )
 
 
 def test_pagerank_releases_superseded_checkpoints(spark):

@@ -177,30 +177,49 @@ def test_numpy_simhash_twin_equals_reference_loop():
     assert _simhash64_np([]) == 0 == simhash64([])
 
 
-def test_sketch_lp_hoisted_equals_per_round_control(spark):
-    """The round-5 hoisted-keys LP and the round-4 per-round-keys
-    control (`per_round_keys=True`) must produce the identical
-    component labeling — the A/B lever is pure physical shape."""
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.operators.dedup import _sketch_components
+def test_sketch_lp_broadcast_equals_fallback(spark, monkeypatch):
+    """Past ``BROADCAST_MEMBER_LIMIT`` distinct sketches the sketch label
+    propagation re-explodes the bucket keys every round instead of
+    broadcasting the labels: the labeling is identical, and no round of
+    the fallback plans a BroadcastHashJoin."""
+    from html_parser_spark.operators import dedup
 
     # a chain of close sketches (bit flips) plus isolated values
     base = 0x0123456789ABCDEF
     vals = [base, base ^ 1, base ^ 3, base ^ (1 << 40)]
     vals += [0x1111111111111111, 0x7EDCBA9876543210]
-    nodes = spark.createDataFrame(
-        [(v,) for v in vals], "sh64 long"
-    ).select(F.col("sh64"))
-    a = {
-        (r.sh64, r.comp)
-        for r in _sketch_components(nodes, 3, 6, 25, per_round_keys=False).collect()
-    }
-    b = {
-        (r.sh64, r.comp)
-        for r in _sketch_components(nodes, 3, 6, 25, per_round_keys=True).collect()
-    }
-    assert a == b
+    nodes = spark.createDataFrame([(v,) for v in vals], "sh64 long")
+
+    plans = []
+    propagate = dedup._propagate_min_labels
+
+    def traced(vertices, key, label, neighbours, max_iter):
+        def spy(labels):
+            out = neighbours(labels)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return propagate(vertices, key, label, spy, max_iter)
+
+    monkeypatch.setattr(dedup, "_propagate_min_labels", traced)
+    # only the operator's own hint may broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        runs = []
+        for limit in (dedup.BROADCAST_MEMBER_LIMIT, 0):
+            monkeypatch.setattr(dedup, "BROADCAST_MEMBER_LIMIT", limit)
+            plans.clear()
+            runs.append({
+                (r.sh64, r.comp) for r in dedup._sketch_components(nodes).collect()
+            })
+            assert plans
+            hinted = ["BroadcastHashJoin" in p for p in plans]
+            assert all(hinted) if limit else not any(hinted), limit
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert runs[0] == runs[1]
+    labels = runs[1]
     # the 4-element chain collapses to one component
-    comp_of = dict(a)
+    comp_of = dict(labels)
     assert len({comp_of[v] for v in vals[:4]}) == 1
+    assert len({comp_of[v] for v in vals}) == 3

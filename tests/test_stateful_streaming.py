@@ -99,3 +99,18 @@ def test_stateful_sessionize_matches_batch(spark, event_files, tmp_path):
         for r in batch
         if r.session_seq == last_seq[r.user_id]
     )
+
+
+def test_sessionize_backfill_removes_staging(spark, tmp_path, monkeypatch):
+    """The gate-form backfill stages events and its stream checkpoint in
+    a ``sess_stage_*`` temp dir; the memory sink holds the output, so
+    the dir must be gone once the call returns, and the returned frame
+    must still read."""
+    import tempfile
+
+    from html_parser_spark.streaming.stateful import run_sessionize_backfill
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = run_sessionize_backfill(spark, SF_DIR)
+    assert list(tmp_path.glob("sess_stage_*")) == []
+    assert out.count() > 0

@@ -113,50 +113,26 @@ def main() -> None:
         # jaccard_verify pays only the collision re-score, sketch_udf
         # pays the pandas UDF, sketch_lp_edges pays label propagation)
         from html_parser_spark.operators.dedup import (
-            _jaccard_verify,
-            _norm,
+            JACCARD_THRESHOLD,
+            _exact_text_collapse,
             _sh64,
-            _shingles,
+            _verify_candidates,
             minhash_candidates_of,
             simhash_component_edges_of,
             simhash_sketches_of,
         )
-        from pyspark.sql import functions as FF
 
         docs = spark.read.parquet(f"{d}/documents.parquet")
-        ids = docs.select("doc_id", FF.md5(_norm()).alias("th"))
-        groups = ids.groupBy("th").agg(FF.min("doc_id").alias("rep"))
-        stars = (
-            ids.join(groups, "th")
-            .filter(FF.col("doc_id") != FF.col("rep"))
-            .select(
-                FF.col("rep").alias("doc_a"), FF.col("doc_id").alias("doc_b")
-            )
-        )
+        stars, reps = _exact_text_collapse(docs)
         step("fine_exact_stars", stars.count)
-        reps = docs.groupBy(FF.md5(_norm()).alias("th")).agg(
-            FF.min("doc_id").alias("doc_id"),
-            FF.expr("min_by(text, doc_id)").alias("text"),
-        ).select("doc_id", "text").persist()
         step("fine_reps_build", reps.count)
         cand = minhash_candidates_of(
             reps, args.n_hashes, args.n_bands, args.hash_family
         ).persist()
         step("fine_minhash_candidates", cand.count)
-        # mirror ngram_jaccard_of's verify tail: shingles only over docs
-        # that appear in some candidate pair (broadcast semi-join), so
-        # the step times what the operator actually pays
-        members = (
-            cand.select(FF.col("doc_a").alias("doc_id"))
-            .unionByName(cand.select(FF.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        sh_reps = reps.join(
-            FF.broadcast(members), "doc_id", "left_semi"
-        ).select("doc_id", _shingles().alias("sh"))
         step(
             "fine_jaccard_verify",
-            lambda: _jaccard_verify(cand, sh_reps, 0.5).count(),
+            lambda: _verify_candidates(reps, cand, JACCARD_THRESHOLD).count(),
         )
         sk = simhash_sketches_of(reps).select(
             "doc_id", _sh64().alias("sh64")
@@ -170,14 +146,14 @@ def main() -> None:
             f.unpersist()
         reclaim()
 
-    # construction is NOT lazy here — simhash_component_edges runs its
-    # streaming label-propagation rounds (localCheckpoint + count per
-    # round) at call time, so build INSIDE the timed step
-    def _simhash_edges():
-        return simhash_component_edges(spark, d).count()
-
     if "simhash" in selected:
-        step("simhash_component_edges", _simhash_edges)
+        # construction is NOT lazy here — simhash_component_edges runs
+        # its label-propagation rounds (localCheckpoint + count per
+        # round) at call time, so build INSIDE the timed step
+        step(
+            "simhash_component_edges",
+            lambda: simhash_component_edges(spark, d).count(),
+        )
         reclaim()
 
     if "edges" in selected:
@@ -185,7 +161,7 @@ def main() -> None:
 
         def _all_edges():
             e = near_dup_edges(
-                spark, d, jaccard_threshold=0.5, n_hashes=args.n_hashes,
+                spark, d, n_hashes=args.n_hashes,
                 n_bands=args.n_bands, hash_family=args.hash_family,
             ).persist()
             edges_box.append(e)
