@@ -19,6 +19,8 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "golden_gen"))
 
+from diff_runner import CONTENT_ATOMS, MARKUP_ATOMS  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -49,15 +51,7 @@ def ref():
     p.close()
 
 
-_atoms = st.sampled_from(
-    list("<>&;#!-/='\"[]()?abpqxZA \t\n\r\x0c\x000159é💡�")
-    + [
-        "amp", "AMP", "lt;", "gt", "frac12;", "Aacute", "nbsp;", "zzz;",
-        "<!--", "-->", "]]>", "<![CDATA[", "<!DOCTYPE", "<!doctype",
-        "PUBLIC", "SYSTEM", "<div", "</div>", "<br/>", "id=", "class=\"x\"",
-        "&#x", "&#", "10FFFF", "D800",
-    ]
-)
+_atoms = st.sampled_from(MARKUP_ATOMS)
 markupish = st.lists(_atoms, min_size=0, max_size=30).map("".join)
 
 
@@ -84,15 +78,7 @@ _entry_states = st.sampled_from(
     ["RCDATA", "RAWTEXT", "ScriptData", "PLAINTEXT", "CDATASection"]
 )
 
-_content_atoms = st.sampled_from(
-    list("<>&;/-!abptix \t\n\x00é")
-    + [
-        "</title", "</style", "</script", "</xmp", "<!--", "-->", "--!>",
-        "<script", "script>", "]]>", "]]", "]", "&amp;", "&#65;", "&not",
-        "<!--<script>", "</script>-->", "</ti tle>", "/>", "</TITLE>",
-        "<sCrIpT>", "</script x=y>", "</script/>", "</script >",
-    ]
-)
+_content_atoms = st.sampled_from(CONTENT_ATOMS)
 contentish = st.lists(_content_atoms, min_size=0, max_size=25).map("".join)
 
 

@@ -20,6 +20,23 @@ import sys
 PROBE = os.environ.get("REF_PROBE", "/tmp/refprobe/refcrate/target/release/probe")
 BUILD_SH = os.path.join(os.path.dirname(__file__), "build_probe.sh")
 
+# Input alphabets shared by the hypothesis differential
+# (tests/test_differential_hypothesis.py) and the frozen tokenizer oracle
+# (gen_tokenizer_oracle.py): inputs are joined runs of these atoms.
+MARKUP_ATOMS = list("<>&;#!-/='\"[]()?abpqxZA \t\n\r\x0c\x000159é💡�") + [
+    "amp", "AMP", "lt;", "gt", "frac12;", "Aacute", "nbsp;", "zzz;",
+    "<!--", "-->", "]]>", "<![CDATA[", "<!DOCTYPE", "<!doctype",
+    "PUBLIC", "SYSTEM", "<div", "</div>", "<br/>", "id=", "class=\"x\"",
+    "&#x", "&#", "10FFFF", "D800",
+]
+# for the RCDATA / RAWTEXT / script-data / PLAINTEXT / CDATA entry states
+CONTENT_ATOMS = list("<>&;/-!abptix \t\n\x00é") + [
+    "</title", "</style", "</script", "</xmp", "<!--", "-->", "--!>",
+    "<script", "script>", "]]>", "]]", "]", "&amp;", "&#65;", "&not",
+    "<!--<script>", "</script>-->", "</ti tle>", "/>", "</TITLE>",
+    "<sCrIpT>", "</script x=y>", "</script/>", "</script >",
+]
+
 
 # probe protocol v3 adds DISPLAY requests; rebuild stale binaries
 def ensure_probe() -> str:
