@@ -5,7 +5,23 @@ Behavioral port of the reference engine's 7-register tokenizer automaton
 translation: the implementation is a single flat ``while`` loop over integer
 state constants with a regex fast path for plain-text runs, designed to run
 inside Arrow-batched pandas UDFs.  Golden equality is defined by differential
-testing against the compiled reference binary (SURVEY.md §5).
+testing against the compiled reference binary (SURVEY.md §5) and, where the
+binary cannot be built, by the frozen oracle in tests/test_tokenizer_oracle.py.
+
+Each turn of the loop runs, in order:
+
+1. the bulk runs, only when no character is pending reconsumption: DATA's
+   whole-construct fast paths (``_DATA_TAG`` and friends, ``data_char_ref``),
+   or one ``_RUN_BREAK`` scan that appends the run of characters the
+   state's handler would append one by one;
+2. the two states that do not consume exactly one character:
+   NAMED_CHAR_REF (its scan consumes up to MAX_POSSIBLE characters) and
+   NUMERIC_CHAR_REF_END (consumes nothing);
+3. the one consume step, like the reference's ``consume()`` and reconsume
+   flag (mod.rs:3798-3806): reconsume ``cur`` or advance by one, setting
+   ``c``, ``cur``, ``cur_idx`` and ``pos``; every other handler starts from
+   ``c``.  The keyword look-aheads of MARKUP_DECL_OPEN and
+   AFTER_DOCTYPE_NAME go through ``_keyword_lookahead``.
 
 Replicated quirks (each pinned by tests/fixtures/probe_cases.jsonl):
 
@@ -179,10 +195,6 @@ _DBL_ESCAPE = {
     SCRIPT_DOUBLE_ESCAPE_END: (SCRIPT_ESCAPED, SCRIPT_DOUBLE_ESCAPED),
 }
 _RAWTEXTISH = {RAWTEXT: RAWTEXT_LTS, SCRIPT_DATA: SCRIPT_LTS}
-_RCDATA_BREAK = re.compile(r"[&<\x00]")
-_RAWTEXT_BREAK = re.compile(r"[<\x00]")
-_ESCAPED_BREAK = re.compile(r"[<\x00\-]")
-_NUL_BREAK = re.compile(r"\x00")
 _ASCII_LOWER = frozenset("abcdefghijklmnopqrstuvwxyz")
 
 _ATTR_VALUE_STATES = (ATTR_VALUE_DQ, ATTR_VALUE_SQ, ATTR_VALUE_UQ)
@@ -190,18 +202,43 @@ _ATTR_VALUE_STATES = (ATTR_VALUE_DQ, ATTR_VALUE_SQ, ATTR_VALUE_UQ)
 _WS = "\t\n\x0c "  # tab, LF, FF, space — the tokenizer's whitespace class
 
 _DATA_BREAK = re.compile(r"[&<]")
-# bulk fast-path break sets for the other hot states: each matches exactly
-# the characters handled by a non-default arm (state switch / case fold /
-# NUL replacement) of that state's per-char handler; every char before the
-# break lands in the default "append verbatim" arm, so bulk-appending the
-# run is semantics-preserving (differential-tested vs the reference binary)
-_TAGNAME_BREAK = re.compile(r"[\t\n\x0c />\x00A-Z]")
-_ATTRNAME_BREAK = re.compile(r"[\t\n\x0c />=\x00A-Z]")
-_ATTRVAL_DQ_BREAK = re.compile(r'["&\x00]')
-_ATTRVAL_SQ_BREAK = re.compile(r"['&\x00]")
-_ATTRVAL_UQ_BREAK = re.compile(r"[\t\n\x0c &>\x00]")
-_COMMENT_BREAK = re.compile(r"[<\-\x00]")
-_BOGUS_BREAK = re.compile(r"[>\x00]")
+# bulk-run break sets of the other states with an append-verbatim arm, run
+# ahead of the consume step: each matches exactly the characters handled by
+# a non-default arm (state switch / case fold / NUL replacement) of that
+# state's handler; every char before the break lands in the default
+# "append verbatim" arm, so bulk-appending the run is semantics-preserving
+# (differential-tested vs the reference binary)
+_RAWTEXT_BREAK = re.compile(r"[<\x00]")
+_ESCAPED_BREAK = re.compile(r"[<\x00\-]")
+_RUN_BREAK = {
+    TAG_NAME: re.compile(r"[\t\n\x0c />\x00A-Z]"),
+    ATTR_NAME: re.compile(r"[\t\n\x0c />=\x00A-Z]"),
+    ATTR_VALUE_DQ: re.compile(r'["&\x00]'),
+    ATTR_VALUE_SQ: re.compile(r"['&\x00]"),
+    ATTR_VALUE_UQ: re.compile(r"[\t\n\x0c &>\x00]"),
+    BOGUS_COMMENT: re.compile(r"[>\x00]"),
+    COMMENT: re.compile(r"[<\-\x00]"),
+    CDATA_SECTION: re.compile(r"\]"),
+    RCDATA: re.compile(r"[&<\x00]"),
+    RAWTEXT: _RAWTEXT_BREAK,
+    SCRIPT_DATA: _RAWTEXT_BREAK,
+    PLAINTEXT: re.compile(r"\x00"),
+    SCRIPT_ESCAPED: _ESCAPED_BREAK,
+    SCRIPT_DOUBLE_ESCAPED: _ESCAPED_BREAK,
+}
+# keyword look-aheads: (goal, state after a full match) per dispatch char
+_MARKUP_DECL = {
+    "-": ("--", COMMENT_START),
+    "D": ("DOCTYPE", DOCTYPE),
+    "[": ("[CDATA[", CDATA_SECTION),
+}
+_DOCTYPE_KEYWORD = {"P": ("PUBLIC", AFTER_PUBLIC_KEYWORD), "S": ("SYSTEM", AFTER_SYSTEM_KEYWORD)}
+# closing quote of each quoted attribute-value / doctype-identifier state
+_QUOTE = {
+    ATTR_VALUE_DQ: '"', ATTR_VALUE_SQ: "'",
+    PUBLIC_ID_DQ: '"', PUBLIC_ID_SQ: "'",
+    SYSTEM_ID_DQ: '"', SYSTEM_ID_SQ: "'",
+}
 
 # ---------------------------------------------------------------------------
 # whole-tag fast path: one C-level regex match per *common-case* tag.
@@ -374,6 +411,30 @@ def _numeric_ref_char(code: int) -> str:
         return chr(code)
     except ValueError:
         return REPLACEMENT
+
+
+def _keyword_lookahead(text: str, i: int, goal: str, fold: bool):
+    """The reference's keyword look-aheads (consume_double_hyphen,
+    consume_doctype, consume_cdata, consume_public_keyword and
+    consume_system_keyword, mod.rs:3410-3552).
+
+    Starting from the freshly consumed current character ``text[i]``,
+    consume characters while they match ``goal`` (ASCII a-z compared in
+    upper case when ``fold``); the first mismatching character is consumed
+    too, for the caller to reconsume.  Returns ``(matched, pos, cur,
+    cur_idx)``: the number of goal characters matched and the consume
+    registers after the last consume (``cur`` None at EOF).
+    """
+    n = len(text)
+    for k, g in enumerate(goal):
+        j = i + k
+        if j >= n:
+            return k, n, None, n
+        ch = text[j]
+        if ch != g and not (fold and "a" <= ch <= "z" and chr(ord(ch) - 0x20) == g):
+            return k, j + 1, ch, j
+    j = i + len(goal) - 1
+    return len(goal), j + 1, text[j], j
 
 
 def _decode_attr_value(s: str) -> str:
@@ -860,12 +921,10 @@ def tokenize(text: str, initial_state: int = DATA):
         return i if c is not None else n
 
     while not done:
-
-        if state == DATA:
-            # fast path: bulk-copy the run up to the next '&'/'<'
-            # (equivalent: every other char, incl. NUL, is emitted as-is —
-            # mod.rs:179-206)
-            if not recon and pos < n:
+        if not recon and pos < n:
+            # bulk runs, ahead of the consume step: every char before the
+            # state's break char lands in its append-verbatim arm
+            if state == DATA:
                 # fused run+tag fast path: the overwhelmingly common DATA
                 # shape is "text run then subset tag" — one C-level regex
                 # call parses both (see _DATA_TAG soundness note)
@@ -1047,57 +1106,32 @@ def tokenize(text: str, initial_state: int = DATA):
                     pos = data_char_ref(j)
                     cur = "&"
                     continue
-            # consume
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
             else:
-                c = cur = None
-                cur_idx = n
-            if c is None:
-                emit_eof()
-            elif c == "&":
-                return_state = DATA
-                state = CHAR_REF
-            elif c == "<":
-                state = TAG_OPEN
-            else:
-                emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None  # emit_current_input_character takes it
+                brk = _RUN_BREAK.get(state)
+                if brk is not None:
+                    m = brk.search(text, pos)
+                    j = m.start() if m else n
+                    if j > pos:
+                        chunk = text[pos:j]
+                        if state == TAG_NAME:
+                            tag_name += chunk
+                        elif state == ATTR_NAME:
+                            if tok_kind == 1 and tag_attrs:
+                                tag_attrs[-1][0] += chunk
+                        elif state in _ATTR_VALUE_STATES:
+                            if tok_kind == 1 and tag_attrs:
+                                tag_attrs[-1][1] += chunk
+                        elif state == COMMENT or state == BOGUS_COMMENT:
+                            if tok_kind == 2:
+                                comment_data += chunk
+                        else:
+                            emit_chars(chunk, pos, j)
+                        pos = j
 
-        elif state == CHAR_REF:
-            # mod.rs:718-749
-            temp_buf = "&"
-            amp_src = cur_idx
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
-            if c is None:
-                recon = True
-                state = return_state
-            elif c == "#":
-                temp_buf += c
-                state = NUMERIC_CHAR_REF
-            elif _is_alphanumeric(c):
-                recon = True
-                state = NAMED_CHAR_REF
-            else:
-                recon = True
-                state = return_state
-
-        elif state == NAMED_CHAR_REF:
-            # mod.rs:752-880 — ported with the same index arithmetic
+        if state == NAMED_CHAR_REF:
+            # mod.rs:752-880 — ported with the same index arithmetic.  The
+            # scan consumes up to MAX_POSSIBLE chars, so it runs its own
+            # consume step.
             i = 0
             while i < MAX_POSSIBLE:
                 if recon:
@@ -1122,102 +1156,115 @@ def tokenize(text: str, initial_state: int = DATA):
                 i += 1
 
             buffer = temp_buf if temp_buf is not None else ""
-            in_attr = return_state in _ATTR_VALUE_STATES
-
+            end = cur_idx + (0 if cur is None else 1)
             entity = ENTITIES.get(buffer)
-            if entity is not None:
-                if in_attr and cur != "=" and not (
+            state = return_state
+            if return_state in _ATTR_VALUE_STATES:
+                if entity is not None and cur != "=" and not (
                     cur is not None and _is_alphanumeric(cur)
                 ):
-                    for ch in entity:
-                        if tok_kind == 1 and tag_attrs:
-                            tag_attrs[-1][1] += ch
-                    state = return_state
-                elif not in_attr:
-                    emit_chars(entity, amp_src, cur_idx + (0 if cur is None else 1))
+                    if tok_kind == 1 and tag_attrs:
+                        tag_attrs[-1][1] += entity
                 else:
-                    # historical rule: flush raw (mod.rs:822-824)
-                    if temp_buf is not None:
-                        for ch in temp_buf:
-                            if tok_kind == 1 and tag_attrs:
-                                tag_attrs[-1][1] += ch
-                        temp_buf = None
-                if cur == ";":
-                    state = return_state
-                else:
-                    recon = True
-                    state = return_state
+                    # not found, or the historical rule: flush raw
+                    # (mod.rs:822-837)
+                    if tok_kind == 1 and tag_attrs:
+                        tag_attrs[-1][1] += buffer
+                    temp_buf = None
+            elif entity is not None:
+                emit_chars(entity, amp_src, end)
             else:
-                if in_attr:
-                    # flush_code_points... (mod.rs:831-837)
-                    if temp_buf is not None:
-                        for ch in temp_buf:
-                            if tok_kind == 1 and tag_attrs:
-                                tag_attrs[-1][1] += ch
-                        temp_buf = None
-                    if cur == ";":
-                        state = return_state
-                    else:
-                        recon = True
-                        state = return_state
-                else:
-                    # byte-domain prefix fallback (mod.rs:839-877); Rust
-                    # slices &buffer[..max] by BYTES and panics on a char
-                    # boundary violation — we flag and recover.
-                    bbuf = buffer.encode("utf-8")
-                    mx = MAX_WITHOUT_SEMICOLON + 1
-                    if mx > len(bbuf):
-                        mx = len(bbuf)
-                    matched = None
-                    while mx > MIN_POSSIBLE:
-                        try:
-                            prefix = bbuf[:mx].decode("utf-8")
-                        except UnicodeDecodeError:
-                            status = PANIC
-                            prefix = None
-                        if prefix is not None:
-                            matched = ENTITIES.get(prefix)
-                            if matched is not None:
-                                emit_chars(
-                                    matched,
-                                    amp_src,
-                                    cur_idx + (0 if cur is None else 1),
-                                )
-                                break
-                        mx -= 1
-                    # re-emit unmatched tail raw; Rust enumerates CHAR
-                    # indices against the BYTE count mx (mod.rs:859-863) —
-                    # safe here: any matched prefix is pure ASCII, so char
-                    # and byte indices agree below mx (divergence is only
-                    # possible through a decode failure, flagged above).
-                    for index, ch in enumerate(buffer):
-                        if index >= mx or mx == MIN_POSSIBLE:
-                            emit_chars(ch, amp_src, cur_idx + (0 if cur is None else 1))
-                    if mx != MIN_POSSIBLE:
-                        if cur == ";":
-                            state = return_state
-                        else:
-                            recon = True
-                            state = return_state
-                    else:
-                        if cur == ";":
-                            state = AMBIGUOUS_AMPERSAND
-                        else:
-                            recon = True
-                            state = AMBIGUOUS_AMPERSAND
+                # byte-domain prefix fallback (mod.rs:839-877); Rust
+                # slices &buffer[..max] by BYTES and panics on a char
+                # boundary violation — we flag and recover.
+                bbuf = buffer.encode("utf-8")
+                mx = MAX_WITHOUT_SEMICOLON + 1
+                if mx > len(bbuf):
+                    mx = len(bbuf)
+                while mx > MIN_POSSIBLE:
+                    try:
+                        prefix = bbuf[:mx].decode("utf-8")
+                    except UnicodeDecodeError:
+                        status = PANIC
+                        prefix = None
+                    if prefix is not None:
+                        matched = ENTITIES.get(prefix)
+                        if matched is not None:
+                            emit_chars(matched, amp_src, end)
+                            break
+                    mx -= 1
+                # re-emit the unmatched tail raw; Rust enumerates CHAR
+                # indices against the BYTE count mx (mod.rs:859-863) —
+                # safe here: any matched prefix is pure ASCII, so char
+                # and byte indices agree below mx (divergence is only
+                # possible through a decode failure, flagged above).
+                tail = buffer if mx == MIN_POSSIBLE else buffer[mx:]
+                if tail:
+                    emit_chars(tail, amp_src, end)
+                if mx == MIN_POSSIBLE:
+                    state = AMBIGUOUS_AMPERSAND
+            recon = cur != ";"
+            continue
+
+        if state == NUMERIC_CHAR_REF_END:
+            # mod.rs:1048-1095 — does not consume; the reconsume flag set by
+            # the digit states survives into the return state
+            decoded = _numeric_ref_char(char_ref_code)
+            if return_state in _ATTR_VALUE_STATES:
+                if tok_kind == 1 and tag_attrs:
+                    tag_attrs[-1][1] += decoded
+            else:
+                end = cur_idx + 1 if cur is not None and not recon else cur_idx
+                emit_chars(decoded, amp_src, min(end, n))
+            temp_buf = None
+            state = return_state
+            continue
+
+        # the consume step (mod.rs:3798-3806): reconsume the current
+        # character or advance by one; every handler below starts from c
+        if recon:
+            recon = False
+            c = cur
+        elif pos < n:
+            c = cur = text[pos]
+            cur_idx = pos
+            pos += 1
+        else:
+            c = cur = None
+            cur_idx = n
+
+        if state == DATA:
+            # mod.rs:179-206
+            if c is None:
+                emit_eof()
+            elif c == "&":
+                return_state = DATA
+                amp_src = cur_idx
+                state = CHAR_REF
+            elif c == "<":
+                state = TAG_OPEN
+            else:
+                emit_chars(c, cur_idx, cur_idx + 1)
+                cur = None  # emit_current_input_character takes it
+
+        elif state == CHAR_REF:
+            # mod.rs:718-749
+            temp_buf = "&"
+            if c is None:
+                recon = True
+                state = return_state
+            elif c == "#":
+                temp_buf += c
+                state = NUMERIC_CHAR_REF
+            elif _is_alphanumeric(c):
+                recon = True
+                state = NAMED_CHAR_REF
+            else:
+                recon = True
+                state = return_state
 
         elif state == TAG_OPEN:
             # mod.rs:209-250
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_chars("<", cur_idx - 1, cur_idx)
                 emit_eof()
@@ -1245,22 +1292,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == TAG_NAME:
             # mod.rs:286-330
-            if not recon and pos < n:
-                m = _TAGNAME_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    tag_name += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c in _WS:
@@ -1279,16 +1310,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == END_TAG_OPEN:
             # mod.rs:253-283 — ASCII alpha only (unlike tag open)
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_chars("</", cur_idx - 2, cur_idx)
                 emit_eof()
@@ -1310,16 +1331,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BEFORE_ATTR_NAME:
             # mod.rs:333-371
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = AFTER_ATTR_NAME
@@ -1340,23 +1351,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == ATTR_NAME:
             # mod.rs:379-423 — duplicate attributes kept (dedup unimplemented)
-            if not recon and pos < n:
-                m = _ATTRNAME_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][0] += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = AFTER_ATTR_NAME
@@ -1377,16 +1371,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_ATTR_NAME:
             # mod.rs:426-464
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c in _WS:
@@ -1406,16 +1390,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BEFORE_ATTR_VALUE:
             # mod.rs:467-504 — EOF falls through to unquoted (quirk)
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = ATTR_VALUE_UQ
@@ -1432,64 +1406,15 @@ def tokenize(text: str, initial_state: int = DATA):
                 recon = True
                 state = ATTR_VALUE_UQ
 
-        elif state == ATTR_VALUE_DQ:
-            # mod.rs:507-537
-            if not recon and pos < n:
-                m = _ATTRVAL_DQ_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
+        elif state == ATTR_VALUE_DQ or state == ATTR_VALUE_SQ:
+            # mod.rs:507-537, 540-571 (identical shapes but the quote)
             if c is None:
                 emit_eof()
-            elif c == '"':
+            elif c == _QUOTE[state]:
                 state = AFTER_ATTR_VALUE_Q
             elif c == "&":
-                return_state = ATTR_VALUE_DQ
-                state = CHAR_REF
-            elif c == "\x00":
-                if tok_kind == 1 and tag_attrs:
-                    tag_attrs[-1][1] += REPLACEMENT
-            else:
-                if tok_kind == 1 and tag_attrs:
-                    tag_attrs[-1][1] += c
-
-        elif state == ATTR_VALUE_SQ:
-            # mod.rs:540-571
-            if not recon and pos < n:
-                m = _ATTRVAL_SQ_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
-            if c is None:
-                emit_eof()
-            elif c == "'":
-                state = AFTER_ATTR_VALUE_Q
-            elif c == "&":
-                return_state = ATTR_VALUE_SQ
+                return_state = state
+                amp_src = cur_idx
                 state = CHAR_REF
             elif c == "\x00":
                 if tok_kind == 1 and tag_attrs:
@@ -1500,29 +1425,13 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == ATTR_VALUE_UQ:
             # mod.rs:574-620
-            if not recon and pos < n:
-                m = _ATTRVAL_UQ_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c in _WS:
                 state = BEFORE_ATTR_NAME
             elif c == "&":
                 return_state = ATTR_VALUE_UQ
+                amp_src = cur_idx
                 state = CHAR_REF
             elif c == ">":
                 state = DATA
@@ -1536,16 +1445,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_ATTR_VALUE_Q:
             # mod.rs:623-657
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c in _WS:
@@ -1561,16 +1460,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == SELF_CLOSING:
             # mod.rs:660-685
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == ">":
@@ -1584,23 +1473,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BOGUS_COMMENT:
             # mod.rs:688-715
-            if not recon and pos < n:
-                m = _BOGUS_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 2:
-                        comment_data += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = DATA
@@ -1617,16 +1489,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AMBIGUOUS_AMPERSAND:
             # mod.rs:883-915 — ASCII alpha only; digits hit "anything else"
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = return_state
@@ -1642,110 +1504,26 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == MARKUP_DECL_OPEN:
             # mod.rs:1098-1126 — NO EOF arm in the reference: hangs forever
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 status = HANG
                 emit_eof()
-            elif c == "-":
-                # consume_double_hyphen (mod.rs:3458-3487); reconsume first
-                recon = True
-                count = 0
-                while count < 2:
-                    if recon:
-                        recon = False
-                        c2 = cur
-                    elif pos < n:
-                        c2 = cur = text[pos]
-                        cur_idx = pos
-                        pos += 1
-                    else:
-                        c2 = cur = None
-                        cur_idx = n
-                    if c2 is None:
-                        break
-                    if c2 == "-":
-                        count += 1
-                    else:
-                        break
-                tok_kind = 2
-                comment_data = "-" * count if count < 2 else ""
-                if count == 2:
-                    state = COMMENT_START
-                else:
-                    recon = True
-                    state = BOGUS_COMMENT
-            elif c == "D":
-                # consume_doctype (mod.rs:3489-3518) — only uppercase 'D'
-                # dispatches; remaining chars case-insensitive; partial match
-                # appends the UPPERCASE goal chars to a bogus comment
-                recon = True
-                goal = "DOCTYPE"
-                index = 0
-                while index < 7:
-                    if recon:
-                        recon = False
-                        c2 = cur
-                    elif pos < n:
-                        c2 = cur = text[pos]
-                        cur_idx = pos
-                        pos += 1
-                    else:
-                        c2 = cur = None
-                        cur_idx = n
-                    if c2 is None:
-                        break
-                    if (
-                        chr(ord(c2) - 0x20)
-                        if c2 in "abcdefghijklmnopqrstuvwxyz"
-                        else c2
-                    ) == goal[index]:
-                        index += 1
-                    else:
-                        break
-                if index == 7:
-                    state = DOCTYPE
+            elif c == "-" or c == "D" or c == "[":
+                # consume_double_hyphen / consume_doctype / consume_cdata
+                # (mod.rs:3458-3552): only uppercase 'D' dispatches and the
+                # rest of DOCTYPE is case-insensitive; CDATA is case-
+                # sensitive and always entered (no adjusted-current-node
+                # check).  A partial match appends the matched goal chars
+                # (DOCTYPE in upper case) to a bogus comment.
+                goal, nxt = _MARKUP_DECL[c]
+                k, pos, cur, cur_idx = _keyword_lookahead(text, cur_idx, goal, c == "D")
+                if k == len(goal):
+                    if nxt == COMMENT_START:
+                        tok_kind = 2
+                        comment_data = ""
+                    state = nxt
                 else:
                     tok_kind = 2
-                    comment_data = goal[:index]
-                    recon = True
-                    state = BOGUS_COMMENT
-            elif c == "[":
-                # consume_cdata (mod.rs:3520-3552) — case-sensitive, always
-                # enters CDATA (no adjusted-current-node check)
-                recon = True
-                goal = "[CDATA["
-                index = 0
-                while index < 7:
-                    if recon:
-                        recon = False
-                        c2 = cur
-                    elif pos < n:
-                        c2 = cur = text[pos]
-                        cur_idx = pos
-                        pos += 1
-                    else:
-                        c2 = cur = None
-                        cur_idx = n
-                    if c2 is None:
-                        break
-                    if c2 == goal[index]:
-                        index += 1
-                    else:
-                        break
-                if index == 7:
-                    state = CDATA_SECTION
-                else:
-                    tok_kind = 2
-                    comment_data = goal[:index]
+                    comment_data = goal[:k]
                     recon = True
                     state = BOGUS_COMMENT
             else:
@@ -1756,16 +1534,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_START:
             # mod.rs:1129-1153
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = COMMENT
@@ -1780,16 +1548,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_START_DASH:
             # mod.rs:1156-1185
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_comment()
                 emit_eof()
@@ -1806,23 +1564,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT:
             # mod.rs:1188-1221
-            if not recon and pos < n:
-                m = _COMMENT_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    if tok_kind == 2:
-                        comment_data += text[pos:j]
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_comment()
                 emit_eof()
@@ -1841,16 +1582,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_LTS:
             # mod.rs:1304-1329
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = COMMENT
@@ -1867,16 +1598,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_LTS_BANG:
             # mod.rs:1332-1351
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = COMMENT
@@ -1888,16 +1609,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_LTS_BANG_DASH:
             # mod.rs:1354-1373
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = COMMENT_END_DASH
@@ -1909,31 +1620,11 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_LTS_BANG_DASH_DASH:
             # mod.rs:1376-1395 — all arms reconsume in comment end
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             recon = True
             state = COMMENT_END
 
         elif state == COMMENT_END_DASH:
             # mod.rs:1398-1416 — NO EOF arm in the reference: hangs forever
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 status = HANG
                 emit_eof()
@@ -1947,16 +1638,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_END:
             # mod.rs:1224-1262
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_comment()
                 emit_eof()
@@ -1976,16 +1657,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == COMMENT_END_BANG:
             # mod.rs:1265-1301
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_comment()
                 emit_eof()
@@ -2004,16 +1675,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == DOCTYPE:
             # mod.rs:1419-1453
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 tok_kind = 3
                 dt_name = ""
@@ -2030,16 +1691,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BEFORE_DOCTYPE_NAME:
             # mod.rs:1456-1513
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 tok_kind = 3
                 dt_name = ""
@@ -2082,16 +1733,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == DOCTYPE_NAME:
             # mod.rs:1516-1562
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2110,16 +1751,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_DOCTYPE_NAME:
             # mod.rs:1565-1612 — NO EOF arm in the reference: hangs forever
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 status = HANG
                 emit_eof()
@@ -2130,65 +1761,13 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_doctype()
             else:
                 u = chr(ord(c) - 0x20) if "a" <= c <= "z" else c
-                if u == "P":
-                    # consume_public_keyword (mod.rs:3434-3456)
-                    recon = True
-                    goal = "PUBLIC"
-                    index = 0
-                    while index < 6:
-                        if recon:
-                            recon = False
-                            c2 = cur
-                        elif pos < n:
-                            c2 = cur = text[pos]
-                            cur_idx = pos
-                            pos += 1
-                        else:
-                            c2 = cur = None
-                            cur_idx = n
-                        if c2 is None:
-                            break
-                        if (
-                            chr(ord(c2) - 0x20)
-                            if "a" <= c2 <= "z"
-                            else c2
-                        ) == goal[index]:
-                            index += 1
-                        else:
-                            break
-                    if index == 6:
-                        state = AFTER_PUBLIC_KEYWORD
-                    else:
-                        recon = True
-                        state = BOGUS_DOCTYPE
-                elif u == "S":
-                    # consume_system_keyword (mod.rs:3410-3432)
-                    recon = True
-                    goal = "SYSTEM"
-                    index = 0
-                    while index < 6:
-                        if recon:
-                            recon = False
-                            c2 = cur
-                        elif pos < n:
-                            c2 = cur = text[pos]
-                            cur_idx = pos
-                            pos += 1
-                        else:
-                            c2 = cur = None
-                            cur_idx = n
-                        if c2 is None:
-                            break
-                        if (
-                            chr(ord(c2) - 0x20)
-                            if "a" <= c2 <= "z"
-                            else c2
-                        ) == goal[index]:
-                            index += 1
-                        else:
-                            break
-                    if index == 6:
-                        state = AFTER_SYSTEM_KEYWORD
+                if u == "P" or u == "S":
+                    # consume_public_keyword / consume_system_keyword
+                    # (mod.rs:3410-3456), case-insensitive
+                    goal, nxt = _DOCTYPE_KEYWORD[u]
+                    k, pos, cur, cur_idx = _keyword_lookahead(text, cur_idx, goal, True)
+                    if k == len(goal):
+                        state = nxt
                     else:
                         recon = True
                         state = BOGUS_DOCTYPE
@@ -2199,16 +1778,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_PUBLIC_KEYWORD:
             # mod.rs:1615-1669
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2232,16 +1801,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BEFORE_PUBLIC_ID:
             # mod.rs:1705-1756
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2263,52 +1822,13 @@ def tokenize(text: str, initial_state: int = DATA):
                 recon = True
                 state = BOGUS_DOCTYPE
 
-        elif state == PUBLIC_ID_DQ:
-            # mod.rs:1759-1799
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
+        elif state == PUBLIC_ID_DQ or state == PUBLIC_ID_SQ:
+            # mod.rs:1759-1799, 1802-1842 (identical shapes but the quote)
             if c is None:
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
-            elif c == '"':
-                state = AFTER_PUBLIC_ID
-            elif c == "\x00":
-                if dt_public is not None:
-                    dt_public += REPLACEMENT
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                if dt_public is not None:
-                    dt_public += c
-
-        elif state == PUBLIC_ID_SQ:
-            # mod.rs:1802-1842
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c == "'":
+            elif c == _QUOTE[state]:
                 state = AFTER_PUBLIC_ID
             elif c == "\x00":
                 if dt_public is not None:
@@ -2323,16 +1843,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_PUBLIC_ID:
             # mod.rs:1845-1899
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2355,16 +1865,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BETWEEN_PUB_SYS:
             # mod.rs:1902-1955
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2387,16 +1887,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_SYSTEM_KEYWORD:
             # mod.rs:1958-2016
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2420,16 +1910,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BEFORE_SYSTEM_ID:
             # mod.rs:2019-2074
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 dt_quirks = True
                 emit_doctype()
@@ -2451,52 +1931,13 @@ def tokenize(text: str, initial_state: int = DATA):
                 recon = True
                 state = BOGUS_DOCTYPE
 
-        elif state == SYSTEM_ID_DQ:
-            # mod.rs:2077-2117
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
+        elif state == SYSTEM_ID_DQ or state == SYSTEM_ID_SQ:
+            # mod.rs:2077-2117, 2120-2160 (identical shapes but the quote)
             if c is None:
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
-            elif c == '"':
-                state = AFTER_SYSTEM_ID
-            elif c == "\x00":
-                if dt_system is not None:
-                    dt_system += REPLACEMENT
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                if dt_system is not None:
-                    dt_system += c
-
-        elif state == SYSTEM_ID_SQ:
-            # mod.rs:2120-2160
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c == "'":
+            elif c == _QUOTE[state]:
                 state = AFTER_SYSTEM_ID
             elif c == "\x00":
                 if dt_system is not None:
@@ -2511,16 +1952,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == AFTER_SYSTEM_ID:
             # mod.rs:2163-2196
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_doctype()
                 emit_eof()
@@ -2535,16 +1966,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == BOGUS_DOCTYPE:
             # mod.rs:1672-1702 — swallows until '>'
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_doctype()
                 emit_eof()
@@ -2556,16 +1977,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state == NUMERIC_CHAR_REF:
             # mod.rs:918-942
             char_ref_code = 0
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = DEC_CHAR_REF_START
@@ -2579,16 +1990,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state == HEX_CHAR_REF_START:
             # mod.rs:945-961 — EOF arm reconsumes WITHOUT flushing (quirk:
             # "&#x" at EOF is swallowed)
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = return_state
@@ -2609,16 +2010,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == DEC_CHAR_REF_START:
             # mod.rs:964-981
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 if temp_buf is not None:
                     if return_state in _ATTR_VALUE_STATES:
@@ -2645,16 +2036,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == HEX_CHAR_REF:
             # mod.rs:984-1020 — u32 wraparound like a Rust release build
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = NUMERIC_CHAR_REF_END
@@ -2673,16 +2054,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == DEC_CHAR_REF:
             # mod.rs:1023-1045
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 recon = True
                 state = NUMERIC_CHAR_REF_END
@@ -2694,58 +2065,8 @@ def tokenize(text: str, initial_state: int = DATA):
                 recon = True
                 state = NUMERIC_CHAR_REF_END
 
-        elif state == NUMERIC_CHAR_REF_END:
-            # mod.rs:1048-1095 — does not consume; reconsume flag (if set by
-            # the digit states) survives into the return state
-            code = char_ref_code
-            if code == 0x00:
-                code = 0xFFFD
-            if code > 0x10FFFF:
-                code = 0xFFFD
-            if is_numeric_surrogate(code):
-                code = 0xFFFD
-            if is_numeric_noncharacter(code):
-                code = 0xFFFD
-            if code == 0x0D or (
-                is_numeric_control(code) and not is_numeric_whitespace(code)
-            ):
-                code = replace_control(code)
-            char_ref_code = code
-            try:
-                decoded = chr(code)
-            except ValueError:
-                decoded = REPLACEMENT
-            # surrogate range is clamped above, but chr() of a surrogate is
-            # legal in Python and was not in Rust — keep the guard cheap
-            temp_buf = decoded
-            if return_state in _ATTR_VALUE_STATES:
-                if tok_kind == 1 and tag_attrs:
-                    tag_attrs[-1][1] += temp_buf
-            else:
-                end = cur_idx + 1 if cur is not None and not recon else cur_idx
-                emit_chars(temp_buf, amp_src, min(end, n))
-            temp_buf = None
-            state = return_state
-
         elif state == CDATA_SECTION:
             # mod.rs:2199-2223 — emits chars raw
-            if not recon and pos < n:
-                j = text.find("]", pos)
-                if j == -1:
-                    j = n
-                if j > pos:
-                    emit_chars(text[pos:j], pos, j)
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "]":
@@ -2756,16 +2077,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == CDATA_BRACKET:
             # mod.rs:2226-2249
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_chars("]", cur_idx - 1, cur_idx)
                 recon = True
@@ -2779,16 +2090,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == CDATA_END:
             # mod.rs:2252-2284
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_chars("]]", cur_idx - 2, cur_idx)
                 emit_eof()
@@ -2813,26 +2114,11 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == RCDATA:
             # mod.rs:2287-2321
-            if not recon and pos < n:
-                m = _RCDATA_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    emit_chars(text[pos:j], pos, j)
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "&":
                 return_state = RCDATA
+                amp_src = cur_idx
                 state = CHAR_REF
             elif c == "<":
                 lt_idx = cur_idx
@@ -2845,22 +2131,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == RAWTEXT or state == SCRIPT_DATA:
             # mod.rs:2324-2349, 2352-2379 (identical shapes)
-            if not recon and pos < n:
-                m = _RAWTEXT_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    emit_chars(text[pos:j], pos, j)
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "<":
@@ -2874,22 +2144,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == PLAINTEXT:
             # mod.rs:2382-2399
-            if not recon and pos < n:
-                m = _NUL_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    emit_chars(text[pos:j], pos, j)
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "\x00":
@@ -2902,16 +2156,6 @@ def tokenize(text: str, initial_state: int = DATA):
             # mod.rs:2402-2426, 2552-2576
             back = RCDATA if state == RCDATA_LTS else RAWTEXT
             eto = RCDATA_END_TAG_OPEN if state == RCDATA_LTS else RAWTEXT_END_TAG_OPEN
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c == "/":
                 temp_buf = ""
                 state = eto
@@ -2922,16 +2166,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == SCRIPT_LTS:
             # mod.rs:2692-2724
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c == "/":
                 temp_buf = ""
                 state = SCRIPT_END_TAG_OPEN
@@ -2946,16 +2180,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state in _ETO_FAMILY:
             # mod.rs:2429-2451, 2579-2601, 2727-2749, 3040-3062
             name_state, back = _ETO_FAMILY[state]
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is not None and c in _ASCII_ALPHA:
                 tok_kind = 1
                 tag_is_end = True
@@ -2972,16 +2196,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state in _ETN_FAMILY:
             # mod.rs:2454-2549, 2604-2689, 2752-2838, 3065-3160
             back = _ETN_FAMILY[state]
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             appropriate = bool(open_tags) and open_tags[-1] == tag_name
             if c is not None and c in _WS and appropriate:
                 state = BEFORE_ATTR_NAME
@@ -3020,16 +2234,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 if state == SCRIPT_ESCAPE_START
                 else SCRIPT_ESCAPED_DASH_DASH
             )
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c == "-":
                 state = nxt
                 emit_chars("-", cur_idx, cur_idx + 1)
@@ -3040,22 +2244,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state == SCRIPT_ESCAPED or state == SCRIPT_DOUBLE_ESCAPED:
             # mod.rs:2884-2918, 3214-3249
             dbl = state == SCRIPT_DOUBLE_ESCAPED
-            if not recon and pos < n:
-                m = _ESCAPED_BREAK.search(text, pos)
-                j = m.start() if m else n
-                if j > pos:
-                    emit_chars(text[pos:j], pos, j)
-                    pos = j
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "-":
@@ -3077,16 +2265,6 @@ def tokenize(text: str, initial_state: int = DATA):
         elif state == SCRIPT_ESCAPED_DASH or state == SCRIPT_DOUBLE_ESCAPED_DASH:
             # mod.rs:2921-2957, 3252-3289
             dbl = state == SCRIPT_DOUBLE_ESCAPED_DASH
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "-":
@@ -3115,16 +2293,6 @@ def tokenize(text: str, initial_state: int = DATA):
         ):
             # mod.rs:2960-3002, 3292-3334
             dbl = state == SCRIPT_DOUBLE_ESCAPED_DASH_DASH
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is None:
                 emit_eof()
             elif c == "-":
@@ -3153,16 +2321,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == SCRIPT_ESCAPED_LTS:
             # mod.rs:3005-3037
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c == "/":
                 temp_buf = ""
                 state = SCRIPT_ESCAPED_END_TAG_OPEN
@@ -3178,16 +2336,6 @@ def tokenize(text: str, initial_state: int = DATA):
 
         elif state == SCRIPT_DOUBLE_ESCAPED_LTS:
             # mod.rs:3337-3357
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c == "/":
                 temp_buf = ""
                 state = SCRIPT_DOUBLE_ESCAPE_END
@@ -3205,16 +2353,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 if state == SCRIPT_DOUBLE_ESCAPE_START
                 else SCRIPT_DOUBLE_ESCAPED
             )
-            if recon:
-                recon = False
-                c = cur
-            elif pos < n:
-                c = cur = text[pos]
-                cur_idx = pos
-                pos += 1
-            else:
-                c = cur = None
-                cur_idx = n
             if c is not None and (c in _WS or c == "/" or c == ">"):
                 if (temp_buf if temp_buf is not None else "") == "script":
                     state = match_state
