@@ -687,9 +687,10 @@ def _idct_block(coef: list, qt: list) -> list:
 def decode_jpeg(payload: bytes) -> tuple:
     """Baseline SOF0 decode → (width, height, channels, raw pixels) —
     grayscale or any 3-component scan with 1×1 sampling (4:4:4).
-    Progressive (SOF2), subsampled, arithmetic-coded, and
-    restart-marker streams raise ValueError (routed to the status
-    column by the operator, like every decoder here)."""
+    Progressive (SOF2), subsampled, arithmetic-coded, restart-marker
+    and Adobe-RGB (APP14 transform 0, which this YCbCr decoder would
+    turn into wrong pixels) streams raise ValueError (routed to the
+    status column by the operator, like every decoder here)."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     pos, n = 2, len(payload)
@@ -699,6 +700,7 @@ def decode_jpeg(payload: bytes) -> tuple:
     width = height = None
     comps: list = []
     scan_comps: list = []
+    adobe_rgb = False
     while pos + 4 <= n:
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker desync")
@@ -744,6 +746,8 @@ def decode_jpeg(payload: bytes) -> tuple:
             raise ValueError("non-baseline JPEG unsupported")
         elif marker == 0xDD:
             raise ValueError("restart intervals unsupported")
+        elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
+            adobe_rgb = body[11] == 0
         elif marker == 0xDA:
             ns = body[0]
             for c in range(ns):
@@ -756,6 +760,8 @@ def decode_jpeg(payload: bytes) -> tuple:
         raise ValueError("JPEG missing SOF/SOS")
     if len(scan_comps) != len(comps):
         raise ValueError("partial scans unsupported")
+    if adobe_rgb and len(comps) == 3:
+        raise ValueError("APP14 RGB JPEG unsupported")
 
     channels = len(comps)
     tq_of = dict(comps)

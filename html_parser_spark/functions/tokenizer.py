@@ -922,8 +922,9 @@ def tokenize(text: str, initial_state: int = DATA):
 
     while not done:
         if not recon and pos < n:
-            # bulk runs, ahead of the consume step: every char before the
-            # state's break char lands in its append-verbatim arm
+            # bulk runs, ahead of the consume step (nothing is pending
+            # reconsumption): DATA's whole-construct fast paths, or the
+            # state's _RUN_BREAK scan
             if state == DATA:
                 # fused run+tag fast path: the overwhelmingly common DATA
                 # shape is "text run then subset tag" — one C-level regex

@@ -28,10 +28,6 @@ def _sql_list(words) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
 
-def _tokens_expr() -> str:
-    return "split(trim(text), '\\\\s+')"
-
-
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + length features per document, plus
     the document fingerprint (round 4: :func:`fingerprints`' md5-over-
@@ -339,15 +335,6 @@ def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(norm).alias("fingerprint"),
         F.length(norm).cast("long").alias("norm_len"),
     )
-
-
-def fingerprints_sql(table: str = "documents") -> str:
-    return f"""
-    SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fingerprint,
-           length(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS norm_len
-    FROM {table}
-    """
 
 
 def ngram_topk(spark: SparkSession, sf_dir: str, n_top: int = 20) -> DataFrame:

@@ -7,6 +7,7 @@ honest rejection of profiles the decoder does not implement.
 """
 
 import random
+import struct
 
 import pytest
 
@@ -182,8 +183,9 @@ def test_jpeg_baseline_round_trip_matches_reference_reconstruction():
 
 
 def test_jpeg_decoder_rejects_unsupported_profiles():
-    """Progressive frames, restart intervals and truncated entropy data
-    raise the routed ValueError class (status column, never a crash)."""
+    """Progressive frames, restart intervals, truncated entropy data and
+    Adobe APP14 RGB (transform 0) scans raise the routed ValueError class
+    (status column, never a crash)."""
     from html_parser_spark.functions.mediacodecs import decode_jpeg, encode_jpeg
 
     rng = random.Random(5)
@@ -196,6 +198,15 @@ def test_jpeg_decoder_rejects_unsupported_profiles():
         decode_jpeg(prog)
     with pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"BMxx")
+
+    def with_app14(transform):
+        seg = b"Adobe" + b"\x00\x64\x00\x00\x00\x00" + bytes([transform])
+        return good[:2] + b"\xff\xee" + struct.pack(">H", 2 + len(seg)) + seg + good[2:]
+
+    with pytest.raises(ValueError, match="APP14 RGB"):
+        decode_jpeg(with_app14(0))
+    # transform 1 (YCbCr) is what the decoder assumes: same pixels
+    assert decode_jpeg(with_app14(1)) == decode_jpeg(good)
 
 
 def test_sniff_dispatch_matches_ground_truth_fixture():

@@ -12,6 +12,7 @@ import pytest
 
 from html_parser_spark.fixtures import ensure_transcripts
 from html_parser_spark.functions.extract import extract
+from html_parser_spark.operators import pipeline
 from html_parser_spark.operators.pipeline import (
     extract_columns,
     extract_stage,
@@ -133,10 +134,11 @@ def test_stable_turn_ordering_within_partitions(spark, transcripts):
     assert res and all(r.ok for r in res)
 
 
-def test_source_partitioned_skips_shuffle(spark, transcripts):
+def test_source_partitioned_skips_shuffle(spark, transcripts, monkeypatch):
     """Bucketed-source mode (``extract_columns`` over a frame that is
     only sorted within its input partitions): zero exchanges, results
-    identical to the salted stage."""
+    identical to the salted stage at the default ``SALT_K`` and at
+    ``SALT_K = 1`` (the salt value moves rows, never changes them)."""
     noshuffle = extract_columns(
         transcripts.select("conv_id", "turn_idx", "text").sortWithinPartitions(
             "conv_id", "turn_idx"
@@ -147,12 +149,14 @@ def test_source_partitioned_skips_shuffle(spark, transcripts):
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
 
-    want = {
-        (r.conv_id, r.turn_idx, r.main_text)
-        for r in run_extraction(transcripts, num_partitions=8).collect()
-    }
-    got = {(r.conv_id, r.turn_idx, r.main_text) for r in noshuffle.collect()}
-    assert got == want
+    def rows(df):
+        return {(r.conv_id, r.turn_idx, r.main_text, r.err_count) for r in df.collect()}
+
+    got = rows(noshuffle)
+    assert pipeline.SALT_K == 8
+    assert got == rows(run_extraction(transcripts, num_partitions=8))
+    monkeypatch.setattr(pipeline, "SALT_K", 1)
+    assert got == rows(run_extraction(transcripts, num_partitions=8))
 
 
 def test_edge_inputs_flow_through(spark, check_stage):
