@@ -27,8 +27,6 @@ def run_link_extraction(
     # per-row Python list of link tuples makes Arrow walk an object graph
     # per turn; emitting flat columnar batches (one list per COLUMN)
     # converts at array speed and drops the JVM Generate entirely.
-    # Measured same-session ABAB at sf0.1: 7.66 s -> 3.52 s (2.2x),
-    # value-identical over 1.25M links (see BENCH.md).
     def _flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = (
             "conv_id", "turn_idx", "link_idx", "href", "anchor_text",

@@ -15,10 +15,13 @@ Scale shape:
   TakeOrderedAndProject.  Everything that shuffles is ids/counts; text
   crosses the wire only as the anchor strings being aggregated.
 - ``pagerank`` / ``pagerank_fixed``: one ids-only power iteration in
-  float or int64 fixed-point arithmetic — edges join ranks on the
-  source key, contributions aggregate on the destination key,
-  ``localCheckpoint`` every few rounds truncates lineage (the
-  connected-components lesson, BENCH.md r3).  The dangling mass is a
+  float or int64 fixed-point arithmetic.  The ``(src, dst)`` edge
+  projection is materialized once (``localCheckpoint``) before the
+  first action, so the node set, the out-degrees and every round read
+  stored blocks and never re-run the link-harvest UDF that produced
+  the edges.  Edges join ranks on the source key, contributions
+  aggregate on the destination key, and a ``localCheckpoint`` every
+  few rounds truncates the ranks' lineage.  The dangling mass is a
   lazy 1-row aggregate, so no round runs a Spark action of its own.
 
 Float PageRank is NOT a gate row: cross-engine float summation
@@ -133,9 +136,8 @@ FP_SCALE = 10**12
 FP_DAMP_NUM = 85
 FP_DAMP_DEN = 100
 DAMPING = FP_DAMP_NUM / FP_DAMP_DEN
-# localCheckpoint every this many rounds — without it Catalyst
-# re-analyzes a k-deep join tree every round (measured on connected
-# components: per-round wall GREW 18→104 s under bare persist, BENCH.md r3)
+# localCheckpoint the ranks every this many rounds, so no round's plan
+# holds more than this many rounds of joins for Catalyst to re-analyze
 CHECKPOINT_EVERY = 3
 
 
@@ -204,6 +206,10 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
         r'(v) = (1-d)/N + d * (S(v) + D/N),
         S(v) = Σ_{u→v} r(u)/deg(u),  D = Σ_{deg(u)=0} r(u).
 
+    The ids-only ``(src, dst)`` string projection is materialized once,
+    before the first action: the node set, the out-degrees and every
+    round's edge join read its stored blocks, so the rounds never re-run
+    the lineage that produced ``edges`` (the link-harvest UDF).
     Physical shape per round: edges ⋈ ranks on src (both sides keyed by
     node id), groupBy dst partial+final agg, one lazy 1-row dangling
     aggregate.  Returns (node, ``arith.col``) for every node that
@@ -212,7 +218,7 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
     edges = edges.select(
         F.col(edges.columns[0]).cast("string").alias("src"),
         F.col(edges.columns[1]).cast("string").alias("dst"),
-    )
+    ).localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -221,6 +227,8 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
+        free_local_checkpoint(edges)
+        free_local_checkpoint(nodes)
         return spark.createDataFrame([], f"node string, {arith.col} {arith.sql_type}")
     out_deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("deg")
@@ -262,12 +270,12 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
                 free_local_checkpoint(prev_ckpt)
             prev_ckpt = new_ranks
             ranks = new_ranks
+    # the returned frame reads only its own checkpoint (the last round
+    # always checkpoints) or, with iterations=0, nodes — free the rest
+    free_local_checkpoint(edges)
+    free_local_checkpoint(out_deg)
     if iterations > 0:
-        # the returned frame is checkpointed (the last round always
-        # checkpoints), so the helper tables' blocks are releasable;
-        # with iterations=0 ranks still reads THROUGH nodes — keep them
         free_local_checkpoint(nodes)
-        free_local_checkpoint(out_deg)
     return ranks
 
 

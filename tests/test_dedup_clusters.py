@@ -289,7 +289,8 @@ def test_iterative_checkpoints_release_storage(spark):
 
 def test_pagerank_releases_superseded_checkpoints(spark):
     """Both arithmetics of the one power iteration (float ``pagerank``,
-    fixed-point ``pagerank_fixed``) free every superseded checkpoint."""
+    fixed-point ``pagerank_fixed``) free every superseded checkpoint,
+    with rounds and with none."""
     from html_parser_spark.operators.linkrank import (
         FP_SCALE,
         pagerank,
@@ -319,4 +320,15 @@ def test_pagerank_releases_superseded_checkpoints(spark):
         assert leaked <= 1, (
             f"{run.__name__}: {leaked} RDDs left in storage "
             "(expected ≤1: the returned frame)"
+        )
+        # no rounds: the returned frame reads the node checkpoint, and
+        # the edge and out-degree checkpoints must be freed
+        spark.catalog.clearCache()
+        base = n_stored()
+        ranks = run(edges, iterations=0)
+        assert sorted(r.node for r in ranks.collect()) == ["a", "b", "c", "d"]
+        leaked = n_stored() - base
+        assert leaked <= 1, (
+            f"{run.__name__} iterations=0: {leaked} RDDs left in storage "
+            "(expected ≤1: the node checkpoint the returned frame reads)"
         )

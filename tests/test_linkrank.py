@@ -181,3 +181,35 @@ def test_pagerank_fixed_tracks_float_and_conserves_integer_mass(spark):
     assert sorted(fp, key=fp.get) == sorted(fl, key=fl.get)
     for v in fp:
         assert abs(fp[v] / FP_SCALE - fl[v]) < 1e-6
+
+
+def test_pagerank_runs_the_edge_source_once(spark):
+    """Each PageRank call evaluates its edge frame's lineage once: the
+    ids-only edges are materialized before the first action, so the
+    node set, the out-degrees and every round read stored blocks
+    instead of re-running the upstream Python stage (the link harvest in
+    production).  A ``mapInPandas`` source counts the rows it emits."""
+    from html_parser_spark.operators.linkrank import pagerank, pagerank_fixed
+
+    pairs = [
+        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+        ("d", "c"), ("d", "a"), ("e", "d"), ("c", "f"),
+    ]
+    emitted = spark.sparkContext.accumulator(0)
+
+    def source(batches):
+        for pdf in batches:
+            emitted.add(len(pdf))
+            yield pdf
+
+    edges = spark.createDataFrame(pairs, "src string, dst string").mapInPandas(
+        source, schema="src string, dst string"
+    )
+    for run in (pagerank_fixed, pagerank):
+        before = emitted.value
+        rows = run(edges, iterations=4).collect()
+        assert len(rows) == 6, run.__name__
+        assert emitted.value - before == len(pairs), (
+            f"{run.__name__}: the edge source emitted "
+            f"{emitted.value - before} rows for {len(pairs)} edges"
+        )
