@@ -4,7 +4,8 @@
 Headline metric (BASELINE.json): extraction turns/sec over the synthetic
 ``transcripts`` table at the SF implied by ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1 → sf=0.1 → ~100k turns), on
-``local[$SPARK_GRAFT_CPUS]``.  Also times the other headline operators
+``local[session.DEFAULT_CPUS]`` (``$SPARK_GRAFT_CPUS``, else the cores
+this process may run on).  Also times the other headline operators
 (dedup / similarity / text analysis) at the same SF for regression
 tracking.
 
@@ -35,7 +36,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from html_parser_spark.fixtures import ensure_transcripts
     from html_parser_spark.operators.pipeline import run_extraction
-    from html_parser_spark.plans.session import get_spark
+    from html_parser_spark.plans.session import DEFAULT_CPUS, get_spark
     from pyspark.sql import functions as F
 
     sf = entry_mod._sf_of(args.sf_dir)
@@ -43,23 +44,6 @@ def main() -> None:
 
     spark = get_spark(app_name="bench", master=args.master)
     ncores = spark.sparkContext.defaultParallelism
-
-    # Host-window context: /proc/stat steal under-reads the hypervisor's
-    # burst steal (run-average ~4% while 5-s top samples show 11-30%,
-    # BENCH.md), so the per-pass steal fractions alone can label a
-    # depressed window "clean".  A pure-Python pinned ceiling probe
-    # before and after the measured passes gives every headline number
-    # its own window health stamp (clean-window reference: ~40-55k at
-    # 32-wide; sustained-cap days read 29-42k and decay between probes).
-    def _ceiling_probe():
-        try:
-            from tools.scaling_bench import measure_ceiling
-
-            return round(measure_ceiling(min(ncores, os.cpu_count())), 1)
-        except Exception:
-            return None
-
-    ceiling_pre = _ceiling_probe()
 
     transcripts = spark.read.parquet(tpath)
     n_turns = transcripts.count()
@@ -113,7 +97,6 @@ def main() -> None:
     while steals[passes.index(min(passes))] > 0.10 and len(passes) < 6:
         _one_pass()
     extract_sec = min(passes)
-    ceiling_post = _ceiling_probe()
 
     queries = {"extract_turns": round(extract_sec, 3)}
 
@@ -181,13 +164,8 @@ def main() -> None:
         "extract_wall_sec": round(extract_sec, 3),
         "extract_passes_sec": passes,
         "extract_passes_steal": steals,
-        "host_ceiling_pre": ceiling_pre,
-        "host_ceiling_post": ceiling_post,
-        # the ACTUAL master (round 4: full CPU budget — the tag memo
-        # shrank the wave tail the old local[28] reservation compensated
-        # for; clean-window ABAB now favors local[32], BENCH.md)
         "master": spark.sparkContext.master,
-        "cpu_budget": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpu_budget": DEFAULT_CPUS,
         "parallelism": ncores,
     }
     print(json.dumps(out))

@@ -54,9 +54,6 @@ _NUMERIC_POOL = [
 
 _BOILER_CLASSES = ["nav", "menu", "footer", "sidebar", "share", "related"]
 
-_HANG_SUFFIX_GUARD = ("<!", "-", " ")  # last-char families to avoid at EOF
-
-
 def _words(rng: random.Random, k: int) -> str:
     return " ".join(rng.choice(_WORDS) for _ in range(k))
 

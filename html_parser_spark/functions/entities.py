@@ -53,11 +53,6 @@ ENTITIES: dict[str, str] = {
 assert len(ENTITIES) == 2221, len(ENTITIES)
 
 
-def get_entity(name: str) -> str | None:
-    """Lookup incl. ``&`` prefix and optional ``;`` (src/entity.rs:2236-2238)."""
-    return ENTITIES.get(name)
-
-
 def is_numeric_surrogate(code: int) -> bool:
     # reference: src/entity.rs:2240-2242
     return 0xD800 <= code <= 0xDFFF

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 
-from .tokenizer import tokenize, HANG, PANIC
+from .tokenizer import tokenize
 
 # containers whose character data is never content
 DROP_TAGS = frozenset(
@@ -53,9 +53,6 @@ _BOILER_CLASS = re.compile(
     r"breadcrumb|banner|cookie|popup|related|widget",
     re.IGNORECASE,
 )
-
-_WS_ONLY = re.compile(r"^\s*$")
-
 
 def _is_boiler(attrs) -> bool:
     for name, value in attrs:

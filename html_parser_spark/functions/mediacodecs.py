@@ -936,10 +936,10 @@ def webp_metadata(payload: bytes) -> tuple:
 # Round 5: the video modality's METADATA leg is real — an ISO-BMFF
 # (MP4) box walk and a RIFF-AVI header walk, both pure stdlib from the
 # public specs (ISO/IEC 14496-12 box structure; the classic AVIMAINHEADER
-# layout).  Frame DECODE stays the honest stub (sample_frames — the
-# codecs inside the containers need ffmpeg), exactly like JPEG's pixel
-# path before round 5: typed metadata (dims, frame count, duration)
-# re-derived from the bytes, content fingerprints not claimed.
+# layout).  Frame DECODE is not implemented (the codecs inside the
+# containers need ffmpeg), exactly like JPEG's pixel path before round
+# 5: typed metadata (dims, frame count, duration) re-derived from the
+# bytes, content fingerprints not claimed.
 
 
 def encode_mp4_fixture(
@@ -1137,58 +1137,3 @@ def avi_metadata(payload: bytes) -> tuple:
             return w, h, total, total * uspf // 1000
         pos += 8 + size + (size & 1)
     raise ValueError("AVI without avih header")
-
-
-# ---------------------------------------------------------- transforms
-
-
-def resize_nearest(
-    raw: bytes, width: int, height: int, channels: int,
-    out_w: int, out_h: int,
-) -> bytes:
-    """Nearest-neighbor resize over interleaved 8-bit pixels — the
-    deterministic, dependency-free thumbnail transform (the resize leg
-    of decode → transform → fingerprint).  Source pixel for output
-    (x, y) is (x * width // out_w, y * height // out_h)."""
-    if len(raw) != width * height * channels:
-        # ValueError (not assert): callers route it to the status
-        # column, and asserts vanish under python -O
-        raise ValueError(
-            f"pixel buffer {len(raw)} != {width}x{height}x{channels}"
-        )
-    out = bytearray(out_w * out_h * channels)
-    for y in range(out_h):
-        sy = y * height // out_h
-        src_row = sy * width * channels
-        dst_row = y * out_w * channels
-        for x in range(out_w):
-            sx = x * width // out_w
-            s = src_row + sx * channels
-            d = dst_row + x * channels
-            out[d : d + channels] = raw[s : s + channels]
-    return bytes(out)
-
-
-def image_features(raw: bytes, channels: int) -> list:
-    """Per-channel integer features: (mean_milli, min, max) — mean in
-    thousandths (floor), exact integer arithmetic so any cross-engine
-    or cross-run comparison is bit-stable."""
-    n = len(raw) // channels
-    feats = []
-    for c in range(channels):
-        vals = raw[c::channels]
-        feats.append(
-            (sum(vals) * 1000 // max(n, 1), min(vals), max(vals))
-        )
-    return feats
-
-
-def audio_energy(pcm: bytes, channels: int) -> int:
-    """Sum of squared 16-bit LE samples across all channels — the
-    integer loudness feature (RMS without the float sqrt; monotone in
-    RMS for fixed frame count, so threshold filters sort identically)."""
-    import array
-
-    samples = array.array("h")
-    samples.frombytes(pcm[: len(pcm) - (len(pcm) % 2)])
-    return sum(int(s) * int(s) for s in samples)

@@ -356,7 +356,8 @@ _ATTRVAL_MEMO: dict = {}
 # so the emitted text, the PANIC flag from the fallback's utf-8 prefix
 # probes, and the ambiguous flag are computed once per distinct name.
 # Corpora reuse a handful of entities massively (fixture corpus: ~236k
-# named refs, 22 distinct).  Values: (emit_str, panic, ambiguous).
+# named refs, 22 distinct).  Values: (emit_str, panic, ambiguous), filled
+# by _resolve_named_ref.
 _ENT_OUTCOME_MEMO: dict = {}
 
 _ASCII_ALPHA = frozenset(
@@ -411,6 +412,50 @@ def _numeric_ref_char(code: int) -> str:
         return chr(code)
     except ValueError:
         return REPLACEMENT
+
+
+def _resolve_named_ref(name: str) -> tuple:
+    """NAMED_CHAR_REF's outcome when the return state is not an
+    attribute value, for a scanned ``name`` ("&" + the consumed chars):
+    ``(emit_str, panic, ambiguous)``, stored in ``_ENT_OUTCOME_MEMO``.
+
+    An exact entity emits its value.  Otherwise the byte-domain prefix
+    fallback (mod.rs:839-877) emits the longest entity prefix plus the
+    raw tail.  Rust slices ``&buffer[..max]`` by BYTES and panics on a
+    char-boundary violation; we flag ``panic`` and recover.  The raw
+    tail is ``name[mx:]`` with ``mx`` in the BYTE domain compared
+    against CHAR indices (mod.rs:859-863), the reference's quirk kept
+    verbatim.  The automaton emits the prefix and the tail as two
+    emit_chars calls with one span; they land in the same pending run,
+    so one concatenated string is output-identical.  No prefix down to
+    MIN_POSSIBLE: the whole name is emitted raw and ``ambiguous`` sends
+    the automaton to AMBIGUOUS_AMPERSAND.  An empty ``emit_str`` (names
+    shorter than MIN_POSSIBLE bytes, e.g. "&a") means nothing is emitted
+    at all."""
+    entity = ENTITIES.get(name)
+    if entity is not None:
+        outcome = (entity, False, False)
+    else:
+        panic = False
+        bbuf = name.encode("utf-8")
+        mx = min(MAX_WITHOUT_SEMICOLON + 1, len(bbuf))
+        matched = None
+        while mx > MIN_POSSIBLE:
+            try:
+                matched = ENTITIES.get(bbuf[:mx].decode("utf-8"))
+            except UnicodeDecodeError:
+                panic = True
+            if matched is not None:
+                break
+            mx -= 1
+        if mx != MIN_POSSIBLE:
+            outcome = ((matched or "") + name[mx:], panic, False)
+        else:
+            outcome = (name, panic, True)
+    if len(_ENT_OUTCOME_MEMO) >= _TAG_MEMO_MAX:
+        _ENT_OUTCOME_MEMO.clear()
+    _ENT_OUTCOME_MEMO[name] = outcome
+    return outcome
 
 
 def _keyword_lookahead(text: str, i: int, goal: str, fold: bool):
@@ -853,54 +898,9 @@ def tokenize(text: str, initial_state: int = DATA):
             end = i if cur_c is not None else n
             # resume: ';' consumed; a breaking char is reprocessed
             resume = i if (cur_c == ";" or cur_c is None) else i - 1
-            outcome = _ENT_OUTCOME_MEMO.get(name)
-            if outcome is None:
-                entity = ENTITIES.get(name)
-                if entity is not None:
-                    outcome = (entity, False, False)
-                else:
-                    # byte-domain prefix fallback (mod.rs:839-877).  The
-                    # slow path emitted [matched?] + the raw tail chars
-                    # one emit_chars call each, all with span (j, end) —
-                    # they land in the same pending run, so one
-                    # concatenated emission is output-identical.  The raw
-                    # tail is name[mx:] with mx in the BYTE domain
-                    # compared against CHAR indices — the reference's
-                    # quirk, preserved verbatim.
-                    panic = False
-                    bbuf = name.encode("utf-8")
-                    mx = MAX_WITHOUT_SEMICOLON + 1
-                    if mx > len(bbuf):
-                        mx = len(bbuf)
-                    matched = None
-                    while mx > MIN_POSSIBLE:
-                        try:
-                            prefix = bbuf[:mx].decode("utf-8")
-                        except UnicodeDecodeError:
-                            panic = True
-                            prefix = None
-                        if prefix is not None:
-                            matched = ENTITIES.get(prefix)
-                            if matched is not None:
-                                break
-                        mx -= 1
-                    if mx != MIN_POSSIBLE:
-                        # matched can be None here when the initial mx is
-                        # already below MIN_POSSIBLE (very short names,
-                        # e.g. "&a"): the slow path emitted nothing at all
-                        # — an empty emit_str reproduces that via the
-                        # emission guard below
-                        outcome = (
-                            (matched or "") + name[mx:],
-                            panic,
-                            False,
-                        )
-                    else:
-                        outcome = (name, panic, True)
-                if len(_ENT_OUTCOME_MEMO) >= _TAG_MEMO_MAX:
-                    _ENT_OUTCOME_MEMO.clear()
-                _ENT_OUTCOME_MEMO[name] = outcome
-            emit_str, panic, ambiguous = outcome
+            emit_str, panic, ambiguous = (
+                _ENT_OUTCOME_MEMO.get(name) or _resolve_named_ref(name)
+            )
             if panic:
                 status = PANIC
             if emit_str:
@@ -1157,10 +1157,9 @@ def tokenize(text: str, initial_state: int = DATA):
                 i += 1
 
             buffer = temp_buf if temp_buf is not None else ""
-            end = cur_idx + (0 if cur is None else 1)
-            entity = ENTITIES.get(buffer)
             state = return_state
             if return_state in _ATTR_VALUE_STATES:
+                entity = ENTITIES.get(buffer)
                 if entity is not None and cur != "=" and not (
                     cur is not None and _is_alphanumeric(cur)
                 ):
@@ -1172,37 +1171,16 @@ def tokenize(text: str, initial_state: int = DATA):
                     if tok_kind == 1 and tag_attrs:
                         tag_attrs[-1][1] += buffer
                     temp_buf = None
-            elif entity is not None:
-                emit_chars(entity, amp_src, end)
             else:
-                # byte-domain prefix fallback (mod.rs:839-877); Rust
-                # slices &buffer[..max] by BYTES and panics on a char
-                # boundary violation — we flag and recover.
-                bbuf = buffer.encode("utf-8")
-                mx = MAX_WITHOUT_SEMICOLON + 1
-                if mx > len(bbuf):
-                    mx = len(bbuf)
-                while mx > MIN_POSSIBLE:
-                    try:
-                        prefix = bbuf[:mx].decode("utf-8")
-                    except UnicodeDecodeError:
-                        status = PANIC
-                        prefix = None
-                    if prefix is not None:
-                        matched = ENTITIES.get(prefix)
-                        if matched is not None:
-                            emit_chars(matched, amp_src, end)
-                            break
-                    mx -= 1
-                # re-emit the unmatched tail raw; Rust enumerates CHAR
-                # indices against the BYTE count mx (mod.rs:859-863) —
-                # safe here: any matched prefix is pure ASCII, so char
-                # and byte indices agree below mx (divergence is only
-                # possible through a decode failure, flagged above).
-                tail = buffer if mx == MIN_POSSIBLE else buffer[mx:]
-                if tail:
-                    emit_chars(tail, amp_src, end)
-                if mx == MIN_POSSIBLE:
+                emit_str, panic, ambiguous = (
+                    _ENT_OUTCOME_MEMO.get(buffer) or _resolve_named_ref(buffer)
+                )
+                if panic:
+                    status = PANIC
+                if emit_str:
+                    end = cur_idx + (0 if cur is None else 1)
+                    emit_chars(emit_str, amp_src, end)
+                if ambiguous:
                     state = AMBIGUOUS_AMPERSAND
             recon = cur != ";"
             continue

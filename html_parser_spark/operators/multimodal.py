@@ -10,8 +10,8 @@ decode must reproduce them from the blob alone.  Round 5 extends the
 same treatment to JPEG: a full pure-stdlib baseline T.81 coder
 (mediacodecs.encode_jpeg/decode_jpeg) with ground truth from an
 independent numpy reconstruction of the committed coefficients.  Video
-decode stays honestly stubbed (ffmpeg absent in this container); GIF
-frame sampling is the real animated path.
+containers get real container metadata only (frame decode needs
+ffmpeg); GIF is the animated format whose frames decode.
 
 At 100 TB, the pattern is: binary blobs stay columnar in parquet, the
 ``mapInPandas`` stage streams Arrow batches (bounded by
@@ -149,13 +149,6 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     raise ValueError(f"not a decodable still image (sniffed {fmt!r})")
 
 
-def sample_frames(payload: bytes, every_n: int = 30):  # pragma: no cover
-    """Real video path — requires ffmpeg, absent in this container."""
-    raise NotImplementedError(
-        "frame sampling needs ffmpeg; wire into _meta_batches when available"
-    )
-
-
 # ----------------------------------------------------- mixed-format media
 
 MEDIA_SCHEMA = (
@@ -227,8 +220,8 @@ def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     n_frames, pixel_md5 = 1, hashlib.md5(raw).hexdigest()
                 elif fmt == "mp4":
                     # container metadata is real (ISO-BMFF box walk);
-                    # frame decode needs ffmpeg and stays the honest
-                    # stub, so pixel_md5 remains NULL by contract
+                    # frame decode needs ffmpeg, so pixel_md5 remains
+                    # NULL by contract
                     width, height, n_frames, _dur = mp4_metadata(b)
                 elif fmt == "avi":
                     width, height, n_frames, _dur = avi_metadata(b)
@@ -309,108 +302,3 @@ def media_metadata_sql(sf_dir: str | None = None) -> str:
            'ok' AS status
     FROM read_parquet('{path}')
     """
-
-
-def gif_frame_samples(payload: bytes, every_n: int = 1) -> list:
-    """Real frame sampling for the one animated container the sandbox
-    can decode: every ``every_n``-th GIF frame → (frame_idx, frame_md5).
-    Video containers still require ffmpeg (see sample_frames)."""
-    from ..functions.mediacodecs import decode_gif
-
-    w, h, n_frames, idx = decode_gif(payload)
-    size = w * h
-    return [
-        (i, hashlib.md5(idx[i * size : (i + 1) * size]).hexdigest())
-        for i in range(0, n_frames, every_n)
-    ]
-
-
-FEATURES_SCHEMA = (
-    "doc_id bigint, format string, thumb_md5 string, "
-    "ch0_mean_milli int, ch0_min int, ch0_max int, "
-    "energy bigint, status string"
-)
-
-
-def media_features(
-    spark: SparkSession, sf_dir: str, thumb_w: int = 8, thumb_h: int = 8
-) -> DataFrame:
-    """The transform leg of the multimodal story (decode → resize /
-    feature-extract → fingerprint), all pure-stdlib over the decoded
-    pixels: images get a nearest-neighbor ``thumb_w``×``thumb_h``
-    thumbnail fingerprint plus channel-0 integer stats; WAV gets the
-    integer loudness feature (sum of squared samples).  Since round 5
-    JPEG decodes for real and flows through the same image-feature leg
-    as PNG/BMP.  Failures route to status like
-    :func:`media_metadata`."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mediacodecs import (
-            audio_energy,
-            decode_bmp,
-            decode_gif,
-            decode_jpeg,
-            decode_wav,
-            image_features,
-            resize_nearest,
-            sniff_format,
-        )
-
-        cols = (
-            "doc_id", "format", "thumb_md5", "ch0_mean_milli",
-            "ch0_min", "ch0_max", "energy", "status",
-        )
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(b)
-                fmt = sniff_format(b)
-                thumb = mean = mn = mx = energy = None
-                status = "ok"
-                try:
-                    if fmt == "png":
-                        w, h, ch, raw = decode_png(b)
-                    elif fmt == "gif":
-                        w, h, nf, idx = decode_gif(b)
-                        if len(idx) < w * h:
-                            # spec-legal but outside the supported
-                            # profile: first frame smaller than the
-                            # logical screen — route to status, don't
-                            # let resize_nearest's length check crash
-                            raise ValueError(
-                                "GIF first frame smaller than screen"
-                            )
-                        ch, raw = 1, idx[: w * h]  # first frame
-                    elif fmt == "bmp":
-                        w, h, ch, raw = decode_bmp(b)
-                    elif fmt == "jpeg":
-                        w, h, ch, raw = decode_jpeg(b)
-                    elif fmt == "wav":
-                        chn, sr, nf, pcm = decode_wav(b)
-                        energy = audio_energy(pcm, chn)
-                        raw = None
-                    else:
-                        raw = None
-                        status = "no_pixels"
-                    if raw is not None:
-                        small = resize_nearest(raw, w, h, ch, thumb_w, thumb_h)
-                        thumb = hashlib.md5(small).hexdigest()
-                        (mean, mn, mx), *_ = image_features(raw, ch)
-                except _DECODE_ERRORS:
-                    thumb = mean = mn = mx = energy = None
-                    status = "decode_error"
-                rows["doc_id"].append(doc_id)
-                rows["format"].append(fmt)
-                rows["thumb_md5"].append(thumb)
-                rows["ch0_mean_milli"].append(mean)
-                rows["ch0_min"].append(mn)
-                rows["ch0_max"].append(mx)
-                rows["energy"].append(energy)
-                rows["status"].append(status)
-            yield pd.DataFrame(rows)
-
-    return (
-        media_blobs(spark, sf_dir)
-        .select("doc_id", "payload")
-        .mapInPandas(gen, schema=FEATURES_SCHEMA)
-    )

@@ -12,11 +12,13 @@ spark-submit job all run the same plan shape (SURVEY.md §4.2):
   salted repartition in :mod:`..operators.pipeline` instead, because AQE
   cannot see Python compute time.
 - ``shuffle_partitions`` is still set explicitly (AQE coalesces down from
-  it, never up): cluster formula ≈ input_bytes / 128 MB; in the local[32]
-  sandbox 32–64 is right.
-- task slots: one per core of the ``SPARK_GRAFT_CPUS`` budget
-  (local[32] ≥ local[28] in 3 of 4 clean-window ABAB pairs on a
-  32-core box, BENCH.md r4); on a real cluster keep
+  it, never up): cluster formula ≈ input_bytes / 128 MB; locally one
+  partition per task slot.
+- task slots: one per core of the CPU budget — ``SPARK_GRAFT_CPUS`` when
+  set, else the cores this process may run on (``sched_getaffinity``),
+  so an unset budget never oversubscribes a small box (a full budget
+  beat a reserved one in 3 of 4 clean-window ABAB pairs on a 32-core
+  box, BENCH.md r4); on a real cluster keep
   ``spark.executor.cores`` ≈ 0.9 × vcores only when profiling shows JVM
   service threads contended.  Explicit masters are honored verbatim.
 """
@@ -27,7 +29,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
 
 
 def get_spark(
@@ -39,8 +43,8 @@ def get_spark(
 ) -> SparkSession:
     # an explicit master (tests, scaling harness) is honored verbatim;
     # the default uses one task slot per core of the CPU budget
-    master = master or f"local[{int(DEFAULT_CPUS)}]"
-    shuffle_partitions = shuffle_partitions or int(DEFAULT_CPUS)
+    master = master or f"local[{DEFAULT_CPUS}]"
+    shuffle_partitions = shuffle_partitions or DEFAULT_CPUS
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -152,12 +152,3 @@ def append_table(df: DataFrame, ref: str) -> None:
     else:
         df.write.mode("append").parquet(ref)
 
-
-def ensure_tables(spark: SparkSession, catalog: str, db: str) -> None:
-    """Create the production tables (no-op unless Iceberg is wired)."""
-    if not iceberg_available(spark, catalog):
-        raise RuntimeError(
-            "no Iceberg catalog configured — sandbox runs use parquet paths"
-        )
-    for ddl in (TRANSCRIPTS_DDL, EXTRACTED_DDL, METRICS_DDL):
-        spark.sql(ddl.format(catalog=catalog, db=db))

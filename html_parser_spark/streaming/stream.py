@@ -80,13 +80,15 @@ def run_stream_backfill(
     Processes exactly the files not yet recorded in the checkpoint, then
     stops — re-invoking after new files land continues where the source
     offsets left off (streaming resume; the batch path's anti-join
-    equivalent).  Returns sink paths.
+    equivalent).  The metrics query streams the committed ``extracted``
+    sink, so the extraction UDF runs once per input file.  Returns sink
+    paths.
     """
     ext_path = os.path.join(out_dir, "extracted")
     ext_ckpt = os.path.join(out_dir, "_ckpt_extracted")
+    extracted = extract_stream(read_transcript_stream(spark, input_dir))
     q = (
-        extract_stream(read_transcript_stream(spark, input_dir))
-        .writeStream.format("parquet")
+        extracted.writeStream.format("parquet")
         .option("path", ext_path)
         .option("checkpointLocation", ext_ckpt)
         .trigger(availableNow=True)
@@ -96,12 +98,15 @@ def run_stream_backfill(
 
     out = {"extracted": ext_path}
     if with_metrics:
+        # the metrics read the committed sink (its _spark_metadata log
+        # lists only committed files), so each file is extracted once.
+        # The schema is the sink's own, taken from the frame it was
+        # written from: an empty backfill leaves no file to infer from.
         m_path = os.path.join(out_dir, "metrics")
         m_ckpt = os.path.join(out_dir, "_ckpt_metrics")
+        committed = spark.readStream.schema(extracted.schema).parquet(ext_path)
         mq = (
-            windowed_metrics(
-                extract_stream(read_transcript_stream(spark, input_dir))
-            )
+            windowed_metrics(committed)
             .writeStream.format("parquet")
             .outputMode("append")
             .option("path", m_path)

@@ -274,21 +274,6 @@ def test_sniff_dispatch_matches_ground_truth_fixture():
     assert seen == {"png", "gif", "bmp", "wav", "jpeg", "mp4", "avi", "webp"}
 
 
-def test_gif_frame_sampling_every_n():
-    from html_parser_spark.functions.mediacodecs import encode_gif
-    from html_parser_spark.operators.multimodal import gif_frame_samples
-
-    rng = random.Random(8)
-    frames = [bytes(rng.randrange(256) for _ in range(6 * 6)) for _ in range(5)]
-    g = encode_gif(frames, 6, 6)
-    import hashlib
-
-    got = gif_frame_samples(g, every_n=2)
-    assert [i for i, _ in got] == [0, 2, 4]
-    for i, digest in got:
-        assert digest == hashlib.md5(frames[i]).hexdigest()
-
-
 def test_corrupt_blobs_route_to_status_not_crash():
     """Truncated/corrupted payloads of every container must yield a
     decode_error row, never a raised exception out of the UDF — one bad
@@ -368,17 +353,15 @@ def test_decoders_never_raise_unexpected_on_fuzz_bytes():
 def test_crafted_corrupt_blobs_raise_routed_errors_only():
     """Adversarial shapes the random fuzz is unlikely to hit: a WAV with
     a parseable fmt chunk declaring 0 channels / 0 bits (ZeroDivision
-    risk), and a spec-legal GIF whose first frame is smaller than the
-    logical screen (resize length-check risk).  Both must raise a
-    ROUTED class, so the operator emits status='decode_error' instead
-    of crashing the task."""
+    risk) must raise a ROUTED class, so the operator emits
+    status='decode_error' instead of crashing the task; a spec-legal GIF
+    whose first frame is smaller than the logical screen must decode."""
     import struct
 
     from html_parser_spark.functions.mediacodecs import (
         decode_wav,
         encode_gif,
         decode_gif,
-        resize_nearest,
     )
     from html_parser_spark.operators.multimodal import _DECODE_ERRORS
 
@@ -406,67 +389,3 @@ def test_crafted_corrupt_blobs_raise_routed_errors_only():
     struct.pack_into("<HH", g, 6, 4, 4)
     w, h, nf, idx = decode_gif(bytes(g))
     assert (w, h) == (4, 4) and len(idx) < w * h
-    try:
-        resize_nearest(idx[: w * h], w, h, 1, 8, 8)
-        raise AssertionError("undersized pixel buffer accepted")
-    except _DECODE_ERRORS:
-        pass
-
-
-def test_resize_and_features_semantics():
-    from html_parser_spark.functions.mediacodecs import (
-        audio_energy,
-        image_features,
-        resize_nearest,
-    )
-
-    rng = random.Random(12)
-    # identity resize
-    raw = bytes(rng.randrange(256) for _ in range(6 * 5 * 3))
-    assert resize_nearest(raw, 6, 5, 3, 6, 5) == raw
-    # downscale picks exact source pixels: 4x4 -> 2x2 takes (0,0),(2,0),(0,2),(2,2)
-    gray = bytes(range(16))
-    assert resize_nearest(gray, 4, 4, 1, 2, 2) == bytes([0, 2, 8, 10])
-    # upscale of a constant image is constant
-    assert resize_nearest(bytes([9] * 4), 2, 2, 1, 5, 5) == bytes([9] * 25)
-    # channel features: exact integer arithmetic
-    rgb = bytes([10, 0, 255, 20, 0, 255])  # 2 px RGB
-    assert image_features(rgb, 3) == [
-        (15000, 10, 20), (0, 0, 0), (255000, 255, 255),
-    ]
-    import struct
-
-    assert audio_energy(struct.pack("<3h", 100, -2, 0), 1) == 10000 + 4
-
-
-def test_media_features_operator(spark):
-    """decode -> resize/feature-extract over the mixed fixture: every
-    image row carries a thumbnail fingerprint + channel stats, every wav
-    row the integer energy, jpeg rows real features since round 5."""
-    from html_parser_spark.operators.multimodal import media_features
-
-    rows = media_features(spark, "/root/testdata/sf0.001").collect()
-    assert len(rows) >= 80
-    by_fmt = {}
-    for r in rows:
-        by_fmt.setdefault(r.format, []).append(r)
-    for fmt in ("png", "gif", "bmp"):
-        for r in by_fmt[fmt]:
-            assert r.status == "ok" and len(r.thumb_md5) == 32
-            assert 0 <= r.ch0_min <= r.ch0_max <= 255
-            assert r.ch0_min * 1000 <= r.ch0_mean_milli <= r.ch0_max * 1000
-            assert r.energy is None
-    for r in by_fmt["wav"]:
-        assert r.status == "ok" and r.energy >= 0 and r.thumb_md5 is None
-    for fmt in ("mp4", "avi", "webp"):
-        for r in by_fmt[fmt]:
-            # container metadata is real but frame decode is the honest
-            # ffmpeg-less stub — no pixels, no features
-            assert r.status == "no_pixels" and r.thumb_md5 is None
-    for r in by_fmt["jpeg"]:
-        # round 5: jpeg flows through the real image-feature leg
-        assert r.status == "ok" and len(r.thumb_md5) == 32
-        assert 0 <= r.ch0_min <= r.ch0_max <= 255
-    # deterministic: same blob -> same fingerprint across runs
-    again = {r.doc_id: r.thumb_md5 for r in media_features(spark, "/root/testdata/sf0.001").collect()}
-    assert all(again[r.doc_id] == r.thumb_md5 for r in rows)

@@ -225,3 +225,23 @@ def test_assemble_conversations_caps_mega_conversation(spark):
     assert got["mega"].text_md5 == hashlib.md5(kept.encode()).hexdigest()
     assert got["tiny"].overflow == 0
     assert got["tiny"].text_md5 == hashlib.md5(b"a\nb").hexdigest()
+
+
+def test_cpu_budget_defaults_to_affinity():
+    """Without ``SPARK_GRAFT_CPUS`` the session uses one task slot per
+    core this process may run on, never a fixed count that
+    oversubscribes a small box."""
+    import subprocess
+    import sys
+
+    p = subprocess.run(
+        [sys.executable, "-c",
+         "import os; from html_parser_spark.plans import session; "
+         "print(session.DEFAULT_CPUS, len(os.sched_getaffinity(0)))"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    budget, affinity = p.stdout.split()
+    assert budget == affinity

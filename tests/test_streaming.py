@@ -77,3 +77,57 @@ def test_stream_matches_batch_extractor(spark, split_input, tmp_path_factory):
     emitted = m.agg(F.sum("turns")).first()[0]
     assert 0 < emitted <= n_a
     assert {c for c in m.columns} >= {"window_start", "parse_status", "turns"}
+
+
+def test_metrics_query_reads_the_extracted_sink(spark, split_input, tmp_path_factory):
+    """The metrics query streams the committed ``extracted`` sink, not
+    the input directory, so each input file goes through the
+    extraction UDF once per backfill."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    staging, _, n_a, _ = split_input
+    live = str(tmp_path_factory.mktemp("stream_live3"))
+    out = str(tmp_path_factory.mktemp("stream_out3"))
+    _move_in(staging, live, "batch_a")
+
+    progress = []
+
+    class Sources(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            progress.append(
+                (p.sink.description, [s.description for s in p.sources])
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Sources()
+    spark.streams.addListener(listener)
+    try:
+        run_stream_backfill(spark, live, out)
+        deadline = time.time() + 60
+        while time.time() < deadline and not any(
+            os.path.join(out, "metrics") in sink for sink, _ in progress
+        ):
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+
+    metrics_sources = [
+        src for sink, srcs in progress
+        if os.path.join(out, "metrics") in sink for src in srcs
+    ]
+    assert metrics_sources, progress
+    for src in metrics_sources:
+        assert os.path.join(out, "extracted") in src, src
+        assert live not in src, src
+    assert spark.read.parquet(f"{out}/extracted").count() == n_a
