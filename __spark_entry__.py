@@ -39,6 +39,7 @@ from html_parser_spark.operators import (
 from html_parser_spark.functions.display import display_expr, tokenize_udf
 from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
+    MAX_TURNS,
     assemble_conversations,
     extraction_metrics,
     run_dom_extraction,
@@ -47,8 +48,10 @@ from html_parser_spark.operators.pipeline import (
 )
 
 
-# the one sf-from-path implementation lives with the fixture generators
-from html_parser_spark.fixtures import sf_of as _sf_of
+# the one sf-from-path implementation and the one gate-scale rule (the
+# scale every DuckDB oracle below reads its fixture at) live with the
+# fixture generators
+from html_parser_spark.fixtures import gate_sf_dir, sf_of as _sf_of
 
 
 def _transcripts(spark: SparkSession, sf: float) -> DataFrame:
@@ -130,8 +133,7 @@ def _extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _extract_links_oracle() -> str:
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = link_golden_parquet(_sf_of(sf_dir) if sf_dir else 0.01)
+    path = link_golden_parquet(_sf_of(gate_sf_dir()))
     return f"""
     SELECT conv_id, turn_idx, link_idx, href, anchor_text,
            src_start, src_end
@@ -153,8 +155,7 @@ def _link_target_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _link_target_stats_oracle() -> str:
     from html_parser_spark.operators.linkrank import link_target_stats_sql
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = link_golden_parquet(_sf_of(sf_dir) if sf_dir else 0.01)
+    path = link_golden_parquet(_sf_of(gate_sf_dir()))
     return link_target_stats_sql(path, top_k=100)
 
 
@@ -172,8 +173,7 @@ def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _link_pagerank_oracle() -> str:
     from html_parser_spark.operators.linkrank import link_pagerank_sql
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = link_golden_parquet(_sf_of(sf_dir) if sf_dir else 0.01)
+    path = link_golden_parquet(_sf_of(gate_sf_dir()))
     return link_pagerank_sql(path, iterations=4, top_k=100)
 
 
@@ -258,14 +258,13 @@ def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _conv_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation-level corpus assembly (ordered turn concatenation,
-    md5-fingerprinted for the gate; output capped at max_turns=4096 with
+    md5-fingerprinted for the gate; output capped at ``MAX_TURNS`` with
     an overflow flag)."""
     return assemble_conversations(_transcripts(spark, _sf_of(sf_dir)))
 
 
-def _conv_assemble_oracle(max_turns: int = 4096) -> str:
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = ensure_transcripts(_sf_of(sf_dir) if sf_dir else 0.01)
+def _conv_assemble_oracle() -> str:
+    path = ensure_transcripts(_sf_of(gate_sf_dir()))
     return f"""
     WITH ranked AS (
       SELECT conv_id, text,
@@ -279,10 +278,10 @@ def _conv_assemble_oracle(max_turns: int = 4096) -> str:
              md5(string_agg(text, chr(10) ORDER BY rn)) AS text_md5,
              CAST(length(string_agg(text, chr(10) ORDER BY rn)) AS BIGINT)
                AS n_chars
-      FROM ranked WHERE rn <= {max_turns} GROUP BY conv_id
+      FROM ranked WHERE rn <= {MAX_TURNS} GROUP BY conv_id
     )
     SELECT t.conv_id, t.n_turns, a.text_md5, a.n_chars,
-           CAST(t.n_turns > {max_turns} AS BIGINT) AS overflow
+           CAST(t.n_turns > {MAX_TURNS} AS BIGINT) AS overflow
     FROM tot t JOIN agg a USING (conv_id) ORDER BY conv_id
     """
 
@@ -354,8 +353,7 @@ def _conv_stats_oracle() -> str:
     driver's pre-registered views don't include transcripts).  The sf
     follows the driver's gate (0.01) unless the local test harness pins a
     different dir via SPARK_GRAFT_TEST_SF_DIR."""
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = ensure_transcripts(_sf_of(sf_dir) if sf_dir else 0.01)
+    path = ensure_transcripts(_sf_of(gate_sf_dir()))
     return f"""
     SELECT conv_id, count(*) AS n_turns,
            count(DISTINCT role) AS n_roles,
@@ -375,8 +373,7 @@ def _golden_path() -> str:
     tools/golden_gen/gen_gate_goldens.py provenance notes), committed,
     and materialized as parquet for DuckDB — so the extraction family is
     hash-checked against the reference, not merely row-counted."""
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    return gate_golden_parquet(_sf_of(sf_dir) if sf_dir else 0.01)
+    return gate_golden_parquet(_sf_of(gate_sf_dir()))
 
 
 def _extract_turns_oracle() -> str:
@@ -425,8 +422,7 @@ def _dom_turns_oracle() -> str:
     has no DOM stage, so the oracle checks the distributed Spark execution
     against the committed single-process Python truth — value parity for
     text, spans and block metrics."""
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR")
-    path = dom_golden_parquet(_sf_of(sf_dir) if sf_dir else 0.01)
+    path = dom_golden_parquet(_sf_of(gate_sf_dir()))
     return f"""
     SELECT conv_id, turn_idx, main_text, spans_json, err_count,
            parse_status, n_blocks, n_kept_blocks

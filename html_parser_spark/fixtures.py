@@ -308,6 +308,14 @@ def sf_of(sf_dir: str) -> float:
     return float(m.group(1).rstrip(".")) if m else 0.01
 
 
+def gate_sf_dir() -> str:
+    """Testdata dir the DuckDB oracles read: ``SPARK_GRAFT_TEST_SF_DIR``
+    when the test harness pins one, else the gate's sf0.01.  The
+    one place an oracle learns the gate scale (``sf_of(gate_sf_dir())``
+    for the fixture-backed ones)."""
+    return os.environ.get("SPARK_GRAFT_TEST_SF_DIR") or "/root/testdata/sf0.01"
+
+
 def ensure_transcripts(sf: float, cache_root: str | None = None) -> str:
     """Generate-once cache; returns the parquet path."""
     cache_root = cache_root or os.environ.get(

@@ -146,9 +146,7 @@ def token_to_display(tok) -> str:
     if kind == "start":
         attrs = "".join(f"{a[0]} : {a[1]} " for a in tok[2])
         return f"<{tok[1]} {attrs}{'/>' if tok[3] else '>'}"
-    if kind == "end":
-        if tok[3]:  # self-closing end tag still prints as </name>
-            return f"</{tok[1]}>"
+    if kind == "end":  # a self-closing end tag prints as </name> too
         return f"</{tok[1]}>"
     return ""  # eof
 

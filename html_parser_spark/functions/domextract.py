@@ -20,10 +20,11 @@ operator in the Boilerpipe / jusText family (PAPERS.md):
      (script/style/nav/aside/footer/…)                 (tag/class prior),
    - ``stopword_density`` = stopword tokens / tokens (jusText's context
      signal; multilingual union of the engine's langid lists) — reported
-     per block for downstream policies; the default keep decision stays
-     on the three structural signals so existing goldens are stable.
+     per block by :func:`score_blocks` only; the keep decision stays on
+     the three structural signals so existing goldens are stable.
 3. A block is kept iff it has text, is not boiler, ``link_density <
-   max_link_density`` and ``text_density >= min_text_density``.
+   DEFAULT_MAX_LINK_DENSITY`` and ``text_density >=
+   DEFAULT_MIN_TEXT_DENSITY``.
 4. ``main_text`` = kept block texts joined by newline, document order.
 
 Deterministic, whitespace-normalizing (runs collapse to one space, as
@@ -125,14 +126,14 @@ def _collect_blocks(doc: Element) -> list[_Block]:
     return blocks
 
 
-def score_blocks(doc: Element, with_stopwords: bool = True) -> list[dict]:
-    """Flatten the DOM into scored text blocks (document order).
-
-    ``with_stopwords=False`` skips the stopword_density tokenization —
-    the signal is advisory (the keep decision uses only the three
-    structural scores), and the lower/split/set-membership pass is a
-    measurable slice of the per-doc cost, so the hot extraction path
-    opts out while block-level consumers keep the default."""
+def score_blocks(doc: Element) -> list[dict]:
+    """Flatten the DOM into scored text blocks (document order), every
+    signal of the module docstring per block, ``stopword_density``
+    included.  This is the inspection form the tests pin the block
+    scores through; the extraction path never calls it
+    (:func:`dom_extract_from_tree` reads :func:`_collect_blocks`
+    directly and skips the stopword pass, which the keep decision does
+    not use)."""
     blocks = _collect_blocks(doc)
     out = []
     for b in blocks:
@@ -140,12 +141,9 @@ def score_blocks(doc: Element, with_stopwords: bool = True) -> list[dict]:
         if not text:
             continue
         n = len(text)
-        if with_stopwords:
-            toks = text.lower().split()
-            stop_hits = sum(1 for w in toks if w in _STOPWORDS)
-            stop_density = stop_hits / len(toks) if toks else 0.0
-        else:
-            stop_density = 0.0
+        toks = text.lower().split()
+        stop_hits = sum(1 for w in toks if w in _STOPWORDS)
+        stop_density = stop_hits / len(toks) if toks else 0.0
         out.append(
             {
                 "text": text,
@@ -161,61 +159,34 @@ def score_blocks(doc: Element, with_stopwords: bool = True) -> list[dict]:
     return out
 
 
-def dom_extract(
-    text: str,
-    *,
-    min_text_density: float = DEFAULT_MIN_TEXT_DENSITY,
-    max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
-) -> dict:
+def dom_extract(text: str) -> dict:
     """Parse + tree-build + score.  Returns the same contract keys as
     :func:`extract.extract`: ``spans`` are the source character ranges of
     the tokenizer runs that landed in kept blocks, in document order —
     provenance offsets into the RAW input (the block text itself is
     whitespace-normalized, so spans locate, they don't slice)."""
     doc, status, err = parse_html(text)
-    return dom_extract_from_tree(
-        doc,
-        status,
-        err,
-        min_text_density=min_text_density,
-        max_link_density=max_link_density,
-    )
+    return dom_extract_from_tree(doc, status, err)
 
 
-def dom_extract_from_tokens(
-    tokens,
-    status: str = "ok",
-    err: int = 0,
-    *,
-    min_text_density: float = DEFAULT_MIN_TEXT_DENSITY,
-    max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
-) -> dict:
+def dom_extract_from_tokens(tokens) -> dict:
     """DOM policy over an already-produced token stream — the seam the
     extraction stage (pipeline.extract_stage) uses so the token policy,
     the DOM policy, and the link harvest share one tokenize pass.
-    Identical output to :func:`dom_extract` on the same text's stream."""
+    Identical text, spans and block counts to :func:`dom_extract` on the
+    same text's stream; the stage takes ``parse_status`` and
+    ``err_count`` from the tokenizer, so they keep the tree defaults
+    here."""
     from .treebuilder import build_tree
 
-    return dom_extract_from_tree(
-        build_tree(tokens),
-        status,
-        err,
-        min_text_density=min_text_density,
-        max_link_density=max_link_density,
-    )
+    return dom_extract_from_tree(build_tree(tokens))
 
 
-def dom_extract_from_tree(
-    doc: Element,
-    status: str = "ok",
-    err: int = 0,
-    *,
-    min_text_density: float = DEFAULT_MIN_TEXT_DENSITY,
-    max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
-) -> dict:
+def dom_extract_from_tree(doc: Element, status: str = "ok", err: int = 0) -> dict:
     # consume raw _Block records directly — same decisions as filtering
-    # score_blocks(with_stopwords=False) output, without building a
-    # per-block dict + spans copy the hot extraction path never reads
+    # score_blocks output on the structural signals, without the
+    # stopword pass or the per-block dict + spans copy the hot
+    # extraction path never reads
     blocks = _collect_blocks(doc)
     parts: list[str] = []
     spans: list = []
@@ -229,9 +200,9 @@ def dom_extract_from_tree(
         if b.boiler or b.drop:
             continue
         n = len(text)
-        if min(1.0, b.link_chars / n) >= max_link_density:
+        if min(1.0, b.link_chars / n) >= DEFAULT_MAX_LINK_DENSITY:
             continue
-        if n / (1.0 + b.tags) < min_text_density:
+        if n / (1.0 + b.tags) < DEFAULT_MIN_TEXT_DENSITY:
             continue
         parts.append(text)
         spans.extend(b.spans)

@@ -366,14 +366,21 @@ def _interpret_content(content: bytes) -> list:
     return runs
 
 
-def _layout(runs: list, y_tol: float = 0.5, gap_factor: float = 1.8) -> list:
+# Layout grammar: runs within LINE_Y_TOL points of a line's baseline
+# join that line; a line gap above BLOCK_GAP_FACTOR × the median gap
+# starts a new block.
+LINE_Y_TOL = 0.5
+BLOCK_GAP_FACTOR = 1.8
+
+
+def _layout(runs: list) -> list:
     """runs → blocks: [[line, …], …] top-down, left-right."""
     if not runs:
         return []
     lines: list = []  # (y, [(x, text)])
     for x, y, text in runs:
         for ln in lines:
-            if abs(ln[0] - y) <= y_tol:
+            if abs(ln[0] - y) <= LINE_Y_TOL:
                 ln[1].append((x, text))
                 break
         else:
@@ -390,7 +397,7 @@ def _layout(runs: list, y_tol: float = 0.5, gap_factor: float = 1.8) -> list:
         med = 12.0
     blocks = [[line_items[0][1]]]
     for i in range(1, len(line_items)):
-        if gaps[i - 1] > gap_factor * med:
+        if gaps[i - 1] > BLOCK_GAP_FACTOR * med:
             blocks.append([])
         blocks[-1].append(line_items[i][1])
     return blocks

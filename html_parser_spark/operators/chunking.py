@@ -69,16 +69,14 @@ def chunk_documents(
 
 
 def chunk_documents_sql(
-    table: str = "documents",
-    chunk_tokens: int = DEFAULT_CHUNK,
-    overlap: int = DEFAULT_OVERLAP,
+    chunk_tokens: int = DEFAULT_CHUNK, overlap: int = DEFAULT_OVERLAP
 ) -> str:
     from .dedup import NORM_SQL
 
     stride = chunk_tokens - overlap
     return f"""
     WITH t AS (
-      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM {table}),
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents),
     s AS (
       SELECT doc_id, toks, len(toks) AS n,
              CASE WHEN len(toks) <= {chunk_tokens} THEN 1
@@ -107,6 +105,7 @@ def chunk_documents_sql(
 
 DEFAULT_SEQ_LEN = 2048
 DEFAULT_PACK_GROUPS = 8
+PACK_SEED = "pack-v1"
 
 
 def pack_sequences(
@@ -114,7 +113,6 @@ def pack_sequences(
     sf_dir: str,
     seq_len: int = DEFAULT_SEQ_LEN,
     n_groups: int = DEFAULT_PACK_GROUPS,
-    seed: str = "pack-v1",
 ) -> DataFrame:
     """GPT-style sequence packing: documents are concatenated in a
     deterministic order and the token stream is cut every ``seq_len``
@@ -143,7 +141,7 @@ def pack_sequences(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sized = docs.select(
         "doc_id",
-        _bucket(seed, n_groups).alias("group_id"),
+        _bucket(PACK_SEED, n_groups).alias("group_id"),
         F.size(F.split(_doc_norm(), " ")).cast("long").alias("n_tokens"),
     )
     w = (
@@ -200,20 +198,17 @@ def _doc_norm():
 
 
 def pack_sequences_sql(
-    table: str = "documents",
-    seq_len: int = DEFAULT_SEQ_LEN,
-    n_groups: int = DEFAULT_PACK_GROUPS,
-    seed: str = "pack-v1",
+    seq_len: int = DEFAULT_SEQ_LEN, n_groups: int = DEFAULT_PACK_GROUPS
 ) -> str:
     from .dedup import NORM_SQL
     from .sampling import _bucket_sql
 
-    b = _bucket_sql(seed, n_groups)
+    b = _bucket_sql(PACK_SEED, n_groups)
     return f"""
     WITH t AS (
       SELECT doc_id, {b} AS group_id,
              len(string_split({NORM_SQL}, ' ')) AS n_tokens
-      FROM {table}),
+      FROM documents),
     c AS (
       SELECT *, CAST(COALESCE(SUM(n_tokens) OVER (
                PARTITION BY group_id ORDER BY doc_id

@@ -79,6 +79,15 @@ MAX_ITER = 25
 BATCH_SEED = "incr-v1"
 BATCH_BUCKETS = 10
 
+# Decontamination and substring-level operating point: the held-out
+# evaluation slice (``doc_id % EVAL_MODULUS == 0``), the Bloom
+# prefilter's probe count, and the winnowing window width and md5
+# sample prefix (1/16 of windows).
+EVAL_MODULUS = 25
+BLOOM_SEEDS = 4
+SUBSTRING_WINDOW = 40
+SUBSTRING_SAMPLE_PREFIX = "0"
+
 
 # seeded Carter-Wegman coefficients for the "fast" MinHash family
 # (deterministic across runs/executors; ODD multipliers so a_k·x+b_k
@@ -221,14 +230,12 @@ def minhash_signatures_of(
     return sh1.select("doc_id", *cols)
 
 
-def minhash_signatures_sql(
-    table: str = "documents", n_hashes: int = N_HASHES
-) -> str:
+def minhash_signatures_sql(n_hashes: int = N_HASHES) -> str:
     cols = ",\n           ".join(
         f"list_min(list_transform({SHINGLES_SQL}, x -> md5('{s}|' || x))) AS mh{s}"
         for s in range(n_hashes)
     )
-    return f"SELECT doc_id,\n           {cols}\nFROM {table}"
+    return f"SELECT doc_id,\n           {cols}\nFROM documents"
 
 
 def minhash_band_keys(
@@ -309,25 +316,14 @@ def minhash_candidates_of(
     )
 
 
-def minhash_candidates(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    hash_family: str = "md5",
-) -> DataFrame:
+def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs (doc_a < doc_b) — docs sharing ≥1 band key.
 
     NOTE this is the full-pair REPORTING op: a bucket of k docs yields
     k(k−1)/2 pairs by contract.  Cluster resolution never consumes it —
     :func:`near_dup_edges` collapses exact-text groups first so pair
     count stays linear in docs (BENCH.md round 4, sf10 postmortem)."""
-    return minhash_candidates_of(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        n_hashes,
-        n_bands,
-        hash_family,
-    )
+    return minhash_candidates_of(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _band_structs_sql(n_hashes: int, n_bands: int) -> str:
@@ -347,11 +343,9 @@ def _band_structs_sql(n_hashes: int, n_bands: int) -> str:
 
 
 def minhash_candidates_sql(
-    table: str = "documents",
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
+    n_hashes: int = N_HASHES, n_bands: int = N_BANDS
 ) -> str:
-    sig = minhash_signatures_sql(table, n_hashes)
+    sig = minhash_signatures_sql(n_hashes)
     band_structs = _band_structs_sql(n_hashes, n_bands)
     return f"""
     WITH sig AS ({sig}),
@@ -465,14 +459,10 @@ def ngram_jaccard(
     )
 
 
-def ngram_jaccard_sql(
-    table: str = "documents",
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-) -> str:
+def ngram_jaccard_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> str:
     return f"""
-    WITH cand AS ({minhash_candidates_sql(table, n_hashes, n_bands)}),
-    sh AS (SELECT doc_id, {SHINGLES_SQL} AS s FROM {table})
+    WITH cand AS ({minhash_candidates_sql(n_hashes, n_bands)}),
+    sh AS (SELECT doc_id, {SHINGLES_SQL} AS s FROM documents)
     SELECT c.doc_a, c.doc_b,
            CAST(floor(len(list_intersect(a.s, b.s)) * 1.0 /
                  greatest(len(list_distinct(a.s || b.s)), 1) * 10000) AS BIGINT)
@@ -502,9 +492,9 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_keep_list_sql(table: str = "documents") -> str:
+def dedup_keep_list_sql() -> str:
     return f"""
-    WITH hashed AS (SELECT doc_id, md5({NORM_SQL}) AS text_hash FROM {table})
+    WITH hashed AS (SELECT doc_id, md5({NORM_SQL}) AS text_hash FROM documents)
     SELECT doc_id, text_hash FROM hashed
     WHERE doc_id = (SELECT min(h2.doc_id) FROM hashed h2
                     WHERE h2.text_hash = hashed.text_hash)
@@ -603,7 +593,7 @@ def simhash_sketches_of(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _simhash_udf(F.col("text")).alias("simhash"))
 
 
-def simhash_sketches_sql(table: str = "documents") -> str:
+def simhash_sketches_sql() -> str:
     """DuckDB twin of :func:`simhash_sketches` — md5 bit-twiddling in SQL.
 
     Mirrors simhash64 exactly: per word, the first 8 bytes of md5 (hex
@@ -619,7 +609,7 @@ def simhash_sketches_sql(table: str = "documents") -> str:
       SELECT doc_id,
              unnest(list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'),
                                 w -> w <> '')) AS w
-      FROM {table}
+      FROM documents
     ),
     hashes AS (
       SELECT doc_id, ('0x' || substring(md5(w), 1, 16))::UBIGINT AS h
@@ -637,15 +627,15 @@ def simhash_sketches_sql(table: str = "documents") -> str:
     )
     SELECT d.doc_id,
            lpad(lower(hex(coalesce(s.sh, 0::UBIGINT))), 16, '0') AS simhash
-    FROM {table} d LEFT JOIN sketch s USING (doc_id)
+    FROM documents d LEFT JOIN sketch s USING (doc_id)
     """
 
 
-def simhash_near_dups_sql(table: str = "documents", max_hamming: int = 3) -> str:
+def simhash_near_dups_sql() -> str:
     """DuckDB twin of :func:`simhash_near_dups` — the same pigeonhole
     quarter bucketing and xor+bit_count scoring over the oracled
     sketches."""
-    base = simhash_sketches_sql(table)
+    base = simhash_sketches_sql()
     return f"""
     WITH sk AS ({base}),
     nums AS (
@@ -662,7 +652,7 @@ def simhash_near_dups_sql(table: str = "documents", max_hamming: int = 3) -> str
         ON a.q = b.q AND a.qv = b.qv AND a.doc_id < b.doc_id
     )
     SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS INTEGER) AS hamming
-    FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+    FROM cand WHERE bit_count(xor(sa, sb)) <= {MAX_HAMMING}
     ORDER BY doc_a, doc_b
     """
 
@@ -876,17 +866,15 @@ def connected_components(
 
 
 def dedup_cluster_keep_list_sql(
-    table: str = "documents",
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
+    n_hashes: int = N_HASHES, n_bands: int = N_BANDS
 ) -> str:
     """DuckDB twin: the same verified edge set, transitive closure via a
     recursive CTE, min reachable id per document."""
     jac_bp = int(JACCARD_THRESHOLD * 10000)
     return f"""
     WITH RECURSIVE
-    jac AS ({ngram_jaccard_sql(table, n_hashes, n_bands)}),
-    shp AS ({simhash_near_dups_sql(table, MAX_HAMMING)}),
+    jac AS ({ngram_jaccard_sql(n_hashes, n_bands)}),
+    shp AS ({simhash_near_dups_sql()}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM jac WHERE jaccard_bp >= {jac_bp}
       UNION SELECT doc_b, doc_a FROM jac WHERE jaccard_bp >= {jac_bp}
@@ -894,7 +882,7 @@ def dedup_cluster_keep_list_sql(
       UNION SELECT doc_b, doc_a FROM shp
     ),
     reach(doc_id, r) AS (
-      SELECT doc_id, doc_id FROM {table}
+      SELECT doc_id, doc_id FROM documents
       UNION
       SELECT rc.doc_id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r
     )
@@ -978,9 +966,9 @@ def _sketch_pairs(uniq: DataFrame, max_hamming: int, n_blocks: int) -> DataFrame
 
 
 def simhash_near_dups(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3, n_blocks: int = 4
+    spark: SparkSession, sf_dir: str, n_blocks: int = 4
 ) -> DataFrame:
-    """SimHash near-duplicate DOC pairs within ``max_hamming`` bits.
+    """SimHash near-duplicate DOC pairs within ``MAX_HAMMING`` bits.
 
     Candidates come from the generalized pigeonhole bucketing over
     DISTINCT sketch values (:func:`_pigeonhole_keys` — never a cross
@@ -993,7 +981,7 @@ def simhash_near_dups(
         "doc_id", _sh64().alias("sh64")
     ))
     uniq = sk.select("sh64").distinct()
-    pairs = _sketch_pairs(uniq, max_hamming, n_blocks)
+    pairs = _sketch_pairs(uniq, MAX_HAMMING, n_blocks)
     # cross-sketch doc pairs: expand each surviving sketch pair through
     # the docs carrying those sketches
     cross = (
@@ -1168,7 +1156,7 @@ def _word_ngrams_sql(width: int) -> str:
 def decontaminate(
     spark: SparkSession,
     sf_dir: str,
-    eval_modulus: int = 25,
+    eval_modulus: int = EVAL_MODULUS,
     gram_width: int = 8,
 ) -> DataFrame:
     """Eval-set decontamination: flag training documents that share any
@@ -1200,17 +1188,15 @@ def decontaminate(
     )
 
 
-def decontaminate_sql(
-    table: str = "documents", eval_modulus: int = 25, gram_width: int = 8
-) -> str:
+def decontaminate_sql(gram_width: int = 8) -> str:
     grams = _word_ngrams_sql(gram_width)
     return f"""
     WITH ev AS (
       SELECT DISTINCT unnest({grams}) AS gram
-      FROM {table} WHERE doc_id % {eval_modulus} = 0),
+      FROM documents WHERE doc_id % {EVAL_MODULUS} = 0),
     tr AS (
       SELECT doc_id, unnest({grams}) AS gram
-      FROM {table} WHERE doc_id % {eval_modulus} <> 0)
+      FROM documents WHERE doc_id % {EVAL_MODULUS} <> 0)
     SELECT doc_id, count(*) AS n_shared_grams
     FROM tr JOIN ev USING (gram)
     GROUP BY doc_id ORDER BY doc_id
@@ -1250,13 +1236,11 @@ def incremental_dedup(
 
 
 def incremental_dedup_sql(
-    table: str = "documents",
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
+    n_hashes: int = N_HASHES, n_bands: int = N_BANDS
 ) -> str:
     from .sampling import _bucket_sql
 
-    sig = minhash_signatures_sql(table, n_hashes)
+    sig = minhash_signatures_sql(n_hashes)
     band_structs = _band_structs_sql(n_hashes, n_bands)
     flag = f"{_bucket_sql(BATCH_SEED, BATCH_BUCKETS)} = 0"
     jac = (
@@ -1281,7 +1265,7 @@ def incremental_dedup_sql(
         ON x.is_batch AND y.is_batch AND x.doc_id < y.doc_id
        AND x.band = y.band AND x.band_key = y.band_key
     ),
-    sh AS (SELECT doc_id, {SHINGLES_SQL} AS s FROM {table}),
+    sh AS (SELECT doc_id, {SHINGLES_SQL} AS s FROM documents),
     ver AS (
       SELECT cand.batch_id, cand.match_id, cand.kind
       FROM cand
@@ -1300,7 +1284,7 @@ def incremental_dedup_sql(
                 WHEN batch_min IS NOT NULL THEN 'dup_in_batch'
                 ELSE 'kept' END AS status,
            CAST(COALESCE(corpus_min, batch_min) AS BIGINT) AS dup_of
-    FROM (SELECT doc_id FROM {table} WHERE {flag}) d
+    FROM (SELECT doc_id FROM documents WHERE {flag}) d
     LEFT JOIN agg ON agg.doc_id = d.doc_id
     ORDER BY d.doc_id
     """
@@ -1310,7 +1294,7 @@ def incremental_dedup_against(
     batch_docs: DataFrame,
     corpus_keys: DataFrame,
     corpus_docs: DataFrame,
-    jaccard_threshold: float = 0.5,
+    jaccard_threshold: float = JACCARD_THRESHOLD,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "fast",
@@ -1435,18 +1419,13 @@ def incremental_dedup_against(
 
 
 def decontaminate_bloom(
-    spark: SparkSession,
-    sf_dir: str,
-    eval_modulus: int = 25,
-    gram_width: int = 8,
-    num_bits: int = 1 << 17,
-    n_seeds: int = 4,
+    spark: SparkSession, sf_dir: str, gram_width: int = 8, num_bits: int = 1 << 17
 ) -> DataFrame:
     """Bloom-prefiltered twin of :func:`decontaminate` — IDENTICAL output
     (same oracle), different scale path.  ``decontaminate`` broadcasts
     the distinct eval-gram RELATION; once the eval suite grows past
     broadcast size, that stops working.  Here the eval grams are folded
-    into an explicit Bloom bitmap (``n_seeds`` xxhash64 probes into
+    into an explicit Bloom bitmap (``BLOOM_SEEDS`` xxhash64 probes into
     ``num_bits`` bits — built with one tiny aggregation; Spark 4 does
     not expose ``bloom_filter_agg`` to the public catalog, so the
     sketch is constructed from first principles), carried into the scan
@@ -1467,14 +1446,14 @@ def decontaminate_bloom(
     driver footprint any trained-artifact export has."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     grams = _word_ngrams(gram_width)
-    is_eval = F.col("doc_id") % eval_modulus == 0
+    is_eval = F.col("doc_id") % EVAL_MODULUS == 0
     eval_grams = (
         docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct()
     )
 
     def _positions(frame):
         seeds = F.explode(
-            F.array(*[F.lit(str(i)) for i in range(n_seeds)])
+            F.array(*[F.lit(str(i)) for i in range(BLOOM_SEEDS)])
         ).alias("seed")
         out = frame.select("gram", seeds)
         return out.select(
@@ -1491,7 +1470,7 @@ def decontaminate_bloom(
         "doc_id", F.explode(grams).alias("gram")
     )
     might = None
-    for i in range(n_seeds):
+    for i in range(BLOOM_SEEDS):
         pos = F.pmod(F.xxhash64(F.lit(str(i)), F.col("gram")), F.lit(num_bits))
         nib = F.conv(
             F.substr(F.lit(hexmap), (pos / 4).cast("int") + 1, F.lit(1)),
@@ -1515,8 +1494,8 @@ def decontaminate_bloom(
 def shared_substrings(
     spark: SparkSession,
     sf_dir: str,
-    window: int = 40,
-    sample_prefix: str = "0",
+    window: int = SUBSTRING_WINDOW,
+    sample_prefix: str = SUBSTRING_SAMPLE_PREFIX,
 ) -> DataFrame:
     """Cross-document repeated-substring detection — the substring-level
     dedup family (Lee et al. 2021 "Deduplicating Training Data Makes
@@ -1584,19 +1563,18 @@ def shared_substrings(
     )
 
 
-def shared_substrings_sql(
-    table: str = "documents", window: int = 40, sample_prefix: str = "0"
-) -> str:
+def shared_substrings_sql() -> str:
     """DuckDB twin: the deliberately different formulation (unnest a
     range, substr per position) so the oracle derives the same answer
     independently."""
+    window, prefix = SUBSTRING_WINDOW, SUBSTRING_SAMPLE_PREFIX
     return f"""
-    WITH d AS (SELECT doc_id, {NORM_SQL} AS t FROM {table}),
+    WITH d AS (SELECT doc_id, {NORM_SQL} AS t FROM documents),
     w AS (
       SELECT doc_id, md5(substr(t, CAST(i AS INT), {window})) AS h
       FROM d, unnest(range(1, greatest(length(t) - {window} + 2, 1))) r(i)),
     sel AS (SELECT doc_id, h FROM w
-            WHERE substr(h, 1, {len(sample_prefix)}) = '{sample_prefix}')
+            WHERE substr(h, 1, {len(prefix)}) = '{prefix}')
     SELECT h,
            CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
            CAST(count(*) AS BIGINT) AS n_occ
@@ -1608,8 +1586,8 @@ def shared_substrings_sql(
 def shared_substring_spans(
     spark: SparkSession,
     sf_dir: str,
-    window: int = 40,
-    sample_prefix: str = "0",
+    window: int = SUBSTRING_WINDOW,
+    sample_prefix: str = SUBSTRING_SAMPLE_PREFIX,
 ) -> DataFrame:
     """The cutting-pass companion to :func:`shared_substrings`: per
     document, the merged character ranges covered by cross-document
@@ -1699,20 +1677,19 @@ def shared_substring_spans(
     )
 
 
-def shared_substring_spans_sql(
-    table: str = "documents", window: int = 40, sample_prefix: str = "0"
-) -> str:
+def shared_substring_spans_sql() -> str:
     """DuckDB twin of :func:`shared_substring_spans` (independent
     formulation: unnest-range windows, IN-subquery for the shared set,
     the same gaps-and-islands merge in window-function SQL)."""
+    window, prefix = SUBSTRING_WINDOW, SUBSTRING_SAMPLE_PREFIX
     return f"""
-    WITH d AS (SELECT doc_id, {NORM_SQL} AS t FROM {table}),
+    WITH d AS (SELECT doc_id, {NORM_SQL} AS t FROM documents),
     w AS (
       SELECT doc_id, CAST(i AS INT) AS start,
              md5(substr(t, CAST(i AS INT), {window})) AS h
       FROM d, unnest(range(1, greatest(length(t) - {window} + 2, 1))) r(i)),
     sel AS (SELECT * FROM w
-            WHERE substr(h, 1, {len(sample_prefix)}) = '{sample_prefix}'),
+            WHERE substr(h, 1, {len(prefix)}) = '{prefix}'),
     shared AS (SELECT h FROM sel GROUP BY h
                HAVING count(DISTINCT doc_id) > 1),
     hits AS (SELECT doc_id, start, start + {window} AS "end"

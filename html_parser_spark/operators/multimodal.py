@@ -261,15 +261,10 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def media_metadata_sql(sf_dir: str | None = None) -> str:
-    import os
+def media_metadata_sql() -> str:
+    from ..fixtures import ensure_media_blobs, gate_sf_dir, sf_of
 
-    from ..fixtures import ensure_media_blobs, sf_of
-
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = ensure_media_blobs(sf_of(sf_dir))
+    path = ensure_media_blobs(sf_of(gate_sf_dir()))
     return f"""
     SELECT doc_id,
            CASE

@@ -117,7 +117,7 @@ def pdf_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(parse, schema=PAGES_SCHEMA)
 
 
-def pdf_page_text_sql(table: str = "documents") -> str:
+def pdf_page_text_sql() -> str:
     """Independent recomputation of every page's text from the raw
     ``text`` column under the fixed layout grammar (words → 8-word
     lines → 20-line pages) — value-exact vs the Spark round trip."""
@@ -129,7 +129,7 @@ def pdf_page_text_sql(table: str = "documents") -> str:
       SELECT doc_id,
              list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
                          w -> w <> '') AS words
-      FROM {table}
+      FROM documents
     ),
     dims AS (
       SELECT doc_id, words, len(words) AS nw,

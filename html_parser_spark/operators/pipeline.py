@@ -287,7 +287,12 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
-def assemble_conversations(df: DataFrame, max_turns: int = 4096) -> DataFrame:
+# Turns per assembled conversation; the DuckDB twin in
+# ``__spark_entry__`` caps at the same value.
+MAX_TURNS = 4096
+
+
+def assemble_conversations(df: DataFrame, max_turns: int = MAX_TURNS) -> DataFrame:
     """Conversation-level corpus assembly: one row per conversation with
     its turns joined in (conv_id, turn_idx) order — the unit a
     conversation-tuned training run actually consumes.

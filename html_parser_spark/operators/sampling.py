@@ -33,14 +33,18 @@ def _bucket_sql(seed: str, modulus: int) -> str:
     )
 
 
+# The operating point both engines read: the split boundaries and the
+# seed strings that version each assignment.
+TRAIN_PCT = 90
+VAL_PCT = 5
+SPLIT_SEED = "split-v1"
+SAMPLE_RATE_BP = 1000
+SAMPLE_SEED = "sample-v1"
+MIX_SEED = "mix-v1"
+
+
 def corpus_splits(
-    spark: SparkSession,
-    sf_dir: str,
-    train_pct: int = 90,
-    val_pct: int = 5,
-    seed: str = "split-v1",
-    sample_rate_bp: int = 1000,
-    sample_seed: str = "sample-v1",
+    spark: SparkSession, sf_dir: str, seed: str = SPLIT_SEED
 ) -> DataFrame:
     """Assign every document to train/val/test by hash bucket, plus the
     independent seeded Bernoulli sample flag in the same projection.
@@ -58,11 +62,11 @@ def corpus_splits(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     b = _bucket(seed, 100)
     split = (
-        F.when(b < train_pct, F.lit("train"))
-        .when(b < train_pct + val_pct, F.lit("val"))
+        F.when(b < TRAIN_PCT, F.lit("train"))
+        .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    in_sample = _bucket(sample_seed, 10000) < sample_rate_bp
+    in_sample = _bucket(SAMPLE_SEED, 10000) < SAMPLE_RATE_BP
     return docs.select(
         "doc_id",
         "source",
@@ -72,31 +76,21 @@ def corpus_splits(
     )
 
 
-def corpus_splits_sql(
-    table: str = "documents",
-    train_pct: int = 90,
-    val_pct: int = 5,
-    seed: str = "split-v1",
-    sample_rate_bp: int = 1000,
-    sample_seed: str = "sample-v1",
-) -> str:
-    b = _bucket_sql(seed, 100)
+def corpus_splits_sql() -> str:
+    b = _bucket_sql(SPLIT_SEED, 100)
     return f"""
     SELECT doc_id, source, {b} AS bucket,
-           CASE WHEN {b} < {train_pct} THEN 'train'
-                WHEN {b} < {train_pct + val_pct} THEN 'val'
+           CASE WHEN {b} < {TRAIN_PCT} THEN 'train'
+                WHEN {b} < {TRAIN_PCT + VAL_PCT} THEN 'val'
                 ELSE 'test' END AS split,
-           CAST({_bucket_sql(sample_seed, 10000)} < {sample_rate_bp} AS BIGINT)
+           CAST({_bucket_sql(SAMPLE_SEED, 10000)} < {SAMPLE_RATE_BP} AS BIGINT)
                AS in_sample
-    FROM {table}
+    FROM documents
     """
 
 
 def sample_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    rate_bp: int = 1000,
-    seed: str = "sample-v1",
+    spark: SparkSession, sf_dir: str, rate_bp: int = SAMPLE_RATE_BP
 ) -> DataFrame:
     """Seeded Bernoulli sample at ``rate_bp`` basis points (1000 = 10%).
 
@@ -105,18 +99,16 @@ def sample_documents(
     dev-corpus build actually needs.  Projection stays narrow (ids +
     length) so the 100 TB scan prunes ``text`` entirely."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.where(_bucket(seed, 10000) < rate_bp).select(
+    return docs.where(_bucket(SAMPLE_SEED, 10000) < rate_bp).select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
 
 
-def sample_documents_sql(
-    table: str = "documents", rate_bp: int = 1000, seed: str = "sample-v1"
-) -> str:
+def sample_documents_sql(rate_bp: int = SAMPLE_RATE_BP) -> str:
     return f"""
     SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
-    FROM {table}
-    WHERE {_bucket_sql(seed, 10000)} < {rate_bp}
+    FROM documents
+    WHERE {_bucket_sql(SAMPLE_SEED, 10000)} < {rate_bp}
     """
 
 
@@ -129,7 +121,6 @@ def mix_documents(
     sf_dir: str,
     rates_bp: dict[str, int] | None = None,
     default_bp: int = DEFAULT_MIX_REST,
-    seed: str = "mix-v1",
 ) -> DataFrame:
     """Domain mixing: per-source Bernoulli rates (basis points) in one
     deterministic pass — the pretraining knob that up-weights curated
@@ -145,7 +136,7 @@ def mix_documents(
     rate = F.lit(default_bp)
     for src, bp in sorted(rates.items()):
         rate = F.when(F.col("source") == src, F.lit(bp)).otherwise(rate)
-    return docs.where(_bucket(seed, 10000) < rate).select(
+    return docs.where(_bucket(MIX_SEED, 10000) < rate).select(
         "doc_id",
         "source",
         rate.cast("long").alias("rate_bp"),
@@ -153,10 +144,7 @@ def mix_documents(
 
 
 def mix_documents_sql(
-    table: str = "documents",
-    rates_bp: dict[str, int] | None = None,
-    default_bp: int = DEFAULT_MIX_REST,
-    seed: str = "mix-v1",
+    rates_bp: dict[str, int] | None = None, default_bp: int = DEFAULT_MIX_REST
 ) -> str:
     rates = DEFAULT_MIX if rates_bp is None else rates_bp
     arms = " ".join(
@@ -166,6 +154,6 @@ def mix_documents_sql(
     rate = f"CASE {arms} ELSE {default_bp} END"
     return f"""
     SELECT doc_id, source, CAST({rate} AS BIGINT) AS rate_bp
-    FROM {table}
-    WHERE {_bucket_sql(seed, 10000)} < {rate}
+    FROM documents
+    WHERE {_bucket_sql(MIX_SEED, 10000)} < {rate}
     """

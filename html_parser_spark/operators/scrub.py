@@ -55,7 +55,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pii_scrub_sql(table: str = "documents") -> str:
+def pii_scrub_sql() -> str:
     # counts are against the PROGRESSIVELY scrubbed text, same as Spark
     expr = "text"
     counts = []
@@ -68,7 +68,7 @@ def pii_scrub_sql(table: str = "documents") -> str:
            {cols},
            md5({expr}) AS scrubbed_md5,
            CAST(length(text) - length({expr}) AS BIGINT) AS chars_removed
-    FROM {table}
+    FROM documents
     """
 
 

@@ -23,13 +23,35 @@ Three ANN paths plus the near-dup pair operator:
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.session import swap_persist
 
+# The operating point the operators and their DuckDB twins both read:
+# query count and k of every top-k; the embedding width (testdata
+# schema, TESTDATA.md); the LSH hyperplane count and seed; the IVF
+# cell count, probe count, k-means seed, training sample and rounds;
+# the near-dup band geometry, seed and cosine threshold; and the
+# planted near-dup pairs.
 N_QUERIES = 5
 TOP_K = 10
+EMB_DIM = 64
+LSH_PLANES = 4
+LSH_SEED = 1234
+IVF_CELLS = 16
+IVF_NPROBE = 4
+IVF_SEED = 777
+KMEANS_SAMPLE = 4096
+KMEANS_ITERS = 10
+NEAR_DUP_BANDS = 32
+NEAR_DUP_BAND_BITS = 8
+NEAR_DUP_SEED = 4321
+NEAR_DUP_THRESHOLD = 0.9
+PLANTED_PAIRS = 8
+PLANTED_SEED = 20240821
 
 
 def _dot(a, b):
@@ -50,13 +72,8 @@ def _norm(a):
     )
 
 
-def cosine_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for the first ``n_queries`` vectors.
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-k cosine neighbors for the first ``N_QUERIES`` vectors.
 
     Broadcast the query side; rank with a window over (query_id), ordered
     by the QUANTIZED similarity (basis points) with vec_id tie-break —
@@ -69,7 +86,7 @@ def cosine_topk(
     # expression over the identical floats (bitwise-same sim), but the
     # O(dim) aggregate runs once per vector instead of once per
     # (query × vector) pair
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         _norm(F.col("embedding")).alias("q_nrm"),
@@ -93,7 +110,7 @@ def cosine_topk(
             F.floor(sim * 10000).cast("long").alias("cosine_bp"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -103,9 +120,7 @@ def cosine_topk(
     )
 
 
-def cosine_topk_sql(
-    table: str = "embeddings", n_queries: int = N_QUERIES, k: int = TOP_K
-) -> str:
+def cosine_topk_sql() -> str:
     """DuckDB twin with the same left-to-right double fold (list_sum over
     a double list matches Spark's aggregate fold on doubles)."""
     dot = (
@@ -120,12 +135,12 @@ def cosine_topk_sql(
         )
 
     return f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding FROM {table}
-               WHERE vec_id < {n_queries}),
+    WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings
+               WHERE vec_id < {N_QUERIES}),
     pairs AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
              {dot} / ({norm('q')} * {norm('e')}) AS sim_exact
-      FROM {table} e JOIN q ON e.vec_id <> q.query_id
+      FROM embeddings e JOIN q ON e.vec_id <> q.query_id
     ),
     ranked AS (
       SELECT query_id, neighbor_id,
@@ -137,61 +152,52 @@ def cosine_topk_sql(
       FROM pairs
     )
     SELECT query_id, rank, neighbor_id, cosine_bp
-    FROM ranked WHERE rank <= {k}
+    FROM ranked WHERE rank <= {TOP_K}
     """
 
 
 # ------------------------------------------------- LSH (random hyperplane)
 
 
-def _planes(dim: int, n_planes: int, seed: int = 1234):
+def _planes(n_planes: int, seed: int):
     """Deterministic pseudo-random hyperplanes (numpy PCG64 with fixed
     seed — identical on every executor and in tests)."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
+    return rng.standard_normal((n_planes, EMB_DIM))
 
 
-EMB_DIM = 64  # testdata embeddings schema (TESTDATA.md); callers override
-
-
-def _require_dim(col, dim: int):
+def _require_dim(col):
     """Fail LOUDLY on width mismatch: the fixed-plane/centroid operators
     would otherwise fold null-padded zip_with products into silently
-    wrong buckets for non-``dim`` embeddings (reviewer-found after the
-    round-1 ``.first()`` auto-probe was removed)."""
-    return F.when(col.isNotNull() & (F.size(col) == dim), col).otherwise(
+    wrong buckets for embeddings that are not ``EMB_DIM`` wide."""
+    return F.when(col.isNotNull() & (F.size(col) == EMB_DIM), col).otherwise(
         F.raise_error(
             F.concat(
                 F.lit("embedding dim "),
                 F.coalesce(F.size(col).cast("string"), F.lit("NULL")),
-                F.lit(f" != expected {dim} — pass dim= explicitly"),
+                F.lit(f" != expected {EMB_DIM}"),
             )
         )
     )
 
 
-def lsh_signatures(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = 8,
-    seed: int = 1234,
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id → LSH bucket (sign pattern over the hyperplanes).
 
     Planes are inlined as literal arrays: the sign-dot per plane is a
-    built-in fold, no Python.  Bucket cardinality 2^n_planes; at 100 TB
-    tune n_planes so buckets fit an executor (~log2(n_vectors/10^5)).
+    built-in fold, no Python.  Bucket cardinality 2^LSH_PLANES; at
+    100 TB tune LSH_PLANES so buckets fit an executor
+    (~log2(n_vectors/10^5)).
 
-    ``dim`` is a parameter (callers know their embedding width) so plan
-    construction triggers NO driver-side Spark action — the round-1
-    ``.first()`` here was a hidden job per plan build."""
+    The embedding width is the constant ``EMB_DIM``, so building the
+    plan runs NO Spark job (probing the width with ``.first()`` would
+    be a hidden job per plan build)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", _require_dim(F.col("embedding"), dim)
+        "embedding", _require_dim(F.col("embedding"))
     )
-    planes = _planes(dim, n_planes, seed)
+    planes = _planes(LSH_PLANES, LSH_SEED)
     bucket = F.lit(0)
     for i, p in enumerate(planes):
         plane = F.array(*[F.lit(float(v)) for v in p])
@@ -200,24 +206,17 @@ def lsh_signatures(
     return emb.select("vec_id", "embedding", bucket.alias("bucket"))
 
 
-def lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_planes: int = 4,
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: exact cosine, but only within the query's LSH
     bucket.  Same output schema as :func:`cosine_topk`."""
-    sig = lsh_signatures(spark, sf_dir, n_planes=n_planes, dim=dim)
+    sig = lsh_signatures(spark, sf_dir)
     # per-vector norm precompute before the join (bitwise-same sim,
     # O(dim) aggregate per vector instead of per candidate pair —
     # same rationale as cosine_topk / embedding_near_dups)
     sign = sig.select(
         "vec_id", "embedding", "bucket", _norm(F.col("embedding")).alias("e_nrm")
     )
-    q = sign.filter(F.col("vec_id") < n_queries).select(
+    q = sign.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("bucket").alias("q_bucket"),
@@ -241,7 +240,7 @@ def lsh_topk(
             F.floor(sim * 10000).cast("long").alias("cosine_bp"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -251,7 +250,7 @@ def lsh_topk(
     )
 
 
-def band_signature_udf(n_bands: int, band_bits: int, seed: int, dim: int):
+def band_signature_udf(n_bands: int, band_bits: int, seed: int):
     """Vectorized pandas UDF: embedding → array of ``n_bands`` band values.
 
     One numpy matmul per Arrow batch (batch×dim @ dim×(n_bands·band_bits)
@@ -261,17 +260,14 @@ def band_signature_udf(n_bands: int, band_bits: int, seed: int, dim: int):
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
-    planes = _planes(dim, n_bands * band_bits, seed)
+    planes = _planes(n_bands * band_bits, seed)
     weights = (1 << np.arange(band_bits)).astype(np.int64)
 
     @pandas_udf(ArrayType(IntegerType()))
     def _bands(embs: pd.Series) -> pd.Series:
         mat = np.array(embs.tolist(), dtype=np.float64)
-        if mat.size and mat.shape[1] != dim:
-            raise ValueError(
-                f"embedding dim {mat.shape[1]} != expected {dim} — "
-                "pass dim= explicitly"
-            )
+        if mat.size and mat.shape[1] != EMB_DIM:
+            raise ValueError(f"embedding dim {mat.shape[1]} != expected {EMB_DIM}")
         bits = (mat @ planes.T) > 0
         vals = bits.reshape(len(mat), n_bands, band_bits) @ weights
         return pd.Series(list(vals.astype(np.int32)))
@@ -279,19 +275,12 @@ def band_signature_udf(n_bands: int, band_bits: int, seed: int, dim: int):
     return _bands
 
 
-def lsh_topk_sql(
-    table: str = "embeddings",
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_planes: int = 4,
-    seed: int = 1234,
-    dim: int = EMB_DIM,
-) -> str:
+def lsh_topk_sql() -> str:
     """DuckDB twin of :func:`lsh_topk`: the SAME seeded hyperplanes are
     inlined as DOUBLE[] literals (repr round-trips float64 exactly), so
     both engines compute identical sign buckets, then the exact re-score
     mirrors :func:`cosine_topk_sql` with quantized ranking."""
-    planes = _planes(dim, n_planes, seed)
+    planes = _planes(LSH_PLANES, LSH_SEED)
 
     def plane_lit(p) -> str:
         return "[" + ", ".join(repr(float(v)) for v in p) + "]::DOUBLE[]"
@@ -319,10 +308,10 @@ def lsh_topk_sql(
 
     return f"""
     WITH sig AS (
-      SELECT vec_id, embedding, {bucket} AS bucket FROM {table}
+      SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
     ),
     q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket
-          FROM sig WHERE vec_id < {n_queries}),
+          FROM sig WHERE vec_id < {N_QUERIES}),
     pairs AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
              {dot_qe} / ({norm('q.q_emb')} * {norm('e.embedding')}) AS sim_exact
@@ -337,7 +326,7 @@ def lsh_topk_sql(
                                          neighbor_id ASC) AS rank
       FROM pairs
     )
-    SELECT query_id, rank, neighbor_id, cosine_bp FROM ranked WHERE rank <= {k}
+    SELECT query_id, rank, neighbor_id, cosine_bp FROM ranked WHERE rank <= {TOP_K}
     """
 
 
@@ -355,20 +344,18 @@ def lsh_topk_sql(
 PLANTED_VEC_ID_BASE = 1_000_000_000
 
 
-def planted_near_dup_vectors(
-    n_pairs: int = 8, dim: int = EMB_DIM, seed: int = 20240821
-) -> list[tuple[int, list[float]]]:
-    """2·``n_pairs`` vectors: seeded bases with twins perturbed by ±1/64
+def planted_near_dup_vectors() -> list[tuple[int, list[float]]]:
+    """2·``PLANTED_PAIRS`` vectors: seeded bases with twins perturbed by ±1/64
     on three dims (pair cosine ≥ 0.999; cross-pair cosine concentrates
     near 0 in 64-dim, max ≈ 0.4 — far below any near-dup threshold)."""
     import random as _random
 
-    rng = _random.Random(seed)
+    rng = _random.Random(PLANTED_SEED)
     rows: list[tuple[int, list[float]]] = []
-    for i in range(n_pairs):
-        base = [rng.randint(-32, 32) / 64 for _ in range(dim)]
+    for i in range(PLANTED_PAIRS):
+        base = [rng.randint(-32, 32) / 64 for _ in range(EMB_DIM)]
         twin = list(base)
-        for j in rng.sample(range(dim), 3):
+        for j in rng.sample(range(EMB_DIM), 3):
             twin[j] += rng.choice((-1, 1)) / 64
         rows.append((PLANTED_VEC_ID_BASE + 2 * i, base))
         rows.append((PLANTED_VEC_ID_BASE + 2 * i + 1, twin))
@@ -396,24 +383,21 @@ def planted_values_sql() -> str:
 def embedding_near_dups(
     spark: SparkSession,
     sf_dir: str,
-    threshold: float = 0.9,
-    n_bands: int = 32,
-    band_bits: int = 8,
-    seed: int = 4321,
-    dim: int = EMB_DIM,
+    threshold: float = NEAR_DUP_THRESHOLD,
     include_planted: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above ``threshold``.
 
     Scale path (round-2 rewrite; round 1 shipped the all-pairs theta join
     = BroadcastNestedLoopJoin, quadratic): banded random-hyperplane LSH —
-    candidates are pairs that agree on ≥1 of ``n_bands`` ``band_bits``-bit
-    sign bands (equi self-join on (band_idx, band_val), never all-pairs),
-    then an exact cosine re-score over the candidates.  Miss probability
+    candidates are pairs that agree on ≥1 of ``NEAR_DUP_BANDS`` sign
+    bands of ``NEAR_DUP_BAND_BITS`` bits (equi self-join on (band_idx,
+    band_val), never all-pairs), then an exact cosine re-score over the
+    candidates.  Miss probability
     per true pair at cosine τ with per-plane disagreement q = acos(τ)/π:
     (1 − (1−q)^band_bits)^n_bands — at τ=0.9 (q=0.144) with the 32×8-bit
     default ≈ 1.8e-5, and it vanishes as τ→1 (planted near-dups).  At
-    10^9+ vectors raise ``band_bits`` (16-20) so band buckets stay small;
+    10^9+ vectors raise the band width (16-20) so band buckets stay small;
     recall vs the exact all-pairs form is asserted on planted-duplicate
     data in tests/test_similarity.py.
 
@@ -426,7 +410,7 @@ def embedding_near_dups(
     )
     if include_planted:
         emb = emb.unionByName(_planted_df(spark))
-    bands = band_signature_udf(n_bands, band_bits, seed, dim)
+    bands = band_signature_udf(NEAR_DUP_BANDS, NEAR_DUP_BAND_BITS, NEAR_DUP_SEED)
     # persist the signature frame: without it the physical plan runs
     # the Python band-signature UDF FOUR times — once per self-join
     # side, and ONCE MORE per side under the non-null/size constraint
@@ -490,7 +474,7 @@ def embedding_near_dups(
 
 
 def embedding_near_dups_allpairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.9
+    spark: SparkSession, sf_dir: str, threshold: float = NEAR_DUP_THRESHOLD
 ) -> DataFrame:
     """Exact all-pairs form (theta join → BroadcastNestedLoopJoin).
 
@@ -514,11 +498,7 @@ def embedding_near_dups_allpairs(
     )
 
 
-def embedding_near_dups_sql(
-    table: str = "embeddings",
-    threshold: float = 0.9,
-    include_planted: bool = False,
-) -> str:
+def embedding_near_dups_sql(include_planted: bool = False) -> str:
     dot = (
         "list_sum(list_transform(list_zip(a.embedding, b.embedding), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
@@ -530,12 +510,12 @@ def embedding_near_dups_sql(
             f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
         )
 
-    src = table
+    src = "embeddings"
     planted_cte = ""
     if include_planted:
         planted_cte = (
             "WITH emb_u AS (SELECT vec_id, embedding FROM "
-            f"{table} UNION ALL {planted_values_sql()}) "
+            f"embeddings UNION ALL {planted_values_sql()}) "
         )
         src = "emb_u"
     return f"""
@@ -544,36 +524,27 @@ def embedding_near_dups_sql(
            CAST(floor({dot} / ({norm('a')} * {norm('b')}) * 10000) AS BIGINT)
                AS cosine_bp
     FROM {src} a JOIN {src} b ON a.vec_id < b.vec_id
-    WHERE {dot} / ({norm('a')} * {norm('b')}) >= {threshold}
+    WHERE {dot} / ({norm('a')} * {norm('b')}) >= {NEAR_DUP_THRESHOLD}
     """
 
 
 # ------------------------------------------------------- IVF (coarse cells)
 
 
-_KMEANS_CACHE: dict = {}
-
-
-def trained_centroids(
-    sf_dir: str,
-    dim: int = EMB_DIM,
-    k: int = 16,
-    seed: int = 777,
-    sample: int = 4096,
-    iters: int = 10,
-):
+@functools.lru_cache(maxsize=None)
+def trained_centroids(sf_dir: str):
     """Deterministic k-means coarse quantizer (VERDICT r02 item 6 — the
     round-2 seeded-normal stand-in couldn't adapt cells to the data
     distribution, which is the entire point of IVF).
 
     Lloyd's algorithm on the driver over a fixed SEEDED-HASH sample
-    (the ``sample`` vec_ids whose ``md5("ivf-sample-v1|" + vec_id)``
+    (the ``KMEANS_SAMPLE`` vec_ids whose ``md5("ivf-sample-v1|" + vec_id)``
     digests sort first — deterministic like a prefix but REPRESENTATIVE:
     on real corpora ingested in time order the first-N-ids prefix is a
     biased slice and the quantizer mis-centers; VERDICT r03), seeded
     init drawn from the sample itself, a fixed iteration count,
     empty cells keep their previous centroid.  Centroids are a MODEL
-    artifact (k·dim doubles): training must be engine-independent because
+    artifact (IVF_CELLS·EMB_DIM doubles): training must be engine-independent because
     the same literals are inlined into the Spark plan and the DuckDB
     VALUES twin.  At 10^9+ vectors the sample is still a driver-sized
     read (k-means on ~10^4 rows trains a 16..65536-cell quantizer fine;
@@ -585,9 +556,6 @@ def trained_centroids(
     import numpy as np
     import pyarrow.parquet as pq
 
-    key = (sf_dir, dim, k, seed, sample, iters)
-    if key in _KMEANS_CACHE:
-        return _KMEANS_CACHE[key]
     t = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
     )
@@ -595,20 +563,19 @@ def trained_centroids(
     digests = np.array(
         [hashlib.md5(f"ivf-sample-v1|{v}".encode()).hexdigest() for v in ids]
     )
-    order = np.argsort(digests, kind="stable")[:sample]
+    order = np.argsort(digests, kind="stable")[:KMEANS_SAMPLE]
     x = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)[order]
-    if x.shape[1] != dim:
-        raise ValueError(f"embedding dim {x.shape[1]} != expected {dim}")
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=k, replace=False)].copy()
-    for _ in range(iters):
+    if x.shape[1] != EMB_DIM:
+        raise ValueError(f"embedding dim {x.shape[1]} != expected {EMB_DIM}")
+    rng = np.random.default_rng(IVF_SEED)
+    cents = x[rng.choice(len(x), size=IVF_CELLS, replace=False)].copy()
+    for _ in range(KMEANS_ITERS):
         d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)  # ties → lowest cell, deterministic
-        for c in range(k):
+        for c in range(IVF_CELLS):
             members = x[assign == c]
             if len(members):
                 cents[c] = members.mean(axis=0)
-    _KMEANS_CACHE[key] = cents
     return cents
 
 
@@ -622,37 +589,28 @@ def _sq_dist(a, b):
     )
 
 
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 777,
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate top-k: assign every vector to its nearest
-    coarse cell (argmin L2 over a broadcast 16-row centroid table —
-    n×k_cells work, one pass), probe each query's ``nprobe`` nearest
+    coarse cell (argmin L2 over a broadcast ``IVF_CELLS``-row centroid
+    table — n×cells work, one pass), probe each query's ``IVF_NPROBE`` nearest
     cells, exact-rescore only the probed cells' vectors.
 
     At 10^12 vectors this is the classic two-level ANN layout: the cell
     assignment shuffles once on cell id (bucketing the corpus), queries
-    touch nprobe/n_cells of the data, and raising n_cells trades scan
+    touch IVF_NPROBE/IVF_CELLS of the data, and more cells trade scan
     fraction for assignment cost.  Same output schema as
     :func:`cosine_topk` (quantized ranking)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", _require_dim(F.col("embedding"), dim)
+        "embedding", _require_dim(F.col("embedding"))
     )
-    cents = trained_centroids(sf_dir, dim, n_cells, seed)
+    cents = trained_centroids(sf_dir)
     # cell assignment as ONE inline expression (sorted array of
     # per-centroid (distance, cell) structs — lexicographic struct sort
     # gives the (d, cell) tie-break): zero joins, zero shuffles — a
-    # centroid-table cross join + window would shuffle n_cells×n rows at
+    # centroid-table cross join + window would shuffle IVF_CELLS×n rows at
     # 10^9+ vectors just to pick a minimum.  One struct array serves
-    # both assignment (element 1) and probing (slice nprobe), keeping
-    # the expression tree at n_cells×dim literals, not double.
+    # both assignment (element 1) and probing (slice IVF_NPROBE), keeping
+    # the expression tree at IVF_CELLS×EMB_DIM literals, not double.
     dist_structs = F.array(
         *[
             F.struct(
@@ -673,13 +631,13 @@ def ivf_topk(
         _norm(F.col("embedding")).alias("e_nrm"),
     )
     probes = (
-        emb.filter(F.col("vec_id") < n_queries)
+        emb.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             _norm(F.col("embedding")).alias("q_nrm"),
             F.explode(
-                F.slice(F.array_sort(dist_structs), 1, nprobe)
+                F.slice(F.array_sort(dist_structs), 1, IVF_NPROBE)
             ).alias("p"),
         )
         .select("query_id", "q_emb", "q_nrm", F.col("p.cell").alias("cell"))
@@ -700,7 +658,7 @@ def ivf_topk(
             F.floor(sim * 10000).cast("long").alias("cosine_bp"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -710,28 +668,16 @@ def ivf_topk(
     )
 
 
-def ivf_topk_sql(
-    table: str = "embeddings",
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 777,
-    dim: int = EMB_DIM,
-    sf_dir: str | None = None,
-) -> str:
+def ivf_topk_sql() -> str:
     """DuckDB twin: the same TRAINED centroid table as VALUES rows
     (trained_centroids is deterministic, so both engines inline
-    bit-identical double literals), the same argmin assignment / nprobe
-    probing / quantized rescore.  ``sf_dir`` defaults to the harness's
-    SPARK_GRAFT_TEST_SF_DIR (driver gate: sf0.01) — it must point at the
-    same embeddings the pre-registered ``embeddings`` view reads."""
-    import os
+    bit-identical double literals), the same argmin assignment / probing
+    / quantized rescore.  The centroids are trained on the gate's
+    testdata (``fixtures.gate_sf_dir``), the embeddings the
+    pre-registered ``embeddings`` view reads."""
+    from ..fixtures import gate_sf_dir
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01"
-    )
-    cents = trained_centroids(sf_dir, dim, n_cells, seed)
+    cents = trained_centroids(gate_sf_dir())
     values = ",\n      ".join(
         "(%d, [%s]::DOUBLE[])" % (i, ", ".join(repr(float(v)) for v in c))
         for i, c in enumerate(cents)
@@ -757,7 +703,7 @@ def ivf_topk_sql(
     ),
     dists AS (
       SELECT e.vec_id, e.embedding, c.cell, {sq} AS d
-      FROM {table} e CROSS JOIN cents c
+      FROM embeddings e CROSS JOIN cents c
     ),
     assigned AS (
       SELECT vec_id, embedding, cell FROM (
@@ -771,7 +717,7 @@ def ivf_topk_sql(
         SELECT vec_id, embedding, cell,
                row_number() OVER (PARTITION BY vec_id
                                   ORDER BY d ASC, cell ASC) AS rn
-        FROM dists WHERE vec_id < {n_queries}) WHERE rn <= {nprobe}
+        FROM dists WHERE vec_id < {N_QUERIES}) WHERE rn <= {IVF_NPROBE}
     ),
     pairs AS (
       SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -788,5 +734,5 @@ def ivf_topk_sql(
                                          neighbor_id ASC) AS rank
       FROM pairs
     )
-    SELECT query_id, rank, neighbor_id, cosine_bp FROM ranked WHERE rank <= {k}
+    SELECT query_id, rank, neighbor_id, cosine_bp FROM ranked WHERE rank <= {TOP_K}
     """

@@ -24,6 +24,15 @@ from ..functions.stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR  # noqa: E4
 from ..functions.textnorm import SQL_WS  # DuckDB \\s lacks \\x0b (textnorm.py)
 
 
+# The operating point both engines read.  The sketch settings (HLL++
+# relative error, percentile accuracy) are Spark-only; the DuckDB twins
+# oracle their error contracts as literal TRUE columns.
+HLL_RSD = 0.02
+QUANTILE_ACCURACY = 10000
+NGRAM_TOP = 20
+VOCAB_K = 1000
+
+
 def _sql_list(words) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
@@ -87,7 +96,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def quality_scores_sql(table: str = "documents") -> str:
+def quality_scores_sql() -> str:
     punct = ("(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) "
              "* 1.0 / greatest(length(text), 1)")
     alpha = ("length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 "
@@ -103,7 +112,7 @@ def quality_scores_sql(table: str = "documents") -> str:
            CAST(floor(({stop}) * 10000) AS BIGINT) AS stop_bp,
            CAST(floor((({alpha}) * 0.5 + ({stop}) * 0.4 - ({punct}) * 0.1) * 10000)
                 AS BIGINT) AS quality_bp
-    FROM {table}
+    FROM documents
     """
 
 
@@ -150,7 +159,7 @@ def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def langid_sql(table: str = "documents") -> str:
+def langid_sql() -> str:
     def hits(stops):
         return (
             f"len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \t\n\x0b\f\r]+'), "
@@ -166,13 +175,11 @@ def langid_sql(table: str = "documents") -> str:
                 WHEN {de} >= {es} THEN 'de'
                 ELSE 'es' END AS pred_lang,
            {en} AS en_hits
-    FROM {table}
+    FROM documents
     """
 
 
-def length_quantiles(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10000
-) -> DataFrame:
+def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-length quantiles — corpus profiling (exact
     ``percentile``: single-pass sort-based; for 100 TB swap to
     ``approx_percentile`` with a documented error bound).  Spark's exact
@@ -184,7 +191,7 @@ def length_quantiles(
     each q, the value ``approx_percentile(q)`` returns must occupy a
     rank interval ``[#{x<v}+1, #{x≤v}]`` that intersects
     ``[(q−ε)n, (q+ε)n+1]`` with ε = 0.005 (50× the sketch's guaranteed
-    1/accuracy).  The check is two aggregation passes — sketch first,
+    1/QUANTILE_ACCURACY).  The check is two aggregation passes — sketch first,
     then a broadcast join back for exact conditional rank counts —
     because rank counts of an aggregate can't nest in one pass.
     Deterministic sketch + deterministic data → a stable boolean the
@@ -196,7 +203,8 @@ def length_quantiles(
     qs = (0.25, 0.5, 0.9, 0.99)
     eps = 0.005
     ap = F.expr(
-        f"approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), {accuracy})"
+        "approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), "
+        f"{QUANTILE_ACCURACY})"
     )
     approx = docs.groupBy("source").agg(ap.alias("ap"))
     j = docs.join(F.broadcast(approx), "source")
@@ -226,7 +234,7 @@ def length_quantiles(
     )
 
 
-def length_quantiles_sql(table: str = "documents") -> str:
+def length_quantiles_sql() -> str:
     return f"""
     SELECT source, count(*) AS n_docs,
            quantile_cont(n_chars, 0.25) AS p25,
@@ -234,13 +242,11 @@ def length_quantiles_sql(table: str = "documents") -> str:
            quantile_cont(n_chars, 0.9)  AS p90,
            quantile_cont(n_chars, 0.99) AS p99,
            CAST(1 AS BIGINT) AS approx_rank_ok
-    FROM {table} GROUP BY source ORDER BY source
+    FROM documents GROUP BY source ORDER BY source
     """
 
 
-def distinct_counts(
-    spark: SparkSession, sf_dir: str, rsd: float = 0.02
-) -> DataFrame:
+def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-source distinct-fingerprint cardinality (dedup-rate
     profiling) PLUS the HLL++ sketch's error-band check in the same row.
 
@@ -255,7 +261,7 @@ def distinct_counts(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     exact = F.count_distinct(F.col("fp"))
-    approx = F.approx_count_distinct("fp", rsd)
+    approx = F.approx_count_distinct("fp", HLL_RSD)
     within = F.abs(approx - exact) <= F.greatest(
         F.ceil(exact * F.lit(0.05)), F.lit(2)
     )
@@ -271,26 +277,25 @@ def distinct_counts(
     )
 
 
-def distinct_counts_sql(table: str = "documents") -> str:
+def distinct_counts_sql() -> str:
     return f"""
     SELECT source, count(*) AS n_docs,
            count(DISTINCT md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))))
                AS n_distinct,
            CAST(1 AS BIGINT) AS approx_within_5pct
-    FROM {table} GROUP BY source ORDER BY source
+    FROM documents GROUP BY source ORDER BY source
     """
 
 
-def length_quantiles_approx(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10000
-) -> DataFrame:
+def length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate quantiles — the 100 TB path (Greenwald-Khanna style
     mergeable summaries, bounded memory per group, vs the exact
     percentile's full sort).  Approximate by construction → rows-only
     driver check; pytest bounds the error vs the exact quantiles."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     q = F.expr(
-        f"approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), {accuracy})"
+        "approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), "
+        f"{QUANTILE_ACCURACY})"
     )
     return (
         docs.groupBy("source")
@@ -305,9 +310,7 @@ def length_quantiles_approx(
     )
 
 
-def distinct_counts_approx(
-    spark: SparkSession, sf_dir: str, rsd: float = 0.02
-) -> DataFrame:
+def distinct_counts_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ cardinality sketch — the scale path: fixed-size
     sketch per group, map-side mergeable, no distinct-key shuffle.
     Approximate by construction (driver check is rows-only; pytest
@@ -319,7 +322,7 @@ def distinct_counts_approx(
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.approx_count_distinct("fp", rsd).alias("n_distinct_approx"),
+            F.approx_count_distinct("fp", HLL_RSD).alias("n_distinct_approx"),
         )
         .orderBy("source")
     )
@@ -337,7 +340,7 @@ def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ngram_topk(spark: SparkSession, sf_dir: str, n_top: int = 20) -> DataFrame:
+def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide most-frequent word 3-grams (all occurrences — unlike
     the dedup shingles, NOT per-doc-distinct), the staple corpus-statistics
     pass of a pretraining pipeline (boilerplate discovery, contamination
@@ -368,7 +371,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str, n_top: int = 20) -> DataFrame:
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("gram"))
-        .limit(n_top)
+        .limit(NGRAM_TOP)
     )
 
 
@@ -583,7 +586,7 @@ def _tokens_norm():
     return _norm()
 
 
-def repetition_filters_sql(table: str = "documents") -> str:
+def repetition_filters_sql() -> str:
     """DuckDB twin via the relational formulation (unnest → GROUP BY →
     window) — an independent derivation of the same integers."""
     from .dedup import NORM_SQL
@@ -591,7 +594,7 @@ def repetition_filters_sql(table: str = "documents") -> str:
     split = f"string_split({NORM_SQL}, ' ')"
     return f"""
     WITH l AS (
-      SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM {table}),
+      SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM documents),
     lc AS (
       SELECT doc_id, line, count(*) AS cnt,
              count(*) * length(line) AS chars
@@ -609,7 +612,7 @@ def repetition_filters_sql(table: str = "documents") -> str:
              ELSE list_transform(range(0, len({split}) - 1),
                                  i -> {split}[i + 1] || ' ' || {split}[i + 2])
         END) AS gram
-      FROM {table}),
+      FROM documents),
     bc AS (SELECT doc_id, gram, count(*) AS cnt FROM b GROUP BY doc_id, gram),
     bt AS (SELECT doc_id, gram, cnt,
                   row_number() OVER (PARTITION BY doc_id
@@ -626,7 +629,7 @@ def repetition_filters_sql(table: str = "documents") -> str:
              len(list_filter(string_split(text, chr(10)),
                  x -> ends_with(rtrim(x), '...'))) AS ellipsis_cnt,
              greatest(length({NORM_SQL}), 1) AS norm_len
-      FROM {table}),
+      FROM documents),
     f AS (
       SELECT d.doc_id, la.n_lines,
              CAST(floor(la.n_dup * 10000.0 / greatest(la.n_lines, 1)) AS BIGINT)
@@ -640,7 +643,7 @@ def repetition_filters_sql(table: str = "documents") -> str:
                  AS bullet_line_bp,
              CAST(floor(misc.ellipsis_cnt * 10000.0 / greatest(la.n_lines, 1)) AS BIGINT)
                  AS ellipsis_line_bp
-      FROM {table} d
+      FROM documents d
       JOIN la USING (doc_id)
       LEFT JOIN top USING (doc_id)
       JOIN misc ON misc.doc_id = d.doc_id)
@@ -653,7 +656,7 @@ def repetition_filters_sql(table: str = "documents") -> str:
     """
 
 
-def ngram_topk_sql(table: str = "documents", n_top: int = 20) -> str:
+def ngram_topk_sql(n_top: int = NGRAM_TOP) -> str:
     from .dedup import NORM_SQL
 
     return f"""
@@ -667,7 +670,7 @@ def ngram_topk_sql(table: str = "documents", n_top: int = 20) -> str:
                          string_split({NORM_SQL}, ' ')[i + 2] || ' ' ||
                          string_split({NORM_SQL}, ' ')[i + 3])
         END) AS gram
-      FROM {table})
+      FROM documents)
     SELECT gram, count(*) AS n_occurrences
     FROM g GROUP BY gram
     ORDER BY n_occurrences DESC, gram LIMIT {n_top}
@@ -675,7 +678,7 @@ def ngram_topk_sql(table: str = "documents", n_top: int = 20) -> str:
 
 
 def vocab_coverage(
-    spark: SparkSession, sf_dir: str, vocab_k: int = 1000
+    spark: SparkSession, sf_dir: str, vocab_k: int = VOCAB_K
 ) -> DataFrame:
     """CCNet/C4-family vocabulary-coverage quality signal: build the
     top-``vocab_k`` corpus vocabulary (by total occurrence count, ties
@@ -741,17 +744,17 @@ def vocab_coverage(
     )
 
 
-def vocab_coverage_sql(table: str = "documents", vocab_k: int = 1000) -> str:
+def vocab_coverage_sql() -> str:
     from .dedup import NORM_SQL
 
     return f"""
     WITH w AS (
       SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS w
-      FROM {table}),
+      FROM documents),
     ww AS (SELECT doc_id, w FROM w WHERE w <> ''),
     v AS (
       SELECT w, count(*) AS cnt FROM ww GROUP BY w
-      ORDER BY cnt DESC, w ASC LIMIT {vocab_k})
+      ORDER BY cnt DESC, w ASC LIMIT {VOCAB_K})
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_words,
            CAST(sum(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END)

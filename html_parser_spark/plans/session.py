@@ -32,13 +32,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
 )
+# Arrow rows per pandas-UDF batch (module docstring); ``extra_conf`` can
+# still override it per session.
+MAX_RECORDS_PER_BATCH = 4096
 
 
 def get_spark(
     app_name: str = "html-parser-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    max_records_per_batch: int = 4096,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # an explicit master (tests, scaling harness) is honored verbatim;
@@ -52,7 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(max_records_per_batch),
+            str(MAX_RECORDS_PER_BATCH),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -91,18 +91,23 @@ def _sessionize_group(
         )
 
 
-def sessionize_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+# Event-time lateness the stream tolerates before the engine drops an
+# event (bounds the state store).
+WATERMARK = "10 minutes"
+
+
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """events stream (user_id, ts, …) → closed-session rows.
 
     ``events`` must be a streaming DataFrame with an event-time ``ts``
-    column; late data beyond ``watermark`` is dropped by the engine (the
+    column; late data beyond ``WATERMARK`` is dropped by the engine (the
     documented trade of bounded state)."""
     from pyspark.sql import functions as F
 
     # watermarks require TIMESTAMP (testdata parquet carries TIMESTAMP_NTZ)
     prepared = (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .select(
             "user_id",
             "ts",
