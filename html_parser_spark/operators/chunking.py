@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .dedup import NORM_SQL, _norm
+
 DEFAULT_CHUNK = 128
 DEFAULT_OVERLAP = 32
 
@@ -36,8 +38,6 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    from .dedup import _norm
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.split(_norm(), " ")
     n = F.size(toks)
@@ -71,8 +71,6 @@ def chunk_documents(
 def chunk_documents_sql(
     chunk_tokens: int = DEFAULT_CHUNK, overlap: int = DEFAULT_OVERLAP
 ) -> str:
-    from .dedup import NORM_SQL
-
     stride = chunk_tokens - overlap
     return f"""
     WITH t AS (
@@ -142,7 +140,7 @@ def pack_sequences(
     sized = docs.select(
         "doc_id",
         _bucket(PACK_SEED, n_groups).alias("group_id"),
-        F.size(F.split(_doc_norm(), " ")).cast("long").alias("n_tokens"),
+        F.size(F.split(_norm(), " ")).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("group_id")
@@ -191,16 +189,9 @@ def pack_sequences(
     )
 
 
-def _doc_norm():
-    from .dedup import _norm
-
-    return _norm()
-
-
 def pack_sequences_sql(
     seq_len: int = DEFAULT_SEQ_LEN, n_groups: int = DEFAULT_PACK_GROUPS
 ) -> str:
-    from .dedup import NORM_SQL
     from .sampling import _bucket_sql
 
     b = _bucket_sql(PACK_SEED, n_groups)

@@ -24,6 +24,14 @@ sketch graph inside :func:`simhash_component_edges`.  Incremental
 ingest has one body, :func:`incremental_dedup_against`;
 :func:`incremental_dedup` is its single-table front.
 
+The corpus-text primitives live here, once each, and every corpus
+operator (dedup, :mod:`.textstats`, :mod:`.chunking`) calls them: the
+normalizer :func:`_norm`, the word n-gram builder :func:`word_ngrams`,
+the banded LSH self-join :func:`_banded_pairs`, the exact-Jaccard
+verify :func:`_verify_candidates` and the sampled window fingerprints
+:func:`_sampled_windows`.  The DuckDB ``*_sql`` twins spell their own
+formulations and stay independent of them.
+
 Parity rule for SQL-oracled ops: hashing is md5 hex (identical in Spark
 and DuckDB), min over hex strings is lexicographic in both, shingling is
 identical split/transform arithmetic.
@@ -38,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ..functions.textnorm import ascii_words
+from ..functions.textnorm import SQL_WS, ascii_words
 from ..plans.session import free_local_checkpoint, swap_persist as _swap_persist
 
 # Default MinHash geometry: 128 hashes / 16 bands
@@ -60,10 +68,11 @@ GATE_N_BANDS = 4
 # Upper bound on the rows of an id table broadcast as a join build
 # side: candidate members in the verify semi-join (_verify_candidates),
 # (sh64, comp) labels in the sketch label propagation
-# (_sketch_components).  50M int64 ids ≈ 400 MB pre-serialization (the
-# labels twice that) — under the 8 GB broadcast hard cap with headroom
-# for the hashed-relation overhead; past it both degrade to a shuffled
-# form rather than failing.
+# (_sketch_components), shared fingerprints in the substring-span
+# semi-join (shared_substring_spans).  50M int64 ids ≈ 400 MB
+# pre-serialization (the labels twice that) — under the 8 GB broadcast
+# hard cap with headroom for the hashed-relation overhead; past it each
+# degrades to a shuffled form rather than failing.
 BROADCAST_MEMBER_LIMIT = 50_000_000
 
 # Cluster-resolution and incremental-ingest operating point: the exact
@@ -102,32 +111,42 @@ del _cw_rng
 
 
 def _norm():
+    """The whitespace/case normalizer every corpus-text operator reads:
+    lowercase, collapse runs of the Java ``\\s`` class to one space, trim.
+    Dedup keys, shingles, n-grams, text statistics and chunk tokens all
+    split this text on ``" "``, so they agree on token identity."""
     return F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
 
 
-NORM_SQL = "trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))"
+NORM_SQL = f"trim(regexp_replace(lower(text), '{SQL_WS}+', ' ', 'g'))"
 
 
-def _shingles():
-    """Word 3-shingles of the normalized text; docs with <3 words use the
-    whole normalized text as their single shingle.
+def word_ngrams(ws, width: int):
+    """Word ``width``-grams of the words-array column ``ws``, in order and
+    with repeats; empty below ``width`` words.
 
     Built with slice+zip_with rather than transform(sequence, i ->
     element_at(ws, i)) — in a lambda body the outer ``ws`` expression is
-    re-evaluated per *element*, turning shingling O(words × text_len);
+    re-evaluated per *element*, turning n-gramming O(words × text_len);
     the zip_with form evaluates each split once per row."""
-    ws = F.split(_norm(), " ")
-    n = F.size(ws) - 2
-    sh = F.zip_with(
-        F.zip_with(
-            F.slice(ws, 1, n),
-            F.slice(ws, 2, n),
-            lambda x, y: F.concat_ws(" ", x, y),
-        ),
-        F.slice(ws, 3, n),
-        lambda x, y: F.concat_ws(" ", x, y),
+    n = F.greatest(F.size(ws) - (width - 1), F.lit(0))
+    grams = F.slice(ws, 1, n)
+    for off in range(1, width):
+        grams = F.zip_with(
+            grams, F.slice(ws, off + 1, n), lambda x, y: F.concat_ws(" ", x, y)
+        )
+    return F.when(F.size(ws) < width, F.array().cast("array<string>")).otherwise(
+        grams
     )
-    return F.when(F.size(ws) < 3, F.array(_norm())).otherwise(F.array_distinct(sh))
+
+
+def _shingles():
+    """Distinct word 3-shingles of the normalized text; docs with <3
+    words use the whole normalized text as their single shingle."""
+    ws = F.split(_norm(), " ")
+    return F.when(F.size(ws) < 3, F.array(_norm())).otherwise(
+        F.array_distinct(word_ngrams(ws, 3))
+    )
 
 
 SHINGLES_SQL = f"""
@@ -382,9 +401,11 @@ def ngram_jaccard_of(
 def _verify_candidates(
     docs: DataFrame, cand: DataFrame, threshold: float
 ) -> DataFrame:
-    """Score the persisted candidate pairs ``cand`` (doc_a, doc_b) with
-    exact shingle-set Jaccard over ``docs`` (doc_id, text); keep pairs
-    at/above ``threshold`` as (doc_a, doc_b, jaccard_bp).
+    """Score the persisted candidate pairs ``cand`` (doc_a, doc_b, plus
+    any extra columns, carried through) with exact shingle-set Jaccard
+    over ``docs`` (doc_id, text); keep pairs whose ratio
+    ``|A∩B| / |A∪B|`` is at/above ``threshold`` as (doc_a, doc_b,
+    jaccard_bp, *extra), ``jaccard_bp`` being the floored basis points.
 
     Only docs that appear in some candidate pair are shingled: the
     shingle frame is built over a semi-join of ``docs`` against the
@@ -397,6 +418,7 @@ def _verify_candidates(
     broadcast while that bound is within ``BROADCAST_MEMBER_LIMIT`` and
     a shuffled hash join on doc_id past it, instead of blowing the
     driver broadcast cap."""
+    extra = [c for c in cand.columns if c not in ("doc_a", "doc_b")]
     members = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
@@ -407,30 +429,23 @@ def _verify_candidates(
     sh = docs.join(members, "doc_id", "left_semi").select(
         "doc_id", _shingles().alias("sh")
     )
-    j = (
+    # shingle arrays are distinct (_shingles ends in array_distinct), so
+    # |A∪B| = |A|+|B|−|A∩B| exactly, without materializing the union
+    # array per pair
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    ratio = inter.cast("double") / F.greatest(
+        F.size("sh_a") + F.size("sh_b") - inter, F.lit(1)
+    )
+    return (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
         .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
+        .filter(ratio >= threshold)
         .select(
             "doc_a",
             "doc_b",
-            # shingle arrays are distinct (_shingles ends in
-            # array_distinct), so |A∪B| = |A|+|B|−|A∩B| exactly — the
-            # same integers as array_union, without materializing the
-            # union array per pair
-            F.floor(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.greatest(
-                    F.size("sh_a")
-                    + F.size("sh_b")
-                    - F.size(F.array_intersect("sh_a", "sh_b")),
-                    F.lit(1),
-                )
-                * 10000
-            ).cast("long").alias("jaccard_bp"),
+            F.floor(ratio * 10000).cast("long").alias("jaccard_bp"),
+            *extra,
         )
-    )
-    return j.filter(F.col("jaccard_bp") >= threshold * 10000).select(
-        "doc_a", "doc_b", "jaccard_bp"
     )
 
 
@@ -1123,20 +1138,20 @@ def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
     return stars.unionByName(rep_stars)
 
 
-def _word_ngrams(width: int):
-    """Per-doc-DISTINCT word ``width``-grams of the normalized text as a
-    Spark column (zip_with chain — same O(words) evaluation argument as
-    _shingles); docs with fewer than ``width`` words contribute nothing."""
-    ws = F.split(_norm(), " ")
-    n = F.greatest(F.size(ws) - (width - 1), F.lit(0))
-    grams = F.slice(ws, 1, n)
-    for off in range(1, width):
-        grams = F.zip_with(
-            grams, F.slice(ws, off + 1, n), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    return F.when(F.size(ws) < width, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(grams)
+def _eval_train_grams(
+    docs: DataFrame, gram_width: int, eval_modulus: int
+) -> tuple[DataFrame, DataFrame]:
+    """The decontamination split of ``docs``: the distinct word
+    ``gram_width``-grams of the evaluation slice (``doc_id %
+    eval_modulus == 0``) as ``(gram)``, and the training docs' grams as
+    ``(doc_id, gram)``, distinct per doc."""
+    grams = F.array_distinct(word_ngrams(F.split(_norm(), " "), gram_width))
+    is_eval = F.col("doc_id") % eval_modulus == 0
+    eval_grams = (
+        docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct()
     )
+    train = docs.filter(~is_eval).select("doc_id", F.explode(grams).alias("gram"))
+    return eval_grams, train
 
 
 def _word_ngrams_sql(width: int) -> str:
@@ -1173,13 +1188,9 @@ def decontaminate(
     partial+final count per doc_id (the only exchange).  Grams are
     per-doc-distinct, so the count is the number of distinct shared
     grams."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = _word_ngrams(gram_width)
-    is_eval = F.col("doc_id") % eval_modulus == 0
-    eval_grams = (
-        docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct()
+    eval_grams, train = _eval_train_grams(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), gram_width, eval_modulus
     )
-    train = docs.filter(~is_eval).select("doc_id", F.explode(grams).alias("gram"))
     return (
         train.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")
@@ -1320,9 +1331,12 @@ def incremental_dedup_against(
     - batch band keys are ingest-sized → BROADCAST against one scan of
       the stored key table; the 10^12-row key table never shuffles and
       the corpus documents are not even touched for candidates,
-    - corpus TEXT is read only for verify, semi-joined down to the
-      candidate match ids (broadcast again) before shingling — the
-      verify stage shingles O(candidates) corpus docs, not the corpus.
+    - batch-internal candidates are the banded self-join
+      (:func:`_banded_pairs`) over the batch keys,
+    - every candidate is scored by :func:`_verify_candidates`, which
+      reads corpus TEXT only for the candidate members (a semi-join,
+      broadcast while within ``BROADCAST_MEMBER_LIMIT``), so the verify
+      stage shingles O(candidates) corpus docs, not the corpus.
     """
     batch_keys = minhash_band_keys(
         minhash_signatures_of(batch_docs, n_hashes, hash_family),
@@ -1339,67 +1353,29 @@ def incremental_dedup_against(
             & (F.col("b.band_key") == F.col("c.band_key")),
         )
         .select(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("match_id"),
+            F.col("b.doc_id").alias("doc_a"),
+            F.col("c.doc_id").alias("doc_b"),
             F.lit("corpus").alias("kind"),
         )
     )
-    vs_batch = (
-        batch_keys.alias("x")
-        .join(
-            batch_keys.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("y.doc_id").alias("batch_id"),
-            F.col("x.doc_id").alias("match_id"),
-            F.lit("batch").alias("kind"),
-        )
+    # the larger batch id is the one that drops
+    vs_batch = _banded_pairs(batch_keys).select(
+        F.col("doc_b").alias("doc_a"),
+        F.col("doc_a").alias("doc_b"),
+        F.lit("batch").alias("kind"),
     )
     cand = _swap_persist(
         "incremental_cand", vs_corpus.unionByName(vs_batch).distinct()
     )
-
-    sh_b = batch_docs.select("doc_id", _shingles().alias("sh"))
-    matched_corpus = corpus_docs.join(
-        F.broadcast(
-            cand.filter(F.col("kind") == "corpus").select(
-                F.col("match_id").alias("doc_id")
-            ).distinct()
-        ),
-        "doc_id",
-        "left_semi",
+    docs = batch_docs.select("doc_id", "text").unionByName(
+        corpus_docs.select("doc_id", "text")
     )
-    sh_m = matched_corpus.select("doc_id", _shingles().alias("sh")).unionByName(
-        sh_b  # batch-internal matches verify against batch shingles
-    )
-    verified = (
-        cand.join(
-            sh_b.withColumnRenamed("doc_id", "batch_id").withColumnRenamed(
-                "sh", "sh_b"
-            ),
-            "batch_id",
-        )
-        .join(
-            sh_m.withColumnRenamed("doc_id", "match_id").withColumnRenamed(
-                "sh", "sh_m"
-            ),
-            "match_id",
-        )
-        .filter(
-            F.size(F.array_intersect("sh_b", "sh_m")).cast("double")
-            / F.greatest(F.size(F.array_union("sh_b", "sh_m")), F.lit(1))
-            >= jaccard_threshold
-        )
-        .select("batch_id", "match_id", "kind")
-    )
-    agg = verified.groupBy(F.col("batch_id").alias("doc_id")).agg(
-        F.min(F.when(F.col("kind") == "corpus", F.col("match_id"))).alias(
+    verified = _verify_candidates(docs, cand, jaccard_threshold)
+    agg = verified.groupBy(F.col("doc_a").alias("doc_id")).agg(
+        F.min(F.when(F.col("kind") == "corpus", F.col("doc_b"))).alias(
             "corpus_min"
         ),
-        F.min(F.when(F.col("kind") == "batch", F.col("match_id"))).alias(
+        F.min(F.when(F.col("kind") == "batch", F.col("doc_b"))).alias(
             "batch_min"
         ),
     )
@@ -1444,11 +1420,8 @@ def decontaminate_bloom(
     shape (local prefilter → exact verify) is unchanged.  The one
     driver-side action materializes only bit positions — the same
     driver footprint any trained-artifact export has."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = _word_ngrams(gram_width)
-    is_eval = F.col("doc_id") % EVAL_MODULUS == 0
-    eval_grams = (
-        docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct()
+    eval_grams, train = _eval_train_grams(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), gram_width, EVAL_MODULUS
     )
 
     def _positions(frame):
@@ -1466,9 +1439,6 @@ def decontaminate_bloom(
         nibbles[p // 4] |= 1 << (p % 4)
     hexmap = "".join("%x" % v for v in nibbles)
 
-    train = docs.filter(~is_eval).select(
-        "doc_id", F.explode(grams).alias("gram")
-    )
     might = None
     for i in range(BLOOM_SEEDS):
         pos = F.pmod(F.xxhash64(F.lit(str(i)), F.col("gram")), F.lit(num_bits))
@@ -1489,6 +1459,44 @@ def decontaminate_bloom(
 
 
 # ------------------------------------------- substring-level (winnowing)
+
+
+def _sampled_windows(
+    docs: DataFrame, window: int, sample_prefix: str
+) -> DataFrame:
+    """Sampled window fingerprints of ``docs`` (doc_id, text) as
+    ``(doc_id, start, h)`` rows: ``h`` is the md5 of the ``window``-char
+    window starting at 1-based ``start`` in the normalized text, kept
+    when it begins with ``sample_prefix``.  Texts shorter than
+    ``window`` yield no rows.
+
+    Generate barrier (same CollapseProject lesson as the repetition
+    filters, textstats.py): the normalized text is materialized ONCE per
+    row — referenced inline, the regexp_replace would re-run inside the
+    transform lambda for every window position (measured: 20.5 s → 2.5 s
+    at sf0.1 for the identical result)."""
+    normed = docs.select(
+        "doc_id",
+        F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
+    ).select("doc_id", F.col("b.t").alias("t"))
+    t = F.col("t")
+    n_win = F.length(t) - window + 1
+    wins = F.when(
+        n_win < 1,
+        F.array().cast("array<struct<i:int,h:string>>"),
+    ).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), n_win),
+            lambda i: F.struct(
+                i.cast("int").alias("i"),
+                F.md5(t.substr(i, F.lit(window))).alias("h"),
+            ),
+        )
+    )
+    sel = F.filter(wins, lambda w: w["h"].startswith(sample_prefix))
+    return normed.select("doc_id", F.explode(sel).alias("w")).select(
+        "doc_id", F.col("w.i").alias("start"), F.col("w.h").alias("h")
+    )
 
 
 def shared_substrings(
@@ -1525,29 +1533,11 @@ def shared_substrings(
     the one hash both engines compute identically (CLAUDE.md
     cross-engine contract).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # Generate barrier (same CollapseProject lesson as the repetition
-    # filters, textstats.py): materialize the normalized text ONCE per
-    # row — referenced inline, the regexp_replace would re-run inside
-    # the transform lambda for every window position (measured: 20.5 s
-    # → 2.5 s at sf0.1 for the identical result)
-    normed = docs.select(
-        "doc_id",
-        F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
-    ).select("doc_id", F.col("b.t").alias("t"))
-    t = F.col("t")
-    n_win = F.length(t) - window + 1
-    wins = F.when(
-        n_win < 1, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: F.md5(t.substr(i, F.lit(window))),
-        )
+    hits = _sampled_windows(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), window, sample_prefix
     )
-    sel = F.filter(wins, lambda h: h.startswith(sample_prefix))
     per_doc = (
-        normed.select("doc_id", F.explode(sel).alias("h"))
+        hits.select("doc_id", "h")
         .repartition(F.col("h"))
         .groupBy("h", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -1601,47 +1591,18 @@ def shared_substring_spans(
     document; a hit starting past it opens a new island; islands
     aggregate to spans.  Plan: the same one-exchange fingerprint
     aggregation as discovery, a semi-join of positioned hits against
-    the shared set (fingerprint-keyed — broadcastable while the shared
-    table is boilerplate-sized; falls back to a shuffled semi-join past
-    that), one doc_id window + final aggregation.  Sampling means spans
+    the shared set (fingerprint-keyed — broadcast while its row count
+    is within ``BROADCAST_MEMBER_LIMIT``, a shuffled semi-join past it),
+    one doc_id window + final aggregation.  Sampling means spans
     are anchored at SAMPLED windows — a conservative under-cover, the
     standard winnowing guarantee (any shared run ≥ window + gap length
     contains a sampled anchor).
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    normed = docs.select(
-        "doc_id",
-        F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
-    ).select("doc_id", F.col("b.t").alias("t"))
-    t = F.col("t")
-    n_win = F.length(t) - window + 1
-    wins = F.when(
-        n_win < 1,
-        F.array().cast("array<struct<i:int,h:string>>"),
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: F.struct(
-                i.cast("int").alias("i"),
-                F.md5(t.substr(i, F.lit(window))).alias("h"),
-            ),
-        )
+    hits = _sampled_windows(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), window, sample_prefix
     )
-    sel = F.filter(wins, lambda w: w["h"].startswith(sample_prefix))
-    # the hits subtree (normalize + per-window md5 transform) feeds BOTH
-    # the shared-set aggregation and the semi-join probe, so the plan
-    # evaluates it twice.  That is the MEASURED right call: persisting
-    # hits instead was 1.5× slower at sf0.01 and 4.5× slower at sf0.1
-    # (same-session ABAB, BENCH.md) — the pass is whole-stage-codegen
-    # cheap while the cache materializes corpus-scale hash strings; and
-    # exchange reuse can't merge the two legs because column pruning
-    # keeps only (doc_id, h) under the aggregation, making the exchange
-    # subtrees structurally different (plan-checked).
-    hits = normed.select(
-        "doc_id", F.explode(sel).alias("w")
-    ).select("doc_id", F.col("w.i").alias("start"), F.col("w.h").alias("h"))
     shared = (
         hits.repartition(F.col("h"))
         .groupBy("h", "doc_id")
@@ -1651,7 +1612,21 @@ def shared_substring_spans(
         .filter(F.col("n_docs") > 1)
         .select("h")
     )
-    marked = hits.join(F.broadcast(shared), "h", "left_semi").select(
+    # the hits subtree (normalize + per-window md5 transform) feeds BOTH
+    # the shared-set aggregation and the semi-join probe, so the plan
+    # evaluates it twice.  That is the MEASURED right call: persisting
+    # hits instead was 1.5× slower at sf0.01 and 4.5× slower at sf0.1
+    # (same-session ABAB, BENCH.md) — the pass is whole-stage-codegen
+    # cheap while the cache materializes corpus-scale hash strings; and
+    # exchange reuse can't merge the two legs because column pruning
+    # keeps only (doc_id, h) under the aggregation, making the exchange
+    # subtrees structurally different (plan-checked).  The shared set is
+    # persisted and counted for the broadcast decision; the count fills
+    # the cache the semi-join then reads, so it adds no third pass.
+    shared = _swap_persist("substring_spans_shared", shared)
+    if shared.count() <= BROADCAST_MEMBER_LIMIT:
+        shared = F.broadcast(shared)
+    marked = hits.join(shared, "h", "left_semi").select(
         "doc_id",
         F.col("start"),
         (F.col("start") + window).alias("end"),

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # canonical tuples live Spark-free in functions/stopwords.py so the DOM
 # scorer can import them without dragging Spark in
 from ..functions.stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR  # noqa: E402,F401
-from ..functions.textnorm import SQL_WS  # DuckDB \\s lacks \\x0b (textnorm.py)
+from .dedup import NORM_SQL, _norm, word_ngrams
 
 
 # The operating point both engines read.  The sketch settings (HLL++
@@ -39,10 +39,9 @@ def _sql_list(words) -> str:
 
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting + length features per document, plus
-    the document fingerprint (round 4: :func:`fingerprints`' md5-over-
-    normalized-text columns folded in so both primitives share one gate
-    row — the 50-row snapshot cap, CLAUDE.md; both are single-projection
-    expressions over the same scan, so the fold costs nothing)."""
+    the document fingerprint: md5 over the normalized text (the
+    exact-dedup key) and its length.  Both are single-projection
+    expressions over the same scan, so they share one gate row."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.when(F.trim("text") == "", F.array()).otherwise(
         F.split(F.trim("text"), r"\s+")
@@ -56,7 +55,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / F.size(toks),
     ).otherwise(F.lit(0.0))
-    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
+    norm = _norm()
     return docs.select(
         "doc_id",
         F.length("text").cast("long").alias("char_count"),
@@ -259,14 +258,13 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r03 item 3: this retires the ``no_oracle`` row for the
     approx sketch by value-checking its error contract at the gate)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     exact = F.count_distinct(F.col("fp"))
     approx = F.approx_count_distinct("fp", HLL_RSD)
     within = F.abs(approx - exact) <= F.greatest(
         F.ceil(exact * F.lit(0.05)), F.lit(2)
     )
     return (
-        docs.select("source", F.md5(norm).alias("fp"))
+        docs.select("source", F.md5(_norm()).alias("fp"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -280,7 +278,7 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_counts_sql() -> str:
     return f"""
     SELECT source, count(*) AS n_docs,
-           count(DISTINCT md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))))
+           count(DISTINCT md5({NORM_SQL}))
                AS n_distinct,
            CAST(1 AS BIGINT) AS approx_within_5pct
     FROM documents GROUP BY source ORDER BY source
@@ -316,27 +314,14 @@ def distinct_counts_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate by construction (driver check is rows-only; pytest
     asserts ≤5% error vs the exact count)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     return (
-        docs.select("source", F.md5(norm).alias("fp"))
+        docs.select("source", F.md5(_norm()).alias("fp"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.approx_count_distinct("fp", HLL_RSD).alias("n_distinct_approx"),
         )
         .orderBy("source")
-    )
-
-
-def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 over the whitespace-normalized lowercase
-    text — the exact-dedup key, exposed as its own operator."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
-    return docs.select(
-        "doc_id",
-        F.md5(norm).alias("fingerprint"),
-        F.length(norm).cast("long").alias("norm_len"),
     )
 
 
@@ -350,22 +335,8 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine (one shuffle keyed on the gram) → TakeOrderedAndProject for
     the top slice.  Ties are broken by the gram itself so the result is
     deterministic across engines and partitionings."""
-    from .dedup import _norm
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ws = F.split(_norm(), " ")
-    n = F.greatest(F.size(ws) - 2, F.lit(0))
-    tri = F.when(F.size(ws) < 3, F.array().cast("array<string>")).otherwise(
-        F.zip_with(
-            F.zip_with(
-                F.slice(ws, 1, n),
-                F.slice(ws, 2, n),
-                lambda x, y: F.concat_ws(" ", x, y),
-            ),
-            F.slice(ws, 3, n),
-            lambda x, y: F.concat_ws(" ", x, y),
-        )
-    )
+    tri = word_ngrams(F.split(_norm(), " "), 3)
     return (
         docs.select(F.explode(tri).alias("gram"))
         .groupBy("gram")
@@ -453,22 +424,13 @@ def repetition_signals(
     s1 = _barrier(
         docs,
         lines=F.split("text", "\n"),
-        ws=F.split(_tokens_norm(), " "),
-        norm_len=F.length(_tokens_norm()),
+        ws=F.split(_norm(), " "),
+        norm_len=F.length(_norm()),
     )
 
     lines = F.col("lines")
     n_lines = F.size(lines)
-    bi_n = F.greatest(F.size("ws") - 1, F.lit(0))
-    bigrams = F.when(
-        F.size("ws") < 2, F.array().cast("array<string>")
-    ).otherwise(
-        F.zip_with(
-            F.slice("ws", 1, bi_n),
-            F.slice("ws", 2, bi_n),
-            lambda x, y: F.concat_ws(" ", x, y),
-        )
-    )
+    bigrams = word_ngrams(F.col("ws"), 2)
     lsum = lambda arr: F.aggregate(  # noqa: E731
         arr, F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long")
     )
@@ -578,19 +540,9 @@ def repetition_signals(
     )
 
 
-def _tokens_norm():
-    """Whitespace/case-normalized text (the dedup normalizer — one
-    definition shared so bigram tokens line up with the shingle ops)."""
-    from .dedup import _norm
-
-    return _norm()
-
-
 def repetition_filters_sql() -> str:
     """DuckDB twin via the relational formulation (unnest → GROUP BY →
     window) — an independent derivation of the same integers."""
-    from .dedup import NORM_SQL
-
     split = f"string_split({NORM_SQL}, ' ')"
     return f"""
     WITH l AS (
@@ -657,8 +609,6 @@ def repetition_filters_sql() -> str:
 
 
 def ngram_topk_sql(n_top: int = NGRAM_TOP) -> str:
-    from .dedup import NORM_SQL
-
     return f"""
     WITH g AS (
       SELECT unnest(
@@ -707,8 +657,6 @@ def vocab_coverage(
     → BROADCAST to the scoring join, so the corpus-side explode never
     shuffles for membership; scoring is one partial+final agg keyed on
     doc_id."""
-    from .dedup import _norm
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = (
         docs.select("doc_id", F.explode(F.split(_norm(), " ")).alias("w"))
@@ -745,8 +693,6 @@ def vocab_coverage(
 
 
 def vocab_coverage_sql() -> str:
-    from .dedup import NORM_SQL
-
     return f"""
     WITH w AS (
       SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS w

@@ -217,20 +217,36 @@ def test_incremental_against_empty_batch(spark):
     )
 
 
-def test_ngram_jaccard_member_limit_fallback(spark, monkeypatch):
-    """Past ``BROADCAST_MEMBER_LIMIT`` candidate members the verify
-    semi-join is a shuffled join instead of a broadcast; the scored
-    pairs are identical."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    # only the operator's own hint may broadcast
+@pytest.mark.parametrize(
+    "op", ["ngram_jaccard", "incremental_against", "substring_spans"]
+)
+def test_member_limit_fallback(spark, monkeypatch, op):
+    """Past ``BROADCAST_MEMBER_LIMIT`` rows each guarded semi-join (the
+    Jaccard verify's candidate members, the substring spans' shared
+    fingerprints) is a shuffled join instead of a broadcast; the output
+    is identical.  The incremental op's batch-key broadcast against the
+    stored key table is not guarded and stays."""
+    if op == "ngram_jaccard":
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        run = lambda: dedup.ngram_jaccard_of(docs, n_hashes=8, n_bands=4)  # noqa: E731
+    elif op == "incremental_against":
+        batch, keys, corpus = _against_fixture(spark)
+        run = lambda: dedup.incremental_dedup_against(  # noqa: E731
+            batch, keys, corpus, n_hashes=8, n_bands=4
+        )
+    else:
+        run = lambda: dedup.shared_substring_spans(spark, SF_DIR)  # noqa: E731
+    # only the operators' own hints may broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         got = []
         for limit in (dedup.BROADCAST_MEMBER_LIMIT, 0):
             monkeypatch.setattr(dedup, "BROADCAST_MEMBER_LIMIT", limit)
-            out = dedup.ngram_jaccard_of(docs, n_hashes=8, n_bands=4)
+            out = run()
             plan = out._jdf.queryExecution().executedPlan().toString()
-            assert ("BroadcastHashJoin" in plan) == bool(limit), limit
+            bhj = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+            assert any("LeftSemi" in ln for ln in bhj) == bool(limit), limit
+            assert bool(bhj) == (bool(limit) or op == "incremental_against")
             got.append(sorted(tuple(r) for r in out.collect()))
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

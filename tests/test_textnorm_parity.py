@@ -1,13 +1,26 @@
 """Cross-engine whitespace contract: the shared class (textnorm.py) must
 tokenize identically in Python, DuckDB SQL twins, and (by construction)
 Java \\s — including \\x0b and NBSP, where the three engines' defaults
-all disagree (reviewer-found)."""
+all disagree (reviewer-found).  The one Spark normalizer and word n-gram
+builder that every dedup, text-statistics and chunking operator calls
+are pinned against their DuckDB spellings on the same kind of input."""
 
 import duckdb
+import pytest
+from pyspark.sql import functions as F
 
 from html_parser_spark.functions.pdftext import extract_pdf_text
 from html_parser_spark.functions.textnorm import ascii_words
-from html_parser_spark.operators.dedup import simhash64, simhash_sketches_sql
+from html_parser_spark.operators.dedup import (
+    NORM_SQL,
+    SHINGLES_SQL,
+    _norm,
+    _shingles,
+    _word_ngrams_sql,
+    simhash64,
+    simhash_sketches_sql,
+    word_ngrams,
+)
 from html_parser_spark.operators.pdfops import doc_to_pdf, pdf_page_text_sql
 
 NASTY = [
@@ -17,10 +30,25 @@ NASTY = [
 ]
 
 
-def _con():
+# 0-3 words and 8+, repeated grams, every whitespace character of the
+# class, CRLF, and leading/trailing runs
+NGRAM_TEXTS = NASTY + [
+    "   ",
+    "one",
+    " Two\twords ",
+    "\x0bthree\fwords\r\nhere\t",
+    "a b a b a b a b a b",
+    "The quick brown fox\r\njumps over the lazy dog\tthe QUICK brown fox",
+    "\t\x0b lead \f" + " ".join(f"w{i % 3}" for i in range(12)) + " \r\n",
+    "x\u00a0y z w v u t s r q",
+]
+WIDTHS = (2, 3, 4, 8)
+
+
+def _con(texts=NASTY):
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
-    for i, t in enumerate(NASTY):
+    for i, t in enumerate(texts):
         con.execute("INSERT INTO documents VALUES (?, ?)", [i, t])
     return con
 
@@ -52,3 +80,52 @@ def test_pdf_oracle_parity_on_nasty_whitespace():
                      len(pg["blocks"]), r["status"])
                 )
     assert got == sorted(exp)
+
+
+@pytest.fixture(scope="module")
+def ngram_rows(spark):
+    """doc_id → (Spark row, DuckDB row) of the normalizer, the n-grams
+    at every width in ``WIDTHS`` and the shingles of ``NGRAM_TEXTS``."""
+    docs = spark.createDataFrame(
+        list(enumerate(NGRAM_TEXTS)), "doc_id long, text string"
+    )
+    ws = F.split(_norm(), " ")
+    got = docs.select(
+        "doc_id",
+        _norm().alias("norm"),
+        *[word_ngrams(ws, w).alias(f"g{w}") for w in WIDTHS],
+        _shingles().alias("sh"),
+    ).collect()
+    cols = ", ".join(f"{_word_ngrams_sql(w)} AS g{w}" for w in WIDTHS)
+    want = _con(NGRAM_TEXTS).execute(
+        f"SELECT doc_id, {NORM_SQL} AS norm, {cols}, {SHINGLES_SQL} AS sh "
+        "FROM documents"
+    ).fetchall()
+    duck = {r[0]: r for r in want}
+    return {r.doc_id: (r, duck[r.doc_id]) for r in got}
+
+
+def test_normalizer_parity(ngram_rows):
+    for i, (sp, dk) in ngram_rows.items():
+        assert sp.norm == dk[1], (i, repr(NGRAM_TEXTS[i]))
+
+
+def test_word_ngrams_parity(ngram_rows):
+    """``word_ngrams`` keeps order and repeats: it equals the plain
+    n-grams of the DuckDB-normalized text, and its distinct set is
+    ``_word_ngrams_sql``'s."""
+    for i, (sp, dk) in ngram_rows.items():
+        toks = dk[1].split(" ")
+        for k, w in enumerate(WIDTHS):
+            grams = [" ".join(toks[j:j + w]) for j in range(len(toks) - w + 1)]
+            assert list(sp[f"g{w}"]) == grams, (i, w, repr(NGRAM_TEXTS[i]))
+            assert sorted(set(sp[f"g{w}"])) == sorted(dk[2 + k]), (i, w)
+    assert any(
+        len(set(sp.g2)) < len(sp.g2) for sp, _ in ngram_rows.values()
+    ), "no input repeats a gram"
+
+
+def test_shingles_parity(ngram_rows):
+    for i, (sp, dk) in ngram_rows.items():
+        assert sorted(sp.sh) == sorted(dk[-1]), (i, repr(NGRAM_TEXTS[i]))
+        assert len(sp.sh) == len(set(sp.sh)), i
