@@ -37,6 +37,7 @@ from html_parser_spark.operators import (
     udx,
 )
 from html_parser_spark.functions.display import display_expr, tokenize_udf
+from html_parser_spark.functions.textnorm import SQL_WS
 from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
     MAX_TURNS,
@@ -331,18 +332,18 @@ def _token_stats(spark, sf_dir):
     return textstats.token_stats(spark, sf_dir)
 
 
-TOKEN_STATS_SQL = """
+TOKEN_STATS_SQL = f"""
     SELECT doc_id,
            length(text) AS char_count,
            CASE WHEN trim(text) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) END AS token_count,
+                ELSE len(regexp_split_to_array(trim(text), '{SQL_WS}+')) END AS token_count,
            CAST(floor((CASE WHEN trim(text) = '' THEN 0.0
-                ELSE list_sum(list_transform(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+'),
+                ELSE list_sum(list_transform(regexp_split_to_array(trim(text), '{SQL_WS}+'),
                                              w -> CAST(length(w) AS DOUBLE)))
-                     / len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) END) * 10000)
+                     / len(regexp_split_to_array(trim(text), '{SQL_WS}+')) END) * 10000)
                 AS BIGINT) AS avg_token_len_bp,
-           md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fingerprint,
-           length(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS norm_len
+           md5({dedup.NORM_SQL}) AS fingerprint,
+           length({dedup.NORM_SQL}) AS norm_len
     FROM documents
 """
 
@@ -443,9 +444,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     - SimHash sketches and pairs: sketch values DuckDB-parity-pinned
       (tests/test_textnorm_parity.py); pairing semantics inside
       ``dedup_cluster_keep_list``'s recursive-CTE component twin.
-    - ``decontaminate_bloom``: provably output-identical to
-      ``dedup_decontaminate`` (no false negatives + exact verify join);
-      equivalence pytest-pinned (tests/test_corpus_ops.py).
     - approximate distinct/quantiles: error contracts value-oracled
       inside the exact twins (``approx_within_5pct`` /
       ``approx_rank_ok`` columns).

@@ -323,8 +323,7 @@ def encode_jpeg_fixture(width: int, height: int, entropy: bytes) -> bytes:
     """A syntactically valid JFIF byte stream (SOI, APP0, COM, DQT,
     SOF0, SOS + FF-stuffed entropy data, EOI) for header-parse tests.
     The entropy payload is arbitrary deterministic bytes — this encoder
-    does NOT produce decodable pixels (that needs a DCT entropy coder;
-    the pixel path is the honest stub, see decode_image)."""
+    does NOT produce decodable pixels; :func:`encode_jpeg` does."""
     def seg(marker: int, body: bytes) -> bytes:
         return bytes((0xFF, marker)) + struct.pack(">H", len(body) + 2) + body
 

@@ -69,10 +69,12 @@ GATE_N_BANDS = 4
 # side: candidate members in the verify semi-join (_verify_candidates),
 # (sh64, comp) labels in the sketch label propagation
 # (_sketch_components), shared fingerprints in the substring-span
-# semi-join (shared_substring_spans).  50M int64 ids ≈ 400 MB
-# pre-serialization (the labels twice that) — under the 8 GB broadcast
-# hard cap with headroom for the hashed-relation overhead; past it each
-# degrades to a shuffled form rather than failing.
+# semi-join (shared_substring_spans), distinct eval grams in the
+# decontamination semi-join (decontaminate).  50M int64 ids ≈ 400 MB
+# pre-serialization (the labels twice that; an 8-gram row is ~50 bytes,
+# so ~2.5 GB) — under the 8 GB broadcast hard cap with headroom for the
+# hashed-relation overhead; past it each degrades to a shuffled form
+# rather than failing.
 BROADCAST_MEMBER_LIMIT = 50_000_000
 
 # Cluster-resolution and incremental-ingest operating point: the exact
@@ -89,11 +91,10 @@ BATCH_SEED = "incr-v1"
 BATCH_BUCKETS = 10
 
 # Decontamination and substring-level operating point: the held-out
-# evaluation slice (``doc_id % EVAL_MODULUS == 0``), the Bloom
-# prefilter's probe count, and the winnowing window width and md5
-# sample prefix (1/16 of windows).
+# evaluation slice (``doc_id % EVAL_MODULUS == 0``, which the corpus
+# job also routes to its heldout output), and the winnowing window
+# width and md5 sample prefix (1/16 of windows).
 EVAL_MODULUS = 25
-BLOOM_SEEDS = 4
 SUBSTRING_WINDOW = 40
 SUBSTRING_SAMPLE_PREFIX = "0"
 
@@ -119,6 +120,16 @@ def _norm():
 
 
 NORM_SQL = f"trim(regexp_replace(lower(text), '{SQL_WS}+', ' ', 'g'))"
+
+
+def _ws_tokens(text):
+    """Whitespace tokens of the string expression ``text``: trimmed of
+    spaces, then split on runs of the Java ``\\s`` class; a text that is
+    empty after the trim has no tokens.  Unlike :func:`_norm` it keeps
+    case and empty edge tokens (a leading tab yields ``""`` first); the
+    DuckDB twins spell the same split with ``SQL_WS``."""
+    t = F.trim(text)
+    return F.when(t == "", F.array()).otherwise(F.split(t, r"\s+"))
 
 
 def word_ngrams(ws, width: int):
@@ -622,7 +633,7 @@ def simhash_sketches_sql() -> str:
       -- diverges on '\\n'-led text (reviewer-found, latent on the
       -- single-space fixture corpus)
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'),
+             unnest(list_filter(regexp_split_to_array(lower(text), '{SQL_WS}+'),
                                 w -> w <> '')) AS w
       FROM documents
     ),
@@ -760,7 +771,6 @@ def near_dup_edges(
 def dedup_cluster_keep_list(
     spark: SparkSession,
     sf_dir: str,
-    max_iter: int = MAX_ITER,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
@@ -786,7 +796,7 @@ def dedup_cluster_keep_list(
         spark, sf_dir, n_hashes=n_hashes, n_bands=n_bands,
         hash_family=hash_family,
     )
-    return connected_components(docs, edges, max_iter)
+    return connected_components(docs, edges)
 
 
 def _propagate_min_labels(
@@ -1138,22 +1148,6 @@ def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
     return stars.unionByName(rep_stars)
 
 
-def _eval_train_grams(
-    docs: DataFrame, gram_width: int, eval_modulus: int
-) -> tuple[DataFrame, DataFrame]:
-    """The decontamination split of ``docs``: the distinct word
-    ``gram_width``-grams of the evaluation slice (``doc_id %
-    eval_modulus == 0``) as ``(gram)``, and the training docs' grams as
-    ``(doc_id, gram)``, distinct per doc."""
-    grams = F.array_distinct(word_ngrams(F.split(_norm(), " "), gram_width))
-    is_eval = F.col("doc_id") % eval_modulus == 0
-    eval_grams = (
-        docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct()
-    )
-    train = docs.filter(~is_eval).select("doc_id", F.explode(grams).alias("gram"))
-    return eval_grams, train
-
-
 def _word_ngrams_sql(width: int) -> str:
     parts = " || ' ' || ".join(
         f"string_split({NORM_SQL}, ' ')[i + {off + 1}]" for off in range(width)
@@ -1169,30 +1163,36 @@ def _word_ngrams_sql(width: int) -> str:
 
 
 def decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    eval_modulus: int = EVAL_MODULUS,
-    gram_width: int = 8,
+    spark: SparkSession, sf_dir: str, gram_width: int = 8
 ) -> DataFrame:
     """Eval-set decontamination: flag training documents that share any
     word ``gram_width``-gram with a held-out evaluation slice (``doc_id %
-    eval_modulus == 0`` stands in for a benchmark suite — deterministic,
+    EVAL_MODULUS == 0`` stands in for a benchmark suite — deterministic,
     no external data).  Returns (doc_id, n_shared_grams) for contaminated
     training docs; a real pipeline anti-joins this against the corpus.
     The 8-gram default is the published decontamination operating point
     (8-13 words); 3-grams collide on ordinary prose.
 
     Plan at 100 TB: eval suites are benchmark-sized (10^3-10^6 docs), so
-    the distinct eval-gram set is BROADCAST and the training side never
-    shuffles for the join — scan → explode → broadcast hash join →
-    partial+final count per doc_id (the only exchange).  Grams are
-    per-doc-distinct, so the count is the number of distinct shared
-    grams."""
-    eval_grams, train = _eval_train_grams(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), gram_width, eval_modulus
+    the distinct eval-gram set is persisted, counted and BROADCAST while
+    the count is within ``BROADCAST_MEMBER_LIMIT``, and the training
+    side never shuffles for the join — scan → explode → broadcast
+    semi-join → partial+final count per doc_id (the only exchange).
+    Past the limit the semi-join is a shuffled join instead of blowing
+    the driver broadcast cap.  Grams are per-doc-distinct, so the count
+    is the number of distinct shared grams."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    grams = F.array_distinct(word_ngrams(F.split(_norm(), " "), gram_width))
+    is_eval = F.col("doc_id") % EVAL_MODULUS == 0
+    eval_grams = _swap_persist(
+        "decontaminate_eval_grams",
+        docs.filter(is_eval).select(F.explode(grams).alias("gram")).distinct(),
     )
+    if eval_grams.count() <= BROADCAST_MEMBER_LIMIT:
+        eval_grams = F.broadcast(eval_grams)
+    train = docs.filter(~is_eval).select("doc_id", F.explode(grams).alias("gram"))
     return (
-        train.join(F.broadcast(eval_grams), "gram")
+        train.join(eval_grams, "gram", "left_semi")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
         .orderBy("doc_id")
@@ -1241,8 +1241,8 @@ def incremental_dedup(
         minhash_signatures_of(corpus, n_hashes), n_hashes, n_bands
     )
     return incremental_dedup_against(
-        docs.filter(is_batch), corpus_keys, corpus, JACCARD_THRESHOLD,
-        n_hashes, n_bands, hash_family="md5",
+        docs.filter(is_batch), corpus_keys, corpus, n_hashes, n_bands,
+        hash_family="md5",
     )
 
 
@@ -1305,7 +1305,6 @@ def incremental_dedup_against(
     batch_docs: DataFrame,
     corpus_keys: DataFrame,
     corpus_docs: DataFrame,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "fast",
@@ -1318,7 +1317,8 @@ def incremental_dedup_against(
     Batch and corpus doc_id spaces must be disjoint (salt ingest ids).
 
     One row per batch document: ``(doc_id, status, dup_of)`` with status
-    ``dup_of_corpus`` (verified near-dup of an existing doc),
+    ``dup_of_corpus`` (verified near-dup of an existing doc: exact
+    shingle Jaccard at/above ``JACCARD_THRESHOLD``),
     ``dup_in_batch`` (verified near-dup of a smaller-id batch doc), or
     ``kept``.  ``dup_of`` is the minimum verified match id (corpus
     matches take precedence).  Batch-internal resolution is greedy by
@@ -1370,7 +1370,7 @@ def incremental_dedup_against(
     docs = batch_docs.select("doc_id", "text").unionByName(
         corpus_docs.select("doc_id", "text")
     )
-    verified = _verify_candidates(docs, cand, jaccard_threshold)
+    verified = _verify_candidates(docs, cand, JACCARD_THRESHOLD)
     agg = verified.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.min(F.when(F.col("kind") == "corpus", F.col("doc_b"))).alias(
             "corpus_min"
@@ -1390,70 +1390,6 @@ def incremental_dedup_against(
             .alias("status"),
             F.coalesce("corpus_min", "batch_min").cast("long").alias("dup_of"),
         )
-        .orderBy("doc_id")
-    )
-
-
-def decontaminate_bloom(
-    spark: SparkSession, sf_dir: str, gram_width: int = 8, num_bits: int = 1 << 17
-) -> DataFrame:
-    """Bloom-prefiltered twin of :func:`decontaminate` — IDENTICAL output
-    (same oracle), different scale path.  ``decontaminate`` broadcasts
-    the distinct eval-gram RELATION; once the eval suite grows past
-    broadcast size, that stops working.  Here the eval grams are folded
-    into an explicit Bloom bitmap (``BLOOM_SEEDS`` xxhash64 probes into
-    ``num_bits`` bits — built with one tiny aggregation; Spark 4 does
-    not expose ``bloom_filter_agg`` to the public catalog, so the
-    sketch is constructed from first principles), carried into the scan
-    as a hex-string literal and tested with ``conv``+``getbit`` inside
-    WholeStageCodegen — the training corpus prefilters ITSELF locally
-    and only true hits plus the fpp tail ever shuffle.  Blooms have no
-    false negatives, so the exact join over the surviving sliver
-    reproduces the exact answer; that verify join is a plain shuffle
-    join by design — forcing broadcast there would defeat the premise
-    that the eval side outgrew broadcast.
-
-    Sizing: fpp ≈ (1 - e^(-kn/m))^k; the 2^17-bit default is ~zero fpp
-    for benchmark-suite gram counts and costs a 32 KB plan literal.  At
-    10^9-gram suites use 10 bits/gram and ship the bitmap as a
-    broadcast variable + pandas UDF instead of a literal; the plan
-    shape (local prefilter → exact verify) is unchanged.  The one
-    driver-side action materializes only bit positions — the same
-    driver footprint any trained-artifact export has."""
-    eval_grams, train = _eval_train_grams(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), gram_width, EVAL_MODULUS
-    )
-
-    def _positions(frame):
-        seeds = F.explode(
-            F.array(*[F.lit(str(i)) for i in range(BLOOM_SEEDS)])
-        ).alias("seed")
-        out = frame.select("gram", seeds)
-        return out.select(
-            F.pmod(F.xxhash64("seed", "gram"), F.lit(num_bits)).alias("pos")
-        )
-
-    # one tiny aggregation: the distinct bit positions of the eval grams
-    nibbles = [0] * (num_bits // 4)
-    for (p,) in _positions(eval_grams).distinct().collect():
-        nibbles[p // 4] |= 1 << (p % 4)
-    hexmap = "".join("%x" % v for v in nibbles)
-
-    might = None
-    for i in range(BLOOM_SEEDS):
-        pos = F.pmod(F.xxhash64(F.lit(str(i)), F.col("gram")), F.lit(num_bits))
-        nib = F.conv(
-            F.substr(F.lit(hexmap), (pos / 4).cast("int") + 1, F.lit(1)),
-            16,
-            10,
-        ).cast("long")
-        hit = F.call_function("getbit", nib, pos % 4) == 1
-        might = hit if might is None else (might & hit)
-    candidates = train.filter(might)
-    return (
-        candidates.join(eval_grams, "gram")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_grams"))
         .orderBy("doc_id")
     )
 

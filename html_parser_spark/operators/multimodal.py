@@ -125,30 +125,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     return width, height, channels, bytes(out)
 
 
-
-
-def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Unified still-image decode: PNG via :func:`decode_png`, baseline
-    JPEG via the round-5 pure-stdlib T.81 coder
-    (mediacodecs.decode_jpeg), BMP via decode_bmp.  WebP remains the
-    honest stub (VP8 entropy decode is out of scope for a codec-less
-    sandbox)."""
-    from ..functions.mediacodecs import decode_bmp, decode_jpeg, sniff_format
-
-    fmt = sniff_format(payload)
-    if fmt == "png":
-        return decode_png(payload)
-    if fmt == "jpeg":
-        return decode_jpeg(payload)
-    if fmt == "bmp":
-        return decode_bmp(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        raise NotImplementedError(
-            "WebP decode needs libwebp; wire into decode_image when available"
-        )
-    raise ValueError(f"not a decodable still image (sniffed {fmt!r})")
-
-
 # ----------------------------------------------------- mixed-format media
 
 MEDIA_SCHEMA = (

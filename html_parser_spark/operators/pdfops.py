@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.pdftext import build_pdf, extract_pdf_text
-from ..functions.textnorm import ascii_words
+from ..functions.textnorm import SQL_WS, ascii_words
 
 LINE_WORDS = 8
 PAGE_LINES = 20
@@ -127,7 +127,7 @@ def pdf_page_text_sql() -> str:
       -- split with empty tokens dropped — robust to leading/trailing
       -- and tab/newline whitespace, unlike trim()+split
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'),
+             list_filter(regexp_split_to_array(text, '{SQL_WS}+'),
                          w -> w <> '') AS words
       FROM documents
     ),

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # canonical tuples live Spark-free in functions/stopwords.py so the DOM
 # scorer can import them without dragging Spark in
 from ..functions.stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR  # noqa: E402,F401
-from .dedup import NORM_SQL, _norm, word_ngrams
+from ..functions.textnorm import SQL_WS
+from .dedup import NORM_SQL, _norm, _ws_tokens, word_ngrams
 
 
 # The operating point both engines read.  The sketch settings (HLL++
@@ -43,9 +44,8 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-dedup key) and its length.  Both are single-projection
     expressions over the same scan, so they share one gate row."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.when(F.trim("text") == "", F.array()).otherwise(
-        F.split(F.trim("text"), r"\s+")
-    )
+    # un-lowered: ``lower`` can change a token's length (U+0130)
+    toks = _ws_tokens(F.col("text"))
     avg_len = F.when(
         F.size(toks) > 0,
         F.aggregate(
@@ -75,9 +75,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.greatest(F.length("text"), F.lit(1))
     punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,;:!?]", ""))
     alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
-    toks = F.when(F.trim("text") == "", F.array()).otherwise(
-        F.split(F.lower(F.trim("text")), r"\s+")
-    )
+    toks = _ws_tokens(F.lower("text"))
     stop_hits = F.size(F.filter(toks, lambda w: w.isin(*STOP_EN)))
     tok_n = F.greatest(F.size(toks), F.lit(1))
     punct_ratio = punct.cast("double") / n
@@ -100,10 +98,10 @@ def quality_scores_sql() -> str:
              "* 1.0 / greatest(length(text), 1)")
     alpha = ("length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 "
              "/ greatest(length(text), 1)")
-    stop = (f"len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \t\n\x0b\f\r]+'), "
+    stop = (f"len(list_filter(regexp_split_to_array(lower(trim(text)), '{SQL_WS}+'), "
             f"w -> w IN ({_sql_list(STOP_EN)}))) * 1.0 "
             "/ greatest(CASE WHEN trim(text) = '' THEN 0 "
-            "ELSE len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) END, 1)")
+            f"ELSE len(regexp_split_to_array(trim(text), '{SQL_WS}+')) END, 1)")
     return f"""
     SELECT doc_id,
            CAST(floor(({punct}) * 10000) AS BIGINT) AS punct_bp,
@@ -119,9 +117,7 @@ def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram-free heuristic language ID: stopword-hit argmax over
     {en,fr,de,es} with a fixed tie-break order."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.when(F.trim("text") == "", F.array()).otherwise(
-        F.split(F.lower(F.trim("text")), r"\s+")
-    )
+    toks = _ws_tokens(F.lower("text"))
     def _hits(stops):
         # NB: the lambda must take exactly one arg — a second parameter
         # makes Spark pass the element index instead
@@ -161,7 +157,7 @@ def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def langid_sql() -> str:
     def hits(stops):
         return (
-            f"len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \t\n\x0b\f\r]+'), "
+            f"len(list_filter(regexp_split_to_array(lower(trim(text)), '{SQL_WS}+'), "
             f"w -> w IN ({_sql_list(stops)})))"
         )
 

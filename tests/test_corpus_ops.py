@@ -274,25 +274,6 @@ def test_vocab_coverage_broadcasts_vocabulary(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_decontaminate_bloom_equals_exact(spark):
-    """The Bloom prefilter path must reproduce the broadcast-relation
-    path exactly at a second geometry (no false negatives + exact
-    verify ⇒ identical output), and the sketch must actually filter:
-    with a tiny bitmap the fpp tail grows but the answer cannot
-    change."""
-    for nb in (1 << 17, 1 << 10):  # production-ish and fpp-heavy bitmaps
-        a = sorted(map(tuple, dedup.decontaminate(spark, SF_DIR, gram_width=3).collect()))
-        b = sorted(
-            map(
-                tuple,
-                dedup.decontaminate_bloom(
-                    spark, SF_DIR, gram_width=3, num_bits=nb
-                ).collect(),
-            )
-        )
-        assert a == b, nb
-
-
 def test_shared_substrings_semantics(spark, tmp_path):
     """Two documents embedding an identical 60-char span must share all
     its 40-char window fingerprints; an unrelated doc contributes none.

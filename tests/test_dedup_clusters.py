@@ -218,14 +218,15 @@ def test_incremental_against_empty_batch(spark):
 
 
 @pytest.mark.parametrize(
-    "op", ["ngram_jaccard", "incremental_against", "substring_spans"]
+    "op", ["ngram_jaccard", "incremental_against", "substring_spans", "decontaminate"]
 )
 def test_member_limit_fallback(spark, monkeypatch, op):
     """Past ``BROADCAST_MEMBER_LIMIT`` rows each guarded semi-join (the
     Jaccard verify's candidate members, the substring spans' shared
-    fingerprints) is a shuffled join instead of a broadcast; the output
-    is identical.  The incremental op's batch-key broadcast against the
-    stored key table is not guarded and stays."""
+    fingerprints, decontamination's distinct eval grams) is a shuffled
+    join instead of a broadcast; the output is identical.  The
+    incremental op's batch-key broadcast against the stored key table is
+    not guarded and stays."""
     if op == "ngram_jaccard":
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         run = lambda: dedup.ngram_jaccard_of(docs, n_hashes=8, n_bands=4)  # noqa: E731
@@ -234,8 +235,10 @@ def test_member_limit_fallback(spark, monkeypatch, op):
         run = lambda: dedup.incremental_dedup_against(  # noqa: E731
             batch, keys, corpus, n_hashes=8, n_bands=4
         )
-    else:
+    elif op == "substring_spans":
         run = lambda: dedup.shared_substring_spans(spark, SF_DIR)  # noqa: E731
+    else:
+        run = lambda: dedup.decontaminate(spark, SF_DIR, gram_width=3)  # noqa: E731
     # only the operators' own hints may broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

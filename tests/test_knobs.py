@@ -8,6 +8,10 @@ the same function name anywhere in the package, ``tools/``,
 ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or ``tests/`` passes
 it by keyword, passes enough positionals to reach it, or unpacks ``*`` /
 ``**`` arguments.  Deployment settings are allowed without a caller.
+
+The submit jobs' command lines get the same census: a flag is either a
+deployment setting or passed by some test, never a second spelling of a
+package constant.
 """
 import ast
 import glob
@@ -17,6 +21,12 @@ from conftest import REPO
 
 # Settings a deployment passes in; a test or production call need not.
 DEPLOYMENT = {"cache_root", "catalog", "run_id"}
+# Job flags a deployment passes in: paths, the cluster master, partition
+# counts and the ingest label.
+DEPLOYMENT_FLAGS = {
+    "--input", "--work", "--output", "--corpus", "--batch-input",
+    "--master", "--shuffle-partitions", "--num-partitions", "--ingest-label",
+}
 
 DEFINED = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
                            recursive=True)) + [os.path.join(REPO, "__spark_entry__.py")]
@@ -82,3 +92,31 @@ def test_every_defaulted_parameter_has_a_caller():
     assert not unset, (
         f"{len(unset)} defaulted parameters are set by no call; make each a "
         "module constant shared with its DuckDB twin:\n  " + "\n  ".join(unset))
+
+
+def untested_flags():
+    """``job:flag`` of every submit-job flag that is neither a deployment
+    setting nor a string constant of some test (other than this one)."""
+    tests = glob.glob(os.path.join(REPO, "tests", "**", "*.py"), recursive=True)
+    passed = {
+        node.value
+        for path in tests if os.path.basename(path) != "test_knobs.py"
+        for node in ast.walk(_parse(path))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    }
+    untested = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tools", "submit", "*.py"))):
+        for node in ast.walk(_parse(path)):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "add_argument"):
+                flag = node.args[0].value
+                if flag not in DEPLOYMENT_FLAGS and flag not in passed:
+                    untested.append(f"{os.path.basename(path)}:{flag}")
+    return untested
+
+
+def test_every_job_flag_is_deployment_or_tested():
+    untested = untested_flags()
+    assert not untested, (
+        f"{len(untested)} job flags are neither deployment settings nor passed "
+        "by a test; read the package constant instead:\n  " + "\n  ".join(untested))

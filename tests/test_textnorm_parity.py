@@ -1,9 +1,10 @@
 """Cross-engine whitespace contract: the shared class (textnorm.py) must
 tokenize identically in Python, DuckDB SQL twins, and (by construction)
 Java \\s — including \\x0b and NBSP, where the three engines' defaults
-all disagree (reviewer-found).  The one Spark normalizer and word n-gram
-builder that every dedup, text-statistics and chunking operator calls
-are pinned against their DuckDB spellings on the same kind of input."""
+all disagree (reviewer-found).  The one Spark normalizer, word n-gram
+builder and whitespace tokenizer that the dedup, text-statistics and
+chunking operators call are pinned against their DuckDB spellings on the
+same kind of input."""
 
 import duckdb
 import pytest
@@ -21,6 +22,7 @@ from html_parser_spark.operators.dedup import (
     simhash_sketches_sql,
     word_ngrams,
 )
+from html_parser_spark.operators import textstats
 from html_parser_spark.operators.pdfops import doc_to_pdf, pdf_page_text_sql
 
 NASTY = [
@@ -129,3 +131,40 @@ def test_shingles_parity(ngram_rows):
     for i, (sp, dk) in ngram_rows.items():
         assert sorted(sp.sh) == sorted(dk[-1]), (i, repr(NGRAM_TEXTS[i]))
         assert len(sp.sh) == len(set(sp.sh)), i
+
+
+# stopwords behind a vertical tab, a leading tab and a trailing CRLF, an
+# empty and an all-space text, and U+0130 (``lower`` lengthens it)
+TOKEN_TEXTS = NASTY + [
+    "\x0b", "\x0bthe\x0bdog\x0bis\x0b", "\tthe cat and the dog",
+    "   ", "le chat et la souris\r\n", " der Hund und die Katze ",
+    "\u0130stanbul the of", "The\tAND\fof",
+]
+
+
+@pytest.mark.parametrize("op", ["token_stats", "quality_scores", "langid"])
+def test_token_ops_parity_on_hostile_whitespace(spark, tmp_path, op):
+    """Token counts, token lengths and stopword hits of the operators
+    built on the shared whitespace tokenizer equal their DuckDB twins'.
+    ``token_stats`` is compared on its token columns only: its
+    normalized-text fingerprint lowers U+0130 to two characters in Spark
+    and to one in DuckDB."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(TOKEN_TEXTS)), pa.int64()),
+        "text": TOKEN_TEXTS, "lang": ["en"] * len(TOKEN_TEXTS),
+    }), str(tmp_path / "documents.parquet"))
+    twin = entry.TOKEN_STATS_SQL if op == "token_stats" else getattr(
+        textstats, f"{op}_sql")()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    got = getattr(textstats, op)(spark, str(tmp_path))
+    want = con.execute(twin).fetchall()
+    if op == "token_stats":
+        got = got.select("doc_id", "char_count", "token_count", "avg_token_len_bp")
+        want = [r[:4] for r in want]
+    assert sorted(map(tuple, got.collect())) == sorted(want)

@@ -7,7 +7,7 @@
         --input  <dir containing transcript parquet> \
         --work   <scratch dir for stage checkpoints> \
         --output <output dir> \
-        [--seq-len 2048] [--pack-groups 8] [--shuffle-partitions N]
+        [--shuffle-partitions N] [--resume] [--bucket-docs N]
 
 The whole training-data pipeline as ONE submitted job, composed from the
 oracled operators:
@@ -56,29 +56,7 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="transcripts parquet dir")
     ap.add_argument("--work", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--seq-len", type=int, default=2048)
-    ap.add_argument("--pack-groups", type=int, default=8)
-    ap.add_argument("--n-hashes", type=int, default=128)
-    ap.add_argument("--n-bands", type=int, default=16)
-    ap.add_argument(
-        "--hash-family",
-        default="fast",
-        choices=("md5", "fast"),
-        help="MinHash family: 'fast' (Carter-Wegman over one xxhash64 "
-        "per shingle; codegen, ~10x the md5 signature stage at corpus "
-        "scale) or 'md5' (the gate-oracle family, bit-identical in "
-        "DuckDB).  Both drive the same exact-Jaccard verify stage.",
-    )
-    ap.add_argument("--gram-width", type=int, default=8)
-    ap.add_argument("--eval-modulus", type=int, default=25)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument(
-        "--with-dom",
-        action="store_true",
-        help="run the three-way fused extractor (token policy + DOM "
-        "policy + links from ONE tokenize); dom_* columns land in the "
-        "fused checkpoint for downstream quality models",
-    )
     ap.add_argument("--master", default=None)
     ap.add_argument(
         "--bucket-docs",
@@ -115,47 +93,29 @@ def main() -> None:
         "cluster the same check goes through the Hadoop FileSystem API "
         "or the Iceberg snapshot log instead of os.path.",
     )
-    ap.add_argument(
-        "--io-codec",
-        default="zstd",
-        help="spark.io.compression.codec for shuffle/spill blocks "
-        "(CLAUDE.md invariant: heavy jobs need zstd — the sf10 dedup "
-        "stage's transient scratch is ~38 GB zstd vs >80 GB lz4 = "
-        "disk-full on the single sandbox disk).",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
     from html_parser_spark.operators import chunking, sampling, textstats
     from html_parser_spark.operators.dedup import (
+        EVAL_MODULUS,
         dedup_cluster_keep_list,
         decontaminate,
     )
     from html_parser_spark.operators.pipeline import extract_stage
+    from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
 
+    # zstd shuffle/spill blocks: the sf10 dedup stage's transient scratch
+    # is ~38 GB with zstd against >80 GB with lz4
     spark = get_spark(
         app_name="corpus-pipeline",
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
-        extra_conf={"spark.io.compression.codec": args.io_codec},
+        extra_conf={"spark.io.compression.codec": "zstd"},
     )
-    metrics: list[dict] = []
-
-    def stage(
-        name: str, n_in: int, n_out: int, t0: float, skipped: bool = False
-    ) -> None:
-        m = {
-            "stage": name,
-            "rows_in": n_in,
-            "rows_out": n_out,
-            "wall_sec": round(time.time() - t0, 2),
-        }
-        if skipped:
-            m["skipped"] = True
-        metrics.append(m)
-        print(json.dumps(m))
+    record = StageRecord()
 
     def committed(*paths: str) -> bool:
         """True iff --resume and every artifact has its job-commit
@@ -237,16 +197,11 @@ def main() -> None:
     ):
         n_turns = spark.read.parquet(args.input).count()
         n1 = read_docs("extracted").count()
-        stage("extract", n_turns, n1, t0, skipped=True)
+        record.stage("extract", n_turns, n1, t0, skipped=True)
     else:
         transcripts = spark.read.parquet(args.input)
         n_turns = transcripts.count()
-        # --with-dom: the SAME tokenize also runs the DOM-heuristic
-        # policy; dom_* columns ride the fused checkpoint for downstream
-        # quality models (cost ≈ the DOM pass alone instead of a second
-        # full UDF stage — BENCH.md round 4)
-        outputs = {"main", "dom", "links"} if args.with_dom else {"main", "links"}
-        extracted = extract_stage(transcripts, outputs)
+        extracted = extract_stage(transcripts, {"main", "links"})
         extracted.write.mode("overwrite").parquet(
             os.path.join(args.work, "fused")
         )
@@ -264,7 +219,7 @@ def main() -> None:
         )
         d1 = write_docs(docs, "extracted")
         n1 = read_docs("extracted").count()
-        stage("extract", n_turns, n1, t0)
+        record.stage("extract", n_turns, n1, t0)
 
     # 1b. LINKRANK — per-target link-graph signals over the links the
     # fused pass just wrote (no second harvest): inlink counts, distinct
@@ -273,7 +228,7 @@ def main() -> None:
     if committed(f"{args.output}/link_stats"):
         n_links = spark.read.parquet(f"{args.output}/links").count()
         n_targets = spark.read.parquet(f"{args.output}/link_stats").count()
-        stage("linkrank", n_links, n_targets, t0, skipped=True)
+        record.stage("linkrank", n_links, n_targets, t0, skipped=True)
     else:
         from html_parser_spark.operators.linkrank import (
             target_stats_from_links,
@@ -284,7 +239,7 @@ def main() -> None:
         stats = target_stats_from_links(link_rows, top_k=10000)
         stats.write.mode("overwrite").parquet(f"{args.output}/link_stats")
         n_targets = spark.read.parquet(f"{args.output}/link_stats").count()
-        stage("linkrank", n_links, n_targets, t0)
+        record.stage("linkrank", n_links, n_targets, t0)
 
     # 2. QUALITY — Gopher/C4 repetition gates, computed INLINE on the
     # document rows (scan → project → filter, zero shuffle).  A keep-list
@@ -294,25 +249,24 @@ def main() -> None:
     d2 = docs_dir("quality")
     if committed(f"{d2}/documents.parquet"):
         n2 = read_docs("quality").count()
-        stage("quality", n1, n2, t0, skipped=True)
+        record.stage("quality", n1, n2, t0, skipped=True)
     else:
         q = textstats.filter_quality(
             read_docs("extracted")
         )
         d2 = write_docs(q, "quality")
         n2 = read_docs("quality").count()
-        stage("quality", n1, n2, t0)
+        record.stage("quality", n1, n2, t0)
 
     # 3. DEDUP — exact + verified near-dup clusters, keep representatives
     t0 = time.time()
     d3 = docs_dir("deduped")
     if committed(f"{d3}/documents.parquet", f"{args.output}/clusters"):
         n3 = read_docs("deduped").count()
-        stage("dedup", n2, n3, t0, skipped=True)
+        record.stage("dedup", n2, n3, t0, skipped=True)
     else:
         clusters = dedup_cluster_keep_list(
-            spark, d2, n_hashes=args.n_hashes, n_bands=args.n_bands,
-            hash_family=args.hash_family,
+            spark, d2, hash_family="fast"
         ).persist()
         clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
         keepers = clusters.filter(F.col("is_keeper") == 1).select("doc_id")
@@ -327,7 +281,7 @@ def main() -> None:
         # executor storage into the text-scanning stages that follow
         spark.catalog.clearCache()
         n3 = read_docs("deduped").count()
-        stage("dedup", n2, n3, t0)
+        record.stage("dedup", n2, n3, t0)
 
     # 4. DECONTAM — drop training docs sharing 8-grams with the eval
     # slice, AND route the eval slice itself out of the training corpus
@@ -337,14 +291,11 @@ def main() -> None:
     d4 = docs_dir("clean")
     if committed(f"{d4}/documents.parquet", f"{args.output}/heldout"):
         n4 = read_docs("clean").count()
-        stage("decontaminate", n3, n4, t0, skipped=True)
+        record.stage("decontaminate", n3, n4, t0, skipped=True)
     else:
-        contaminated = decontaminate(
-            spark, d3, eval_modulus=args.eval_modulus,
-            gram_width=args.gram_width,
-        ).select("doc_id")
+        contaminated = decontaminate(spark, d3).select("doc_id")
         d3_docs = read_docs("deduped")
-        is_eval = F.col("doc_id") % args.eval_modulus == 0
+        is_eval = F.col("doc_id") % EVAL_MODULUS == 0
         d3_docs.filter(is_eval).write.mode("overwrite").parquet(
             f"{args.output}/heldout"
         )
@@ -353,14 +304,14 @@ def main() -> None:
         )
         d4 = write_docs(clean, "clean")
         n4 = read_docs("clean").count()
-        stage("decontaminate", n3, n4, t0)
+        record.stage("decontaminate", n3, n4, t0)
 
     # 5. SPLIT — deterministic assignment, written alongside the corpus
     t0 = time.time()
     if committed(f"{args.output}/splits", f"{args.output}/documents"):
         splits = spark.read.parquet(f"{args.output}/splits")
         n_train = splits.filter(F.col("split") == "train").count()
-        stage("split", n4, n_train, t0, skipped=True)
+        record.stage("split", n4, n_train, t0, skipped=True)
     else:
         splits = sampling.corpus_splits(spark, d4)
         splits.write.mode("overwrite").parquet(f"{args.output}/splits")
@@ -369,7 +320,7 @@ def main() -> None:
         ).parquet(f"{args.output}/documents")
         splits = spark.read.parquet(f"{args.output}/splits")
         n_train = splits.filter(F.col("split") == "train").count()
-        stage("split", n4, n_train, t0)
+        record.stage("split", n4, n_train, t0)
 
     # 6. PACK — fixed-length training sequences over the train split only.
     # pack_sequences shards by a doc_id hash, so restricting to the train
@@ -382,7 +333,7 @@ def main() -> None:
             .distinct()
             .count()
         )
-        stage("pack", n_train, n_seq, t0, skipped=True)
+        record.stage("pack", n_train, n_seq, t0, skipped=True)
     else:
         train_dir = docs_dir("train")
         read_docs("clean").join(
@@ -390,9 +341,7 @@ def main() -> None:
             "doc_id",
             "left_semi",
         ).write.mode("overwrite").parquet(f"{train_dir}/documents.parquet")
-        packed = chunking.pack_sequences(
-            spark, train_dir, seq_len=args.seq_len, n_groups=args.pack_groups
-        )
+        packed = chunking.pack_sequences(spark, train_dir)
         packed.write.mode("overwrite").parquet(f"{args.output}/sequences")
         n_seq = (
             spark.read.parquet(f"{args.output}/sequences")
@@ -400,13 +349,10 @@ def main() -> None:
             .distinct()
             .count()
         )
-        stage("pack", n_train, n_seq, t0)
+        record.stage("pack", n_train, n_seq, t0)
 
-    os.makedirs(args.output, exist_ok=True)
-    with open(f"{args.output}/metrics.json", "w") as f:
-        for m in metrics:
-            f.write(json.dumps(m) + "\n")
-    print(json.dumps({"stages": metrics}))
+    record.write(args.output)
+    print(json.dumps({"stages": record.stages}))
     spark.stop()
 
 

@@ -8,7 +8,7 @@
                   e.g. corpus_job's work/deduped)> \
         --batch-input <transcripts parquet for the NEW crawl/ingest> \
         --output <dir for decisions + appended artifacts> \
-        [--n-hashes 128] [--n-bands 16] [--shuffle-partitions N]
+        [--ingest-label ingest-001] [--shuffle-partitions N]
 
 The ingest-time half of the dedup story (the batch-vs-corpus pattern
 the `dedup_incremental` gate row oracles on one table, executed here
@@ -39,7 +39,6 @@ Metrics: one JSON line per stage in <output>/metrics.json.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import time
 
@@ -50,9 +49,6 @@ def main() -> None:
     ap.add_argument("--batch-input", required=True, help="transcripts parquet dir")
     ap.add_argument("--output", required=True)
     ap.add_argument("--ingest-label", default="ingest-001")
-    ap.add_argument("--n-hashes", type=int, default=128)
-    ap.add_argument("--n-bands", type=int, default=16)
-    ap.add_argument("--jaccard-threshold", type=float, default=0.5)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
@@ -61,6 +57,7 @@ def main() -> None:
 
     from html_parser_spark.operators import dedup
     from html_parser_spark.operators.pipeline import run_extraction
+    from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
 
     spark = get_spark(
@@ -68,35 +65,24 @@ def main() -> None:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    metrics: list[dict] = []
+    record = StageRecord()
 
-    def stage(name: str, n_in: int, n_out: int, t0: float) -> None:
-        metrics.append(
-            {
-                "stage": name,
-                "rows_in": n_in,
-                "rows_out": n_out,
-                "wall_sec": round(time.time() - t0, 2),
-            }
+    def band_keys(docs):
+        """(doc_id, band, band_key) of ``docs`` in the fast MinHash family."""
+        return dedup.minhash_band_keys(
+            dedup.minhash_signatures_of(docs, hash_family="fast"),
+            hash_family="fast",
         )
-        print(json.dumps(metrics[-1]))
 
     # 1. KEYS — bootstrap the stored corpus band-key table if absent
     t0 = time.time()
     corpus_docs = spark.read.parquet(f"{args.corpus}/documents.parquet")
     keys_dir = f"{args.corpus}/band_keys.parquet"
     if not os.path.exists(keys_dir):
-        dedup.minhash_band_keys(
-            dedup.minhash_signatures_of(
-                corpus_docs, args.n_hashes, hash_family="fast"
-            ),
-            args.n_hashes,
-            args.n_bands,
-            hash_family="fast",
-        ).write.mode("overwrite").parquet(keys_dir)
+        band_keys(corpus_docs).write.mode("overwrite").parquet(keys_dir)
     corpus_keys = spark.read.parquet(keys_dir)
     n_corpus = corpus_docs.count()
-    stage("keys", n_corpus, corpus_keys.count(), t0)
+    record.stage("keys", n_corpus, corpus_keys.count(), t0)
 
     # 2. EXTRACT — new batch transcripts → documents with salted ids
     t0 = time.time()
@@ -116,41 +102,30 @@ def main() -> None:
     batch_docs.write.mode("overwrite").parquet(batch_dir)
     batch_docs = spark.read.parquet(batch_dir)
     n_batch = batch_docs.count()
-    stage("extract", n_turns, n_batch, t0)
+    record.stage("extract", n_turns, n_batch, t0)
 
     # 3. DEDUP — batch vs stored keys (broadcast) + batch-internal
     t0 = time.time()
     decisions = dedup.incremental_dedup_against(
-        batch_docs,
-        corpus_keys,
-        corpus_docs,
-        jaccard_threshold=args.jaccard_threshold,
-        n_hashes=args.n_hashes,
-        n_bands=args.n_bands,
-        hash_family="fast",
+        batch_docs, corpus_keys, corpus_docs, hash_family="fast"
     )
     decisions.write.mode("overwrite").parquet(f"{args.output}/decisions")
     decisions = spark.read.parquet(f"{args.output}/decisions")
     n_kept = decisions.filter(F.col("status") == "kept").count()
-    stage("dedup", n_batch, n_kept, t0)
+    record.stage("dedup", n_batch, n_kept, t0)
 
     # 4. APPEND — kept docs + their band keys (next ingest's increment)
     t0 = time.time()
     kept_ids = decisions.filter(F.col("status") == "kept").select("doc_id")
     kept_docs = batch_docs.join(kept_ids, "doc_id", "left_semi")
     kept_docs.write.mode("overwrite").parquet(f"{args.output}/appended_docs")
-    dedup.minhash_band_keys(
-        dedup.minhash_signatures_of(kept_docs, args.n_hashes, hash_family="fast"),
-        args.n_hashes,
-        args.n_bands,
-        hash_family="fast",
-    ).write.mode("overwrite").parquet(f"{args.output}/appended_keys")
+    band_keys(kept_docs).write.mode("overwrite").parquet(
+        f"{args.output}/appended_keys"
+    )
     n_keys = spark.read.parquet(f"{args.output}/appended_keys").count()
-    stage("append", n_kept, n_keys, t0)
+    record.stage("append", n_kept, n_keys, t0)
 
-    with open(f"{args.output}/metrics.json", "w") as f:
-        for m in metrics:
-            f.write(json.dumps(m) + "\n")
+    record.write(args.output)
     spark.stop()
 
 
