@@ -7,7 +7,28 @@ Arrow-batched pandas UDFs, plus the dedup / similarity / text-analysis
 operators a large-scale training-data pipeline needs.
 """
 
+import os
+import sys
+import zipimport
+
 __version__ = "0.2.0"
+
+# A PySpark Python worker calls ``importlib.invalidate_caches()`` at the
+# start of every task (``pyspark.worker_util.setup_spark_files``).  Before
+# Python 3.13 that makes every cached zipimporter re-read its archive's
+# whole directory in pure Python: one importer per imported ``pyspark``
+# package, each re-reading the 1,328 entries of ``pyspark.zip``, about
+# 0.25 s of CPU per task before a UDF sees a row.  The archives do not
+# change while a worker runs, so a worker keeps the directory each
+# importer read first.  A worker imports this package when it unpickles
+# a function that refers to package code (every extraction, link, dedup
+# and media stage does), so from its next task on no task re-reads an
+# archive; a function shipped by value that refers to no package code
+# (the ``udx`` UDAFs) does not import it.  Only Python workers (the JVM
+# sets PYTHON_WORKER_FACTORY_SECRET for them) are patched; a driver or a
+# pure-Python consumer of the tokenizer keeps the stock behaviour.
+if sys.version_info < (3, 13) and "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    zipimport.zipimporter.invalidate_caches = lambda self: None
 
 
 def __getattr__(name):

@@ -208,10 +208,11 @@ def salted_exchange(df: DataFrame, num_partitions: int | None = None) -> DataFra
     The count must be explicit: a column-only
     repartition is AQE-coalescible, and AQE merges compressed-text
     shuffle partitions under the Python compute it cannot see.  The
-    default is 2× cores: fewer tasks than that leave no slack for
-    text-length skew, more and task overhead outweighs per-task Python
-    time (local[32]/sf0.1 sweep: 32p→23.6k, 64p→26.0k, 128p→22.9k
-    turns/s)."""
+    default is the larger of ``spark.sql.shuffle.partitions`` and two
+    tasks per task slot (2 × ``defaultParallelism``), so a slot that
+    draws a long-text task is not left alone with it while the others
+    idle.  The salt spreads one conversation's turns over up to
+    ``SALT_K`` partitions."""
     if num_partitions is None:
         spark = df.sparkSession
         num_partitions = max(
