@@ -72,15 +72,44 @@ def _norm(a):
     )
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k cosine neighbors for the first ``N_QUERIES`` vectors.
+def _rescore_topk(pairs: DataFrame) -> DataFrame:
+    """Exact rescore and rank shared by the three top-k operators.
 
-    Broadcast the query side; rank with a window over (query_id), ordered
-    by the QUANTIZED similarity (basis points) with vec_id tie-break —
-    ranking on the raw double would make neighbor order depend on
-    bit-identical double summation across engines (sub-bp float noise
-    must not flip ranks in the cross-engine hash).
-    """
+    ``pairs`` holds one row per (query, candidate): the query's
+    ``query_id``, ``q_emb`` and ``q_nrm`` and the candidate's ``vec_id``,
+    ``embedding`` and ``e_nrm``.  The cosine over the precomputed norms
+    is quantized to basis points, and each query keeps its ``TOP_K``
+    best by (cosine_bp desc, neighbor_id) — ranking on the raw double
+    would make neighbor order depend on bit-identical double summation
+    across engines (sub-bp float noise must not flip ranks in the
+    cross-engine hash)."""
+    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
+        F.col("q_nrm") * F.col("e_nrm")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_bp"), F.asc("neighbor_id")
+    )
+    return (
+        pairs.select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.floor(sim * 10000).cast("long").alias("cosine_bp"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select(
+            "query_id",
+            F.col("rank").cast("long").alias("rank"),
+            "neighbor_id",
+            "cosine_bp",
+        )
+    )
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-k cosine neighbors for the first ``N_QUERIES`` vectors:
+    the query side is broadcast against every vector, then ranked by
+    :func:`_rescore_topk`."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # norms precomputed per side before the join: the identical _norm
     # expression over the identical floats (bitwise-same sim), but the
@@ -94,29 +123,8 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("e_nrm")
     )
-    pairs = corpus.alias("e").join(
-        F.broadcast(q), F.col("e.vec_id") != F.col("query_id")
-    )
-    sim = _dot(F.col("q_emb"), F.col("e.embedding")) / (
-        F.col("q_nrm") * F.col("e_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_bp"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.select(
-            "query_id",
-            F.col("e.vec_id").alias("neighbor_id"),
-            F.floor(sim * 10000).cast("long").alias("cosine_bp"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "cosine_bp",
-        )
+    return _rescore_topk(
+        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     )
 
 
@@ -222,30 +230,11 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("q_bucket"),
         F.col("e_nrm").alias("q_nrm"),
     )
-    pairs = sign.alias("e").join(
-        F.broadcast(q),
-        (F.col("e.bucket") == F.col("q_bucket"))
-        & (F.col("e.vec_id") != F.col("query_id")),
-    )
-    sim = _dot(F.col("q_emb"), F.col("e.embedding")) / (
-        F.col("q_nrm") * F.col("e_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_bp"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.select(
-            "query_id",
-            F.col("e.vec_id").alias("neighbor_id"),
-            F.floor(sim * 10000).cast("long").alias("cosine_bp"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "cosine_bp",
+    return _rescore_topk(
+        sign.join(
+            F.broadcast(q),
+            (F.col("bucket") == F.col("q_bucket"))
+            & (F.col("vec_id") != F.col("query_id")),
         )
     )
 
@@ -642,28 +631,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", "q_emb", "q_nrm", F.col("p.cell").alias("cell"))
     )
-    pairs = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("e_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_bp"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.floor(sim * 10000).cast("long").alias("cosine_bp"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "cosine_bp",
+    return _rescore_topk(
+        assigned.join(F.broadcast(probes), "cell").filter(
+            F.col("vec_id") != F.col("query_id")
         )
     )
 

@@ -9,9 +9,9 @@ the same function name anywhere in the package, ``tools/``,
 it by keyword, passes enough positionals to reach it, or unpacks ``*`` /
 ``**`` arguments.  Deployment settings are allowed without a caller.
 
-The submit jobs' command lines get the same census: a flag is either a
-deployment setting or passed by some test, never a second spelling of a
-package constant.
+Every command line in ``tools/`` and ``bench.py`` gets the same census:
+a flag is either a deployment setting or passed by some test or by
+another script, never a second spelling of a package constant.
 """
 import ast
 import glob
@@ -21,12 +21,14 @@ from conftest import REPO
 
 # Settings a deployment passes in; a test or production call need not.
 DEPLOYMENT = {"cache_root", "catalog", "run_id"}
-# Job flags a deployment passes in: paths, the cluster master, partition
-# counts and the ingest label.
+# Flags a deployment passes in: paths, the cluster master, partition
+# counts and the ingest label.  Positional arguments are paths too.
 DEPLOYMENT_FLAGS = {
-    "--input", "--work", "--output", "--corpus", "--batch-input",
+    "--input", "--work", "--output", "--corpus", "--batch-input", "--sf-dir",
     "--master", "--shuffle-partitions", "--num-partitions", "--ingest-label",
 }
+SCRIPTS = sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"),
+                           recursive=True)) + [os.path.join(REPO, "bench.py")]
 
 DEFINED = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
                            recursive=True)) + [os.path.join(REPO, "__spark_entry__.py")]
@@ -94,29 +96,35 @@ def test_every_defaulted_parameter_has_a_caller():
         "module constant shared with its DuckDB twin:\n  " + "\n  ".join(unset))
 
 
+def _strings(path):
+    return {node.value for node in ast.walk(_parse(path))
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)}
+
+
 def untested_flags():
-    """``job:flag`` of every submit-job flag that is neither a deployment
-    setting nor a string constant of some test (other than this one)."""
+    """``script:flag`` of every command-line flag in ``SCRIPTS`` that is
+    neither a deployment setting nor a string constant of some test
+    (other than this one) or of another script."""
     tests = glob.glob(os.path.join(REPO, "tests", "**", "*.py"), recursive=True)
-    passed = {
-        node.value
-        for path in tests if os.path.basename(path) != "test_knobs.py"
-        for node in ast.walk(_parse(path))
-        if isinstance(node, ast.Constant) and isinstance(node.value, str)
-    }
+    by_tests = set().union(*(_strings(p) for p in tests
+                             if os.path.basename(p) != "test_knobs.py"))
+    by_script = {p: _strings(p) for p in SCRIPTS}
     untested = []
-    for path in sorted(glob.glob(os.path.join(REPO, "tools", "submit", "*.py"))):
+    for path in SCRIPTS:
+        by_others = set().union(*(v for p, v in by_script.items() if p != path))
         for node in ast.walk(_parse(path)):
             if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
                     and node.func.attr == "add_argument"):
                 flag = node.args[0].value
-                if flag not in DEPLOYMENT_FLAGS and flag not in passed:
-                    untested.append(f"{os.path.basename(path)}:{flag}")
+                if (flag.startswith("-") and flag not in DEPLOYMENT_FLAGS
+                        and flag not in by_tests and flag not in by_others):
+                    untested.append(f"{os.path.relpath(path, REPO)}:{flag}")
     return untested
 
 
 def test_every_job_flag_is_deployment_or_tested():
     untested = untested_flags()
     assert not untested, (
-        f"{len(untested)} job flags are neither deployment settings nor passed "
-        "by a test; read the package constant instead:\n  " + "\n  ".join(untested))
+        f"{len(untested)} flags are neither deployment settings nor passed by "
+        "a test or another script; read the package constant instead:\n  "
+        + "\n  ".join(untested))

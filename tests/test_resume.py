@@ -4,11 +4,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REPO
 from html_parser_spark.fixtures import ensure_transcripts
 from html_parser_spark.operators.resume import (
     filter_uncommitted,
     run_resumable,
 )
+
+CORPUS_JOB = os.path.join(REPO, "tools", "submit", "corpus_job.py")
 
 
 @pytest.fixture(scope="module")
@@ -70,9 +73,9 @@ def test_corpus_job_stage_resume(tmp_path_factory):
     work, out = str(root / "work"), str(root / "out")
 
     def run(*extra):
-        env = dict(os.environ, PYTHONPATH="/root/repo")
+        env = dict(os.environ, PYTHONPATH=REPO)
         p = subprocess.run(
-            [sys.executable, "/root/repo/tools/submit/corpus_job.py",
+            [sys.executable, CORPUS_JOB,
              "--input", inp, "--work", work, "--output", out, *extra],
             capture_output=True, text=True, env=env, timeout=900,
         )
@@ -110,9 +113,9 @@ def test_corpus_job_stage_resume(tmp_path_factory):
         )
     # resuming a bucketed checkpoint without the flag must refuse
     # (registering the wrong layout would corrupt every downstream join)
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO)
     p = subprocess.run(
-        [sys.executable, "/root/repo/tools/submit/corpus_job.py",
+        [sys.executable, CORPUS_JOB,
          "--input", inp, "--work", work, "--output", out, "--resume"],
         capture_output=True, text=True, env=env, timeout=900,
     )

@@ -88,3 +88,55 @@ def test_salted_repartition_spreads_hot_conversation(spark):
     assert max(r["count"] for r in per_part) <= n_hot * 0.6, (
         "salting left one partition holding most of the hot conversation"
     )
+
+
+def test_skew_corpus_rewrite_matches_its_report(tmp_path):
+    """``tools/gen_skew_corpus.py`` run as a script on the sf0.001
+    transcripts: the rewrite keeps every row, moves ``HOT_FRAC`` of them
+    into one densely renumbered conversation, gives up to ``DUP_DEPTH``
+    others the donor text, and its JSON line describes the written
+    parquet."""
+    import collections
+    import importlib.util
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    from conftest import REPO
+    from html_parser_spark.fixtures import ensure_transcripts
+
+    script = os.path.join(REPO, "tools", "gen_skew_corpus.py")
+    spec = importlib.util.spec_from_file_location("gen_skew_corpus", script)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+
+    inp = os.path.dirname(ensure_transcripts(0.001))
+    out = str(tmp_path / "skew")
+    p = subprocess.run(
+        [sys.executable, script, inp, out],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    report = json.loads(p.stdout.strip().splitlines()[-1])
+
+    before = pq.read_table(inp).to_pylist()
+    after = pq.read_table(out).to_pylist()
+    n = len(before)
+    assert len(after) == n == report["rows"]
+    assert len({(r["conv_id"], r["turn_idx"]) for r in after}) == n
+
+    n_hot = int(gen.HOT_FRAC * n)
+    hot = sorted(r["turn_idx"] for r in after if r["conv_id"] == "c_hot_0")
+    assert hot == list(range(n_hot)) and report["hot_turns"] == n_hot
+
+    donor, depth = collections.Counter(
+        r["text"] for r in after if r["conv_id"] != "c_hot_0"
+    ).most_common(1)[0]
+    assert depth == min(gen.DUP_DEPTH, n - n_hot) == report["dup_depth"]
+    assert len(donor.encode()) == report["donor_len"]
+
+    assert report["bytes_in"] == sum(len(r["text"].encode()) for r in before)
+    assert report["bytes_out"] == sum(len(r["text"].encode()) for r in after)

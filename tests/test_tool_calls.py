@@ -1,9 +1,9 @@
 """Scripts outside the test suite call the package correctly.
 
 ``tools/``, ``bench.py`` and ``__spark_entry__.py`` reach into
-``html_parser_spark`` (the profilers even import private helpers), but
-most of them are never imported by another test, so a renamed function
-or a changed signature would break them silently.  This scan is static
+``html_parser_spark``, but most of them are never imported by another
+test, so a renamed function or a changed signature would break them
+silently.  This scan is static
 (AST) and starts no Spark: every name imported from the package must
 exist, and every call through such a name must bind to the current
 signature (calls that unpack ``*``/``**`` arguments are only checked for
@@ -122,7 +122,7 @@ def test_script_calls_bind_to_the_package():
     assert not broken, "calls into the package that no longer bind:\n  " + (
         "\n  ".join(broken))
     # the scan reaches function-local imports and module aliases: the
-    # dedup profiler's private imports and the incremental job's
+    # corpus job's nested imports and the incremental job's
     # ``dedup.<fn>`` calls are among the checked names
-    assert {"_verify_candidates", "_exact_text_collapse",
+    assert {"extract_stage", "link_pagerank_fp",
             "incremental_dedup_against", "minhash_band_keys"} <= checked

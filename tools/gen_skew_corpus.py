@@ -10,20 +10,19 @@ wall-clock A/B isolates the SKEW mechanisms rather than data volume:
   order).  Without salting, every one of those turns lands in a single
   shuffle partition under conv_id keying — the exact hazard the
   pipeline's salted explicit-count repartition exists for.
-- **10⁴-deep exact-duplicate group**: a seeded sample of ``--dup-depth``
+- **10⁴-deep exact-duplicate group**: a seeded sample of ``DUP_DEPTH``
   OTHER turns get their text replaced by one fixed donor text chosen
   with length closest to the corpus MEAN length (so total bytes move
   only by sampling noise).  Downstream these become one exact-dup
   document group 10⁴ deep — the input shape whose k²/2 clique
   disk-killed sf10 before the round-4 exact-text collapse.
 
-Deterministic for a given (input, seed).  Prints a JSON line with byte
-totals for both corpora; the A/B protocol (BENCH.md round 5) runs
-``tools/submit/corpus_job.py`` on the original and the rewrite
-back-to-back in one host window with ceiling stamps.
+Deterministic for a given input (``SEED`` fixes both samples).  Prints
+a JSON line with byte totals for both corpora; the A/B protocol
+(BENCH.md round 5) runs ``tools/submit/corpus_job.py`` on the original
+and the rewrite back-to-back in one host window with ceiling stamps.
 
-Usage: python3 tools/gen_skew_corpus.py IN_DIR OUT_DIR \
-           [--hot-frac 0.1] [--dup-depth 10000] [--seed 20250821]
+Usage: python3 tools/gen_skew_corpus.py IN_DIR OUT_DIR
 """
 
 from __future__ import annotations
@@ -33,18 +32,18 @@ import glob
 import json
 import os
 import random
-import sys
 
-sys.path[:0] = ["/root/repo"]
+# share of all turns moved into the hot conversation, depth of the
+# exact-duplicate group, and the seed of both samples
+HOT_FRAC = 0.10
+DUP_DEPTH = 10_000
+SEED = 20250821
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("in_dir")
     ap.add_argument("out_dir")
-    ap.add_argument("--hot-frac", type=float, default=0.10)
-    ap.add_argument("--dup-depth", type=int, default=10_000)
-    ap.add_argument("--seed", type=int, default=20250821)
     args = ap.parse_args()
 
     import pyarrow as pa
@@ -61,7 +60,7 @@ def main() -> None:
     bytes_in = sum(len(r["text"].encode()) for r in rows)
     mean_len = bytes_in / n
 
-    rng = random.Random(args.seed)
+    rng = random.Random(SEED)
     # donor text: closest byte length to the corpus mean, so replacing a
     # uniform sample with it preserves expected total bytes
     donor = min(rows, key=lambda r: abs(len(r["text"].encode()) - mean_len))[
@@ -70,9 +69,9 @@ def main() -> None:
 
     idx = list(range(n))
     rng.shuffle(idx)
-    n_hot = int(n * args.hot_frac)
+    n_hot = int(n * HOT_FRAC)
     hot = sorted(idx[:n_hot])
-    dup = idx[n_hot : n_hot + args.dup_depth]
+    dup = idx[n_hot : n_hot + DUP_DEPTH]
 
     for t in dup:
         rows[t]["text"] = donor

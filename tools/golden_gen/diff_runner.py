@@ -18,7 +18,9 @@ import subprocess
 import sys
 
 PROBE = os.environ.get("REF_PROBE", "/tmp/refprobe/refcrate/target/release/probe")
-BUILD_SH = os.path.join(os.path.dirname(__file__), "build_probe.sh")
+HERE = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(HERE))
+BUILD_SH = os.path.join(HERE, "build_probe.sh")
 
 # Input alphabets shared by the hypothesis differential
 # (tests/test_differential_hypothesis.py) and the frozen tokenizer oracle
@@ -156,7 +158,7 @@ def compare_one(probe, text, state: str | None = None):
 
     ``state``: optional content entry state name (see RefProbe.tokenize);
     both engines enter the same state."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from html_parser_spark.functions.tokenizer import tokenize
 
     ref_toks, ref_status = probe.tokenize(text, state)

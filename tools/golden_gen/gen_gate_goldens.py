@@ -38,13 +38,14 @@ import multiprocessing as mp
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(__file__))
+HERE = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(HERE))
+sys.path[:0] = [REPO, HERE]
 
 from diff_runner import RefProbe, py_tokens_to_golden  # noqa: E402
 from html_parser_spark.fixtures import gen_rows  # noqa: E402
 
-FIXDIR = "/root/repo/tests/fixtures"
+FIXDIR = os.path.join(REPO, "tests", "fixtures")
 KINDS = ("chars", "start", "end", "comment", "doctype", "eof")
 
 

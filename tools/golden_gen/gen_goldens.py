@@ -17,14 +17,15 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(__file__))
+HERE = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(HERE))
+sys.path[:0] = [REPO, HERE]
 
 from diff_runner import RefProbe  # noqa: E402
 from html_parser_spark.fixtures import gen_rows, HANG_CASES  # noqa: E402
 from html_parser_spark.functions.extract import extract_from_tokens  # noqa: E402
 
-FIXDIR = "/root/repo/tests/fixtures"
+FIXDIR = os.path.join(REPO, "tests", "fixtures")
 
 CURATED = [
     # the reference's own unit tests (mod.rs:3831-3873)

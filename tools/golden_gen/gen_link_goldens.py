@@ -24,11 +24,13 @@ import multiprocessing as mp
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+HERE = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(HERE))
+sys.path.insert(0, REPO)
 
 from html_parser_spark.fixtures import gen_rows  # noqa: E402
 
-FIXDIR = "/root/repo/tests/fixtures"
+FIXDIR = os.path.join(REPO, "tests", "fixtures")
 
 
 def _one(args):

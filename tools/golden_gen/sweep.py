@@ -17,10 +17,12 @@ Usage: python3 tools/golden_gen/sweep.py [n_data] [n_content] [seed]
 from __future__ import annotations
 
 import multiprocessing as mp
+import os
 import random
 import sys
 
-sys.path[:0] = ["/root/repo", "/root/repo/tools/golden_gen"]
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(os.path.dirname(HERE)), HERE]
 
 DATA_ATOMS = list("<>&;#!-/='\"[]()?abpqxZA \t\n\r\x0c\x000159é💡�") + [
     "amp", "AMP", "lt;", "gt", "frac12;", "Aacute", "nbsp;", "zzz;",

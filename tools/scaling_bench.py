@@ -1,28 +1,28 @@
 #!/usr/bin/env python3
 """Scaling-efficiency evidence for the north rule (N vs 4N parallelism).
 
-No real cluster exists in this sandbox, so the two "cluster sizes" are
-``local[8]`` vs ``local[32]`` on identical input (BASELINE.json note).
+Without a real cluster, the two "cluster sizes" are ``local[n]`` and
+``local[n4]`` on identical input, with ``n4`` the session's default core
+count (``plans.session.DEFAULT_CPUS``) and ``n = max(1, n4 // 4)``.
 The sandbox VM also shows variable CPU steal from neighbors and a shared
 memory-bandwidth ceiling, so each Spark measurement is bracketed by a
 same-moment pure-Python multiprocessing ceiling at the same parallelism:
 
-- raw efficiency        = (T_32 / T_8) / 4
-- normalized efficiency = (T_32 / C_32) / (T_8 / C_8)
+- raw efficiency        = (T_n4 / T_n) / (n4 / n)
+- normalized efficiency = (T_n4 / C_n4) / (T_n / C_n)
 
 where C_N is the machine's aggregate pure-extract throughput with N
 processes at that moment.  The normalized figure isolates what the north
 rule is actually about — whether the *job's distribution machinery*
 (shuffle, Arrow, scheduling) keeps scaling — from the host's shared
 memory bus, which a real 4N-executor cluster would multiply rather than
-share.  Best-of-``--trials`` per configuration.
+share.  Best of ``TRIALS`` per configuration.
 
-Usage: python tools/scaling_bench.py [--trials 2] [--update-bench-md]
+Usage: python tools/scaling_bench.py   (one JSON line on stdout)
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import subprocess
@@ -31,6 +31,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+TRIALS = 2
 
 
 def _ceiling_worker(seed, n_texts, barrier, q):
@@ -110,12 +112,10 @@ def measure_spark(ncores: int) -> dict:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--trials", type=int, default=2)
-    ap.add_argument("--n", type=int, default=8)
-    ap.add_argument("--n4", type=int, default=32)
-    ap.add_argument("--update-bench-md", action="store_true")
-    args = ap.parse_args()
+    from html_parser_spark.plans.session import DEFAULT_CPUS
+
+    n4 = DEFAULT_CPUS
+    n = max(1, n4 // 4)
 
     # Each Spark run is BRACKETED by two ceiling measurements: a co-tenant
     # burst that starts mid-run (the failure mode of the two 2026-08-17
@@ -124,10 +124,10 @@ def main() -> None:
     # counts as clean only if both its brackets reach >=0.85 of the
     # session-max ceiling at that parallelism; the reported number is the
     # best CLEAN Spark trial per config.
-    trials = {args.n: [], args.n4: []}  # (c_pre, spark, c_post, steal)
-    for trial in range(args.trials):
+    trials = {n: [], n4: []}  # (c_pre, spark, c_post, steal)
+    for trial in range(TRIALS):
         # alternate order across trials to decorrelate host noise
-        order = (args.n, args.n4) if trial % 2 == 0 else (args.n4, args.n)
+        order = (n, n4) if trial % 2 == 0 else (n4, n)
         for nc in order:
             c_pre = measure_ceiling(nc)
             parsed = measure_spark(nc)
@@ -158,35 +158,29 @@ def main() -> None:
         best = max(clean or trials[nc], key=lambda t: t[1])
         return best[1], cmax, contaminated
 
-    t8, c8, dirty8 = pick(args.n)
-    t32, c32, dirty32 = pick(args.n4)
-    raw_eff = (t32 / t8) / (args.n4 / args.n)
-    norm_eff = (t32 / c32) / (t8 / c8)
+    t_n, c_n, dirty_n = pick(n)
+    t_n4, c_n4, dirty_n4 = pick(n4)
+    raw_eff = (t_n4 / t_n) / (n4 / n)
+    norm_eff = (t_n4 / c_n4) / (t_n / c_n)
     out = {
         "metric": "scaling_efficiency",
-        "n_cores": args.n,
-        "n4_cores": args.n4,
-        "spark_turns_per_sec": {str(args.n): t8, str(args.n4): t32},
-        "python_ceiling_turns_per_sec": {str(args.n): c8, str(args.n4): c32},
+        "n_cores": n,
+        "n4_cores": n4,
+        "spark_turns_per_sec": {str(n): t_n, str(n4): t_n4},
+        "python_ceiling_turns_per_sec": {str(n): c_n, str(n4): c_n4},
         "spark_fraction_of_ceiling": {
-            str(args.n): round(t8 / c8, 3),
-            str(args.n4): round(t32 / c32, 3),
+            str(n): round(t_n / c_n, 3),
+            str(n4): round(t_n4 / c_n4, 3),
         },
         "raw_efficiency": round(raw_eff, 3),
         "normalized_efficiency": round(norm_eff, 3),
-        "trials": args.trials,
+        "trials": TRIALS,
         # True when NO trial at that parallelism had both ceiling brackets
         # within 15% of the session max — treat the numbers as a lower
         # bound measured under co-tenant interference, not evidence.
-        "contaminated": {str(args.n): dirty8, str(args.n4): dirty32},
+        "contaminated": {str(n): dirty_n, str(n4): dirty_n4},
     }
     print(json.dumps(out))
-
-    if args.update_bench_md:
-        stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-        with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-            f.write(f"\n<!-- scaling_bench {stamp} -->\n")
-            f.write("```json\n" + json.dumps(out, indent=2) + "\n```\n")
 
 
 if __name__ == "__main__":
