@@ -316,16 +316,27 @@ def gate_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR") or "/root/testdata/sf0.01"
 
 
-def ensure_transcripts(sf: float, cache_root: str | None = None) -> str:
-    """Generate-once cache; returns the parquet path."""
-    cache_root = cache_root or os.environ.get(
-        "SPARK_GRAFT_DATA_DIR", "/root/repo/data"
-    )
-    out_dir = os.path.join(cache_root, f"transcripts_sf{sf}")
-    path = os.path.join(out_dir, "transcripts.parquet")
+def data_dir() -> str:
+    """Directory of the generated fixture caches: ``SPARK_GRAFT_DATA_DIR``
+    when set, else ``data/`` (gitignored) at the root of the tree this
+    module is imported from, so every copy of the tree keeps its own."""
+    tree = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.environ.get("SPARK_GRAFT_DATA_DIR", os.path.join(tree, "data"))
+
+
+def _ensure(write, sf: float, subdir: str, filename: str) -> str:
+    """Generate-once cache: ``write(sf, out_dir)`` unless
+    ``data_dir()/subdir/filename`` exists; returns that path."""
+    out_dir = os.path.join(data_dir(), subdir)
+    path = os.path.join(out_dir, filename)
     if not os.path.exists(path):
-        write_parquet(sf, out_dir)
+        write(sf, out_dir)
     return path
+
+
+def ensure_transcripts(sf: float) -> str:
+    """Generate-once cache; returns the parquet path."""
+    return _ensure(write_parquet, sf, f"transcripts_sf{sf}", "transcripts.parquet")
 
 
 # --------------------------------------------------------- PNG blob fixture
@@ -451,16 +462,9 @@ def write_png_parquet(sf: float, out_dir: str) -> str:
     return path
 
 
-def ensure_png_blobs(sf: float, cache_root: str | None = None) -> str:
+def ensure_png_blobs(sf: float) -> str:
     """Generate-once cache; returns the parquet path."""
-    cache_root = cache_root or os.environ.get(
-        "SPARK_GRAFT_DATA_DIR", "/root/repo/data"
-    )
-    out_dir = os.path.join(cache_root, f"png_blobs_sf{sf}")
-    path = os.path.join(out_dir, "png_blobs.parquet")
-    if not os.path.exists(path):
-        write_png_parquet(sf, out_dir)
-    return path
+    return _ensure(write_png_parquet, sf, f"png_blobs_sf{sf}", "png_blobs.parquet")
 
 
 def _jpeg_reconstruct(coefs: list, w: int, h: int, ch: int) -> bytes:
@@ -691,15 +695,10 @@ def write_media_parquet(sf: float, out_dir: str) -> str:
     return path
 
 
-def ensure_media_blobs(sf: float, cache_root: str | None = None) -> str:
+def ensure_media_blobs(sf: float) -> str:
     """Generate-once cache; returns the parquet path."""
-    cache_root = cache_root or os.environ.get(
-        "SPARK_GRAFT_DATA_DIR", "/root/repo/data"
-    )
     # v5: JPEG + MP4/AVI/WebP rows + all five 8-bit PNG color types (round 5) —
     # the version bump keys a fresh cache dir so stale corpora never serve
-    out_dir = os.path.join(cache_root, f"media_blobs_v5_sf{sf}")
-    path = os.path.join(out_dir, "media_blobs.parquet")
-    if not os.path.exists(path):
-        write_media_parquet(sf, out_dir)
-    return path
+    return _ensure(
+        write_media_parquet, sf, f"media_blobs_v5_sf{sf}", "media_blobs.parquet"
+    )

@@ -16,12 +16,11 @@ published heuristics (see PAPERS.md):
      - link_density  = chars under <a> / block chars        (jusText)
      - boiler container: any enclosing element whose class/id matches
        nav|menu|footer|sidebar|comment|share|ad|breadcrumb   (tag/class prior)
-     - tag_density   = inline tags / chars                  (Boilerpipe-ish)
    A block is kept iff it has non-whitespace text, is not inside a boiler
    container, and link_density < 0.5.
 5. ``main_text`` = kept block texts (stripped) joined by "\\n"; ``spans`` =
-   the source char ranges (offsets into the raw input) of the character
-   runs that produced kept blocks, tagged with kind='main'.
+   the ``(start, end)`` source char ranges (offsets into the raw input) of
+   the character runs that produced kept blocks.
 
 Self-closing tags never touch the stack (mirroring the tokenizer).  Spans
 are self-consistent artifacts of this engine: golden values are produced by
@@ -64,7 +63,7 @@ def _is_boiler(attrs) -> bool:
 def extract(text: str) -> dict:
     """Tokenize ``text`` and extract main content.
 
-    Returns a dict with keys: main_text, spans (list of [start, end, kind]),
+    Returns a dict with keys: main_text, spans (list of (start, end)),
     err_count, parse_status, n_tokens, n_blocks, n_kept_blocks.
     """
     tokens, status, err_count = tokenize(text)
@@ -82,32 +81,21 @@ def extract_from_tokens(tokens, status: str = "ok", err_count: int = 0) -> dict:
     boiler_depth = 0
     stack: list = []  # (name, is_drop, is_link, is_boiler)
 
-    blocks: list = []  # finalized (text, spans, link_chars, n_inline_tags, in_boiler)
+    blocks: list = []  # finalized (text, spans, link_chars, in_boiler)
     cur_text: list = []
     cur_spans: list = []
     cur_link_chars = 0
-    cur_inline_tags = 0
     cur_boiler = False
 
     def end_block():
-        nonlocal cur_text, cur_spans, cur_link_chars, cur_inline_tags, cur_boiler
+        nonlocal cur_text, cur_spans, cur_link_chars, cur_boiler
         nonlocal ct_push, cs_push
-        if cur_text:
-            blocks.append(
-                (
-                    "".join(cur_text),
-                    cur_spans,
-                    cur_link_chars,
-                    cur_inline_tags,
-                    cur_boiler,
-                )
-            )
+        blocks.append(("".join(cur_text), cur_spans, cur_link_chars, cur_boiler))
         cur_text = []
         cur_spans = []
         ct_push = cur_text.append
         cs_push = cur_spans.append
         cur_link_chars = 0
-        cur_inline_tags = 0
         cur_boiler = False
 
     ct_push = cur_text.append
@@ -125,7 +113,7 @@ def extract_from_tokens(tokens, status: str = "ok", err_count: int = 0) -> dict:
                 # golden token streams from the reference binary carry no
                 # source spans (["chars", data]) — tolerate both shapes
                 if len(tok) > 3:
-                    cs_push([tok[2], tok[3], "main"])
+                    cs_push((tok[2], tok[3]))
                 if link_depth > 0:
                     cur_link_chars += len(data)
                 if boiler_depth > 0:
@@ -134,16 +122,10 @@ def extract_from_tokens(tokens, status: str = "ok", err_count: int = 0) -> dict:
         if kind == "start":
             name = tok[1]
             self_closing = tok[3]
-            if name in BLOCK_TAGS:
-                # call-site guard: when no text accumulated, the only
-                # resettable state is the inline-tag counter (spans/link
-                # chars/boiler are set exclusively alongside text pushes)
-                if cur_text:
-                    end_block()
-                else:
-                    cur_inline_tags = 0
-            elif drop_depth == 0:
-                cur_inline_tags += 1
+            # with no text accumulated a block has nothing to finalize
+            # (spans, link chars and boiler are set only alongside text)
+            if name in BLOCK_TAGS and cur_text:
+                end_block()
             if self_closing:
                 continue  # bypasses the stack, like the tokenizer
             is_drop = name in DROP_TAGS
@@ -159,11 +141,8 @@ def extract_from_tokens(tokens, status: str = "ok", err_count: int = 0) -> dict:
             continue
         if kind == "end":
             name = tok[1]
-            if name in BLOCK_TAGS:
-                if cur_text:
-                    end_block()
-                else:
-                    cur_inline_tags = 0
+            if name in BLOCK_TAGS and cur_text:
+                end_block()
             # kept end tags always match the most recent unclosed start tag
             # (tokenizer stack filter) — but guard anyway
             if stack and stack[-1][0] == name:
@@ -184,7 +163,7 @@ def extract_from_tokens(tokens, status: str = "ok", err_count: int = 0) -> dict:
     main_parts: list = []
     spans: list = []
     n_kept = 0
-    for btext, bspans, blink, btags, bboiler in blocks:
+    for btext, bspans, blink, bboiler in blocks:
         stripped = btext.strip()
         if not stripped:
             continue

@@ -1,27 +1,30 @@
 """Quirk-exact WHATWG-style HTML tokenizer (pure Python, no Spark imports).
 
-Behavioral port of the reference engine's 7-register tokenizer automaton
-(reference: src/tokenizer/mod.rs:17-3819, src/tokenizer/state.rs) — NOT a code
+Behavioral port of the reference engine's tokenizer automaton (reference:
+src/tokenizer/mod.rs:17-3819, src/tokenizer/state.rs) — NOT a code
 translation: the implementation is a single flat ``while`` loop over integer
 state constants with a regex fast path for plain-text runs, designed to run
-inside Arrow-batched pandas UDFs.  Golden equality is defined by differential
-testing against the compiled reference binary (SURVEY.md §5) and, where the
-binary cannot be built, by the frozen oracle in tests/test_tokenizer_oracle.py.
+inside Arrow-batched pandas UDFs.  The character-reference family
+(mod.rs:718-1095) is one scan, ``_char_ref``, that every '&' calls, so the
+reference's ``return_state`` and ``character_reference_code`` registers,
+which only that family reads, have no counterpart here.  Golden equality is
+defined by differential testing against the compiled reference binary
+(SURVEY.md §5) and, where the binary cannot be built, by the frozen oracle
+in tests/test_tokenizer_oracle.py.
 
 Each turn of the loop runs, in order:
 
 1. the bulk runs, only when no character is pending reconsumption: DATA's
-   whole-construct fast paths (``_DATA_TAG`` and friends, ``data_char_ref``),
+   whole-construct fast paths (``_DATA_TAG`` and friends, ``_char_ref``),
    or one ``_RUN_BREAK`` scan that appends the run of characters the
    state's handler would append one by one;
-2. the two states that do not consume exactly one character:
-   NAMED_CHAR_REF (its scan consumes up to MAX_POSSIBLE characters) and
-   NUMERIC_CHAR_REF_END (consumes nothing);
-3. the one consume step, like the reference's ``consume()`` and reconsume
+2. the one consume step, like the reference's ``consume()`` and reconsume
    flag (mod.rs:3798-3806): reconsume ``cur`` or advance by one, setting
-   ``c``, ``cur``, ``cur_idx`` and ``pos``; every other handler starts from
+   ``c``, ``cur``, ``cur_idx`` and ``pos``; every handler starts from
    ``c``.  The keyword look-aheads of MARKUP_DECL_OPEN and
-   AFTER_DOCTYPE_NAME go through ``_keyword_lookahead``.
+   AFTER_DOCTYPE_NAME go through ``_keyword_lookahead``; an '&' in DATA,
+   RCDATA or an attribute value calls ``_char_ref`` and resumes at the
+   index it returns, in the same state.
 
 Replicated quirks (each pinned by tests/fixtures/probe_cases.jsonl):
 
@@ -102,16 +105,10 @@ ATTR_VALUE_UQ = 9
 AFTER_ATTR_VALUE_Q = 10
 END_TAG_OPEN = 11
 SELF_CLOSING = 12
-CHAR_REF = 13
-NAMED_CHAR_REF = 14
-NUMERIC_CHAR_REF = 15
-HEX_CHAR_REF_START = 16
-DEC_CHAR_REF_START = 17
-DEC_CHAR_REF = 18
-HEX_CHAR_REF = 19
-NUMERIC_CHAR_REF_END = 20
+# 13-20 and 22: the character-reference family (CHAR_REF ...
+# NUMERIC_CHAR_REF_END, AMBIGUOUS_AMPERSAND) has no state here — every '&'
+# runs it as one scan, ``_char_ref``
 BOGUS_COMMENT = 21
-AMBIGUOUS_AMPERSAND = 22
 MARKUP_DECL_OPEN = 23
 COMMENT_START = 24
 COMMENT_START_DASH = 25
@@ -147,7 +144,8 @@ CDATA_END = 52
 # state.rs:2-323; unreachable from Data in the reference — no code path
 # performs the tree-builder state feedback, SURVEY.md §2.4 — but the
 # handlers exist and are replicated here behind an optional
-# ``initial_state`` entry point, completing the 80-state automaton)
+# ``initial_state`` entry point, completing the reference's 80-state
+# automaton less the nine character-reference states)
 RCDATA = 53
 RCDATA_LTS = 54
 RCDATA_END_TAG_OPEN = 55
@@ -258,9 +256,8 @@ _QUOTE = {
 #   the matched ASCII subset);
 # - attr names: lowercase start, no '=' / uppercase (folding) / NUL;
 # - values: NUL always falls back; & inside a value is decoded by
-#   _decode_attr_value, a standalone replica of the CHAR_REF family with
-#   return_state in _ATTR_VALUE_STATES (differentially tested slow-vs-fast
-#   and vs the reference binary); unquoted may not start with "/'/=
+#   _decode_attr_value, the attribute-mode _char_ref the automaton's
+#   attribute-value states call too; unquoted may not start with "/'/=
 #   (before-attr-value dispatch) and breaks on [\t\n\x0c &>\x00], where
 #   the & continues the same value via the char-ref path — so the source
 #   span of an unquoted value is the maximal [^\t\n\x0c >\x00] run;
@@ -324,7 +321,7 @@ _FAST_CDATA = re.compile(r"<!\[CDATA\[([^\]\x00]*)\]\]>")
 # char::is_alphabetic; a run ending at a non-ASCII char needs the per-char
 # check to decide whether the run actually continues (unicode alphabetic)
 _ENT_ALPHA_RUN = re.compile(r"[A-Za-z]*")
-# whole-reference fast shapes for data_char_ref: the common "&name;" with
+# whole-reference fast shapes for _char_ref: the common "&name;" with
 # an ASCII-alpha run short enough that the MAX_POSSIBLE(=33) loop cap can
 # never fire ({1,32} + ';' fails on any 33+ run and falls to the slow
 # scan), and bulk digit runs for numeric refs (int(run, base) & 0xFFFFFFFF
@@ -417,7 +414,8 @@ def _numeric_ref_char(code: int) -> str:
 def _resolve_named_ref(name: str) -> tuple:
     """NAMED_CHAR_REF's outcome when the return state is not an
     attribute value, for a scanned ``name`` ("&" + the consumed chars):
-    ``(emit_str, panic, ambiguous)``, stored in ``_ENT_OUTCOME_MEMO``.
+    ``(emit_str, panic, ambiguous)``, stored in ``_ENT_OUTCOME_MEMO``
+    and read by ``_char_ref``.
 
     An exact entity emits its value.  Otherwise the byte-domain prefix
     fallback (mod.rs:839-877) emits the longest entity prefix plus the
@@ -428,8 +426,8 @@ def _resolve_named_ref(name: str) -> tuple:
     verbatim.  The automaton emits the prefix and the tail as two
     emit_chars calls with one span; they land in the same pending run,
     so one concatenated string is output-identical.  No prefix down to
-    MIN_POSSIBLE: the whole name is emitted raw and ``ambiguous`` sends
-    the automaton to AMBIGUOUS_AMPERSAND.  An empty ``emit_str`` (names
+    MIN_POSSIBLE: the whole name is emitted raw and ``ambiguous`` says
+    AMBIGUOUS_AMPERSAND follows.  An empty ``emit_str`` (names
     shorter than MIN_POSSIBLE bytes, e.g. "&a") means nothing is emitted
     at all."""
     entity = ENTITIES.get(name)
@@ -482,158 +480,153 @@ def _keyword_lookahead(text: str, i: int, goal: str, fold: bool):
     return len(goal), j + 1, text[j], j
 
 
-def _decode_attr_value(s: str) -> str:
-    """Char-reference decoding for one complete attribute value, exactly
-    as the automaton behaves with return_state in _ATTR_VALUE_STATES
-    (CHAR_REF family, mod.rs:718-1095).
+def _char_ref(text: str, j: int, attr: bool) -> tuple:
+    """The reference's character-reference family (CHAR_REF through
+    NUMERIC_CHAR_REF_END, and AMBIGUOUS_AMPERSAND, mod.rs:718-1095) as one
+    scan from the '&' at ``text[j]`` back to the return state.  Every '&'
+    the automaton meets calls it.
 
-    Called by the whole-tag fast path when a captured value contains '&'.
-    Caller guarantees: no NUL, and no value-terminator char inside ``s``
-    (the closing quote for quoted values; [\\t\\n\\x0c >] for unquoted) —
-    so end-of-``s`` behaves as "break and reprocess the terminator",
-    modeled here as a virtual '\"' (non-alpha / non-digit / non-';' /
-    non-'=' in every branch, which is all the automaton inspects).  EOF
-    quirks cannot trigger: in the matched subset the tag's '>' always
-    exists beyond the value.
+    Returns ``(emit, span_end, resume, panic)``: the characters the return
+    state receives ("" for none), the end of their source span (which
+    starts at ``j``), the index the return state consumes next (a breaking
+    character the reference reconsumes sits at ``resume``), and whether the
+    reference process panics on this reference.
 
-    Reference quirks replicated (pinned slow-vs-fast by
-    tests/test_tokenizer.py::test_attr_value_charref_fast_matches_slow
-    and against the reference binary by the differential suite):
-      - '&' followed by neither '#' nor alphanumeric is DROPPED
-        (CHAR_REF's anything-else arm reconsumes without flushing
-        temp_buf, mod.rs:718-749);
-      - named references consume Unicode-ALPHABETIC chars only — digits
-        break the scan, so e.g. "&frac12;" never matches;
-      - the historical rule: a matched name followed by '=' or an
-        alphanumeric is flushed raw (mod.rs:822-824);
-      - NAMED_CHAR_REF's MAX_POSSIBLE loop cap: on exhaustion the last
-        consumed char stays in the raw flush AND is reprocessed;
-      - numeric references: u32 wraparound accumulation and the
-        _numeric_ref_char mapping; "&#"/"&#x" with no digits flush raw
-        (keeping the x/X case).
+    ``attr`` selects the attribute-value return states: a matched name
+    followed by '=' or an alphanumeric is flushed raw (the historical rule,
+    mod.rs:796-824), and there is neither the byte-prefix fallback nor
+    AMBIGUOUS_AMPERSAND.  Otherwise the fallback is ``_resolve_named_ref``
+    and AMBIGUOUS_AMPERSAND's ASCII-alpha tail is part of ``emit``: its
+    characters land in the same run, so one string whose span runs to the
+    tail's end is output-identical.
+
+    Quirks (pinned by tests/test_tokenizer.py and the frozen oracle):
+      - '&' followed by neither '#' nor an alphanumeric is dropped: CHAR_REF
+        reconsumes without flushing its temporary buffer;
+      - named references consume alphabetic chars and ';' only, so
+        "&frac12;" never matches;
+      - NAMED_CHAR_REF's MAX_POSSIBLE loop cap keeps the last consumed char
+        in the raw flush AND reprocesses it;
+      - a named span includes the breaking char (cur_idx + 1); a numeric
+        span excludes a reconsumed one;
+      - numeric accumulators wrap at u32 (``int(run) & 0xFFFFFFFF`` equals
+        the per-char wrap by modular induction); "&#"/"&#x" with no digits
+        flush raw, keeping the x/X case, except "&#x" at EOF, which
+        HEX_CHAR_REF_START's EOF arm swallows.
     """
+    n = len(text)
+    i = j + 1
+    c = text[i] if i < n else None
+    if c == "#":
+        i += 1
+        c = text[i] if i < n else None
+        if c == "x" or c == "X":
+            x = c
+            i += 1
+            c = text[i] if i < n else None
+            if c is not None and c in _ASCII_HEX:
+                e = _HEX_RUN.match(text, i).end()
+                code = int(text[i:e], 16) & 0xFFFFFFFF
+                # a consumed ';' is inside the span, a reconsumed breaking
+                # char is not — both equal the resume index
+                if e < n and text[e] == ";":
+                    e += 1
+                return _numeric_ref_char(code), e, e, False
+            if c is None:
+                return "", n, n, False
+            return "&#" + x, i, i, False
+        if c is not None and c in _ASCII_DIGIT:
+            e = _DEC_RUN.match(text, i).end()
+            code = int(text[i:e], 10) & 0xFFFFFFFF
+            if e < n and text[e] == ";":
+                e += 1
+            return _numeric_ref_char(code), e, e, False
+        return "&#", i, i, False
+    if c is None or not (
+        ("a" <= c <= "z" or "A" <= c <= "Z" or "0" <= c <= "9")
+        or _is_alphanumeric(c)
+    ):
+        return "", i, i, False
+    # NAMED_CHAR_REF: ``cur`` is the char that ended the scan (None at EOF)
+    fm = _FAST_NAMED_REF.match(text, i)
+    if fm is not None:
+        # a short ASCII-alpha run ending in ';' ({1,32} cannot absorb the
+        # 33+ runs the loop cap acts on)
+        name = "&" + fm.group(0)
+        cur = ";"
+        i = fm.end()
+    else:
+        # bulk-scan the ASCII-alpha run; per-char continuation only when it
+        # ends at a unicode-alphabetic char
+        e = _ENT_ALPHA_RUN.match(text, i).end()
+        b = text[e] if e < n else None
+        if e - i >= MAX_POSSIBLE:
+            e = i + MAX_POSSIBLE
+            name = "&" + text[i:e]
+            cur = name[-1]
+            i = e
+        elif b is not None and _is_alphabetic(b):
+            buf = ["&", text[i:e]]
+            k = e - i
+            i = e
+            while k < MAX_POSSIBLE:
+                if i >= n:
+                    cur = None
+                    break
+                cur = text[i]
+                i += 1
+                if cur == ";":
+                    buf.append(cur)
+                    break
+                if not _is_alphabetic(cur):
+                    break
+                buf.append(cur)
+                k += 1
+            name = "".join(buf)
+        else:
+            # b is None at EOF, else a non-alphabetic char other than ';'
+            # (a ';' after 1-32 ASCII alphas is the fast shape's)
+            name = "&" + text[i:e]
+            cur = b
+            i = e if b is None else e + 1
+    # span end: cur_idx + 1 when a char ended the scan (even a reconsumed
+    # one), n at EOF; resume: ';' is consumed, any other char reprocessed
+    end = i if cur is not None else n
+    resume = i if (cur == ";" or cur is None) else i - 1
+    if attr:
+        entity = ENTITIES.get(name)
+        if entity is None or cur == "=" or (
+            cur is not None and _is_alphanumeric(cur)
+        ):
+            return name, end, resume, False
+        return entity, end, resume, False
+    emit, panic, ambiguous = _ENT_OUTCOME_MEMO.get(name) or _resolve_named_ref(name)
+    if ambiguous:
+        p = resume
+        while p < n and text[p] in _ASCII_ALPHA:
+            p += 1
+        if p > resume:
+            return emit + text[resume:p], p, p, panic
+    return emit, end, resume, panic
+
+
+def _decode_attr_value(s: str) -> str:
+    """Char-reference decoding of one complete attribute value, for the
+    whole-tag fast path when a captured value contains '&'.  The caller
+    guarantees no NUL inside ``s``; the value's real terminator (its quote,
+    or [\\t\\n\\x0c >] when unquoted) is never alphanumeric, ';', '=' or
+    '#', so a '"' appended to ``s`` stands in for it in ``_char_ref``."""
+    t = s + '"'
     out: list = []
-    push = out.append
     i = 0
-    L = len(s)
     while True:
         j = s.find("&", i)
         if j < 0:
-            push(s[i:])
-            break
-        if j > i:
-            push(s[i:j])
-        i = j + 1
-        c = s[i] if i < L else '"'
-        if c == "#":
-            i += 1
-            c = s[i] if i < L else '"'
-            if c == "x" or c == "X":
-                x = c
-                i += 1
-                c = s[i] if i < L else '"'
-                if c in _ASCII_HEX:
-                    code = 0
-                    while i < L:
-                        c = s[i]
-                        if c in _ASCII_DIGIT:
-                            code = (code * 16 + (ord(c) - 0x30)) & 0xFFFFFFFF
-                        elif c in _ASCII_HEX:
-                            code = (
-                                code * 16
-                                + (ord(c) - (0x37 if "A" <= c <= "F" else 0x57))
-                            ) & 0xFFFFFFFF
-                        elif c == ";":
-                            i += 1
-                            break
-                        else:
-                            break
-                        i += 1
-                    push(_numeric_ref_char(code))
-                else:
-                    # HEX_CHAR_REF_START anything-else: flush raw, reconsume
-                    push("&#" + x)
-            elif c in _ASCII_DIGIT:
-                code = 0
-                while i < L:
-                    c = s[i]
-                    if c in _ASCII_DIGIT:
-                        code = (code * 10 + (ord(c) - 0x30)) & 0xFFFFFFFF
-                    elif c == ";":
-                        i += 1
-                        break
-                    else:
-                        break
-                    i += 1
-                push(_numeric_ref_char(code))
-            else:
-                # DEC_CHAR_REF_START anything-else: flush raw, reconsume
-                push("&#")
-        elif (
-            "a" <= c <= "z" or "A" <= c <= "Z" or "0" <= c <= "9"
-        ) or _is_alphanumeric(c):
-            # NAMED_CHAR_REF — bulk-scan the ASCII-alpha run; per-char
-            # continuation only when it ends at a unicode-alphabetic char
-            m = _ENT_ALPHA_RUN.match(s, i)
-            e = m.end()
-            if e - i >= MAX_POSSIBLE:
-                # loop cap: exactly MAX_POSSIBLE chars consumed; the last
-                # stays in the raw flush AND is reprocessed (reference
-                # quirk).  A 34-char buffer is never in ENTITIES and its
-                # breaking char is alphabetic (historical rule) — raw
-                # either way.
-                e = i + MAX_POSSIBLE
-                push("&" + s[i:e])
-                i = e - 1
-                continue
-            b = s[e] if e < L else None
-            if b == ";":
-                name = "&" + s[i:e] + ";"
-                cur = ";"
-                i = e + 1
-            elif b is not None and _is_alphabetic(b):
-                # rare: unicode-alphabetic continuation — per-char scan
-                buf = ["&", s[i:e]]
-                bpush = buf.append
-                cur = '"'
-                k = e - i
-                i = e
-                while k < MAX_POSSIBLE:
-                    if i < L:
-                        c = s[i]
-                        i += 1
-                    else:
-                        cur = '"'  # virtual terminator, nothing consumed
-                        break
-                    if c == ";":
-                        bpush(c)
-                        cur = c  # ';' is consumed either way
-                        break
-                    if _is_alphabetic(c):
-                        bpush(c)
-                    else:
-                        cur = c
-                        i -= 1  # reconsumed by the attr-value state
-                        break
-                    k += 1
-                else:
-                    # loop cap: kept in buf AND reprocessed
-                    cur = c
-                    i -= 1
-                name = "".join(buf)
-            else:
-                name = "&" + s[i:e]
-                cur = b if b is not None else '"'
-                i = e
-            entity = ENTITIES.get(name)
-            if entity is not None and cur != "=" and not _is_alphanumeric(cur):
-                push(entity)
-            else:
-                # not found, or the historical '='/alnum rule: flush raw
-                push(name)
-        # anything else (incl. end-of-value): the '&' is DROPPED —
-        # CHAR_REF reconsumes without flushing temp_buf
-    return "".join(out)
+            out.append(s[i:])
+            return "".join(out)
+        out.append(s[i:j])
+        emit, _, i, _ = _char_ref(t, j, True)
+        out.append(emit)
 
 
 def tokenize(text: str, initial_state: int = DATA):
@@ -671,15 +664,14 @@ def tokenize(text: str, initial_state: int = DATA):
             run_push = run.append
             run_first = -1
 
-    # 7-register machine (reference: src/tokenizer/mod.rs:17-37)
+    # the reference's registers (mod.rs:17-37) but return_state and
+    # character_reference_code, which only _char_ref's family needs
     state = initial_state
-    return_state = DATA
     pos = 0  # index of next char to consume
     cur: str | None = None  # current_character
     cur_idx = -1  # source index of cur (n at EOF)
     recon = False  # reconsume flag
     temp_buf: str | None = None  # temporary_buffer (None ≡ Rust None)
-    char_ref_code = 0
     open_tags: list[str] = []
 
     # current token registers (exactly one kind active at a time)
@@ -697,7 +689,6 @@ def tokenize(text: str, initial_state: int = DATA):
     status = OK
     err_count = 0  # end tags dropped by the stack filter
     lt_idx = -1  # source index of the pending '<' in the *-less-than-sign states
-    amp_src = -1  # source index of the '&' opening the current char ref
 
     def emit_chars(s: str, src_start: int, src_end: int):
         nonlocal run_first, run_last_end
@@ -775,150 +766,6 @@ def tokenize(text: str, initial_state: int = DATA):
         flush_run()
         out(("eof",))
         done = True
-
-    def data_char_ref(j: int) -> int:
-        """Inline equivalent of '&' in DATA: CHAR_REF → NAMED/NUMERIC →
-        ... → back to DATA, with return_state == DATA (mod.rs:718-1095).
-        ``j`` is the '&' source index; returns the resume position (the
-        automaton's effective next-consume index after the reference,
-        accounting for reconsume).  Exactly mirrors the slow-path states —
-        including span endpoints (named refs include the breaking char in
-        the span end; numeric refs exclude it), the dropped lone '&', the
-        byte-domain prefix fallback with its PANIC flag, the MAX_POSSIBLE
-        loop-cap reprocess, AMBIGUOUS_AMPERSAND, and the '&#x'-at-EOF
-        swallow.  Pinned slow-vs-fast by test_tokenizer.py and vs the
-        reference binary by the differential suite."""
-        nonlocal status
-        i = j + 1
-        c = text[i] if i < n else None
-        if c == "#":
-            i += 1
-            c = text[i] if i < n else None
-            if c == "x" or c == "X":
-                x = c
-                i += 1
-                c = text[i] if i < n else None
-                if c is not None and c in _ASCII_HEX:
-                    e = _HEX_RUN.match(text, i).end()
-                    code = int(text[i:e], 16) & 0xFFFFFFFF
-                    # NUMERIC_CHAR_REF_END span: a consumed ';' is inside
-                    # (cur_idx+1), a reconsumed breaking char is not
-                    # (cur_idx) — both equal the resume position because
-                    # we advance past ';' but not past a breaking char
-                    if e < n and text[e] == ";":
-                        e += 1
-                    emit_chars(_numeric_ref_char(code), j, e)
-                    return e
-                if c is None:
-                    # HEX_CHAR_REF_START EOF quirk: reconsume WITHOUT
-                    # flushing — "&#x" at EOF is swallowed
-                    return n
-                # anything else: flush "&#x" raw (span ends at the
-                # breaking char, which is then reprocessed)
-                emit_chars("&#" + x, j, i)
-                return i
-            if c is not None and c in _ASCII_DIGIT:
-                e = _DEC_RUN.match(text, i).end()
-                code = int(text[i:e], 10) & 0xFFFFFFFF
-                if e < n and text[e] == ";":
-                    e += 1
-                emit_chars(_numeric_ref_char(code), j, e)
-                return e
-            # DEC_CHAR_REF_START EOF/anything-else: flush "&#" raw
-            emit_chars("&#", j, i if i < n else n)
-            return i if i < n else n
-        if c is not None and (
-            ("a" <= c <= "z" or "A" <= c <= "Z" or "0" <= c <= "9")
-            or _is_alphanumeric(c)
-        ):
-            # NAMED_CHAR_REF fast shape: a short ASCII-alpha run ending in
-            # ';' — the b == ';' arm below with the loop cap provably
-            # unreachable ({1,32} can't absorb a 33+ run)
-            fm = _FAST_NAMED_REF.match(text, i)
-            if fm is not None:
-                name = "&" + fm.group(0)
-                cur_c: str | None = ";"
-                i = fm.end()
-                m = None
-            else:
-                m = _ENT_ALPHA_RUN.match(text, i)
-            # NAMED_CHAR_REF — bulk-scan the ASCII-alpha run; per-char
-            # continuation only when it ends at a unicode-alphabetic char
-            if m is None:
-                pass
-            elif (e := m.end()) - i >= MAX_POSSIBLE:
-                # loop cap: last consumed char kept in buf AND reprocessed
-                e = i + MAX_POSSIBLE
-                name = "&" + text[i:e]
-                cur_c: str | None = name[-1]
-                i = e
-            else:
-                b = text[e] if e < n else None
-                if b == ";":
-                    name = "&" + text[i:e] + ";"
-                    cur_c = ";"
-                    i = e + 1
-                elif b is not None and _is_alphabetic(b):
-                    # rare: unicode-alphabetic continuation — per-char
-                    buf = ["&", text[i:e]]
-                    bpush = buf.append
-                    cur_c = None
-                    k = e - i
-                    i = e
-                    while k < MAX_POSSIBLE:
-                        if i < n:
-                            c = text[i]
-                            i += 1
-                        else:
-                            cur_c = None
-                            break
-                        if c == ";":
-                            bpush(c)
-                            cur_c = c
-                            break
-                        if _is_alphabetic(c):
-                            bpush(c)
-                        else:
-                            cur_c = c
-                            break
-                        k += 1
-                    else:
-                        cur_c = c  # loop cap: kept in buf AND reprocessed
-                    name = "".join(buf)
-                elif b is None:
-                    name = "&" + text[i:e]
-                    cur_c = None
-                    i = e
-                else:
-                    name = "&" + text[i:e]
-                    cur_c = b
-                    i = e + 1
-            # span end: cur_idx + 1 when a char broke the scan (even a
-            # reconsumed one), cur_idx (= n) at EOF
-            end = i if cur_c is not None else n
-            # resume: ';' consumed; a breaking char is reprocessed
-            resume = i if (cur_c == ";" or cur_c is None) else i - 1
-            emit_str, panic, ambiguous = (
-                _ENT_OUTCOME_MEMO.get(name) or _resolve_named_ref(name)
-            )
-            if panic:
-                status = PANIC
-            if emit_str:
-                # guard: an empty outcome means the slow path emitted no
-                # chars, so the pending run (incl. run_first) must stay
-                # untouched
-                emit_chars(emit_str, j, end)
-            if not ambiguous:
-                return resume
-            # AMBIGUOUS_AMPERSAND: ASCII alpha only, each char its own span
-            p = resume
-            while p < n and text[p] in _ASCII_ALPHA:
-                emit_chars(text[p], p, p + 1)
-                p += 1
-            return p
-        # anything else (incl. EOF): the '&' is DROPPED — CHAR_REF
-        # reconsumes without flushing temp_buf
-        return i if c is not None else n
 
     while not done:
         if not recon and pos < n:
@@ -1001,8 +848,6 @@ def tokenize(text: str, initial_state: int = DATA):
                             run_first = -1
                         out(("start", name, attrs, False))
                     pos = tag_end
-                    cur = ">"
-                    cur_idx = pos - 1
                     continue
                 m = _DATA_BREAK.search(text, pos)
                 j = m.start() if m else n
@@ -1029,8 +874,6 @@ def tokenize(text: str, initial_state: int = DATA):
                             run_first = -1
                         out(("comment", mc.group(1)))
                         pos = mc.end()
-                        cur = ">"
-                        cur_idx = pos - 1
                         continue
                     if c2 == "!":
                         md = _FAST_DOCTYPE.match(text, j)
@@ -1046,8 +889,6 @@ def tokenize(text: str, initial_state: int = DATA):
                             else:
                                 out(("doctype", name.lower(), None, None, False))
                             pos = md.end()
-                            cur = ">"
-                            cur_idx = pos - 1
                             continue
                         mcd = _FAST_CDATA.match(text, j)
                         if mcd is not None:
@@ -1060,8 +901,6 @@ def tokenize(text: str, initial_state: int = DATA):
                                 run_push(body)
                                 run_last_end = mcd.end(1)
                             pos = mcd.end()
-                            cur = ">"
-                            cur_idx = pos - 1
                             continue
                         mb = _FAST_BOGUS.match(text, j)
                         if mb is not None:
@@ -1071,8 +910,6 @@ def tokenize(text: str, initial_state: int = DATA):
                                 run_first = -1
                             out(("comment", mb.group(1)))
                             pos = mb.end()
-                            cur = ">"
-                            cur_idx = pos - 1
                             continue
                     elif c2 == "?":
                         mp = _FAST_PI.match(text, j)
@@ -1083,8 +920,6 @@ def tokenize(text: str, initial_state: int = DATA):
                                 run_first = -1
                             out(("comment", mp.group(1)))
                             pos = mp.end()
-                            cur = ">"
-                            cur_idx = pos - 1
                             continue
                     elif (
                         c2 != "&"
@@ -1101,11 +936,13 @@ def tokenize(text: str, initial_state: int = DATA):
                         run_push("<")
                         run_last_end = j + 1
                         pos = j + 1
-                        cur = "<"
                         continue
-                elif j < n and text[j] == "&":  # inline char-ref, all cases
-                    pos = data_char_ref(j)
-                    cur = "&"
+                elif j < n and text[j] == "&":
+                    emit, end, pos, panic = _char_ref(text, j, False)
+                    if emit:
+                        emit_chars(emit, j, end)
+                    if panic:
+                        status = PANIC
                     continue
             else:
                 brk = _RUN_BREAK.get(state)
@@ -1129,76 +966,6 @@ def tokenize(text: str, initial_state: int = DATA):
                             emit_chars(chunk, pos, j)
                         pos = j
 
-        if state == NAMED_CHAR_REF:
-            # mod.rs:752-880 — ported with the same index arithmetic.  The
-            # scan consumes up to MAX_POSSIBLE chars, so it runs its own
-            # consume step.
-            i = 0
-            while i < MAX_POSSIBLE:
-                if recon:
-                    recon = False
-                    c = cur
-                elif pos < n:
-                    c = cur = text[pos]
-                    cur_idx = pos
-                    pos += 1
-                else:
-                    c = cur = None
-                    cur_idx = n
-                if c is None:
-                    break
-                if c == ";":
-                    temp_buf += c
-                    break
-                if _is_alphabetic(c):
-                    temp_buf += c
-                else:
-                    break
-                i += 1
-
-            buffer = temp_buf if temp_buf is not None else ""
-            state = return_state
-            if return_state in _ATTR_VALUE_STATES:
-                entity = ENTITIES.get(buffer)
-                if entity is not None and cur != "=" and not (
-                    cur is not None and _is_alphanumeric(cur)
-                ):
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += entity
-                else:
-                    # not found, or the historical rule: flush raw
-                    # (mod.rs:822-837)
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += buffer
-                    temp_buf = None
-            else:
-                emit_str, panic, ambiguous = (
-                    _ENT_OUTCOME_MEMO.get(buffer) or _resolve_named_ref(buffer)
-                )
-                if panic:
-                    status = PANIC
-                if emit_str:
-                    end = cur_idx + (0 if cur is None else 1)
-                    emit_chars(emit_str, amp_src, end)
-                if ambiguous:
-                    state = AMBIGUOUS_AMPERSAND
-            recon = cur != ";"
-            continue
-
-        if state == NUMERIC_CHAR_REF_END:
-            # mod.rs:1048-1095 — does not consume; the reconsume flag set by
-            # the digit states survives into the return state
-            decoded = _numeric_ref_char(char_ref_code)
-            if return_state in _ATTR_VALUE_STATES:
-                if tok_kind == 1 and tag_attrs:
-                    tag_attrs[-1][1] += decoded
-            else:
-                end = cur_idx + 1 if cur is not None and not recon else cur_idx
-                emit_chars(decoded, amp_src, min(end, n))
-            temp_buf = None
-            state = return_state
-            continue
-
         # the consume step (mod.rs:3798-3806): reconsume the current
         # character or advance by one; every handler below starts from c
         if recon:
@@ -1217,30 +984,15 @@ def tokenize(text: str, initial_state: int = DATA):
             if c is None:
                 emit_eof()
             elif c == "&":
-                return_state = DATA
-                amp_src = cur_idx
-                state = CHAR_REF
+                emit, end, pos, panic = _char_ref(text, cur_idx, False)
+                if emit:
+                    emit_chars(emit, cur_idx, end)
+                if panic:
+                    status = PANIC
             elif c == "<":
                 state = TAG_OPEN
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None  # emit_current_input_character takes it
-
-        elif state == CHAR_REF:
-            # mod.rs:718-749
-            temp_buf = "&"
-            if c is None:
-                recon = True
-                state = return_state
-            elif c == "#":
-                temp_buf += c
-                state = NUMERIC_CHAR_REF
-            elif _is_alphanumeric(c):
-                recon = True
-                state = NAMED_CHAR_REF
-            else:
-                recon = True
-                state = return_state
 
         elif state == TAG_OPEN:
             # mod.rs:209-250
@@ -1392,9 +1144,9 @@ def tokenize(text: str, initial_state: int = DATA):
             elif c == _QUOTE[state]:
                 state = AFTER_ATTR_VALUE_Q
             elif c == "&":
-                return_state = state
-                amp_src = cur_idx
-                state = CHAR_REF
+                emit, _, pos, _ = _char_ref(text, cur_idx, True)
+                if tok_kind == 1 and tag_attrs:
+                    tag_attrs[-1][1] += emit
             elif c == "\x00":
                 if tok_kind == 1 and tag_attrs:
                     tag_attrs[-1][1] += REPLACEMENT
@@ -1409,9 +1161,9 @@ def tokenize(text: str, initial_state: int = DATA):
             elif c in _WS:
                 state = BEFORE_ATTR_NAME
             elif c == "&":
-                return_state = ATTR_VALUE_UQ
-                amp_src = cur_idx
-                state = CHAR_REF
+                emit, _, pos, _ = _char_ref(text, cur_idx, True)
+                if tok_kind == 1 and tag_attrs:
+                    tag_attrs[-1][1] += emit
             elif c == ">":
                 state = DATA
                 emit_current_tag()
@@ -1465,21 +1217,6 @@ def tokenize(text: str, initial_state: int = DATA):
             else:
                 if tok_kind == 2:
                     comment_data += c
-
-        elif state == AMBIGUOUS_AMPERSAND:
-            # mod.rs:883-915 — ASCII alpha only; digits hit "anything else"
-            if c is None:
-                recon = True
-                state = return_state
-            elif c in _ASCII_ALPHA:
-                if return_state in _ATTR_VALUE_STATES:
-                    if tok_kind == 1 and tag_attrs:
-                        tag_attrs[-1][1] += c
-                else:
-                    emit_chars(c, cur_idx, cur_idx + 1)
-            else:
-                recon = True
-                state = return_state
 
         elif state == MARKUP_DECL_OPEN:
             # mod.rs:1098-1126 — NO EOF arm in the reference: hangs forever
@@ -1953,97 +1690,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_doctype()
             # else: ignore
 
-        elif state == NUMERIC_CHAR_REF:
-            # mod.rs:918-942
-            char_ref_code = 0
-            if c is None:
-                recon = True
-                state = DEC_CHAR_REF_START
-            elif c == "x" or c == "X":
-                temp_buf += c
-                state = HEX_CHAR_REF_START
-            else:
-                recon = True
-                state = DEC_CHAR_REF_START
-
-        elif state == HEX_CHAR_REF_START:
-            # mod.rs:945-961 — EOF arm reconsumes WITHOUT flushing (quirk:
-            # "&#x" at EOF is swallowed)
-            if c is None:
-                recon = True
-                state = return_state
-            elif c in _ASCII_HEX:
-                recon = True
-                state = HEX_CHAR_REF
-            else:
-                # flush_code_points... then reconsume in return state
-                if temp_buf is not None:
-                    if return_state in _ATTR_VALUE_STATES:
-                        if tok_kind == 1 and tag_attrs:
-                            tag_attrs[-1][1] += temp_buf
-                    else:
-                        emit_chars(temp_buf, amp_src, cur_idx)
-                    temp_buf = None
-                recon = True
-                state = return_state
-
-        elif state == DEC_CHAR_REF_START:
-            # mod.rs:964-981
-            if c is None:
-                if temp_buf is not None:
-                    if return_state in _ATTR_VALUE_STATES:
-                        if tok_kind == 1 and tag_attrs:
-                            tag_attrs[-1][1] += temp_buf
-                    else:
-                        emit_chars(temp_buf, amp_src, cur_idx)
-                    temp_buf = None
-                recon = True
-                state = return_state
-            elif c in _ASCII_DIGIT:
-                recon = True
-                state = DEC_CHAR_REF
-            else:
-                if temp_buf is not None:
-                    if return_state in _ATTR_VALUE_STATES:
-                        if tok_kind == 1 and tag_attrs:
-                            tag_attrs[-1][1] += temp_buf
-                    else:
-                        emit_chars(temp_buf, amp_src, cur_idx)
-                    temp_buf = None
-                recon = True
-                state = return_state
-
-        elif state == HEX_CHAR_REF:
-            # mod.rs:984-1020 — u32 wraparound like a Rust release build
-            if c is None:
-                recon = True
-                state = NUMERIC_CHAR_REF_END
-            elif c in _ASCII_DIGIT:
-                char_ref_code = (char_ref_code * 16 + (ord(c) - 0x30)) & 0xFFFFFFFF
-            elif c in _ASCII_HEX:
-                if "A" <= c <= "F":
-                    char_ref_code = (char_ref_code * 16 + (ord(c) - 0x37)) & 0xFFFFFFFF
-                else:
-                    char_ref_code = (char_ref_code * 16 + (ord(c) - 0x57)) & 0xFFFFFFFF
-            elif c == ";":
-                state = NUMERIC_CHAR_REF_END
-            else:
-                recon = True
-                state = NUMERIC_CHAR_REF_END
-
-        elif state == DEC_CHAR_REF:
-            # mod.rs:1023-1045
-            if c is None:
-                recon = True
-                state = NUMERIC_CHAR_REF_END
-            elif c in _ASCII_DIGIT:
-                char_ref_code = (char_ref_code * 10 + (ord(c) - 0x30)) & 0xFFFFFFFF
-            elif c == ";":
-                state = NUMERIC_CHAR_REF_END
-            else:
-                recon = True
-                state = NUMERIC_CHAR_REF_END
-
         elif state == CDATA_SECTION:
             # mod.rs:2199-2223 — emits chars raw
             if c is None:
@@ -2052,7 +1698,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 state = CDATA_BRACKET
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == CDATA_BRACKET:
             # mod.rs:2226-2249
@@ -2096,9 +1741,11 @@ def tokenize(text: str, initial_state: int = DATA):
             if c is None:
                 emit_eof()
             elif c == "&":
-                return_state = RCDATA
-                amp_src = cur_idx
-                state = CHAR_REF
+                emit, end, pos, panic = _char_ref(text, cur_idx, False)
+                if emit:
+                    emit_chars(emit, cur_idx, end)
+                if panic:
+                    status = PANIC
             elif c == "<":
                 lt_idx = cur_idx
                 state = RCDATA_LTS
@@ -2106,7 +1753,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_chars(REPLACEMENT, cur_idx, cur_idx + 1)
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == RAWTEXT or state == SCRIPT_DATA:
             # mod.rs:2324-2349, 2352-2379 (identical shapes)
@@ -2119,7 +1765,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_chars(REPLACEMENT, cur_idx, cur_idx + 1)
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == PLAINTEXT:
             # mod.rs:2382-2399
@@ -2129,7 +1774,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_chars(REPLACEMENT, cur_idx, cur_idx + 1)
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == RCDATA_LTS or state == RAWTEXT_LTS:
             # mod.rs:2402-2426, 2552-2576
@@ -2239,7 +1883,6 @@ def tokenize(text: str, initial_state: int = DATA):
                 emit_chars(REPLACEMENT, cur_idx, cur_idx + 1)
             else:
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == SCRIPT_ESCAPED_DASH or state == SCRIPT_DOUBLE_ESCAPED_DASH:
             # mod.rs:2921-2957, 3252-3289
@@ -2264,7 +1907,6 @@ def tokenize(text: str, initial_state: int = DATA):
             else:
                 state = SCRIPT_DOUBLE_ESCAPED if dbl else SCRIPT_ESCAPED
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif (
             state == SCRIPT_ESCAPED_DASH_DASH
@@ -2296,7 +1938,6 @@ def tokenize(text: str, initial_state: int = DATA):
             else:
                 state = SCRIPT_DOUBLE_ESCAPED if dbl else SCRIPT_ESCAPED
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
 
         elif state == SCRIPT_ESCAPED_LTS:
             # mod.rs:3005-3037
@@ -2338,20 +1979,17 @@ def tokenize(text: str, initial_state: int = DATA):
                 else:
                     state = else_state
                     emit_chars(c, cur_idx, cur_idx + 1)
-                    cur = None
             elif c is not None and c in _ASCII_UPPER:
                 temp_buf = (temp_buf or "") + chr(ord(c) + 0x20)
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
             elif c is not None and c in _ASCII_LOWER:
                 temp_buf = (temp_buf or "") + c
                 emit_chars(c, cur_idx, cur_idx + 1)
-                cur = None
             else:
                 recon = True
                 state = anything_else
 
-        else:  # pragma: no cover — exhaustive 80-state dispatch
+        else:  # pragma: no cover — exhaustive dispatch (13-20 and 22 are no state)
             raise AssertionError(f"unreachable state {state}")
 
     return tokens, status, err_count

@@ -16,6 +16,8 @@ import gzip
 import json
 import os
 
+from .fixtures import data_dir
+
 _FIXDIR = os.path.join(os.path.dirname(__file__), "..", "tests", "fixtures")
 
 _INT32 = (
@@ -39,16 +41,11 @@ _LINK_COLS = (
 )
 
 
-def _materialize(
-    sf: float, stem: str, columns: tuple, cache_root: str | None, hint: str
-) -> str:
+def _materialize(sf: float, stem: str, columns: tuple, hint: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    cache_root = cache_root or os.environ.get(
-        "SPARK_GRAFT_DATA_DIR", "/root/repo/data"
-    )
-    out_dir = os.path.join(cache_root, f"goldens_sf{sf}")
+    out_dir = os.path.join(data_dir(), f"goldens_sf{sf}")
     path = os.path.join(out_dir, f"{stem}.parquet")
     if os.path.exists(path):
         return path
@@ -75,25 +72,25 @@ def _materialize(
     return path
 
 
-def gate_golden_parquet(sf: float, cache_root: str | None = None) -> str:
+def gate_golden_parquet(sf: float) -> str:
     """Reference-binary goldens (token path) parquet for ``sf``."""
     return _materialize(
-        sf, "golden_gate", _GATE_COLS, cache_root,
+        sf, "golden_gate", _GATE_COLS,
         "tools/golden_gen/gen_gate_goldens.py (needs the reference probe)",
     )
 
 
-def dom_golden_parquet(sf: float, cache_root: str | None = None) -> str:
+def dom_golden_parquet(sf: float) -> str:
     """Engine goldens (DOM path — no reference twin exists) for ``sf``."""
     return _materialize(
-        sf, "golden_dom", _DOM_COLS, cache_root,
+        sf, "golden_dom", _DOM_COLS,
         "tools/golden_gen/gen_dom_goldens.py",
     )
 
 
-def link_golden_parquet(sf: float, cache_root: str | None = None) -> str:
+def link_golden_parquet(sf: float) -> str:
     """Engine goldens (link harvest — no reference twin) for ``sf``."""
     return _materialize(
-        sf, "golden_links", _LINK_COLS, cache_root,
+        sf, "golden_links", _LINK_COLS,
         "tools/golden_gen/gen_link_goldens.py",
     )

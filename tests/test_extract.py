@@ -50,7 +50,7 @@ def test_spans_cover_main_text_sources():
     r = extract(text)
     assert r["main_text"] == "alpha\nbeta"
     # spans point at the raw source of kept text
-    recovered = [text[s:e] for s, e, kind in r["spans"]]
+    recovered = [text[s:e] for s, e in r["spans"]]
     assert recovered == ["alpha", "beta"]
 
 
@@ -58,7 +58,7 @@ def test_entity_spans_point_at_source():
     text = "<p>a &amp; b</p>"
     r = extract(text)
     assert r["main_text"] == "a & b"
-    (s, e, _), = r["spans"]
+    (s, e), = r["spans"]
     assert text[s:e] == "a &amp; b"
 
 

@@ -20,7 +20,7 @@ import os
 from conftest import REPO
 
 # Settings a deployment passes in; a test or production call need not.
-DEPLOYMENT = {"cache_root", "catalog", "run_id"}
+DEPLOYMENT = {"catalog", "run_id"}
 # Flags a deployment passes in: paths, the cluster master, partition
 # counts and the ingest label.  Positional arguments are paths too.
 DEPLOYMENT_FLAGS = {

@@ -45,9 +45,7 @@ def test_row_level_equality_vs_pure_python(transcripts, extracted):
     for row in got:
         want = extract(raw[(row.conv_id, row.turn_idx)])
         assert row.main_text == want["main_text"], (row.conv_id, row.turn_idx)
-        assert [[s.start, s.end] for s in row.spans] == [
-            w[:2] for w in want["spans"]
-        ]
+        assert [(s.start, s.end) for s in row.spans] == want["spans"]
         assert row.err_count == want["err_count"]
         assert row.parse_status == want["parse_status"]
 

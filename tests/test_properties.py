@@ -44,7 +44,7 @@ def test_spans_sane(s):
     r = extract(s)
     n = len(s)
     prev_end = -1
-    for start, end, kind in r["spans"]:
+    for start, end in r["spans"]:
         assert 0 <= start <= end <= n
         assert start >= prev_end  # spans are ordered and non-overlapping
         prev_end = start  # runs may touch; starts must be monotonic

@@ -65,3 +65,23 @@ def test_multiformat_transcripts_roundtrip(spark, tmp_path_factory):
             expected = want
         assert got == expected, fmt
         assert len(got) > 0
+
+
+def test_fixture_caches_live_in_the_importing_tree(monkeypatch, tmp_path):
+    """Without SPARK_GRAFT_DATA_DIR the generated transcripts and the golden
+    parquets land in ``data/`` of the tree the package was imported from,
+    so a second copy of the tree never reads or writes the first one's."""
+    import os
+
+    from html_parser_spark import fixtures, goldens
+
+    tree = os.path.dirname(os.path.dirname(os.path.abspath(fixtures.__file__)))
+    monkeypatch.delenv("SPARK_GRAFT_DATA_DIR", raising=False)
+    data = os.path.join(tree, "data")
+    assert fixtures.data_dir() == data
+    for path in (fixtures.ensure_transcripts(0.001), goldens.gate_golden_parquet(0.001)):
+        assert os.path.commonpath([path, data]) == data, path
+    monkeypatch.setenv("SPARK_GRAFT_DATA_DIR", str(tmp_path))
+    path = goldens.gate_golden_parquet(0.001)
+    assert os.path.commonpath([path, str(tmp_path)]) == str(tmp_path)
+    assert os.path.exists(path)

@@ -145,7 +145,8 @@ from html_parser_spark.functions.tokenizer import _decode_attr_value
 def _slow_attr_value(v: str) -> str:
     """Ground truth: run the real automaton with an UPPERCASE attr name so
     the whole-tag fast path can't fire; the name folds to 'q' and the
-    value is parsed by the per-char ATTR_VALUE_DQ/CHAR_REF states."""
+    value is parsed by the automaton's ATTR_VALUE_DQ arm, whose '&' calls
+    _char_ref on the input itself rather than on a '"'-terminated copy."""
     toks, _, _ = tokenize('<z Q="' + v + '">')
     assert toks[0][0] == "start" and toks[0][1] == "z"
     return toks[0][2][0][1]
@@ -223,6 +224,14 @@ def test_data_fast_path_constructs_pinned():
     assert _slow_data("a &amp; b")[0] == ["chars", "a & b"]
     assert _slow_data("x & y")[0] == ["chars", "x  y"]  # lone '&' dropped
     assert _slow_data("&#x2603;")[0] == ["chars", "☃"]
+    # an '&' that TAG_OPEN's anything-else arm hands back to DATA reaches
+    # the automaton's DATA arm, not the bulk path
+    assert tokenize("<&amp;")[0][0] == ("chars", "<&", 0, 6)
+    assert tokenize("<&#65;x")[0][0] == ("chars", "<Ax", 0, 7)
+    assert tokenize("<&")[0][0] == ("chars", "<", 0, 1)
+    # an uppercase attribute name keeps the tag off the whole-tag fast
+    # path, so the value's '&' goes through the automaton's ATTR_VALUE_UQ arm
+    assert tokenize("<A B=&amp;c>")[0][0] == ("start", "a", [["b", "&c"]], False)
 
 
 def test_data_char_ref_span_endpoints():

@@ -24,18 +24,8 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [os.path.dirname(os.path.dirname(HERE)), HERE]
 
-DATA_ATOMS = list("<>&;#!-/='\"[]()?abpqxZA \t\n\r\x0c\x000159é💡�") + [
-    "amp", "AMP", "lt;", "gt", "frac12;", "Aacute", "nbsp;", "zzz;",
-    "<!--", "-->", "]]>", "<![CDATA[", "<!DOCTYPE", "<!doctype",
-    "PUBLIC", "SYSTEM", "<div", "</div>", "<br/>", "id=", 'class="x"',
-    "&#x", "&#", "10FFFF", "D800",
-]
-CONTENT_ATOMS = list("<>&;/-!abptix \t\n\x00é") + [
-    "</title", "</style", "</script", "</xmp", "<!--", "-->", "--!>",
-    "<script", "script>", "]]>", "]]", "]", "&amp;", "&#65;", "&not",
-    "<!--<script>", "</script>-->", "</ti tle>", "/>", "</TITLE>",
-    "<sCrIpT>", "</script x=y>", "</script/>", "</script >",
-]
+from diff_runner import CONTENT_ATOMS, MARKUP_ATOMS  # noqa: E402
+
 STATES = ["RCDATA", "RAWTEXT", "ScriptData", "PLAINTEXT", "CDATASection"]
 
 
@@ -43,7 +33,7 @@ def _gen_cases(n_data: int, n_content: int, seed: int) -> list:
     rng = random.Random(seed)
     cases = []
     for _ in range(n_data):
-        s = "".join(rng.choice(DATA_ATOMS) for _ in range(rng.randint(0, 30)))
+        s = "".join(rng.choice(MARKUP_ATOMS) for _ in range(rng.randint(0, 30)))
         cases.append((s, None))
     for _ in range(n_content):
         s = "".join(
