@@ -339,13 +339,13 @@ def ensure_transcripts(sf: float) -> str:
     return _ensure(write_parquet, sf, f"transcripts_sf{sf}", "transcripts.parquet")
 
 
-# --------------------------------------------------------- PNG blob fixture
+# --------------------------------------------------------------- PNG encoder
 #
-# Deterministic multimodal fixture: REAL PNG images (every byte emitted by
-# the pure-stdlib encoder below follows the public PNG spec — signature,
-# IHDR/IDAT/IEND chunks, zlib-compressed scanlines, per-row filters 0-4),
-# plus the generator's ground truth (dimensions + md5 of the raw pixel
-# bytes BEFORE filtering) stored alongside.  The Spark decode operator
+# REAL PNG images for the media blob fixture (every byte emitted by the
+# pure-stdlib encoder below follows the public PNG spec — signature,
+# IHDR/IDAT/IEND chunks, zlib-compressed scanlines, per-row filters 0-4);
+# the fixture stores the generator's ground truth (dimensions + md5 of the
+# raw pixel bytes BEFORE filtering) alongside.  The Spark decode operator
 # must reproduce that truth from the blob alone, which value-oracles the
 # whole decode path: chunk walk, inflate, and all five filter inverses.
 
@@ -418,53 +418,6 @@ def encode_png(
         + _png_chunk(b"IDAT", zlib.compress(bytes(out), 6))
         + _png_chunk(b"IEND", b"")
     )
-
-
-def write_png_parquet(sf: float, out_dir: str) -> str:
-    """Materialize the PNG blob table at ``sf``: (doc_id, payload,
-    exp_width, exp_height, exp_channels, exp_pixel_md5)."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "png_blobs.parquet")
-    rng = random.Random(SEED + 7)
-    n = max(64, int(sf * 20_000))
-    cols = {
-        "doc_id": [], "payload": [], "exp_width": [], "exp_height": [],
-        "exp_channels": [], "exp_pixel_md5": [],
-    }
-    for i in range(n):
-        w, h = rng.randint(4, 48), rng.randint(4, 48)
-        ch = 1 if rng.random() < 0.25 else 3
-        raw = bytes(rng.randrange(256) for _ in range(w * h * ch))
-        cols["doc_id"].append(i)
-        cols["payload"].append(encode_png(raw, w, h, ch))
-        cols["exp_width"].append(w)
-        cols["exp_height"].append(h)
-        cols["exp_channels"].append(ch)
-        cols["exp_pixel_md5"].append(hashlib.md5(raw).hexdigest())
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("payload", pa.binary()),
-            ("exp_width", pa.int32()),
-            ("exp_height", pa.int32()),
-            ("exp_channels", pa.int32()),
-            ("exp_pixel_md5", pa.string()),
-        ]
-    )
-    pq.write_table(
-        pa.Table.from_pydict(cols, schema=schema), path, row_group_size=4096
-    )
-    return path
-
-
-def ensure_png_blobs(sf: float) -> str:
-    """Generate-once cache; returns the parquet path."""
-    return _ensure(write_png_parquet, sf, f"png_blobs_sf{sf}", "png_blobs.parquet")
 
 
 def _jpeg_reconstruct(coefs: list, w: int, h: int, ch: int) -> bytes:

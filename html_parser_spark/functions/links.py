@@ -9,7 +9,7 @@ LINK policy is OUR deterministic contract over its token stream:
 1. A start tag ``a`` carrying an ``href`` attribute opens a link; the
    href value is the tokenizer's entity-DECODED attribute value (char
    refs in URLs — ``&amp;`` in query strings — are already resolved by
-   the automaton, mod.rs CHAR_REF family).
+   the tokenizer's one character-reference scan, ``_char_ref``).
 2. Character tokens while a link is open accumulate into its anchor
    text, verbatim (entity-decoded by the tokenizer).
 3. ``</a>`` closes the link.  A new ``<a>`` start tag while one is open

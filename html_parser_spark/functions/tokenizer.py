@@ -3,7 +3,7 @@
 Behavioral port of the reference engine's tokenizer automaton (reference:
 src/tokenizer/mod.rs:17-3819, src/tokenizer/state.rs) — NOT a code
 translation: the implementation is a single flat ``while`` loop over integer
-state constants with a regex fast path for plain-text runs, designed to run
+state constants with regex bulk runs over plain stretches, designed to run
 inside Arrow-batched pandas UDFs.  The character-reference family
 (mod.rs:718-1095) is one scan, ``_char_ref``, that every '&' calls, so the
 reference's ``return_state`` and ``character_reference_code`` registers,
@@ -15,9 +15,10 @@ in tests/test_tokenizer_oracle.py.
 Each turn of the loop runs, in order:
 
 1. the bulk runs, only when no character is pending reconsumption: DATA's
-   whole-construct fast paths (``_DATA_TAG`` and friends, ``_char_ref``),
-   or one ``_RUN_BREAK`` scan that appends the run of characters the
-   state's handler would append one by one;
+   two whole-construct fast paths (the fused run+tag ``_DATA_TAG`` and a
+   bulk ``_char_ref``), or one ``_RUN_BREAK`` scan of a tag, attribute,
+   comment or CDATA state that appends the run of characters the state's
+   handler would append one by one;
 2. the one consume step, like the reference's ``consume()`` and reconsume
    flag (mod.rs:3798-3806): reconsume ``cur`` or advance by one, setting
    ``c``, ``cur``, ``cur_idx`` and ``pos``; every handler starts from
@@ -200,14 +201,12 @@ _ATTR_VALUE_STATES = (ATTR_VALUE_DQ, ATTR_VALUE_SQ, ATTR_VALUE_UQ)
 _WS = "\t\n\x0c "  # tab, LF, FF, space — the tokenizer's whitespace class
 
 _DATA_BREAK = re.compile(r"[&<]")
-# bulk-run break sets of the other states with an append-verbatim arm, run
-# ahead of the consume step: each matches exactly the characters handled by
-# a non-default arm (state switch / case fold / NUL replacement) of that
+# bulk-run break sets of the tag-name, attribute, comment and CDATA states,
+# run ahead of the consume step: each matches exactly the characters handled
+# by a non-default arm (state switch / case fold / NUL replacement) of that
 # state's handler; every char before the break lands in the default
 # "append verbatim" arm, so bulk-appending the run is semantics-preserving
 # (differential-tested vs the reference binary)
-_RAWTEXT_BREAK = re.compile(r"[<\x00]")
-_ESCAPED_BREAK = re.compile(r"[<\x00\-]")
 _RUN_BREAK = {
     TAG_NAME: re.compile(r"[\t\n\x0c />\x00A-Z]"),
     ATTR_NAME: re.compile(r"[\t\n\x0c />=\x00A-Z]"),
@@ -217,12 +216,6 @@ _RUN_BREAK = {
     BOGUS_COMMENT: re.compile(r"[>\x00]"),
     COMMENT: re.compile(r"[<\-\x00]"),
     CDATA_SECTION: re.compile(r"\]"),
-    RCDATA: re.compile(r"[&<\x00]"),
-    RAWTEXT: _RAWTEXT_BREAK,
-    SCRIPT_DATA: _RAWTEXT_BREAK,
-    PLAINTEXT: re.compile(r"\x00"),
-    SCRIPT_ESCAPED: _ESCAPED_BREAK,
-    SCRIPT_DOUBLE_ESCAPED: _ESCAPED_BREAK,
 }
 # keyword look-aheads: (goal, state after a full match) per dispatch char
 _MARKUP_DECL = {
@@ -236,6 +229,30 @@ _QUOTE = {
     ATTR_VALUE_DQ: '"', ATTR_VALUE_SQ: "'",
     PUBLIC_ID_DQ: '"', PUBLIC_ID_SQ: "'",
     SYSTEM_ID_DQ: '"', SYSTEM_ID_SQ: "'",
+}
+# the six DOCTYPE states before a quoted public (0) or system (1)
+# identifier, one handler: (identifier index, state whitespace leads to,
+# whether '>' forces quirks)
+_DT_BEFORE_ID = {
+    AFTER_PUBLIC_KEYWORD: (0, BEFORE_PUBLIC_ID, True),
+    BEFORE_PUBLIC_ID: (0, BEFORE_PUBLIC_ID, True),
+    AFTER_PUBLIC_ID: (1, BETWEEN_PUB_SYS, False),
+    BETWEEN_PUB_SYS: (1, BETWEEN_PUB_SYS, False),
+    AFTER_SYSTEM_KEYWORD: (1, BEFORE_SYSTEM_ID, True),
+    BEFORE_SYSTEM_ID: (1, BEFORE_SYSTEM_ID, True),
+}
+# the quoted state an opening quote enters, per identifier index
+_DT_ID_OPEN = (
+    {'"': PUBLIC_ID_DQ, "'": PUBLIC_ID_SQ},
+    {'"': SYSTEM_ID_DQ, "'": SYSTEM_ID_SQ},
+)
+# the four quoted identifier states, one handler: (identifier index, state
+# after the closing quote)
+_DT_QUOTED_ID = {
+    PUBLIC_ID_DQ: (0, AFTER_PUBLIC_ID),
+    PUBLIC_ID_SQ: (0, AFTER_PUBLIC_ID),
+    SYSTEM_ID_DQ: (1, AFTER_SYSTEM_ID),
+    SYSTEM_ID_SQ: (1, AFTER_SYSTEM_ID),
 }
 
 # ---------------------------------------------------------------------------
@@ -286,37 +303,6 @@ _FAST_TAG = re.compile(
 # Measured 9-17% single-thread tokenize gain on the fixture corpus
 # (in-process ABAB, BENCH.md round 4).
 _DATA_TAG = re.compile(r"([^&<]*)" + _FAST_TAG.pattern)
-# simple comments: no '-'/'<'/NUL in the body ⇒ the automaton appends the
-# body verbatim and the trailing --> closes it (abrupt ``<!-->`` forms
-# don't match and fall back)
-# content must not START with '>' — "<!-->" is an abrupt close (empty
-# comment + reprocess) per comment_start, which the bulk match would
-# otherwise swallow into the comment (found by round-2 fuzz:
-# "<!-->x-->" → ref comment "" + chars "x-->", fast path said ">x")
-_FAST_COMMENT = re.compile(r"<!--([^-<\x00>][^-<\x00]*|)-->")
-
-# doctype fast path: only uppercase 'D' dispatches the keyword scan
-# (consume_doctype mod.rs:3489-3518), remaining keyword chars are
-# case-insensitive.  Both "<!DOCTYPE name>" (whitespace optional: the
-# DOCTYPE state's anything-else arm reconsumes into BEFORE_DOCTYPE_NAME)
-# and the force-quirks "<!DOCTYPE>"/"<!DOCTYPE >" forms are in the subset;
-# names are ASCII-alpha-led and folded like DOCTYPE_NAME's A-Z arm.
-_FAST_DOCTYPE = re.compile(
-    r"<!D[Oo][Cc][Tt][Yy][Pp][Ee][\t\n\x0c ]*"
-    r"(?:([a-zA-Z][a-zA-Z0-9]*)[\t\n\x0c ]*)?>"
-)
-# bogus-comment fast paths (mod.rs:688-715): "<!" followed by anything
-# that is not a comment ('-'), doctype ('D'), or CDATA ('[') dispatch
-# collects verbatim to '>' (the empty alternative is "<!>" → comment "");
-# "<?" is tag-open's '?' arm — the comment INCLUDES the '?'.  NUL bodies
-# fall back (the automaton substitutes U+FFFD there).
-_FAST_BOGUS = re.compile(r"<!([^-D\[>\x00][^>\x00]*|)>")
-_FAST_PI = re.compile(r"<(\?[^>\x00]*)>")
-# CDATA fast path (consume_cdata mod.rs:3520-3552 — case-sensitive, no
-# adjusted-current-node check): a body with no ']'/NUL is emitted raw and
-# the closing "]]>" emits nothing; bodies containing ']' fall back to the
-# CDATA_BRACKET/CDATA_END automaton arms.
-_FAST_CDATA = re.compile(r"<!\[CDATA\[([^\]\x00]*)\]\]>")
 # bulk scanner for NAMED_CHAR_REF's alpha run — ASCII subset of Rust
 # char::is_alphabetic; a run ending at a non-ASCII char needs the per-char
 # check to decide whether the run actually continues (unicode alphabetic)
@@ -344,9 +330,6 @@ _HEX_RUN = re.compile(r"[0-9a-fA-F]+")
 # dict forever; a clear costs one re-parse per distinct tag).
 _TAG_MEMO: dict = {}
 _TAG_MEMO_MAX = 1 << 16
-# same idea for quoted/unquoted attr values containing '&' reached on a
-# memo MISS (distinct tags sharing one hot value, e.g. a repeated URL)
-_ATTRVAL_MEMO: dict = {}
 # named-char-ref outcome memo: the resolution of a scanned "&name[;]"
 # string (direct entity hit, byte-domain prefix fallback + raw tail, or
 # the all-raw AMBIGUOUS_AMPERSAND case) depends only on the name string,
@@ -682,8 +665,7 @@ def tokenize(text: str, initial_state: int = DATA):
     tag_is_end = False
     comment_data = ""
     dt_name = ""
-    dt_public: str | None = None
-    dt_system: str | None = None
+    dt_ids: list = [None, None]  # public and system identifiers
     dt_quirks = False
 
     status = OK
@@ -734,7 +716,7 @@ def tokenize(text: str, initial_state: int = DATA):
         nonlocal tok_kind
         if tok_kind == 3:
             flush_run()
-            out(("doctype", dt_name, dt_public, dt_system, dt_quirks))
+            out(("doctype", dt_name, dt_ids[0], dt_ids[1], dt_quirks))
         elif tok_kind == 2:
             flush_run()
             out(("comment", comment_data))
@@ -770,8 +752,9 @@ def tokenize(text: str, initial_state: int = DATA):
     while not done:
         if not recon and pos < n:
             # bulk runs, ahead of the consume step (nothing is pending
-            # reconsumption): DATA's whole-construct fast paths, or the
-            # state's _RUN_BREAK scan
+            # reconsumption): DATA's two fast paths (the fused run+tag
+            # match, then the text run and a bulk '&'), or the state's
+            # _RUN_BREAK scan; any other '<' goes to the consume step
             if state == DATA:
                 # fused run+tag fast path: the overwhelmingly common DATA
                 # shape is "text run then subset tag" — one C-level regex
@@ -807,13 +790,7 @@ def tokenize(text: str, initial_state: int = DATA):
                                     if v[0] == '"' or v[0] == "'":
                                         v = v[1:-1]
                                     if "&" in v:
-                                        dv = _ATTRVAL_MEMO.get(v)
-                                        if dv is None:
-                                            if len(_ATTRVAL_MEMO) >= _TAG_MEMO_MAX:
-                                                _ATTRVAL_MEMO.clear()
-                                            dv = _decode_attr_value(v)
-                                            _ATTRVAL_MEMO[v] = dv
-                                        v = dv
+                                        v = _decode_attr_value(v)
                                 attrs.append([am.group(1), v])
                         if len(_TAG_MEMO) >= _TAG_MEMO_MAX:
                             _TAG_MEMO.clear()
@@ -857,87 +834,7 @@ def tokenize(text: str, initial_state: int = DATA):
                     run_push(text[pos:j])
                     run_last_end = j
                     pos = j
-                # whole-construct fast paths, attempted straight at the
-                # break char, dispatched on the char after '<' (subset
-                # tags were already ruled out by the fused attempt above;
-                # everything below is the inlined equivalent of consume →
-                # TAG_OPEN → ... for each regex's subset)
-                if j < n and text[j] == "<" and j + 1 < n:
-                    c2 = text[j + 1]
-                    mc = None
-                    if c2 == "!":
-                        mc = _FAST_COMMENT.match(text, j)
-                    if mc is not None:
-                        if run:
-                            out(("chars", "".join(run), run_first, run_last_end))
-                            run.clear()
-                            run_first = -1
-                        out(("comment", mc.group(1)))
-                        pos = mc.end()
-                        continue
-                    if c2 == "!":
-                        md = _FAST_DOCTYPE.match(text, j)
-                        if md is not None:
-                            name = md.group(1)
-                            if run:
-                                out(("chars", "".join(run), run_first, run_last_end))
-                                run.clear()
-                                run_first = -1
-                            if name is None:
-                                # BEFORE_DOCTYPE_NAME '>' arm: force-quirks
-                                out(("doctype", "", None, None, True))
-                            else:
-                                out(("doctype", name.lower(), None, None, False))
-                            pos = md.end()
-                            continue
-                        mcd = _FAST_CDATA.match(text, j)
-                        if mcd is not None:
-                            body = mcd.group(1)
-                            if body:
-                                # CDATA_SECTION emits the body raw into the
-                                # pending run (source span = body span)
-                                if not run:
-                                    run_first = mcd.start(1)
-                                run_push(body)
-                                run_last_end = mcd.end(1)
-                            pos = mcd.end()
-                            continue
-                        mb = _FAST_BOGUS.match(text, j)
-                        if mb is not None:
-                            if run:
-                                out(("chars", "".join(run), run_first, run_last_end))
-                                run.clear()
-                                run_first = -1
-                            out(("comment", mb.group(1)))
-                            pos = mb.end()
-                            continue
-                    elif c2 == "?":
-                        mp = _FAST_PI.match(text, j)
-                        if mp is not None:
-                            if run:
-                                out(("chars", "".join(run), run_first, run_last_end))
-                                run.clear()
-                                run_first = -1
-                            out(("comment", mp.group(1)))
-                            pos = mp.end()
-                            continue
-                    elif (
-                        c2 != "&"
-                        and c2 != "<"
-                        and c2 != "/"
-                        and not ("a" <= c2 <= "z" or "A" <= c2 <= "Z")
-                        and not _is_alphabetic(c2)
-                    ):
-                        # TAG_OPEN anything-else: emit '<' as a character
-                        # and reprocess c2 in DATA — c2 is an ordinary char
-                        # here (not '&'/'<'), so the run just continues
-                        if not run:
-                            run_first = j
-                        run_push("<")
-                        run_last_end = j + 1
-                        pos = j + 1
-                        continue
-                elif j < n and text[j] == "&":
+                if j < n and text[j] == "&":
                     emit, end, pos, panic = _char_ref(text, j, False)
                     if emit:
                         emit_chars(emit, j, end)
@@ -962,7 +859,7 @@ def tokenize(text: str, initial_state: int = DATA):
                         elif state == COMMENT or state == BOGUS_COMMENT:
                             if tok_kind == 2:
                                 comment_data += chunk
-                        else:
+                        else:  # CDATA_SECTION
                             emit_chars(chunk, pos, j)
                         pos = j
 
@@ -1394,8 +1291,7 @@ def tokenize(text: str, initial_state: int = DATA):
             if c is None:
                 tok_kind = 3
                 dt_name = ""
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
@@ -1410,8 +1306,7 @@ def tokenize(text: str, initial_state: int = DATA):
             if c is None:
                 tok_kind = 3
                 dt_name = ""
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
@@ -1420,30 +1315,26 @@ def tokenize(text: str, initial_state: int = DATA):
             elif c in _ASCII_UPPER:
                 tok_kind = 3
                 dt_name = chr(ord(c) + 0x20)
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = False
                 state = DOCTYPE_NAME
             elif c == "\x00":
                 tok_kind = 3
                 dt_name = REPLACEMENT
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = False
                 state = DOCTYPE_NAME
             elif c == ">":
                 tok_kind = 3
                 dt_name = ""
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = True
                 state = DATA
                 emit_doctype()
             else:
                 tok_kind = 3
                 dt_name = c
-                dt_public = None
-                dt_system = None
+                dt_ids = [None, None]
                 dt_quirks = False
                 state = DOCTYPE_NAME
 
@@ -1492,22 +1383,22 @@ def tokenize(text: str, initial_state: int = DATA):
                     recon = True
                     state = BOGUS_DOCTYPE
 
-        elif state == AFTER_PUBLIC_KEYWORD:
-            # mod.rs:1615-1669
+        elif state in _DT_BEFORE_ID:
+            # mod.rs:1615-1669, 1705-1756, 1845-1955, 1958-2074 (identical
+            # shapes but the identifier, the whitespace target and '>')
+            k, ws_state, gt_quirks = _DT_BEFORE_ID[state]
             if c is None:
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
             elif c in _WS:
-                state = BEFORE_PUBLIC_ID
-            elif c == '"':
-                dt_public = ""
-                state = PUBLIC_ID_DQ
-            elif c == "'":
-                dt_public = ""
-                state = PUBLIC_ID_SQ
+                state = ws_state
+            elif c == '"' or c == "'":
+                dt_ids[k] = ""
+                state = _DT_ID_OPEN[k][c]
             elif c == ">":
-                dt_quirks = True
+                if gt_quirks:
+                    dt_quirks = True
                 state = DATA
                 emit_doctype()
             else:
@@ -1515,156 +1406,26 @@ def tokenize(text: str, initial_state: int = DATA):
                 recon = True
                 state = BOGUS_DOCTYPE
 
-        elif state == BEFORE_PUBLIC_ID:
-            # mod.rs:1705-1756
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c in _WS:
-                pass
-            elif c == '"':
-                dt_public = ""
-                state = PUBLIC_ID_DQ
-            elif c == "'":
-                dt_public = ""
-                state = PUBLIC_ID_SQ
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                dt_quirks = True
-                recon = True
-                state = BOGUS_DOCTYPE
-
-        elif state == PUBLIC_ID_DQ or state == PUBLIC_ID_SQ:
-            # mod.rs:1759-1799, 1802-1842 (identical shapes but the quote)
+        elif state in _DT_QUOTED_ID:
+            # mod.rs:1759-1842, 2077-2160 (identical shapes but the
+            # identifier and the quote)
+            k, after = _DT_QUOTED_ID[state]
             if c is None:
                 dt_quirks = True
                 emit_doctype()
                 emit_eof()
             elif c == _QUOTE[state]:
-                state = AFTER_PUBLIC_ID
+                state = after
             elif c == "\x00":
-                if dt_public is not None:
-                    dt_public += REPLACEMENT
+                if dt_ids[k] is not None:
+                    dt_ids[k] += REPLACEMENT
             elif c == ">":
                 dt_quirks = True
                 state = DATA
                 emit_doctype()
             else:
-                if dt_public is not None:
-                    dt_public += c
-
-        elif state == AFTER_PUBLIC_ID:
-            # mod.rs:1845-1899
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c in _WS:
-                state = BETWEEN_PUB_SYS
-            elif c == ">":
-                state = DATA
-                emit_doctype()
-            elif c == '"':
-                dt_system = ""
-                state = SYSTEM_ID_DQ
-            elif c == "'":
-                dt_system = ""
-                state = SYSTEM_ID_SQ
-            else:
-                dt_quirks = True
-                recon = True
-                state = BOGUS_DOCTYPE
-
-        elif state == BETWEEN_PUB_SYS:
-            # mod.rs:1902-1955
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c in _WS:
-                pass
-            elif c == ">":
-                state = DATA
-                emit_doctype()
-            elif c == '"':
-                dt_system = ""
-                state = SYSTEM_ID_DQ
-            elif c == "'":
-                dt_system = ""
-                state = SYSTEM_ID_SQ
-            else:
-                dt_quirks = True
-                recon = True
-                state = BOGUS_DOCTYPE
-
-        elif state == AFTER_SYSTEM_KEYWORD:
-            # mod.rs:1958-2016
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c in _WS:
-                state = BEFORE_SYSTEM_ID
-            elif c == '"':
-                dt_system = ""
-                state = SYSTEM_ID_DQ
-            elif c == "'":
-                dt_system = ""
-                state = SYSTEM_ID_SQ
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                dt_quirks = True
-                recon = True
-                state = BOGUS_DOCTYPE
-
-        elif state == BEFORE_SYSTEM_ID:
-            # mod.rs:2019-2074
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c in _WS:
-                pass
-            elif c == '"':
-                dt_system = ""
-                state = SYSTEM_ID_DQ
-            elif c == "'":
-                dt_system = ""
-                state = SYSTEM_ID_SQ
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                dt_quirks = True
-                recon = True
-                state = BOGUS_DOCTYPE
-
-        elif state == SYSTEM_ID_DQ or state == SYSTEM_ID_SQ:
-            # mod.rs:2077-2117, 2120-2160 (identical shapes but the quote)
-            if c is None:
-                dt_quirks = True
-                emit_doctype()
-                emit_eof()
-            elif c == _QUOTE[state]:
-                state = AFTER_SYSTEM_ID
-            elif c == "\x00":
-                if dt_system is not None:
-                    dt_system += REPLACEMENT
-            elif c == ">":
-                dt_quirks = True
-                state = DATA
-                emit_doctype()
-            else:
-                if dt_system is not None:
-                    dt_system += c
+                if dt_ids[k] is not None:
+                    dt_ids[k] += c
 
         elif state == AFTER_SYSTEM_ID:
             # mod.rs:2163-2196

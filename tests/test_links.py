@@ -24,8 +24,8 @@ def test_basic_link_and_order():
 
 
 def test_entity_decoded_href_and_anchor():
-    # &amp; in query strings resolves through the tokenizer's CHAR_REF
-    # machinery; anchor text entities decode too
+    # &amp; in query strings resolves through the tokenizer's _char_ref
+    # scan; anchor text entities decode too
     assert _pairs('<a href="/q?a=1&amp;b=2">x &lt; y</a>') == [
         ("/q?a=1&b=2", "x < y")
     ]

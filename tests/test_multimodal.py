@@ -11,7 +11,7 @@ import struct
 
 import pytest
 
-from html_parser_spark.fixtures import encode_png, ensure_png_blobs
+from html_parser_spark.fixtures import encode_png
 from html_parser_spark.operators.multimodal import decode_png
 
 
@@ -48,23 +48,6 @@ def test_unsupported_profile_rejected():
     chunk += struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
     with pytest.raises(ValueError, match="unsupported"):
         decode_png(b"\x89PNG\r\n\x1a\n" + chunk)
-
-
-def test_fixture_ground_truth_matches_decoder():
-    """Every blob in the committed-fixture table decodes to the stored
-    expectations (single-process truth; the Spark gate re-checks the
-    same via the DuckDB oracle)."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(ensure_png_blobs(0.001))
-    rows = t.to_pylist()
-    assert len(rows) >= 64
-    for r in rows[:128]:
-        w, h, ch, raw = decode_png(r["payload"])
-        assert (w, h, ch) == (r["exp_width"], r["exp_height"], r["exp_channels"])
-        assert hashlib.md5(raw).hexdigest() == r["exp_pixel_md5"]
 
 
 # ------------------------------------------------- mixed-format codecs

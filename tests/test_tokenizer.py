@@ -110,9 +110,9 @@ def test_spans_within_bounds(golden_sf0001):
 
 
 def test_abrupt_comment_close_not_swallowed_by_fast_path():
-    """"<!-->" is an abrupt close (empty comment, reprocess the rest) —
-    the bulk comment regex must not swallow it (round-2 fuzz find:
-    ref emitted comment "" + chars "x-->"; the fast path said ">x")."""
+    """"<!-->" is an abrupt close: COMMENT_START's '>' arm emits an empty
+    comment and DATA reprocesses the rest (the reference emits comment ""
+    + chars "x-->"), so the '>' never lands in the comment body."""
     from html_parser_spark.functions.tokenizer import tokenize
 
     toks, status, _ = tokenize("<!-->x-->")
@@ -129,11 +129,11 @@ def test_abrupt_comment_close_not_swallowed_by_fast_path():
 
 
 # ---------------------------------------------------------------------------
-# round-3 fast paths: each must be indistinguishable from the slow-path
-# automaton.  The slow path is forced with constructs the fast-path regex
+# automaton pins: the whole-tag fast path must be indistinguishable from the
+# per-char automaton, which is forced with constructs the fast-path regex
 # subset excludes (an uppercase attribute name folds to the same token but
-# makes _FAST_TAG fail; a '\r' before '<' has no effect on the following
-# construct but is outside the data fast path's break set handling).
+# makes _FAST_TAG fail), and every other DATA construct (comments,
+# doctypes, CDATA, bogus comments) goes through the automaton itself.
 
 import random
 
@@ -191,11 +191,58 @@ def test_attr_value_charref_quirks_pinned():
 
 
 def _slow_data(s: str) -> list:
-    """Pin exact expected token streams for the DATA-state fast paths.
+    """Pin exact expected token streams for DATA-state constructs.
     The authoritative ground truth is the reference-binary differential
     (tools/golden_gen), which covers every construct asserted below."""
     toks, _, _ = tokenize(s)
     return as_golden(toks)
+
+
+_DOCTYPE_ID_PINS = [
+    # keyword then quote, with and without whitespace; '"' and "'"
+    ('<!DOCTYPE html PUBLIC "p">', [["doctype", "html", "p", None, False], ["eof"]]),
+    ("<!DOCTYPE html public 'p'>", [["doctype", "html", "p", None, False], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC"p">', [["doctype", "html", "p", None, False], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p" "s">', [["doctype", "html", "p", "s", False], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC 'p''s'>", [["doctype", "html", "p", "s", False], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p" >', [["doctype", "html", "p", None, False], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p">x', [["doctype", "html", "p", None, False], ["chars", "x"], ["eof"]]),
+    ('<!DOCTYPE html SYSTEM "s">', [["doctype", "html", None, "s", False], ["eof"]]),
+    ("<!DOCTYPE html sYsTeM 's'>", [["doctype", "html", None, "s", False], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM's'>", [["doctype", "html", None, "s", False], ["eof"]]),
+    # '>' before an identifier forces quirks
+    ("<!DOCTYPE html PUBLIC>", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC >", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM>", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM >", [["doctype", "html", None, None, True], ["eof"]]),
+    # '>' inside an identifier ends the doctype with quirks; NUL is replaced
+    ('<!DOCTYPE html PUBLIC "a>b">', [["doctype", "html", "a", None, True], ["chars", 'b">'], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC 'p' 'a>b'>", [["doctype", "html", "p", "a", True], ["chars", "b'>"], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "a\x00">', [["doctype", "html", "a\ufffd", None, False], ["eof"]]),
+    ('<!DOCTYPE html SYSTEM "a\x00">', [["doctype", "html", None, "a\ufffd", False], ["eof"]]),
+    # a bogus tail: quirks everywhere but after the system identifier
+    ("<!DOCTYPE html PUBLICx>", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC x>", [["doctype", "html", None, None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p"x>', [["doctype", "html", "p", None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p" x>', [["doctype", "html", "p", None, True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEMx>", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM x>", [["doctype", "html", None, None, True], ["eof"]]),
+    ('<!DOCTYPE html SYSTEM "s" x>', [["doctype", "html", None, "s", False], ["eof"]]),
+    # EOF in each state
+    ("<!DOCTYPE html PUBLIC", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC ", [["doctype", "html", None, None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p', [["doctype", "html", "p", None, True], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC 'p", [["doctype", "html", "p", None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p"', [["doctype", "html", "p", None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p" ', [["doctype", "html", "p", None, True], ["eof"]]),
+    ('<!DOCTYPE html PUBLIC "p" "s', [["doctype", "html", "p", "s", True], ["eof"]]),
+    ("<!DOCTYPE html PUBLIC 'p' 's", [["doctype", "html", "p", "s", True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM", [["doctype", "html", None, None, True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM ", [["doctype", "html", None, None, True], ["eof"]]),
+    ('<!DOCTYPE html SYSTEM "s', [["doctype", "html", None, "s", True], ["eof"]]),
+    ("<!DOCTYPE html SYSTEM 's", [["doctype", "html", None, "s", True], ["eof"]]),
+    ('<!DOCTYPE html SYSTEM "s"', [["doctype", "html", None, "s", False], ["eof"]]),
+]
 
 
 def test_data_fast_path_constructs_pinned():
@@ -203,7 +250,7 @@ def test_data_fast_path_constructs_pinned():
     assert _slow_data("</P>") == [["eof"]]  # dropped by the stack filter
     toks, _, err = tokenize("<DIV CLASS=x>t</DIV>")
     assert as_golden(toks)[0][:2] == ["start", "div"]
-    # doctype fast path: uppercase-D dispatch, name folded
+    # doctype: uppercase-D dispatch, name folded
     assert _slow_data("<!DOCTYPE htML>")[0] == ["doctype", "html", None, None, False]
     # force-quirks forms
     assert _slow_data("<!DOCTYPE >")[0] == ["doctype", "", None, None, True]
@@ -219,6 +266,10 @@ def test_data_fast_path_constructs_pinned():
     assert _slow_data("<![CDATA[]]>") == [["eof"]]
     # '<' + ordinary char stays in the character run
     assert _slow_data("a < b")[0] == ["chars", "a < b"]
+    # doctype identifiers: every arm of the before-identifier handler (six
+    # states) and the quoted-identifier handler (four states), EOF included
+    for src, want in _DOCTYPE_ID_PINS:
+        assert _slow_data(src) == want, src
     # data char refs: entity, prefix fallback, ambiguous ampersand
     assert _slow_data("&notit;")[0] == ["chars", "¬it;"]
     assert _slow_data("a &amp; b")[0] == ["chars", "a & b"]

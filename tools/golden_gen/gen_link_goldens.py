@@ -7,8 +7,8 @@ tokenizer) is the truth, and the driver's DuckDB side checks that the
 DISTRIBUTED Spark execution (salted repartition, Arrow array<struct>
 batching, explode) reproduces it value-for-value.  The tokenizer pass
 underneath IS reference-verified (golden_gate goldens + differential
-suite), and href entity decoding rides on the CHAR_REF machinery those
-cover.
+suite), and href entity decoding rides on the tokenizer's ``_char_ref``
+scan those cover.
 
 Output (committed): tests/fixtures/golden_links_sf{sf}.jsonl.gz
 
