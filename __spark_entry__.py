@@ -36,16 +36,16 @@ from html_parser_spark.operators import (
     textstats,
     udx,
 )
-from html_parser_spark.functions.display import display_expr, tokenize_udf
+from html_parser_spark.functions.display import display_expr
 from html_parser_spark.functions.textnorm import SQL_WS
 from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
     MAX_TURNS,
     assemble_conversations,
+    extract_stage,
     extraction_metrics,
     run_dom_extraction,
     run_extraction,
-    salted_exchange,
 )
 
 
@@ -64,35 +64,19 @@ def entry(spark: SparkSession) -> DataFrame:
     return run_extraction(_transcripts(spark, 0.001), num_partitions=8)
 
 
-# One extraction pass and one tokenize pass shared across the gate queries
-# (extract_turns, extract_metrics, tokens_kind_counts and
-# display_roundtrip would each re-execute the Python UDF stage otherwise).
+# One extraction stage ("main" plus the token column) shared across the
+# gate queries extract_turns, extract_metrics, tokens_kind_counts and
+# display_roundtrip, so the Python pass over the transcripts runs once.
 # Keyed by session identity so a restarted session never sees a stale plan.
 _FRAME_CACHE: dict = {}
 
 
 def _extracted(spark: SparkSession, sf: float) -> DataFrame:
-    key = ("extract", id(spark), sf)
+    key = (id(spark), sf)
     df = _FRAME_CACHE.get(key)
     if df is None:
-        df = run_extraction(_transcripts(spark, sf)).persist(
+        df = extract_stage(_transcripts(spark, sf), {"main", "tokens"}).persist(
             StorageLevel.MEMORY_AND_DISK
-        )
-        _FRAME_CACHE[key] = df
-    return df
-
-
-def _tokenized(spark: SparkSession, sf: float) -> DataFrame:
-    """(conv_id, turn_idx, tokens) behind the extraction stage's salted
-    exchange (CLAUDE.md explicit-partition-count invariant)."""
-    key = ("tokens", id(spark), sf)
-    df = _FRAME_CACHE.get(key)
-    if df is None:
-        t = _transcripts(spark, sf).select("conv_id", "turn_idx", "text")
-        df = (
-            salted_exchange(t)
-            .select("conv_id", "turn_idx", tokenize_udf(F.col("text")).alias("tokens"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         _FRAME_CACHE[key] = df
     return df
@@ -103,12 +87,13 @@ def _extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The driver's canonicalizer sorts/hashes columns via pandas and cannot
     factorize an ``array<struct>`` column, so the spans
-    column is serialized to a stable JSON scalar here; ``run_extraction``
-    keeps the typed struct column for real consumers.  Value-oracled
-    against the committed reference-binary goldens (goldens.py)."""
+    column is serialized to a stable JSON scalar here (and the shared
+    frame's token column dropped); ``run_extraction`` keeps the typed
+    struct column for real consumers.  Value-oracled against the
+    committed reference-binary goldens (goldens.py)."""
     ext = _extracted(spark, _sf_of(sf_dir))
     return ext.select(
-        *[c for c in ext.columns if c != "spans"],
+        *[c for c in ext.columns if c not in ("spans", "tokens")],
         F.to_json("spans").alias("spans_json"),
     )
 
@@ -185,10 +170,11 @@ def _extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _token_kind_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-stream surface: tokenize_udf -> explode (= next_token) ->
-    per-kind counts over the transcript corpus.  Value-oracled against
-    kind counts of the REFERENCE binary's token streams."""
-    tk = _tokenized(spark, _sf_of(sf_dir))
+    """Token-stream surface: the stage's token column -> explode
+    (= next_token) -> per-kind counts over the transcript corpus.
+    Value-oracled against kind counts of the REFERENCE binary's token
+    streams."""
+    tk = _extracted(spark, _sf_of(sf_dir))
     return (
         tk.select(F.explode("tokens").alias("tok"))
         .groupBy(F.col("tok.kind").alias("kind"))
@@ -203,7 +189,7 @@ def _display_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Display string, value-oracled against md5 of the REFERENCE BINARY's
     own Display output (a length-only projection would let two wrong
     serializations of equal length pass)."""
-    tk = _tokenized(spark, _sf_of(sf_dir))
+    tk = _extracted(spark, _sf_of(sf_dir))
     return tk.select(
         "conv_id",
         "turn_idx",

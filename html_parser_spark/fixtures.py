@@ -352,6 +352,8 @@ def ensure_transcripts(sf: float) -> str:
 import struct
 import zlib
 
+from .functions.mediacodecs import _PNG_SIG, _paeth
+
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
     return (
@@ -360,14 +362,6 @@ def _png_chunk(tag: bytes, data: bytes) -> bytes:
         + data
         + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
     )
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
 
 
 def encode_png(
@@ -412,7 +406,7 @@ def encode_png(
     ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
     plte = _png_chunk(b"PLTE", palette) if palette is not None else b""
     return (
-        b"\x89PNG\r\n\x1a\n"
+        _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
         + plte
         + _png_chunk(b"IDAT", zlib.compress(bytes(out), 6))

@@ -2,10 +2,12 @@
 
 Completes the reference's public API on the Spark side (SURVEY.md §2.1):
 
-- ``tokenize_udf`` — the ``Tokenizer::new``/``next_token`` analogue: one
-  ``array<struct>`` token column per turn (Char runs coalesced into one
-  ``data`` string per run — lossless and ~100× smaller than per-char
-  tokens).  ``F.explode(tokens)`` is the ``next_token`` iteration.
+- ``TOKENS`` / ``_token_rows`` — the ``Tokenizer::new``/``next_token``
+  analogue: one ``array<struct>`` token column per turn (Char runs
+  coalesced into one ``data`` string per run — lossless and ~100×
+  smaller than per-char tokens).  The column is the ``"tokens"`` output
+  of ``pipeline.extract_stage``; ``F.explode(tokens)`` is the
+  ``next_token`` iteration.
 - ``display_expr`` — the ``Display`` impl chain (token.rs:20-24, 82-86,
   163-181, 210-222) as pure built-in higher-order functions (JVM-side,
   no Python), replicating its quirks exactly:
@@ -20,11 +22,7 @@ Completes the reference's public API on the Spark side (SURVEY.md §2.1):
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -32,8 +30,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from .tokenizer import tokenize
 
 # structural parity with the reference Attribute (token.rs:1-7): prefix
 # and namespace exist but are dead fields — Attribute::new sets them to
@@ -63,8 +59,8 @@ TOKEN = StructType(
 TOKENS = ArrayType(TOKEN)
 
 
-def _token_rows(text: str) -> list:
-    toks, status, _err = tokenize(text)
+def _token_rows(toks) -> list:
+    """The tokenizer's tuples as ``TOKEN`` rows."""
     out = []
     for t in toks:
         kind = t[0]
@@ -90,12 +86,6 @@ def _token_rows(text: str) -> list:
         else:
             out.append(("eof", None, None, None, None, None, None, None))
     return out
-
-
-@pandas_udf(TOKENS)
-def tokenize_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for texts in batches:
-        yield pd.Series([_token_rows(t or "") for t in texts])
 
 
 def display_expr(tokens: Column) -> Column:
@@ -129,8 +119,8 @@ def display_expr(tokens: Column) -> Column:
         )
 
     # concat_ws over a transformed array is linear in total output size;
-    # the round-1 aggregate+concat fold re-copied the accumulator per
-    # token (O(n²) string bytes on long token arrays)
+    # an aggregate+concat fold re-copies the accumulator per token (O(n²)
+    # string bytes on long token arrays)
     return F.concat_ws("", F.transform(tokens, one))
 
 

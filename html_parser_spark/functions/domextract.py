@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import re
 
-from .extract import BLOCK_TAGS, DROP_TAGS, _BOILER_CLASS
+from .extract import BLOCK_TAGS, DROP_TAGS, _is_boiler
 from .treebuilder import Element, parse_html
 from .stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR
 
@@ -68,13 +68,6 @@ class _Block:
         return " ".join("".join(self.parts).split())
 
 
-def _is_boiler_el(el: Element) -> bool:
-    for name, value in el.attrs:
-        if name in ("class", "id") and value and _BOILER_CLASS.search(value):
-            return True
-    return False
-
-
 def _segment(
     el: Element,
     boiler: bool,
@@ -95,7 +88,7 @@ def _segment(
                 cur.link_chars += len(child)
             continue
         tag = child.tag
-        c_boiler = boiler or _is_boiler_el(child)
+        c_boiler = boiler or _is_boiler(child.attrs)
         c_drop = drop or tag in DROP_TAGS
         c_link = in_link or tag == "a"
         if tag in _BLOCK_OR_DROP:

@@ -1,14 +1,13 @@
 """Pure-stdlib media codecs for the multimodal column plumbing.
 
-Round 4 widens the honest-decode surface beyond PNG
-(operators/multimodal.py): GIF87a/89a with a full LZW coder, BMP
-(24-bit uncompressed), WAV PCM via a manual RIFF chunk walk, and a
-JPEG marker-walk header parser (dimensions only — pixel decode needs
-libjpeg, absent in this sandbox, and stays honestly stubbed).
+Decoders for PNG (every 8-bit color type, all five row filters),
+GIF87a/89a with a full LZW coder, BMP (24-bit uncompressed), WAV PCM
+via a manual RIFF chunk walk and baseline sequential JPEG (a full T.81
+coder), plus container-metadata walks for MP4, AVI and WebP.
 
 Everything here is executor-side pure Python (no Spark imports),
-derived from the public format specifications (GIF89a spec, BMP
-BITMAPINFOHEADER layout, RIFF/WAVE, ITU T.81 marker structure).  The
+derived from the public format specifications (PNG spec, GIF89a spec,
+BMP BITMAPINFOHEADER layout, RIFF/WAVE, ITU T.81).  The
 encoders exist so the deterministic fixture generator can build blobs
 whose ground truth is stored alongside them; the decoders are the
 operators under test and must reproduce that ground truth from the
@@ -26,6 +25,105 @@ import io
 import math
 import struct
 import wave
+import zlib
+
+# ------------------------------------------------------------------ PNG
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    return b if pb <= pc else c
+
+
+def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
+    """Pure-stdlib PNG decode → (width, height, channels, raw pixels).
+
+    Profile: every 8-bit color type — grayscale (0), truecolor (2),
+    palette (3 — PLTE-expanded to RGB, channels=3), gray+alpha (4) and
+    RGBA (6), no interlace.  Filters 0-4 are all
+    implemented (the spec's full per-row filter set, byte stride =
+    bytes per pixel).  Raises ValueError on anything else — a decode
+    failure routes to a status column, never a crash, in the operator.
+    """
+    if payload[:8] != _PNG_SIG:
+        raise ValueError("not a PNG (bad signature)")
+    pos, width = 8, -1
+    height = channels = -1
+    ctype = -1
+    palette = b""
+    idat = bytearray()
+    while pos + 8 <= len(payload):
+        (length,) = struct.unpack(">I", payload[pos : pos + 4])
+        tag = payload[pos + 4 : pos + 8]
+        data = payload[pos + 8 : pos + 8 + length]
+        pos += 12 + length  # len + tag + data + crc
+        if tag == b"IHDR":
+            width, height, depth, ctype, comp, filt, interlace = struct.unpack(
+                ">IIBBBBB", data
+            )
+            if depth != 8 or ctype not in (0, 2, 3, 4, 6) or comp or filt or interlace:
+                raise ValueError(
+                    f"unsupported PNG profile: depth={depth} color={ctype} "
+                    f"interlace={interlace}"
+                )
+            channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype]
+        elif tag == b"PLTE":
+            if length % 3:
+                raise ValueError("PLTE length not a multiple of 3")
+            palette = data
+        elif tag == b"IDAT":
+            idat += data
+        elif tag == b"IEND":
+            break
+    if width < 0 or not idat:
+        raise ValueError("truncated PNG (no IHDR/IDAT)")
+    if ctype == 3 and not palette:
+        raise ValueError("palette PNG without PLTE")
+    stream = zlib.decompress(bytes(idat))
+    stride = width * channels
+    if len(stream) != height * (stride + 1):
+        raise ValueError("scanline length mismatch")
+    out = bytearray(height * stride)
+    prev = bytes(stride)
+    for y in range(height):
+        ftype = stream[y * (stride + 1)]
+        row = bytearray(stream[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
+        if ftype == 1:
+            for x in range(channels, stride):
+                row[x] = (row[x] + row[x - channels]) & 0xFF
+        elif ftype == 2:
+            for x in range(stride):
+                row[x] = (row[x] + prev[x]) & 0xFF
+        elif ftype == 3:
+            for x in range(stride):
+                a = row[x - channels] if x >= channels else 0
+                row[x] = (row[x] + (a + prev[x]) // 2) & 0xFF
+        elif ftype == 4:
+            for x in range(stride):
+                a = row[x - channels] if x >= channels else 0
+                c = prev[x - channels] if x >= channels else 0
+                row[x] = (row[x] + _paeth(a, prev[x], c)) & 0xFF
+        elif ftype != 0:
+            raise ValueError(f"unknown filter type {ftype}")
+        out[y * stride : (y + 1) * stride] = row
+        prev = bytes(row)
+    if ctype == 3:
+        # palette expansion AFTER unfiltering (filters run on indices,
+        # bpp=1 per the spec); out-of-range indices are hostile bytes
+        n_entries = len(palette) // 3
+        rgb = bytearray(width * height * 3)
+        for i, idx in enumerate(out):
+            if idx >= n_entries:
+                raise ValueError(f"palette index {idx} out of range")
+            rgb[3 * i : 3 * i + 3] = palette[3 * idx : 3 * idx + 3]
+        return width, height, 3, bytes(rgb)
+    return width, height, channels, bytes(out)
+
 
 # --------------------------------------------------------------- GIF LZW
 #
@@ -316,62 +414,10 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, bytes]:
     return channels, sample_rate, len(pcm) // frame_bytes, pcm
 
 
-# ----------------------------------------------------------------- JPEG
-
-
-def encode_jpeg_fixture(width: int, height: int, entropy: bytes) -> bytes:
-    """A syntactically valid JFIF byte stream (SOI, APP0, COM, DQT,
-    SOF0, SOS + FF-stuffed entropy data, EOI) for header-parse tests.
-    The entropy payload is arbitrary deterministic bytes — this encoder
-    does NOT produce decodable pixels; :func:`encode_jpeg` does."""
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + struct.pack(">H", len(body) + 2) + body
-
-    app0 = seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    com = seg(0xFE, b"fixture")
-    dqt = seg(0xDB, b"\x00" + bytes(range(1, 65)))
-    sof0 = seg(
-        0xC0,
-        b"\x08"
-        + struct.pack(">HH", height, width)
-        + b"\x03\x01\x22\x00\x02\x11\x01\x03\x11\x01",
-    )
-    sos = seg(0xDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    stuffed = entropy.replace(b"\xff", b"\xff\x00")
-    return b"\xff\xd8" + app0 + com + dqt + sof0 + sos + stuffed + b"\xff\xd9"
-
-
-def jpeg_dimensions(payload: bytes) -> tuple[int, int, int]:
-    """Marker-walk header parse → (width, height, n_components).  Walks
-    segments by declared length until a SOF0/1/2 frame header (ITU T.81
-    B.2.2); pixel decode is not attempted."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2  # standalone markers
-            continue
-        (size,) = struct.unpack_from(">H", payload, pos + 2)
-        if marker in (0xC0, 0xC1, 0xC2):
-            height, width = struct.unpack_from(">HH", payload, pos + 5)
-            ncomp = payload[pos + 9]
-            return width, height, ncomp
-        if marker == 0xDA:
-            break  # entropy-coded data next; no SOF seen
-        pos += 2 + size
-    raise ValueError("JPEG without SOF frame header")
-
-
 # ------------------------------------------- JPEG baseline coder (T.81)
 #
-# Full SOF0 baseline sequential DCT coder, pure stdlib (round 5 — kills
-# the biggest honest stub, VERDICT r4 item 2): grayscale or YCbCr 4:4:4
-# (no subsampling), 8-bit precision.  The quantization and Huffman
+# Full SOF0 baseline sequential DCT coder, pure stdlib: grayscale or
+# YCbCr 4:4:4 (no subsampling), 8-bit precision.  The quantization and Huffman
 # tables are NOT the Annex K examples — T.81 carries both in the stream
 # (DQT/DHT), so the encoder emits its own deterministic tables and any
 # conformant decoder (including ours) reads them back; this sidesteps

@@ -1,17 +1,14 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
-Round 4 (VERDICT r03 item 5): the decode step is no longer a stub for
-PNG — ``decode_png`` below is a real, pure-stdlib decoder (chunk walk,
-IHDR parse, zlib IDAT inflate, all five per-row filter inverses from the
-public PNG spec), and the gate query value-oracles it: the fixture
-generator (``fixtures.encode_png``) stores the ground-truth dimensions
-and the md5 of the raw pixel bytes alongside each blob, and the Spark
-decode must reproduce them from the blob alone.  Round 5 extends the
-same treatment to JPEG: a full pure-stdlib baseline T.81 coder
-(mediacodecs.encode_jpeg/decode_jpeg) with ground truth from an
-independent numpy reconstruction of the committed coefficients.  Video
-containers get real container metadata only (frame decode needs
-ffmpeg); GIF is the animated format whose frames decode.
+The decoders live in functions/mediacodecs.py and are pure stdlib: PNG
+(chunk walk, IHDR parse, zlib IDAT inflate, all five per-row filter
+inverses), GIF (LZW, every frame), BMP, WAV PCM and baseline T.81 JPEG.
+The gate query value-oracles them: the fixture generator stores the
+ground-truth dimensions and the md5 of the raw pixel bytes alongside
+each blob (``fixtures.encode_png``; for JPEG an independent numpy
+reconstruction of the committed coefficients), and the Spark decode
+must reproduce them from the blob alone.  Video containers get real
+container metadata only (frame decode needs ffmpeg).
 
 At 100 TB, the pattern is: binary blobs stay columnar in parquet, the
 ``mapInPandas`` stage streams Arrow batches (bounded by
@@ -28,102 +25,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Pure-stdlib PNG decode → (width, height, channels, raw pixels).
-
-    Round 5 widens the profile to every 8-bit color type: grayscale
-    (0), truecolor (2), palette (3 — PLTE-expanded to RGB, channels=3),
-    gray+alpha (4) and RGBA (6), no interlace.  Filters 0-4 are all
-    implemented (the spec's full per-row filter set, byte stride =
-    bytes per pixel).  Raises ValueError on anything else — a decode
-    failure routes to a status column, never a crash, in the operator.
-    """
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, width = 8, -1
-    height = channels = -1
-    ctype = -1
-    palette = b""
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        tag = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # len + tag + data + crc
-        if tag == b"IHDR":
-            width, height, depth, ctype, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if depth != 8 or ctype not in (0, 2, 3, 4, 6) or comp or filt or interlace:
-                raise ValueError(
-                    f"unsupported PNG profile: depth={depth} color={ctype} "
-                    f"interlace={interlace}"
-                )
-            channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype]
-        elif tag == b"PLTE":
-            if length % 3:
-                raise ValueError("PLTE length not a multiple of 3")
-            palette = data
-        elif tag == b"IDAT":
-            idat += data
-        elif tag == b"IEND":
-            break
-    if width < 0 or not idat:
-        raise ValueError("truncated PNG (no IHDR/IDAT)")
-    if ctype == 3 and not palette:
-        raise ValueError("palette PNG without PLTE")
-    stream = zlib.decompress(bytes(idat))
-    stride = width * channels
-    if len(stream) != height * (stride + 1):
-        raise ValueError("scanline length mismatch")
-    out = bytearray(height * stride)
-    prev = bytes(stride)
-    for y in range(height):
-        ftype = stream[y * (stride + 1)]
-        row = bytearray(stream[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ftype == 1:
-            for x in range(channels, stride):
-                row[x] = (row[x] + row[x - channels]) & 0xFF
-        elif ftype == 2:
-            for x in range(stride):
-                row[x] = (row[x] + prev[x]) & 0xFF
-        elif ftype == 3:
-            for x in range(stride):
-                a = row[x - channels] if x >= channels else 0
-                row[x] = (row[x] + (a + prev[x]) // 2) & 0xFF
-        elif ftype == 4:
-            for x in range(stride):
-                a = row[x - channels] if x >= channels else 0
-                c = prev[x - channels] if x >= channels else 0
-                row[x] = (row[x] + _paeth(a, prev[x], c)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown filter type {ftype}")
-        out[y * stride : (y + 1) * stride] = row
-        prev = bytes(row)
-    if ctype == 3:
-        # palette expansion AFTER unfiltering (filters run on indices,
-        # bpp=1 per the spec); out-of-range indices are hostile bytes
-        n_entries = len(palette) // 3
-        rgb = bytearray(width * height * 3)
-        for i, idx in enumerate(out):
-            if idx >= n_entries:
-                raise ValueError(f"palette index {idx} out of range")
-            rgb[3 * i : 3 * i + 3] = palette[3 * idx : 3 * idx + 3]
-        return width, height, 3, bytes(rgb)
-    return width, height, channels, bytes(out)
-
 
 # ----------------------------------------------------- mixed-format media
 
@@ -160,6 +61,7 @@ def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         decode_bmp,
         decode_gif,
         decode_jpeg,
+        decode_png,
         decode_wav,
         mp4_metadata,
         sniff_format,

@@ -8,8 +8,9 @@ predicate pushdown on the scan because the UDF consumes exactly one column
 
 :func:`extract_stage` is the one per-turn stage: each turn is tokenized
 once and the token stream feeds every requested policy — ``"main"``
-(functions/extract.py), ``"dom"`` (functions/domextract.py) and
-``"links"`` (functions/links.py).
+(functions/extract.py), ``"dom"`` (functions/domextract.py),
+``"links"`` (functions/links.py) and ``"tokens"`` (the token column,
+functions/display.py).
 
 Scale notes (10^12-turn target, BASELINE.json north_rule):
 
@@ -43,10 +44,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.display import TOKENS, _token_rows
+
 # partitions one conversation's turns can spread over
 SALT_K = 8
 
-OUTPUTS = ("main", "dom", "links")
+OUTPUTS = ("main", "dom", "links", "tokens")
 
 # Spans travel from the Python worker as ONE int64 per span (start<<32 |
 # end) and the projection unpacks them JVM-side to the public
@@ -85,6 +88,7 @@ _OUTPUT_FIELDS = {
         ("dom_n_kept_blocks", IntegerType()),
     ),
     "links": (("links", ArrayType(LINK)),),
+    "tokens": (("tokens", TOKENS),),
 }
 
 
@@ -143,6 +147,8 @@ def _row_builder(outputs: frozenset):
                      for lk in links_from_tokens(tokens)],)
 
         policies.append(links)
+    if "tokens" in outputs:
+        policies.append(lambda tokens: (_token_rows(tokens),))
     null_row = (0, "null_input") + tuple(
         "" if isinstance(t, StringType) else [] if isinstance(t, ArrayType) else 0
         for _, t in _stage_fields(outputs)[2:]
@@ -242,7 +248,7 @@ def extract_stage(
 ) -> DataFrame:
     """transcripts DataFrame → (conv_id, turn_idx, <outputs columns>).
 
-    ``outputs`` is a non-empty subset of ``{"main", "dom", "links"}``:
+    ``outputs`` is a non-empty subset of ``OUTPUTS``:
 
     - ``"main"``: main_text, spans, err_count, parse_status, n_tokens,
       n_blocks, n_kept_blocks (token-stream policy);
@@ -250,7 +256,9 @@ def extract_stage(
       n_kept_blocks — prefixed ``dom_`` when ``"main"`` is also asked
       for (err_count/parse_status are shared: one tokenize);
     - ``"links"``: ``links`` array<struct<link_idx, href, anchor_text,
-      src_start, src_end>> (explode it for the per-link table).
+      src_start, src_end>> (explode it for the per-link table);
+    - ``"tokens"``: ``tokens`` array<TOKEN> (functions/display.py; explode
+      it for the ``next_token`` stream).
 
     One salted exchange, one Arrow UDF stage, whatever the outputs."""
     pruned = df.select("conv_id", "turn_idx", "text")

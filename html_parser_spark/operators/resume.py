@@ -13,19 +13,19 @@ scheme reduces to.  The key scan reads ONLY the two key columns (column
 pruning makes this cheap even on a 10^12-row output table; on Iceberg it
 would also prune by partition).
 
-Cost discipline (round-2 rewrite): the expensive extraction runs EXACTLY
-ONCE, as the write job — no pre-``count()`` over the input, no
-full-output ``.cache()`` (at 10^12 turns those were two extra input
-scans plus an output-sized cache that cannot fit).  Lineage and metrics
-are derived afterwards from the COMMITTED output of this run (tagged
-with ``run_id``): column-pruned scans of the files just written, never a
+Cost discipline: the expensive extraction runs EXACTLY ONCE, as the
+write job — no pre-``count()`` over the input, no full-output
+``.cache()`` (at 10^12 turns those would be two extra input scans plus
+an output-sized cache that cannot fit).  Lineage and metrics are derived
+afterwards from the COMMITTED output of this run (tagged with
+``run_id``): column-pruned scans of the files just written, never a
 recompute of the Python extraction.
 
-Lineage: one row per scan partition of the committed run via
-``mapInPandas`` — (partition_id, key range, turns, main-text chars,
-parse errors).  Each committed write carries the evidence of which data
-it produced; only fixed-width columns cross into Python
-(``length(main_text)`` is computed JVM-side before the UDF).
+Lineage: one row per scan partition of the committed run — (partition_id,
+key range, turns, main-text chars, parse errors) — from built-in
+aggregates grouped on ``spark_partition_id()``, so no column crosses
+into Python.  Each committed write carries the evidence of which data it
+produced.
 """
 
 from __future__ import annotations
@@ -33,9 +33,8 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from typing import Iterator
 
-import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.tables import append_table, read_table
@@ -43,19 +42,23 @@ from .pipeline import extraction_metrics, run_extraction
 
 KEYS = ("conv_id", "turn_idx")
 
-LINEAGE_SCHEMA = (
-    "run_id string, partition_id int, n_turns long, main_text_chars long, "
-    "err_count long, min_conv_id string, max_conv_id string, "
-    "min_turn_idx int, max_turn_idx int"
-)
+# read errors that mean "nothing committed yet": no output path, or a
+# path holding no data files (a first write killed before its job commit
+# leaves only ``_temporary``)
+_NO_OUTPUT = ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def committed_keys(spark: SparkSession, out_path: str) -> DataFrame | None:
-    """Keys already present in the committed output (None if no output)."""
+    """Keys already present in the committed output (None if no output).
+
+    Any other read failure propagates: treating an unreadable output as
+    empty would re-extract and append every committed turn again."""
     try:
         return read_table(spark, out_path).select(*KEYS)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NO_OUTPUT:
+            return None
+        raise
 
 
 def filter_uncommitted(transcripts: DataFrame, done: DataFrame | None) -> DataFrame:
@@ -64,59 +67,19 @@ def filter_uncommitted(transcripts: DataFrame, done: DataFrame | None) -> DataFr
     return transcripts.join(done, list(KEYS), "left_anti")
 
 
-def _lineage_batches(run_id: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        tchars = 0
-        errs = 0
-        min_c = max_c = None
-        min_t = max_t = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            tchars += int(pdf["main_chars"].sum())
-            errs += int(pdf["err_count"].sum())
-            c_lo, c_hi = pdf["conv_id"].min(), pdf["conv_id"].max()
-            t_lo, t_hi = int(pdf["turn_idx"].min()), int(pdf["turn_idx"].max())
-            min_c = c_lo if min_c is None else min(min_c, c_lo)
-            max_c = c_hi if max_c is None else max(max_c, c_hi)
-            min_t = t_lo if min_t is None else min(min_t, t_lo)
-            max_t = t_hi if max_t is None else max(max_t, t_hi)
-        if n:
-            yield pd.DataFrame(
-                [
-                    {
-                        "run_id": run_id,
-                        "partition_id": pid,
-                        "n_turns": n,
-                        "main_text_chars": tchars,
-                        "err_count": errs,
-                        "min_conv_id": min_c,
-                        "max_conv_id": max_c,
-                        "min_turn_idx": min_t,
-                        "max_turn_idx": max_t,
-                    }
-                ]
-            )
-
-    return fn
-
-
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
-    """One lineage row per scan partition of ``extracted``.
-
-    Only (keys, length, err_count) cross the Arrow boundary — the text
-    column itself stays JVM-side."""
-    return extracted.select(
-        "conv_id",
-        "turn_idx",
-        F.length("main_text").alias("main_chars"),
-        "err_count",
-    ).mapInPandas(_lineage_batches(run_id), schema=LINEAGE_SCHEMA)
+    """One lineage row per scan partition of ``extracted``."""
+    return extracted.groupBy(
+        F.spark_partition_id().alias("partition_id")
+    ).agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        F.sum(F.length("main_text")).alias("main_text_chars"),
+        F.sum("err_count").alias("err_count"),
+        F.min("conv_id").alias("min_conv_id"),
+        F.max("conv_id").alias("max_conv_id"),
+        F.min("turn_idx").alias("min_turn_idx"),
+        F.max("turn_idx").alias("max_turn_idx"),
+    ).select(F.lit(run_id).alias("run_id"), "*")
 
 
 def run_resumable(

@@ -6,7 +6,8 @@ pandas UDF), but they complete the UDF/UDAF/UDTF checklist with
 operators that are genuinely useful to a transcript pipeline:
 
 - ``TokenizeUDTF``      — lateral view over per-turn token streams (the
-  table-function form of ``tokenize_udf`` + explode).
+  table-function form of the stage's ``"tokens"`` column + explode,
+  built from the same ``display._token_rows``).
 - ``median_udaf``       — GROUPED_AGG pandas UDAF (Arrow-batched numpy
   median per group; exactly matches DuckDB ``median`` — linear
   interpolation — so it is DuckDB-oracled).
@@ -29,21 +30,11 @@ class TokenizeUDTF:
     """One output row per token of the input turn text (Python UDTF)."""
 
     def eval(self, text: str):  # noqa: D102
+        from ..functions.display import _token_rows
         from ..functions.tokenizer import tokenize
 
-        toks, _status, _err = tokenize(text or "")
-        for pos, t in enumerate(toks):
-            kind = t[0]
-            if kind == "chars":
-                yield pos, kind, None, t[1]
-            elif kind in ("start", "end"):
-                yield pos, kind, t[1], None
-            elif kind == "comment":
-                yield pos, kind, None, t[1]
-            elif kind == "doctype":
-                yield pos, kind, t[1], None
-            else:
-                yield pos, "eof", None, None
+        for pos, t in enumerate(_token_rows(tokenize(text or "")[0])):
+            yield pos, t[0], t[1], t[2]
 
 
 @pandas_udf(DoubleType())

@@ -111,35 +111,25 @@ def read_table(
     return reader.parquet(ref)
 
 
-def read_transcripts(
-    spark: SparkSession, path: str, fmt: str | None = None
-) -> DataFrame:
-    """Read a transcripts table in any supported landing format with the
-    FIXED input_hint schema — never schema inference (a 10^12-row JSON
-    inference pass is a full extra scan, and drifting inferred types
+def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
+    """Read a transcripts table in any supported landing format (by path
+    suffix: ``.json``/``.jsonl``/``.ndjson``, ``.csv``, else parquet) with
+    the FIXED input_hint schema — never schema inference (a 10^12-row
+    JSON inference pass is a full extra scan, and drifting inferred types
     would silently change downstream semantics)."""
-    # NB: CSV cannot round-trip NUL bytes (the parser drops them) — use
-    # parquet/JSON landings for corpora that may contain \x00 in text
-    fmt = fmt or (
-        "json"
-        if path.endswith((".json", ".jsonl", ".ndjson"))
-        else "csv"
-        if path.endswith(".csv")
-        else "parquet"
-    )
-    if fmt == "parquet":
-        return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
-    if fmt == "json":
-        return spark.read.schema(TRANSCRIPT_SCHEMA).json(path)
-    if fmt == "csv":
+    reader = spark.read.schema(TRANSCRIPT_SCHEMA)
+    if path.endswith((".json", ".jsonl", ".ndjson")):
+        return reader.json(path)
+    if path.endswith(".csv"):
+        # NB: CSV cannot round-trip NUL bytes (the parser drops them) —
+        # use parquet/JSON landings for corpora that may contain \x00
         return (
-            spark.read.schema(TRANSCRIPT_SCHEMA)
-            .option("header", "true")
+            reader.option("header", "true")
             .option("multiLine", "true")
             .option("escape", '"')
             .csv(path)
         )
-    raise ValueError(f"unsupported transcript format: {fmt}")
+    return reader.parquet(path)
 
 
 def append_table(df: DataFrame, ref: str) -> None:

@@ -8,9 +8,9 @@ from html_parser_spark.functions.display import (
     display_expr,
     stream_to_display,
     token_to_display,
-    tokenize_udf,
 )
 from html_parser_spark.functions.tokenizer import tokenize
+from html_parser_spark.operators.pipeline import extract_stage
 
 
 def test_display_quirks_pure_python():
@@ -28,23 +28,22 @@ def test_display_doctype_always_literal():
 
 def test_spark_display_matches_python(spark):
     df = spark.read.parquet(ensure_transcripts(0.001)).limit(200)
+    texts = {(r.conv_id, r.turn_idx): r.text for r in df.collect()}
     rows = (
-        df.select("conv_id", "turn_idx", "text")
-        .withColumn("tokens", tokenize_udf(F.col("text")))
+        extract_stage(df, {"tokens"}, num_partitions=2)
         .withColumn("disp", display_expr(F.col("tokens")))
         .collect()
     )
     assert len(rows) == 200
     for r in rows:
-        toks, _, _ = tokenize(r.text)
+        toks, _, _ = tokenize(texts[(r.conv_id, r.turn_idx)])
         assert r.disp == stream_to_display(toks), (r.conv_id, r.turn_idx)
 
 
 def test_explode_is_next_token(spark):
     df = spark.read.parquet(ensure_transcripts(0.001)).limit(50)
-    exploded = (
-        df.select("conv_id", "turn_idx", tokenize_udf(F.col("text")).alias("tokens"))
-        .select("conv_id", "turn_idx", F.posexplode("tokens").alias("pos", "tok"))
+    exploded = extract_stage(df, {"tokens"}, num_partitions=2).select(
+        "conv_id", "turn_idx", F.posexplode("tokens").alias("pos", "tok")
     )
     counts = {
         (r.conv_id, r.turn_idx): r["cnt"]

@@ -12,6 +12,9 @@ it by keyword, passes enough positionals to reach it, or unpacks ``*`` /
 Every command line in ``tools/`` and ``bench.py`` gets the same census:
 a flag is either a deployment setting or passed by some test or by
 another script, never a second spelling of a package constant.
+
+A third census looks for copied code: no two functions in the package,
+``tools/`` or the entry module have the same body.
 """
 import ast
 import glob
@@ -128,3 +131,35 @@ def test_every_job_flag_is_deployment_or_tested():
         f"{len(untested)} flags are neither deployment settings nor passed by "
         "a test or another script; read the package constant instead:\n  "
         + "\n  ".join(untested))
+
+
+# Bodies this small (a one-line return, a guard) may repeat by design.
+MIN_BODY_NODES = 25
+PROGRAM = DEFINED + sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"),
+                                     recursive=True))
+
+
+def duplicate_bodies():
+    """Groups of ``path:line name`` whose function bodies (docstring
+    stripped, at least ``MIN_BODY_NODES`` AST nodes) are identical."""
+    by_body = {}
+    for path in PROGRAM:
+        for fn in ast.walk(_parse(path)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = fn.body
+            if ast.get_docstring(fn) is not None:
+                body = body[1:]
+            if sum(1 for stmt in body for _ in ast.walk(stmt)) < MIN_BODY_NODES:
+                continue
+            key = "\n".join(ast.dump(stmt) for stmt in body)
+            by_body.setdefault(key, []).append(
+                f"{os.path.relpath(path, REPO)}:{fn.lineno} {fn.name}")
+    return [sites for sites in by_body.values() if len(sites) > 1]
+
+
+def test_no_function_body_is_duplicated():
+    dups = duplicate_bodies()
+    assert not dups, (
+        f"{len(dups)} function bodies are written more than once; keep one "
+        "and import it:\n  " + "\n  ".join(", ".join(d) for d in dups))

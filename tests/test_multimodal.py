@@ -12,7 +12,7 @@ import struct
 import pytest
 
 from html_parser_spark.fixtures import encode_png
-from html_parser_spark.operators.multimodal import decode_png
+from html_parser_spark.functions.mediacodecs import decode_png
 
 
 def test_round_trip_all_filters_and_color_types():
@@ -121,20 +121,6 @@ def test_wav_skips_unknown_chunks():
     assert decode_wav(bytes(w)) == (1, 8000, 100, pcm)
 
 
-def test_jpeg_header_parse_and_honest_pixel_stub():
-    from html_parser_spark.functions.mediacodecs import (
-        encode_jpeg_fixture,
-        jpeg_dimensions,
-    )
-
-    rng = random.Random(6)
-    entropy = bytes(rng.randrange(256) for _ in range(120))
-    j = encode_jpeg_fixture(321, 77, entropy)
-    assert jpeg_dimensions(j) == (321, 77, 3)
-    with pytest.raises(ValueError, match="SOI"):
-        jpeg_dimensions(b"GIF89a")
-
-
 def test_jpeg_baseline_round_trip_matches_reference_reconstruction():
     """Round 5: the pure-Python baseline T.81 decoder must reproduce,
     bit for bit, the independent numpy reconstruction of the quantized
@@ -144,7 +130,6 @@ def test_jpeg_baseline_round_trip_matches_reference_reconstruction():
     from html_parser_spark.functions.mediacodecs import (
         decode_jpeg,
         encode_jpeg,
-        jpeg_dimensions,
         sniff_format,
     )
 
@@ -161,7 +146,6 @@ def test_jpeg_baseline_round_trip_matches_reference_reconstruction():
             )
         payload, coefs = encode_jpeg(raw, w, h, ch, return_coefs=True)
         assert sniff_format(payload) == "jpeg"
-        assert jpeg_dimensions(payload) == (w, h, ch)
         assert decode_jpeg(payload) == (w, h, ch, _jpeg_reconstruct(coefs, w, h, ch))
 
 
@@ -302,15 +286,12 @@ def test_decoders_never_raise_unexpected_on_fuzz_bytes():
         decode_bmp,
         decode_gif,
         decode_jpeg,
+        decode_png,
         decode_wav,
-        jpeg_dimensions,
         mp4_metadata,
         webp_metadata,
     )
-    from html_parser_spark.operators.multimodal import (
-        _DECODE_ERRORS,
-        decode_png,
-    )
+    from html_parser_spark.operators.multimodal import _DECODE_ERRORS
 
     rng = random.Random(1234)
     magics = [
@@ -318,7 +299,7 @@ def test_decoders_never_raise_unexpected_on_fuzz_bytes():
         (b"GIF89a", decode_gif),
         (b"BM", decode_bmp),
         (b"RIFF\x10\x00\x00\x00WAVE", decode_wav),
-        (b"\xff\xd8\xff", jpeg_dimensions),
+        (b"\xff\xd8\xff", decode_jpeg),
         (b"\xff\xd8\xff", decode_jpeg),
         (b"\x00\x00\x00\x18ftyp", mp4_metadata),
         (b"RIFF\x20\x00\x00\x00AVI ", avi_metadata),

@@ -161,6 +161,11 @@ def test_edge_inputs_flow_through(spark, check_stage):
     """NULL / empty / whitespace / markup-only / huge-token turns survive
     the full distributed path with sane outputs, for every output set
     (the NULL row is built from the requested outputs)."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.functions.display import display_expr, stream_to_display
+    from html_parser_spark.functions.tokenizer import tokenize
+
     rows = [
         ("c0", 0, None),
         ("c0", 1, ""),
@@ -182,6 +187,20 @@ def test_edge_inputs_flow_through(spark, check_stage):
     texts = {(c, t): text for c, t, text in rows}
     for outputs in ({"main"}, {"dom"}, {"main", "links"}, {"main", "dom", "links"}):
         check_stage(extract_stage(df, outputs, num_partitions=2), texts, outputs)
+
+    # the token column: NULL gets the stage's empty array, every other
+    # turn its whole stream (count and Display equal the tokenizer's)
+    tok = extract_stage(df, {"main", "tokens"}, num_partitions=2).select(
+        "turn_idx",
+        "parse_status",
+        F.size("tokens").alias("n"),
+        display_expr(F.col("tokens")).alias("disp"),
+    )
+    for r in tok.collect():
+        text = rows[r.turn_idx][2]
+        toks = [] if text is None else tokenize(text)[0]
+        assert (r.n, r.disp) == (len(toks), stream_to_display(toks)), r.turn_idx
+    assert tok.filter(F.col("parse_status") == "null_input").count() == 1
 
 
 def test_assemble_conversations_orders_turns(spark):

@@ -53,6 +53,30 @@ def test_lineage_covers_all_turns(spark, transcripts, tmp_path_factory):
     assert metrics.filter(F.col("parse_status") == "ok").count() == 1
 
 
+def test_unreadable_output_stops_the_run(spark, transcripts, tmp_path):
+    """Only a missing output, or one holding no data files (a first write
+    killed before its commit leaves just ``_temporary``), reads as
+    "nothing committed".  An output that cannot be read stops the run:
+    re-extracting the whole input would append a duplicate of every
+    committed turn."""
+    from py4j.protocol import Py4JJavaError
+
+    killed = tmp_path / "killed"
+    (killed / "extracted" / "_temporary" / "0").mkdir(parents=True)
+    r = run_resumable(spark, transcripts, str(killed), num_partitions=4)
+    assert r["n_written"] == transcripts.count()
+
+    out = tmp_path / "corrupt"
+    extracted = out / "extracted"
+    extracted.mkdir(parents=True)
+    (extracted / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        run_resumable(spark, transcripts, str(out), num_partitions=4)
+    assert os.listdir(extracted) == ["part-00000.parquet"]
+    assert not (out / "lineage").exists()
+    assert not (out / "metrics").exists()
+
+
 def test_filter_uncommitted_none_passthrough(transcripts):
     assert filter_uncommitted(transcripts, None) is transcripts
 

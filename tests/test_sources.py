@@ -53,7 +53,7 @@ def test_multiformat_transcripts_roundtrip(spark, tmp_path_factory):
         .collect()
     }
     for path, fmt in ((jdir, "json"), (cdir, "csv")):
-        df = read_transcripts(spark, path, fmt)
+        df = read_transcripts(spark, path)
         got = {
             (r.conv_id, r.turn_idx): r.main_text
             for r in run_extraction(df, num_partitions=4).collect()

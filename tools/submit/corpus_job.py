@@ -4,7 +4,7 @@
     bash tools/submit/make_zip.sh                    # → dist/engine.zip
     spark-submit --driver-memory 16g --py-files dist/engine.zip \
         tools/submit/corpus_job.py \
-        --input  <dir containing transcript parquet> \
+        --input  <transcripts path: parquet, or .json/.jsonl/.csv> \
         --work   <scratch dir for stage checkpoints> \
         --output <output dir> \
         [--shuffle-partitions N] [--resume] [--bucket-docs N]
@@ -53,7 +53,7 @@ import time
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True, help="transcripts parquet dir")
+    ap.add_argument("--input", required=True, help="transcripts path (format by suffix)")
     ap.add_argument("--work", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -106,6 +106,7 @@ def main() -> None:
     from html_parser_spark.operators.pipeline import extract_stage
     from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
+    from html_parser_spark.sources.tables import read_transcripts
 
     # zstd shuffle/spill blocks: the sf10 dedup stage's transient scratch
     # is ~38 GB with zstd against >80 GB with lz4
@@ -195,11 +196,11 @@ def main() -> None:
         f"{d1}/documents.parquet",
         f"{args.output}/links",
     ):
-        n_turns = spark.read.parquet(args.input).count()
+        n_turns = read_transcripts(spark, args.input).count()
         n1 = read_docs("extracted").count()
         record.stage("extract", n_turns, n1, t0, skipped=True)
     else:
-        transcripts = spark.read.parquet(args.input)
+        transcripts = read_transcripts(spark, args.input)
         n_turns = transcripts.count()
         extracted = extract_stage(transcripts, {"main", "links"})
         extracted.write.mode("overwrite").parquet(

@@ -4,7 +4,7 @@
     bash tools/submit/make_zip.sh                    # → dist/engine.zip
     spark-submit --py-files dist/engine.zip \
         tools/submit/extract_job.py \
-        --input  <transcripts parquet/Iceberg path> \
+        --input  <transcripts path: parquet, or .json/.jsonl/.csv> \
         --output <output dir> \
         [--num-partitions N] [--shuffle-partitions N]
 
@@ -31,13 +31,14 @@ def main() -> None:
 
     from html_parser_spark.operators.resume import run_resumable
     from html_parser_spark.plans.session import get_spark
+    from html_parser_spark.sources.tables import read_transcripts
 
     spark = get_spark(
         app_name="transcript-extraction",
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    transcripts = spark.read.parquet(args.input)
+    transcripts = read_transcripts(spark, args.input)
     summary = run_resumable(
         spark, transcripts, args.output, num_partitions=args.num_partitions
     )

@@ -6,7 +6,7 @@
         tools/submit/incremental_job.py \
         --corpus <dir with documents.parquet (an existing corpus,
                   e.g. corpus_job's work/deduped)> \
-        --batch-input <transcripts parquet for the NEW crawl/ingest> \
+        --batch-input <transcripts path for the NEW crawl/ingest> \
         --output <dir for decisions + appended artifacts> \
         [--ingest-label ingest-001] [--shuffle-partitions N]
 
@@ -46,7 +46,7 @@ import time
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--corpus", required=True, help="dir with documents.parquet")
-    ap.add_argument("--batch-input", required=True, help="transcripts parquet dir")
+    ap.add_argument("--batch-input", required=True, help="transcripts path (format by suffix)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--ingest-label", default="ingest-001")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -59,6 +59,7 @@ def main() -> None:
     from html_parser_spark.operators.pipeline import run_extraction
     from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
+    from html_parser_spark.sources.tables import read_transcripts
 
     spark = get_spark(
         app_name="incremental-ingest",
@@ -86,7 +87,7 @@ def main() -> None:
 
     # 2. EXTRACT — new batch transcripts → documents with salted ids
     t0 = time.time()
-    transcripts = spark.read.parquet(args.batch_input)
+    transcripts = read_transcripts(spark, args.batch_input)
     n_turns = transcripts.count()
     batch_docs = (
         run_extraction(transcripts)
