@@ -17,11 +17,7 @@ operator in the Boilerpipe / jusText family (PAPERS.md):
    - ``link_density``  = chars under <a> / block chars       (jusText),
    - ``boiler``        = any ancestor-or-self whose class/id matches the
      boilerplate lexicon, or that is a dropped container
-     (script/style/nav/aside/footer/…)                 (tag/class prior),
-   - ``stopword_density`` = stopword tokens / tokens (jusText's context
-     signal; multilingual union of the engine's langid lists) — reported
-     per block by :func:`score_blocks` only; the keep decision stays on
-     the three structural signals so existing goldens are stable.
+     (script/style/nav/aside/footer/…)                 (tag/class prior).
 3. A block is kept iff it has text, is not boiler, ``link_density <
    DEFAULT_MAX_LINK_DENSITY`` and ``text_density >=
    DEFAULT_MIN_TEXT_DENSITY``.
@@ -33,15 +29,8 @@ DOM text rendering would).
 
 from __future__ import annotations
 
-import re
-
 from .extract import BLOCK_TAGS, DROP_TAGS, _is_boiler
 from .treebuilder import Element, parse_html
-from .stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR
-
-_STOPWORDS = frozenset(STOP_EN) | frozenset(STOP_FR) | frozenset(STOP_DE) | frozenset(STOP_ES)
-
-_WS_RUN = re.compile(r"\s+")
 
 # one membership probe instead of two on the per-element segmentation path
 _BLOCK_OR_DROP = BLOCK_TAGS | DROP_TAGS
@@ -62,7 +51,7 @@ class _Block:
         self.drop = drop
 
     def text(self) -> str:
-        # split()/join ≡ _WS_RUN.sub(" ", …).strip(): re \s and
+        # split()/join ≡ re.sub(r"\s+", " ", …).strip(): re \s and
         # str.isspace match the same codepoint set (checked exhaustively
         # over all 0x110000 codepoints, BENCH.md round-4 continuation)
         return " ".join("".join(self.parts).split())
@@ -119,39 +108,6 @@ def _collect_blocks(doc: Element) -> list[_Block]:
     return blocks
 
 
-def score_blocks(doc: Element) -> list[dict]:
-    """Flatten the DOM into scored text blocks (document order), every
-    signal of the module docstring per block, ``stopword_density``
-    included.  This is the inspection form the tests pin the block
-    scores through; the extraction path never calls it
-    (:func:`dom_extract_from_tree` reads :func:`_collect_blocks`
-    directly and skips the stopword pass, which the keep decision does
-    not use)."""
-    blocks = _collect_blocks(doc)
-    out = []
-    for b in blocks:
-        text = b.text()
-        if not text:
-            continue
-        n = len(text)
-        toks = text.lower().split()
-        stop_hits = sum(1 for w in toks if w in _STOPWORDS)
-        stop_density = stop_hits / len(toks) if toks else 0.0
-        out.append(
-            {
-                "text": text,
-                "spans": list(b.spans),
-                "n_chars": n,
-                "n_tags": b.tags,
-                "text_density": n / (1.0 + b.tags),
-                "link_density": min(1.0, b.link_chars / n),
-                "stopword_density": stop_density,
-                "boiler": b.boiler or b.drop,
-            }
-        )
-    return out
-
-
 def dom_extract(text: str) -> dict:
     """Parse + tree-build + score.  Returns the same contract keys as
     :func:`extract.extract`: ``spans`` are the source character ranges of
@@ -176,10 +132,6 @@ def dom_extract_from_tokens(tokens) -> dict:
 
 
 def dom_extract_from_tree(doc: Element, status: str = "ok", err: int = 0) -> dict:
-    # consume raw _Block records directly — same decisions as filtering
-    # score_blocks output on the structural signals, without the
-    # stopword pass or the per-block dict + spans copy the hot
-    # extraction path never reads
     blocks = _collect_blocks(doc)
     parts: list[str] = []
     spans: list = []

@@ -20,17 +20,16 @@ Cluster resolution (:func:`dedup_cluster_keep_list`) unions the
 verified MinHash and SimHash edges of :func:`near_dup_edges` and labels
 components with the one min-label propagation loop
 (:func:`_propagate_min_labels`); the same loop resolves the distinct
-sketch graph inside :func:`simhash_component_edges`.  Incremental
+sketch graph inside :func:`simhash_component_edges_of`.  Incremental
 ingest has one body, :func:`incremental_dedup_against`;
 :func:`incremental_dedup` is its single-table front.
 
 The corpus-text primitives live here, once each, and every corpus
 operator (dedup, :mod:`.textstats`, :mod:`.chunking`) calls them: the
 normalizer :func:`_norm`, the word n-gram builder :func:`word_ngrams`,
-the banded LSH self-join :func:`_banded_pairs`, the exact-Jaccard
-verify :func:`_verify_candidates` and the sampled window fingerprints
-:func:`_sampled_windows`.  The DuckDB ``*_sql`` twins spell their own
-formulations and stay independent of them.
+the banded LSH self-join :func:`_banded_pairs` and the exact-Jaccard
+verify :func:`_verify_candidates`.  The DuckDB ``*_sql`` twins spell
+their own formulations and stay independent of them.
 
 Parity rule for SQL-oracled ops: hashing is md5 hex (identical in Spark
 and DuckDB), min over hex strings is lexicographic in both, shingling is
@@ -68,9 +67,8 @@ GATE_N_BANDS = 4
 # Upper bound on the rows of an id table broadcast as a join build
 # side: candidate members in the verify semi-join (_verify_candidates),
 # (sh64, comp) labels in the sketch label propagation
-# (_sketch_components), shared fingerprints in the substring-span
-# semi-join (shared_substring_spans), distinct eval grams in the
-# decontamination semi-join (decontaminate).  50M int64 ids ≈ 400 MB
+# (_sketch_components), distinct eval grams in the decontamination
+# semi-join (decontaminate).  50M int64 ids ≈ 400 MB
 # pre-serialization (the labels twice that; an 8-gram row is ~50 bytes,
 # so ~2.5 GB) — under the 8 GB broadcast hard cap with headroom for the
 # hashed-relation overhead; past it each degrades to a shuffled form
@@ -172,11 +170,8 @@ SHINGLES_SQL = f"""
 """
 
 
-def minhash_signatures(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = N_HASHES,
-    hash_family: str = "md5",
+def minhash_signatures_of(
+    docs: DataFrame, n_hashes: int = N_HASHES, hash_family: str = "md5"
 ) -> DataFrame:
     """Per-doc MinHash signature: for seed s, min over shingles of
     hash(s, shingle).
@@ -214,18 +209,6 @@ def minhash_signatures(
       S-curve (tests/test_dedup_fast_family.py pins both recall at
       J≥0.9 and verify-stage precision).
     """
-    return minhash_signatures_of(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n_hashes, hash_family
-    )
-
-
-def minhash_signatures_of(
-    docs: DataFrame, n_hashes: int = N_HASHES, hash_family: str = "md5"
-) -> DataFrame:
-    """DataFrame-input core of :func:`minhash_signatures` — same two
-    hash families, for callers whose documents don't live at a
-    ``sf_dir`` (the incremental-ingest job's freshly extracted batch,
-    a stored corpus read through the table seam)."""
     if hash_family == "fast":
         rows = docs.select("doc_id", F.explode(_shingles()).alias("s"))
         base = rows.select(
@@ -335,7 +318,10 @@ def minhash_candidates_of(
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
 ) -> DataFrame:
-    """DataFrame-input core of :func:`minhash_candidates`."""
+    """LSH candidate pairs (doc_a < doc_b) of ``docs`` (doc_id, text):
+    docs sharing ≥1 band key.  A bucket of k docs yields k(k−1)/2 pairs;
+    cluster resolution collapses exact-text groups first
+    (:func:`near_dup_edges`) so its pair count stays linear in docs."""
     return _banded_pairs(
         minhash_band_keys(
             minhash_signatures_of(docs, n_hashes, hash_family),
@@ -344,16 +330,6 @@ def minhash_candidates_of(
             hash_family,
         )
     )
-
-
-def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs (doc_a < doc_b) — docs sharing ≥1 band key.
-
-    NOTE this is the full-pair REPORTING op: a bucket of k docs yields
-    k(k−1)/2 pairs by contract.  Cluster resolution never consumes it —
-    :func:`near_dup_edges` collapses exact-text groups first so pair
-    count stays linear in docs (BENCH.md round 4, sf10 postmortem)."""
-    return minhash_candidates_of(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _band_structs_sql(n_hashes: int, n_bands: int) -> str:
@@ -472,10 +448,10 @@ def ngram_jaccard(
     stage of MinHash dedup).  Only bucket collisions are scored — never
     the full cross product.
 
-    Like :func:`minhash_candidates` this is the full-pair REPORTING op
-    (a k-doc exact-dup group contributes k(k−1)/2 scored pairs by
-    contract); cluster resolution goes through :func:`near_dup_edges`,
-    which collapses exact-text groups before LSH."""
+    This is the full-pair REPORTING op (a k-doc exact-dup group
+    contributes k(k−1)/2 scored pairs by contract); cluster resolution
+    goes through :func:`near_dup_edges`, which collapses exact-text
+    groups before LSH."""
     return ngram_jaccard_of(
         spark.read.parquet(f"{sf_dir}/documents.parquet"),
         threshold,
@@ -600,17 +576,9 @@ def _simhash_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(out)
 
 
-def simhash_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id → 64-bit SimHash sketch (hex).  Near-dup scan pairs docs
-    whose sketches differ in ≤3 bits; at scale, bucket on 16-bit sketch
-    quarters (pigeonhole: any ≤3-bit-different pair shares a quarter)."""
-    return simhash_sketches_of(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-
-
 def simhash_sketches_of(docs: DataFrame) -> DataFrame:
-    """DataFrame-input core of :func:`simhash_sketches`.  The sketch is
+    """doc_id → 64-bit SimHash sketch (hex) of ``docs`` (doc_id, text);
+    near-duplicates differ in ≤``MAX_HAMMING`` bits.  The sketch is
     a function of ``ascii_words(text.lower())`` word counts, which is
     invariant under the exact-dedup normalization (``_norm`` collapses
     the SAME whitespace class ``ascii_words`` splits on), so callers
@@ -620,7 +588,7 @@ def simhash_sketches_of(docs: DataFrame) -> DataFrame:
 
 
 def simhash_sketches_sql() -> str:
-    """DuckDB twin of :func:`simhash_sketches` — md5 bit-twiddling in SQL.
+    """DuckDB twin of :func:`simhash_sketches_of` — md5 bit-twiddling in SQL.
 
     Mirrors simhash64 exactly: per word, the first 8 bytes of md5 (hex
     substring parsed as UBIGINT), then a +1/-1 vote per bit position and
@@ -658,9 +626,11 @@ def simhash_sketches_sql() -> str:
 
 
 def simhash_near_dups_sql() -> str:
-    """DuckDB twin of :func:`simhash_near_dups` — the same pigeonhole
-    quarter bucketing and xor+bit_count scoring over the oracled
-    sketches."""
+    """SimHash near-duplicate doc pairs within ``MAX_HAMMING`` bits over
+    the oracled sketches: the classic 16-bit-quarter pigeonhole
+    bucketing and xor+bit_count scoring.  The cluster twin takes
+    components over these full pairs; Spark's component-equivalent star
+    edges (:func:`simhash_component_edges_of`) must match them."""
     base = simhash_sketches_sql()
     return f"""
     WITH sk AS ({base}),
@@ -736,7 +706,7 @@ def near_dup_edges(
     candidates that PASS the exact-Jaccard verify stage at
     ``JACCARD_THRESHOLD``, unioned with the SimHash
     COMPONENT-EQUIVALENT edge set within ``MAX_HAMMING``
-    (:func:`simhash_component_edges` — stars over identical-sketch
+    (:func:`simhash_component_edges_of` — stars over identical-sketch
     groups plus representative edges, O(docs + sketch pairs) instead of
     the O(k²)-per-group full pair clique; connected components are
     provably identical, which is all cluster resolution consumes).
@@ -966,81 +936,6 @@ def _pigeonhole_keys(n_blocks: int, max_hamming: int):
     return keys
 
 
-def _sketch_pairs(uniq: DataFrame, max_hamming: int, n_blocks: int) -> DataFrame:
-    """Distinct (sa, sb) sketch-VALUE pairs within ``max_hamming`` bits,
-    sa < sb, from a frame of distinct ``sh64`` values — the pigeonhole
-    equi self-join runs over sketch values, never over docs, so a
-    million docs sharing one template sketch cost one row here."""
-    keyed = uniq.select(
-        "sh64",
-        F.explode(F.array(*_pigeonhole_keys(n_blocks, max_hamming))).alias("k"),
-    )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k")) & (F.col("a.sh64") < F.col("b.sh64")),
-        )
-        .select(F.col("a.sh64").alias("sa"), F.col("b.sh64").alias("sb"))
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return cand.withColumn("hamming", ham.cast("int")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def simhash_near_dups(
-    spark: SparkSession, sf_dir: str, n_blocks: int = 4
-) -> DataFrame:
-    """SimHash near-duplicate DOC pairs within ``MAX_HAMMING`` bits.
-
-    Candidates come from the generalized pigeonhole bucketing over
-    DISTINCT sketch values (:func:`_pigeonhole_keys` — never a cross
-    product, never per-doc fan-out), the exact Hamming distance is
-    computed JVM-side with xor + bit_count, and doc pairs are expanded
-    from the surviving sketch pairs plus the identical-sketch groups
-    (hamming 0).  Output is invariant in ``n_blocks`` (the filter is
-    exact); the DuckDB twin keeps the classic quarter formulation."""
-    sk = _swap_persist("near_dups_sk", simhash_sketches(spark, sf_dir).select(
-        "doc_id", _sh64().alias("sh64")
-    ))
-    uniq = sk.select("sh64").distinct()
-    pairs = _sketch_pairs(uniq, MAX_HAMMING, n_blocks)
-    # cross-sketch doc pairs: expand each surviving sketch pair through
-    # the docs carrying those sketches
-    cross = (
-        pairs.join(sk.withColumnRenamed("doc_id", "da"), pairs["sa"] == sk["sh64"])
-        .drop("sh64")
-        .join(
-            sk.withColumnRenamed("doc_id", "db").withColumnRenamed("sh64", "shb"),
-            F.col("sb") == F.col("shb"),
-        )
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "hamming",
-        )
-    )
-    # identical-sketch doc pairs (hamming 0): all pairs within each
-    # sketch group — O(k²) per group by CONTRACT of this reporting op;
-    # cluster resolution uses simhash_component_edges' O(k) stars instead
-    g = sk.alias("g1").join(
-        sk.alias("g2"),
-        (F.col("g1.sh64") == F.col("g2.sh64"))
-        & (F.col("g1.doc_id") < F.col("g2.doc_id")),
-    ).select(
-        F.col("g1.doc_id").alias("doc_a"),
-        F.col("g2.doc_id").alias("doc_b"),
-        F.lit(0).alias("hamming"),
-    )
-    return (
-        cross.unionByName(g)
-        .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 def _sketch_components(nodes: DataFrame) -> DataFrame:
     """Connected components of the DISTINCT-sketch graph (vertices =
     sh64 values, edges = pairs within ``MAX_HAMMING`` bits) WITHOUT
@@ -1095,9 +990,12 @@ def _sketch_components(nodes: DataFrame) -> DataFrame:
             keyed_static.unpersist()
 
 
-def simhash_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Component-EQUIVALENT simhash edge set for cluster resolution:
-    O(docs) stars, never pair cliques.  Two collapses compose:
+def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
+    """Component-EQUIVALENT simhash edge set for cluster resolution
+    over a ``(doc_id, sh64)`` frame: O(docs) stars, never pair cliques.
+    :func:`near_dup_edges` feeds it sketches of one representative per
+    distinct normalized text, so the Python sketch UDF runs once per
+    distinct text, not once per doc.  Two collapses compose:
 
     1. docs sharing a sketch attach to the group's min-doc_id
        representative by a STAR (identical sketches are hamming-0
@@ -1111,22 +1009,13 @@ def simhash_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
        attaches to its sketch-component's min-doc_id by a second star.
 
     Connected components over stars(1) ∪ stars(2) equal components
-    over the full :func:`simhash_near_dups` pair set: a full-graph
-    edge (x, y) exists iff their sketches are within ``MAX_HAMMING``,
-    which is exactly when rep(x) and rep(y) share a sketch component —
-    and both are then starred to the same component representative.
-    Every edge here links docs whose sketches are connected through
-    verified ≤``MAX_HAMMING`` hops, so no false merges are added."""
-    return simhash_component_edges_of(
-        simhash_sketches(spark, sf_dir).select("doc_id", _sh64().alias("sh64"))
-    )
-
-
-def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
-    """Core of :func:`simhash_component_edges` over a ``(doc_id, sh64)``
-    frame — :func:`near_dup_edges` feeds it sketches of one
-    representative per distinct normalized text, so the Python sketch
-    UDF runs once per distinct text, not once per doc."""
+    over the full pair set (every doc pair within ``MAX_HAMMING``
+    bits, :func:`simhash_near_dups_sql`): a full-graph edge (x, y)
+    exists iff their sketches are within ``MAX_HAMMING``, which is
+    exactly when rep(x) and rep(y) share a sketch component — and both
+    are then starred to the same component representative.  Every edge
+    here links docs whose sketches are connected through verified
+    ≤``MAX_HAMMING`` hops, so no false merges are added."""
     sk = _swap_persist("component_edges_sk", sk)
     groups = _swap_persist(
         "component_edges_groups",
@@ -1397,44 +1286,6 @@ def incremental_dedup_against(
 # ------------------------------------------- substring-level (winnowing)
 
 
-def _sampled_windows(
-    docs: DataFrame, window: int, sample_prefix: str
-) -> DataFrame:
-    """Sampled window fingerprints of ``docs`` (doc_id, text) as
-    ``(doc_id, start, h)`` rows: ``h`` is the md5 of the ``window``-char
-    window starting at 1-based ``start`` in the normalized text, kept
-    when it begins with ``sample_prefix``.  Texts shorter than
-    ``window`` yield no rows.
-
-    Generate barrier (same CollapseProject lesson as the repetition
-    filters, textstats.py): the normalized text is materialized ONCE per
-    row — referenced inline, the regexp_replace would re-run inside the
-    transform lambda for every window position (measured: 20.5 s → 2.5 s
-    at sf0.1 for the identical result)."""
-    normed = docs.select(
-        "doc_id",
-        F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
-    ).select("doc_id", F.col("b.t").alias("t"))
-    t = F.col("t")
-    n_win = F.length(t) - window + 1
-    wins = F.when(
-        n_win < 1,
-        F.array().cast("array<struct<i:int,h:string>>"),
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_win),
-            lambda i: F.struct(
-                i.cast("int").alias("i"),
-                F.md5(t.substr(i, F.lit(window))).alias("h"),
-            ),
-        )
-    )
-    sel = F.filter(wins, lambda w: w["h"].startswith(sample_prefix))
-    return normed.select("doc_id", F.explode(sel).alias("w")).select(
-        "doc_id", F.col("w.i").alias("start"), F.col("w.h").alias("h")
-    )
-
-
 def shared_substrings(
     spark: SparkSession,
     sf_dir: str,
@@ -1469,11 +1320,29 @@ def shared_substrings(
     the one hash both engines compute identically (CLAUDE.md
     cross-engine contract).
     """
-    hits = _sampled_windows(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), window, sample_prefix
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # Generate barrier (same CollapseProject lesson as the repetition
+    # filters, textstats.py): the normalized text is materialized ONCE
+    # per row — referenced inline, the regexp_replace would re-run inside
+    # the transform lambda for every window position (measured: 20.5 s →
+    # 2.5 s at sf0.1 for the identical result)
+    normed = docs.select(
+        "doc_id",
+        F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
+    ).select("doc_id", F.col("b.t").alias("t"))
+    t = F.col("t")
+    n_win = F.length(t) - window + 1
+    # md5 of every window, 1-based start; texts shorter than ``window``
+    # have none
+    wins = F.when(n_win < 1, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), n_win),
+            lambda i: F.md5(t.substr(i, F.lit(window))),
+        )
     )
+    sel = F.filter(wins, lambda h: h.startswith(sample_prefix))
     per_doc = (
-        hits.select("doc_id", "h")
+        normed.select("doc_id", F.explode(sel).alias("h"))
         .repartition(F.col("h"))
         .groupBy("h", "doc_id")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -1506,121 +1375,4 @@ def shared_substrings_sql() -> str:
            CAST(count(*) AS BIGINT) AS n_occ
     FROM sel GROUP BY h HAVING count(DISTINCT doc_id) > 1
     ORDER BY n_docs DESC, n_occ DESC, h ASC
-    """
-
-
-def shared_substring_spans(
-    spark: SparkSession,
-    sf_dir: str,
-    window: int = SUBSTRING_WINDOW,
-    sample_prefix: str = SUBSTRING_SAMPLE_PREFIX,
-) -> DataFrame:
-    """The cutting-pass companion to :func:`shared_substrings`: per
-    document, the merged character ranges covered by cross-document
-    repeated windows — ``(doc_id, span_start, span_end)``, 1-based
-    start, exclusive end, over the NORMALIZED text (discovery finds the
-    boilerplate; this locates it so a cut/flag pass can act on it,
-    Lee et al. 2021's actual dedup step).
-
-    Overlapping/adjacent window hits merge via the gaps-and-islands
-    pattern: a window function carries the running max span end per
-    document; a hit starting past it opens a new island; islands
-    aggregate to spans.  Plan: the same one-exchange fingerprint
-    aggregation as discovery, a semi-join of positioned hits against
-    the shared set (fingerprint-keyed — broadcast while its row count
-    is within ``BROADCAST_MEMBER_LIMIT``, a shuffled semi-join past it),
-    one doc_id window + final aggregation.  Sampling means spans
-    are anchored at SAMPLED windows — a conservative under-cover, the
-    standard winnowing guarantee (any shared run ≥ window + gap length
-    contains a sampled anchor).
-    """
-    from pyspark.sql import Window
-
-    hits = _sampled_windows(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), window, sample_prefix
-    )
-    shared = (
-        hits.repartition(F.col("h"))
-        .groupBy("h", "doc_id")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-        .select("h")
-    )
-    # the hits subtree (normalize + per-window md5 transform) feeds BOTH
-    # the shared-set aggregation and the semi-join probe, so the plan
-    # evaluates it twice.  That is the MEASURED right call: persisting
-    # hits instead was 1.5× slower at sf0.01 and 4.5× slower at sf0.1
-    # (same-session ABAB, BENCH.md) — the pass is whole-stage-codegen
-    # cheap while the cache materializes corpus-scale hash strings; and
-    # exchange reuse can't merge the two legs because column pruning
-    # keeps only (doc_id, h) under the aggregation, making the exchange
-    # subtrees structurally different (plan-checked).  The shared set is
-    # persisted and counted for the broadcast decision; the count fills
-    # the cache the semi-join then reads, so it adds no third pass.
-    shared = _swap_persist("substring_spans_shared", shared)
-    if shared.count() <= BROADCAST_MEMBER_LIMIT:
-        shared = F.broadcast(shared)
-    marked = hits.join(shared, "h", "left_semi").select(
-        "doc_id",
-        F.col("start"),
-        (F.col("start") + window).alias("end"),
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy("start")
-    prev_max = F.max("end").over(
-        w_doc.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = marked.withColumn(
-        "new_island",
-        F.when(
-            prev_max.isNull() | (F.col("start") > prev_max), F.lit(1)
-        ).otherwise(F.lit(0)),
-    ).withColumn("island", F.sum("new_island").over(w_doc))
-    return (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.min("start").cast("long").alias("span_start"),
-            F.max("end").cast("long").alias("span_end"),
-        )
-        .select("doc_id", "span_start", "span_end")
-        .orderBy("doc_id", "span_start")
-    )
-
-
-def shared_substring_spans_sql() -> str:
-    """DuckDB twin of :func:`shared_substring_spans` (independent
-    formulation: unnest-range windows, IN-subquery for the shared set,
-    the same gaps-and-islands merge in window-function SQL)."""
-    window, prefix = SUBSTRING_WINDOW, SUBSTRING_SAMPLE_PREFIX
-    return f"""
-    WITH d AS (SELECT doc_id, {NORM_SQL} AS t FROM documents),
-    w AS (
-      SELECT doc_id, CAST(i AS INT) AS start,
-             md5(substr(t, CAST(i AS INT), {window})) AS h
-      FROM d, unnest(range(1, greatest(length(t) - {window} + 2, 1))) r(i)),
-    sel AS (SELECT * FROM w
-            WHERE substr(h, 1, {len(prefix)}) = '{prefix}'),
-    shared AS (SELECT h FROM sel GROUP BY h
-               HAVING count(DISTINCT doc_id) > 1),
-    hits AS (SELECT doc_id, start, start + {window} AS "end"
-             FROM sel WHERE h IN (SELECT h FROM shared)),
-    isl AS (
-      SELECT doc_id, start, "end",
-             CASE WHEN start > coalesce(
-                    max("end") OVER (PARTITION BY doc_id ORDER BY start
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    -1)
-                  THEN 1 ELSE 0 END AS new_island
-      FROM hits),
-    grp AS (
-      SELECT doc_id, start, "end",
-             sum(new_island) OVER (PARTITION BY doc_id ORDER BY start
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      FROM isl)
-    SELECT doc_id,
-           CAST(min(start) AS BIGINT) AS span_start,
-           CAST(max("end") AS BIGINT) AS span_end
-    FROM grp GROUP BY doc_id, island
-    ORDER BY doc_id, span_start
     """

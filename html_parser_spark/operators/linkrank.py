@@ -14,23 +14,24 @@ Scale shape:
   over pre-shrunk (href, anchor) counts) + one href equi-join +
   TakeOrderedAndProject.  Everything that shuffles is ids/counts; text
   crosses the wire only as the anchor strings being aggregated.
-- ``pagerank`` / ``pagerank_fixed``: one ids-only power iteration in
-  float or int64 fixed-point arithmetic.  The ``(src, dst)`` edge
-  projection is materialized once (``localCheckpoint``) before the
-  first action, so the node set, the out-degrees and every round read
-  stored blocks and never re-run the link-harvest UDF that produced
-  the edges.  Edges join ranks on the source key, contributions
-  aggregate on the destination key, and a ``localCheckpoint`` every
-  few rounds truncates the ranks' lineage.  The dangling mass is a
-  lazy 1-row aggregate, so no round runs a Spark action of its own.
+- ``pagerank_fixed``: one ids-only power iteration in int64
+  fixed-point arithmetic.  The ``(src, dst)`` edge projection is
+  materialized once (``localCheckpoint``) before the first action, so
+  the node set, the out-degrees and every round read stored blocks and
+  never re-run the link-harvest UDF that produced the edges.  Edges
+  join ranks on the source key, contributions aggregate on the
+  destination key, and a ``localCheckpoint`` every few rounds truncates
+  the ranks' lineage.  The dangling mass is a lazy 1-row aggregate, so
+  no round runs a Spark action of its own.
 
-Float PageRank is NOT a gate row: cross-engine float summation
-order differs, so a bit-exact md5 hash would be flaky by construction
-(and the gate never ROUNDs doubles).  It is pytest-pinned against an
-independent dense NumPy power iteration on the same edge list
-(test_linkrank.py), plus invariants (mass conservation, teleport
-floor).  The fixed-point form is the gate row (``link_pagerank_fp`` vs
-the unrolled DuckDB recurrence ``link_pagerank_sql``).
+PageRank is integer-only because float summation order differs across
+engines, so a float rank could not ride the bit-exact md5 gate (and the
+gate never ROUNDs doubles).  The gate row compares ``link_pagerank_fp``
+with the unrolled DuckDB recurrence ``link_pagerank_sql``;
+test_linkrank.py pins ``pagerank_fixed`` against an independent dense
+NumPy float power iteration on the same edge list, within the floor-loss
+bound of the integer division, plus invariants (mass conservation,
+teleport floor).
 """
 
 from __future__ import annotations
@@ -128,83 +129,34 @@ def link_target_stats_sql(golden_path: str, top_k: int = 100) -> str:
 
 
 # Total rank mass of the fixed-point arithmetic, in units of 1/FP_SCALE.
-# Integer arithmetic is associative — unlike the float iteration, the
+# Integer arithmetic is associative — unlike float summation, the
 # per-round sums are order-independent, so Spark and DuckDB produce
 # bit-identical ranks and the operator can ride the md5 value gate
 # (the gate never ROUNDs doubles — so keep the mass integral).
 FP_SCALE = 10**12
 FP_DAMP_NUM = 85
 FP_DAMP_DEN = 100
-DAMPING = FP_DAMP_NUM / FP_DAMP_DEN
 # localCheckpoint the ranks every this many rounds, so no round's plan
 # holds more than this many rounds of joins for Catalyst to re-analyze
 CHECKPOINT_EVERY = 3
 
 
-class _FloatRanks:
-    """r'(v) = (1-d)/N + d * (S(v) + D/N) in doubles."""
+def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
+    """PageRank over an edge list ``(src, dst)`` (any node id type) with
+    uniform teleport and dangling-mass redistribution, all mass carried
+    as int64 units of ``1/FP_SCALE`` (M = FP_SCALE, d = 85/100):
 
-    col, sql_type = "rank", "double"
+        r'(v) = (15·M div 100) div N + (85 · (S(v) + D div N)) div 100,
+        S(v) = Σ_{u→v} r(u) div deg(u),  D = Σ_{deg(u)=0} r(u).
 
-    @staticmethod
-    def start(n: int):
-        return F.lit(1.0 / n)
-
-    @staticmethod
-    def share():
-        return F.col("rank") / F.col("deg")
-
-    @staticmethod
-    def dangling():
-        return F.coalesce(F.sum("rank"), F.lit(0.0))
-
-    @staticmethod
-    def update(n: int):
-        return F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * (
-            F.coalesce(F.col("s"), F.lit(0.0))
-            + F.col("dangling") / F.lit(float(n))
-        )
-
-
-class _FixedRanks:
-    """r'(v) = (15·M div 100) div N + (85 · (S(v) + D div N)) div 100 in
-    int64 units of ``1/FP_SCALE`` (M = FP_SCALE).  Integer division loses
-    ≤1 unit per term (≤ deg·1e-12 of the mass per round); every
-    intermediate ≤ 85·M < 2^47, so nothing overflows."""
-
-    col, sql_type = "rank_fp", "long"
-
-    @staticmethod
-    def start(n: int):
-        return F.lit(FP_SCALE // n).cast("long")
-
-    @staticmethod
-    def share():
-        return F.expr("rank_fp div deg")
-
-    @staticmethod
-    def dangling():
-        return F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long")
-
-    @staticmethod
-    def update(n: int):
-        teleport = ((FP_SCALE * (FP_DAMP_DEN - FP_DAMP_NUM)) // FP_DAMP_DEN) // n
-        return (
-            F.lit(teleport).cast("long")
-            + F.expr(
-                f"({FP_DAMP_NUM} * (coalesce(s, 0L)"
-                f" + (dangling div {n}))) div {FP_DAMP_DEN}"
-            )
-        ).cast("long")
-
-
-def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
-    """PageRank over an edge list ``(src, dst)`` (any node id type) in
-    the arithmetic ``arith``: uniform teleport and dangling-mass
-    redistribution,
-
-        r'(v) = (1-d)/N + d * (S(v) + D/N),
-        S(v) = Σ_{u→v} r(u)/deg(u),  D = Σ_{deg(u)=0} r(u).
+    Integer division only rounds down, so every rank stays at or below
+    the exact recurrence's.  The start loses < 1 unit per node and each
+    round < in_deg(v) + 3 units at node v; the recurrence maps a
+    non-negative error vector to one of at most 0.85 times its sum, so
+    after k rounds the ranks sum to at least M − (N + k·(E + 3N)) for
+    N nodes and E edges, and no rank is further than that from the
+    exact one.  Every intermediate is ≤ 85·M < 2^47, so nothing
+    overflows.
 
     The ids-only ``(src, dst)`` string projection is materialized once,
     before the first action: the node set, the out-degrees and every
@@ -212,8 +164,8 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
     the lineage that produced ``edges`` (the link-harvest UDF).
     Physical shape per round: edges ⋈ ranks on src (both sides keyed by
     node id), groupBy dst partial+final agg, one lazy 1-row dangling
-    aggregate.  Returns (node, ``arith.col``) for every node that
-    appears in the graph."""
+    aggregate.  Returns (node, rank_fp) for every node that appears in
+    the graph."""
     spark = edges.sparkSession
     edges = edges.select(
         F.col(edges.columns[0]).cast("string").alias("src"),
@@ -229,13 +181,22 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
     if n_nodes == 0:
         free_local_checkpoint(edges)
         free_local_checkpoint(nodes)
-        return spark.createDataFrame([], f"node string, {arith.col} {arith.sql_type}")
+        return spark.createDataFrame([], "node string, rank_fp long")
     out_deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("deg")
     ).localCheckpoint()
 
-    rank = arith.col
-    ranks = nodes.select("node", arith.start(n_nodes).alias(rank))
+    teleport = ((FP_SCALE * (FP_DAMP_DEN - FP_DAMP_NUM)) // FP_DAMP_DEN) // n_nodes
+    update = (
+        F.lit(teleport).cast("long")
+        + F.expr(
+            f"({FP_DAMP_NUM} * (coalesce(s, 0L)"
+            f" + (dangling div {n_nodes}))) div {FP_DAMP_DEN}"
+        )
+    ).cast("long")
+    ranks = nodes.select(
+        "node", F.lit(FP_SCALE // n_nodes).cast("long").alias("rank_fp")
+    )
     prev_ckpt = None
     for i in range(iterations):
         # ONE ranks⋈out_deg join per round feeds both the dangling mass
@@ -247,10 +208,10 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
         # uncheckpointed lineage is evaluated once per checkpoint window
         # rather than re-run by every round's driver scalar
         dangling = with_deg.filter(F.col("deg").isNull()).agg(
-            arith.dangling().alias("dangling")
+            F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling")
         )
         shares = with_deg.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("u"), arith.share().alias("share")
+            F.col("node").alias("u"), F.expr("rank_fp div deg").alias("share")
         )
         contribs = edges.join(shares, edges["src"] == F.col("u")).select(
             F.col("dst").alias("node"), F.col("share")
@@ -259,7 +220,7 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
         ranks = (
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
-            .select("node", arith.update(n_nodes).alias(rank))
+            .select("node", update.alias("rank_fp"))
         )
         if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
             new_ranks = ranks.localCheckpoint()
@@ -279,19 +240,6 @@ def _power_iteration(edges: DataFrame, iterations: int, arith) -> DataFrame:
     return ranks
 
 
-def pagerank(edges: DataFrame, *, iterations: int = 10) -> DataFrame:
-    """Float PageRank, damping ``DAMPING``: (node, rank)."""
-    return _power_iteration(edges, iterations, _FloatRanks)
-
-
-def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
-    """Fixed-point-integer PageRank: (node, rank_fp), the same iteration
-    with all mass carried as int64 units of ``1/FP_SCALE``.  The float
-    form stays the production scorer; this one lets the gate verify the
-    ITERATION (joins, dangling redistribution, teleport) exactly."""
-    return _power_iteration(edges, iterations, _FixedRanks)
-
-
 def _doc_url_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bipartite (turn-document → href) corpus link graph: node ids
     ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``."""
@@ -301,21 +249,14 @@ def _doc_url_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def link_pagerank(
-    spark: SparkSession, sf_dir: str, iterations: int = 10
-) -> DataFrame:
-    """PageRank over the doc→url link graph: documents contribute their
-    rank to the targets they cite; targets are sinks whose mass
-    recirculates via the dangling term."""
-    return pagerank(_doc_url_edges(spark, sf_dir), iterations=iterations)
-
-
 def link_pagerank_fp(
     spark: SparkSession, sf_dir: str, iterations: int = 4, top_k: int = 100
 ) -> DataFrame:
-    """Gate form of :func:`link_pagerank`: fixed-point ranks over the
-    same doc→url bipartite graph, top ``top_k`` by (rank_fp DESC, node
-    ASC) — TakeOrderedAndProject, never a global sort."""
+    """PageRank over the doc→url link graph: documents contribute their
+    rank to the targets they cite; targets are sinks whose mass
+    recirculates via the dangling term.  Fixed-point ranks, top
+    ``top_k`` by (rank_fp DESC, node ASC) — TakeOrderedAndProject, never
+    a global sort."""
     ranks = pagerank_fixed(_doc_url_edges(spark, sf_dir), iterations=iterations)
     return ranks.orderBy(F.desc("rank_fp"), F.asc("node")).limit(top_k)
 

@@ -13,10 +13,10 @@ the DuckDB oracle can recompute every page's expected text from the raw
 WHOLE writer→parser→layout round trip value-exactly, not just row
 counts.
 
-Scale shape: two Arrow-batched Python stages over a binary column
-(build, parse) — the same mapInPandas plumbing as
-:mod:`multimodal`; binary blobs stay columnar, metadata-only queries
-prune them.
+Scale shape: one Arrow-batched Python stage (``mapInPandas``, the
+same plumbing as :mod:`multimodal`) that builds and parses each
+document's PDF in the task, so the binary never crosses the Arrow
+boundary; only the page rows come back.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.pdftext import build_pdf, extract_pdf_text
 from ..functions.textnorm import SQL_WS, ascii_words
@@ -58,36 +58,22 @@ def doc_to_pdf(text: str, compress: bool) -> bytes:
     return build_pdf(pages, compress=compress)
 
 
-def pdf_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → (doc_id, pdf: binary)."""
+def pdf_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → one row per page of each document's synthesized PDF,
+    with the extracted text and layout counts.  Each document's PDF is
+    built and parsed inside one ``mapInPandas`` task, so the bytes never
+    cross the Arrow boundary."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "pdf": [
-                        doc_to_pdf(t, compress=bool(d % 2 == 0))
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(gen, schema="doc_id bigint, pdf binary")
-
-
-def pdf_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pdf) → one row per page with extracted text + layout."""
-    payloads = pdf_payloads(spark, sf_dir)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, data in zip(pdf["doc_id"], pdf["pdf"]):
-                r = extract_pdf_text(bytes(data))
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                r = extract_pdf_text(
+                    doc_to_pdf(text, compress=bool(doc_id % 2 == 0))
+                )
                 if not r["pages"]:
                     rows.append((doc_id, 0, "", 0, 0, r["status"]))
                     continue
@@ -114,7 +100,7 @@ def pdf_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    return payloads.mapInPandas(parse, schema=PAGES_SCHEMA)
+    return docs.mapInPandas(pages, schema=PAGES_SCHEMA)
 
 
 def pdf_page_text_sql() -> str:

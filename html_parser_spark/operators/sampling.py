@@ -54,11 +54,14 @@ def corpus_splits(
     consistently.  Holdout leakage across near-duplicate documents is the
     dedup family's job (cluster keep-list first, then split).
 
-    ``in_sample`` is :func:`sample_documents`'s exact membership
-    expression (independent seed → sampling composes with splitting),
-    value-oracled here so both primitives share one gate row — both are
-    one md5-bucket expression over the same scan, and the DuckDB twin
-    computes the identical bucket bit-for-bit."""
+    ``in_sample`` is the seeded Bernoulli sample at ``SAMPLE_RATE_BP``
+    basis points (1000 = 10%): unlike ``DataFrame.sample`` it is
+    deterministic across runs, Spark versions and partitionings — the
+    property a reproducible eval or dev-corpus build needs.  Its
+    independent seed makes sampling compose with splitting; both are
+    one md5-bucket expression over the same scan, so they share one
+    gate row, and the DuckDB twin computes the identical bucket
+    bit-for-bit."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     b = _bucket(seed, 100)
     split = (
@@ -89,29 +92,6 @@ def corpus_splits_sql() -> str:
     """
 
 
-def sample_documents(
-    spark: SparkSession, sf_dir: str, rate_bp: int = SAMPLE_RATE_BP
-) -> DataFrame:
-    """Seeded Bernoulli sample at ``rate_bp`` basis points (1000 = 10%).
-
-    Unlike ``DataFrame.sample`` this is deterministic across runs, Spark
-    versions, and partitionings — the property a reproducible eval or
-    dev-corpus build actually needs.  Projection stays narrow (ids +
-    length) so the 100 TB scan prunes ``text`` entirely."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.where(_bucket(SAMPLE_SEED, 10000) < rate_bp).select(
-        "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
-    )
-
-
-def sample_documents_sql(rate_bp: int = SAMPLE_RATE_BP) -> str:
-    return f"""
-    SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
-    FROM documents
-    WHERE {_bucket_sql(SAMPLE_SEED, 10000)} < {rate_bp}
-    """
-
-
 DEFAULT_MIX = {"src0": 10000, "src1": 5000, "src2": 2500}
 DEFAULT_MIX_REST = 1000
 
@@ -128,8 +108,8 @@ def mix_documents(
 
     The rate table is a plain CASE expression (a handful of literals),
     NOT a join: at 10^12 docs the mixing decision must stay inside the
-    scan's codegen.  Same md5-bucket machinery as
-    :func:`sample_documents`, independent seed, so mixing composes with
+    scan's codegen.  Same md5-bucket machinery as the ``in_sample`` flag
+    of :func:`corpus_splits`, independent seed, so mixing composes with
     (is independent of) the split assignment."""
     rates = DEFAULT_MIX if rates_bp is None else rates_bp
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -17,12 +17,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# shared stopword lists — mirrored literally in the SQL oracles; the
-# canonical tuples live Spark-free in functions/stopwords.py so the DOM
-# scorer can import them without dragging Spark in
-from ..functions.stopwords import STOP_DE, STOP_EN, STOP_ES, STOP_FR  # noqa: E402,F401
 from ..functions.textnorm import SQL_WS
 from .dedup import NORM_SQL, _norm, _ws_tokens, word_ngrams
+
+# stopword lists of the quality score and langid — mirrored literally in
+# the SQL oracles
+STOP_EN = ("the", "and", "of", "to", "is", "in", "that", "it", "for", "was")
+STOP_FR = ("le", "la", "les", "de", "des", "et", "est", "une", "que", "pour")
+STOP_DE = ("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "von", "zu")
+STOP_ES = ("el", "la", "los", "de", "que", "es", "una", "por", "con", "para")
 
 
 # The operating point both engines read.  The sketch settings (HLL++
@@ -182,7 +185,7 @@ def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.001 and sf0.01), so no rounding is needed.
 
     ``approx_rank_ok`` additionally value-checks the Greenwald-Khanna
-    sketch's RANK contract in the same row (VERDICT r03 item 3): for
+    sketch's RANK contract in the same row: for
     each q, the value ``approx_percentile(q)`` returns must occupy a
     rank interval ``[#{x<v}+1, #{x≤v}]`` that intersects
     ``[(q−ε)n, (q+ε)n+1]`` with ε = 0.005 (50× the sketch's guaranteed
@@ -246,13 +249,14 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiling) PLUS the HLL++ sketch's error-band check in the same row.
 
     Exact COUNT DISTINCT shuffles every distinct key — fine at CI scale
-    and as the oracle; the 100 TB path is :func:`distinct_counts_approx`.
-    ``approx_within_5pct`` asserts ``|HLL++(rsd=0.02) − exact| ≤
-    max(5%·exact, 2)`` — the sketch is deterministic for a given input,
-    so the boolean is stable, and the DuckDB twin (which cannot evaluate
-    Spark's sketch) oracles it as the literal TRUE it must equal
-    (VERDICT r03 item 3: this retires the ``no_oracle`` row for the
-    approx sketch by value-checking its error contract at the gate)."""
+    and as the oracle; at 100 TB the HLL++ sketch alone is the path
+    (fixed-size sketch per group, map-side mergeable, no distinct-key
+    shuffle).  ``approx_within_5pct`` asserts ``|HLL++(rsd=0.02) −
+    exact| ≤ max(5%·exact, 2)`` — the sketch is deterministic for a
+    given input, so the boolean is stable, and the DuckDB twin (which
+    cannot evaluate Spark's sketch) oracles it as the literal TRUE it
+    must equal, value-checking the sketch's error contract at the
+    gate."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     exact = F.count_distinct(F.col("fp"))
     approx = F.approx_count_distinct("fp", HLL_RSD)
@@ -279,46 +283,6 @@ def distinct_counts_sql() -> str:
            CAST(1 AS BIGINT) AS approx_within_5pct
     FROM documents GROUP BY source ORDER BY source
     """
-
-
-def length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate quantiles — the 100 TB path (Greenwald-Khanna style
-    mergeable summaries, bounded memory per group, vs the exact
-    percentile's full sort).  Approximate by construction → rows-only
-    driver check; pytest bounds the error vs the exact quantiles."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = F.expr(
-        "approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), "
-        f"{QUANTILE_ACCURACY})"
-    )
-    return (
-        docs.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            q.getItem(0).alias("p25"),
-            q.getItem(1).alias("p50"),
-            q.getItem(2).alias("p90"),
-            q.getItem(3).alias("p99"),
-        )
-        .orderBy("source")
-    )
-
-
-def distinct_counts_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ cardinality sketch — the scale path: fixed-size
-    sketch per group, map-side mergeable, no distinct-key shuffle.
-    Approximate by construction (driver check is rows-only; pytest
-    asserts ≤5% error vs the exact count)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.select("source", F.md5(_norm()).alias("fp"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.approx_count_distinct("fp", HLL_RSD).alias("n_distinct_approx"),
-        )
-        .orderBy("source")
-    )
 
 
 def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -327,59 +327,6 @@ def test_shared_substrings_short_docs_yield_no_windows(spark, tmp_path):
     )
 
 
-def test_shared_substring_spans_matches_duckdb(spark, duck):
-    """Full value oracle for the cutting-pass companion (kept out of the
-    50-row driver snapshot; same rigor here): Spark vs an independently
-    formulated DuckDB gaps-and-islands derivation on the gate fixture."""
-    srows = sorted(
-        map(tuple, dedup.shared_substring_spans(spark, SF_DIR).collect())
-    )
-    drows = sorted(
-        map(tuple, duck.execute(dedup.shared_substring_spans_sql()).fetchall())
-    )
-    assert srows == drows
-    assert len(srows) > 0
-    # spans are merged: no overlaps within a doc
-    by_doc = {}
-    for doc_id, s, e in srows:
-        assert e - s >= 40
-        by_doc.setdefault(doc_id, []).append((s, e))
-    for spans in by_doc.values():
-        spans.sort()
-        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-            assert s2 > e1  # strictly disjoint after island merge
-
-
-def test_shared_substring_spans_semantics(spark, tmp_path):
-    """Two docs sharing a long verbatim span (sampling off): each doc
-    gets ONE merged span covering exactly the shared window anchors."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    boiler = "b" * 100  # 100 identical chars -> windows merge into one span
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [1, 2],
-                "text": [f"xxx {boiler} yyy", f"{boiler} zzz tail"],
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
-    )
-    rows = dedup.shared_substring_spans(
-        spark, str(tmp_path), window=40, sample_prefix=""
-    ).collect()
-    spans = {r.doc_id: (r.span_start, r.span_end) for r in rows}
-    assert len(rows) == 2 and set(spans) == {1, 2}
-    # doc 1: boiler occupies norm positions 5..104 and the window
-    # "b"*39 + " " (start 66) is ALSO shared (both docs have a space
-    # after the run) -> merged span [5, 106)
-    assert spans[1] == (5, 106)
-    # doc 2: boiler at 1..100, same trailing-space window at 62 ->
-    # merged span [1, 102)
-    assert spans[2] == (1, 102)
-
-
 def test_operators_on_empty_and_degenerate_corpora(spark, tmp_path):
     """Degenerate-input contract: a 100-TB pipeline hits empty stage
     outputs (a filter that drops everything) and pathological shards

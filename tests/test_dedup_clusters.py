@@ -63,11 +63,10 @@ def test_nonconvergence_raises(spark):
 
 
 def test_minhash_geometry_is_parameterized(spark):
-    sig_default = dedup.minhash_signatures(spark, SF_DIR)  # 128 hashes
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    sig_default = dedup.minhash_signatures_of(docs)  # 128 hashes
     assert len(sig_default.columns) == 1 + dedup.N_HASHES == 129
-    sig_gate = dedup.minhash_signatures(
-        spark, SF_DIR, n_hashes=dedup.GATE_N_HASHES
-    )
+    sig_gate = dedup.minhash_signatures_of(docs, n_hashes=dedup.GATE_N_HASHES)
     assert len(sig_gate.columns) == 1 + 8
     keys = dedup.minhash_band_keys(sig_default)  # 16 bands
     bands = {r.band for r in keys.select("band").distinct().collect()}
@@ -91,7 +90,8 @@ def test_default_geometry_finds_planted_dup(spark, tmp_path):
         ),
         str(tmp_path / "documents.parquet"),
     )
-    cand = dedup.minhash_candidates(spark, str(tmp_path)).collect()
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    cand = dedup.minhash_candidates_of(docs).collect()
     assert [(r.doc_a, r.doc_b) for r in cand] == [(1, 2)]
 
 
@@ -218,13 +218,13 @@ def test_incremental_against_empty_batch(spark):
 
 
 @pytest.mark.parametrize(
-    "op", ["ngram_jaccard", "incremental_against", "substring_spans", "decontaminate"]
+    "op", ["ngram_jaccard", "incremental_against", "decontaminate"]
 )
 def test_member_limit_fallback(spark, monkeypatch, op):
     """Past ``BROADCAST_MEMBER_LIMIT`` rows each guarded semi-join (the
-    Jaccard verify's candidate members, the substring spans' shared
-    fingerprints, decontamination's distinct eval grams) is a shuffled
-    join instead of a broadcast; the output is identical.  The
+    Jaccard verify's candidate members, decontamination's distinct eval
+    grams) is a shuffled join instead of a broadcast; the output is
+    identical.  The
     incremental op's batch-key broadcast against the stored key table is
     not guarded and stays."""
     if op == "ngram_jaccard":
@@ -235,8 +235,6 @@ def test_member_limit_fallback(spark, monkeypatch, op):
         run = lambda: dedup.incremental_dedup_against(  # noqa: E731
             batch, keys, corpus, n_hashes=8, n_bands=4
         )
-    elif op == "substring_spans":
-        run = lambda: dedup.shared_substring_spans(spark, SF_DIR)  # noqa: E731
     else:
         run = lambda: dedup.decontaminate(spark, SF_DIR, gram_width=3)  # noqa: E731
     # only the operators' own hints may broadcast
@@ -307,14 +305,9 @@ def test_iterative_checkpoints_release_storage(spark):
 
 
 def test_pagerank_releases_superseded_checkpoints(spark):
-    """Both arithmetics of the one power iteration (float ``pagerank``,
-    fixed-point ``pagerank_fixed``) free every superseded checkpoint,
-    with rounds and with none."""
-    from html_parser_spark.operators.linkrank import (
-        FP_SCALE,
-        pagerank,
-        pagerank_fixed,
-    )
+    """PageRank frees every superseded checkpoint, with rounds and with
+    none."""
+    from html_parser_spark.operators.linkrank import FP_SCALE, pagerank_fixed
 
     jsc = spark.sparkContext._jsc.sc()
 
@@ -324,30 +317,25 @@ def test_pagerank_releases_superseded_checkpoints(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
     )
-    for run, col, mass, tol in (
-        (pagerank, "rank", 1.0, 1e-9),
-        (pagerank_fixed, "rank_fp", FP_SCALE, FP_SCALE * 1e-3),
-    ):
-        spark.catalog.clearCache()
-        base = n_stored()
-        # 9 rounds at CHECKPOINT_EVERY=3 → 3 checkpoints; only the final
-        # one (the returned frame) may remain, nodes/out_deg must be freed
-        ranks = run(edges, iterations=9)
-        total = sum(r[col] for r in ranks.collect())
-        assert abs(total - mass) <= tol, run.__name__
-        leaked = n_stored() - base
-        assert leaked <= 1, (
-            f"{run.__name__}: {leaked} RDDs left in storage "
-            "(expected ≤1: the returned frame)"
-        )
-        # no rounds: the returned frame reads the node checkpoint, and
-        # the edge and out-degree checkpoints must be freed
-        spark.catalog.clearCache()
-        base = n_stored()
-        ranks = run(edges, iterations=0)
-        assert sorted(r.node for r in ranks.collect()) == ["a", "b", "c", "d"]
-        leaked = n_stored() - base
-        assert leaked <= 1, (
-            f"{run.__name__} iterations=0: {leaked} RDDs left in storage "
-            "(expected ≤1: the node checkpoint the returned frame reads)"
-        )
+    spark.catalog.clearCache()
+    base = n_stored()
+    # 9 rounds at CHECKPOINT_EVERY=3 → 3 checkpoints; only the final
+    # one (the returned frame) may remain, nodes/out_deg must be freed
+    ranks = pagerank_fixed(edges, iterations=9)
+    total = sum(r.rank_fp for r in ranks.collect())
+    assert abs(total - FP_SCALE) <= FP_SCALE * 1e-3
+    leaked = n_stored() - base
+    assert leaked <= 1, (
+        f"{leaked} RDDs left in storage (expected ≤1: the returned frame)"
+    )
+    # no rounds: the returned frame reads the node checkpoint, and
+    # the edge and out-degree checkpoints must be freed
+    spark.catalog.clearCache()
+    base = n_stored()
+    ranks = pagerank_fixed(edges, iterations=0)
+    assert sorted(r.node for r in ranks.collect()) == ["a", "b", "c", "d"]
+    leaked = n_stored() - base
+    assert leaked <= 1, (
+        f"iterations=0: {leaked} RDDs left in storage "
+        "(expected ≤1: the node checkpoint the returned frame reads)"
+    )

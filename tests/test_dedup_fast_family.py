@@ -41,7 +41,8 @@ def test_cw_coefficients_are_odd_and_seeded():
 
 
 def test_fast_signature_values_are_32bit(spark):
-    sig = dedup.minhash_signatures(spark, SF_DIR, n_hashes=8, hash_family="fast")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    sig = dedup.minhash_signatures_of(docs, n_hashes=8, hash_family="fast")
     row = sig.limit(5).collect()
     assert row, "signatures empty"
     for r in row:

@@ -1,24 +1,56 @@
-"""SimHash family: UDF vs pure-Python oracle, pigeonhole pair recall."""
+"""SimHash family: UDF vs pure-Python oracle, pigeonhole pair recall,
+and component-equivalent edges vs brute-force pair components."""
 
-import pytest
-from pyspark.sql import functions as F
+import duckdb
 
 from html_parser_spark.functions.textnorm import ascii_words
 from html_parser_spark.operators.dedup import (
+    _sh64,
     simhash64,
-    simhash_near_dups,
-    simhash_sketches,
+    simhash_component_edges_of,
+    simhash_near_dups_sql,
+    simhash_sketches_of,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_udf_matches_python_oracle(spark):
-    docs = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _sketches(spark, sf_dir):
+    """doc_id → sketch as an unsigned int."""
+    return {
+        r.doc_id: int(r.simhash, 16)
+        for r in simhash_sketches_of(_docs(spark, sf_dir)).collect()
     }
-    got = {r.doc_id: r.simhash for r in simhash_sketches(spark, SF_DIR).collect()}
+
+
+def _bruteforce_pairs(sk):
+    """Every doc pair (a < b) whose sketches differ in ≤3 bits."""
+    ids = sorted(sk)
+    return {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if bin(sk[a] ^ sk[b]).count("1") <= 3
+    }
+
+
+def _component_edges(spark, sf_dir):
+    sk = simhash_sketches_of(_docs(spark, sf_dir)).select(
+        "doc_id", _sh64().alias("sh64")
+    )
+    return [(r.doc_a, r.doc_b) for r in simhash_component_edges_of(sk).collect()]
+
+
+def test_udf_matches_python_oracle(spark):
+    docs = {r.doc_id: r.text for r in _docs(spark, SF_DIR).collect()}
+    got = {
+        r.doc_id: r.simhash
+        for r in simhash_sketches_of(_docs(spark, SF_DIR)).collect()
+    }
     assert set(got) == set(docs)
     for doc_id, text in docs.items():
         want = format(
@@ -28,22 +60,23 @@ def test_udf_matches_python_oracle(spark):
 
 
 def test_near_dup_pairs_match_bruteforce(spark):
-    """The bucketed join must find EXACTLY the brute-force ≤3-bit pairs
-    (pigeonhole guarantees recall; distinct guarantees no dups)."""
-    sk = {r.doc_id: int(r.simhash, 16) for r in simhash_sketches(spark, SF_DIR).collect()}
-    ids = sorted(sk)
-    want = set()
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if bin(sk[a] ^ sk[b]).count("1") <= 3:
-                want.add((a, b))
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_near_dups(spark, SF_DIR).collect()
-    }
+    """The DuckDB quarter-bucketed pair join the cluster twin reads must
+    find EXACTLY the brute-force ≤3-bit pairs (pigeonhole guarantees
+    recall; distinct guarantees no dups), and Spark's component edges
+    must span the same components."""
+    sk = _sketches(spark, SF_DIR)
+    want = _bruteforce_pairs(sk)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
+    )
+    got = {(a, b): h for a, b, h in con.execute(simhash_near_dups_sql()).fetchall()}
+    con.close()
     assert set(got) == want
     for (a, b), h in got.items():
         assert bin(sk[a] ^ sk[b]).count("1") == h
+    ids = sorted(sk)
+    assert _components(ids, _component_edges(spark, SF_DIR)) == _components(ids, want)
 
 
 def _planted_corpus(tmp_path):
@@ -91,20 +124,14 @@ def _components(ids, edges):
 
 
 def test_component_edges_equal_full_pair_components(spark, tmp_path):
-    """simhash_component_edges (stars + rep edges over distinct sketch
-    values) must yield EXACTLY the components of the full pair set, with
-    no more edges than pairs."""
-    from html_parser_spark.operators.dedup import simhash_component_edges
-
+    """simhash_component_edges_of (stars + rep edges over distinct
+    sketch values) must yield EXACTLY the components of the full pair
+    set, with no more edges than pairs."""
     sf = _planted_corpus(tmp_path)
-    ids = [r.doc_id for r in simhash_sketches(spark, sf).select("doc_id").collect()]
-    pairs = [
-        (r.doc_a, r.doc_b) for r in simhash_near_dups(spark, sf).collect()
-    ]
-    edges = [
-        (r.doc_a, r.doc_b)
-        for r in simhash_component_edges(spark, sf).collect()
-    ]
+    sk = _sketches(spark, sf)
+    ids = sorted(sk)
+    pairs = _bruteforce_pairs(sk)
+    edges = _component_edges(spark, sf)
     assert pairs, "planted corpus must produce near-dup pairs"
     assert _components(ids, edges) == _components(ids, pairs)
     assert len(edges) <= len(pairs)
@@ -113,19 +140,25 @@ def test_component_edges_equal_full_pair_components(spark, tmp_path):
     assert {1, 2, 3} <= set(next(iter(comp)))
 
 
-def test_near_dups_invariant_in_n_blocks(spark, tmp_path):
+def test_near_dups_invariant_in_n_blocks(spark, tmp_path, monkeypatch):
     """The generalized pigeonhole is recall-lossless at any geometry: the
-    exact hamming filter makes the output invariant in n_blocks."""
+    exact hamming filter makes the sketch components invariant in
+    ``N_BLOCKS``."""
+    from html_parser_spark.operators import dedup
+
     sf = _planted_corpus(tmp_path)
+    nodes = (
+        simhash_sketches_of(_docs(spark, sf))
+        .select(_sh64().alias("sh64"))
+        .distinct()
+    )
+    runs = {}
     for m in (4, 6, 8):
-        got = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in simhash_near_dups(spark, sf, n_blocks=m).collect()
-        }
-        if m == 4:
-            want = got
-        else:
-            assert got == want, m
+        monkeypatch.setattr(dedup, "N_BLOCKS", m)
+        runs[m] = {tuple(r) for r in dedup._sketch_components(nodes).collect()}
+    assert runs[4] == runs[6] == runs[8]
+    # the near variant (doc 4) joins the identical group's sketch
+    assert len({comp for _, comp in runs[6]}) < len(runs[6])
 
 
 def test_pigeonhole_recall_property():

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from html_parser_spark.functions.domextract import dom_extract, score_blocks
+from html_parser_spark.functions.domextract import _collect_blocks, dom_extract
 from html_parser_spark.functions.treebuilder import parse_html
 
 PAGE = (
@@ -62,13 +62,13 @@ def test_text_density_drops_tag_soup():
 
 def test_block_scores_shape():
     doc, _, _ = parse_html("<p>Some prose here.</p><div class='nav'>x</div>")
-    blocks = score_blocks(doc)
+    blocks = _collect_blocks(doc)
     assert len(blocks) == 2
     prose, nav = blocks
-    assert prose["text"] == "Some prose here."
-    assert prose["n_tags"] == 0
-    assert prose["text_density"] == len("Some prose here.")
-    assert not prose["boiler"] and nav["boiler"]
+    assert prose.text() == "Some prose here."
+    assert prose.tags == 0
+    assert nav.text() == "x"
+    assert not (prose.boiler or prose.drop) and nav.boiler
 
 
 def test_whitespace_normalized():
@@ -89,18 +89,6 @@ def test_spark_udf_matches_pure_python(spark):
     for row in t.select("conv_id", "turn_idx", "text").collect():
         exp = dom_extract(row["text"])["main_text"]
         assert got[(row["conv_id"], row["turn_idx"])] == exp
-
-
-def test_stopword_density_signal():
-    from html_parser_spark.functions.domextract import score_blocks
-
-    doc, _, _ = parse_html(
-        "<p>the cat is in the house and it was warm</p>"
-        "<p>zqx vbn mlk jhg fds</p>"
-    )
-    prose, junk = score_blocks(doc)
-    assert prose["stopword_density"] > 0.5
-    assert junk["stopword_density"] == 0.0
 
 
 def test_link_block_nested_in_anchor_dropped():

@@ -15,6 +15,12 @@ another script, never a second spelling of a package constant.
 
 A third census looks for copied code: no two functions in the package,
 ``tools/`` or the entry module have the same body.
+
+A fourth census is reachability: every top-level definition of the
+package is reached from a program (the entry module, ``bench.py``,
+``tools/``, non-test ``perfbench/`` files, or a package module's
+module-level statements), transitively through the bodies of reached
+definitions, or it is on ``KEEP`` with the reason a test needs it.
 """
 import ast
 import glob
@@ -163,3 +169,76 @@ def test_no_function_body_is_duplicated():
     assert not dups, (
         f"{len(dups)} function bodies are written more than once; keep one "
         "and import it:\n  " + "\n  ".join(", ".join(d) for d in dups))
+
+
+# Package definitions that no program reaches, each a reference or
+# inspection form that tests compare against.
+KEEP = {
+    "simhash64": "pure-Python oracle of dedup._simhash64_np",
+    "scrub_text": "third engine of the three-way scrub test",
+    "embedding_near_dups_allpairs": "all-pairs recall truth of the cosine dedup",
+    "serialize_tree": "html5lib tree-dump format the treebuilder tests compare",
+    "TokenizeUDTF": "the only UDTF surface (COVERAGE UDF-surface row)",
+}
+PACKAGE = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
+                           recursive=True))
+PROGRAM_ROOTS = [os.path.join(REPO, "__spark_entry__.py"),
+                 os.path.join(REPO, "bench.py")] + sorted(
+    glob.glob(os.path.join(REPO, "tools", "**", "*.py"), recursive=True)) + [
+    p for p in sorted(glob.glob(os.path.join(REPO, "perfbench", "**", "*.py"),
+                                recursive=True))
+    if not os.path.basename(p).startswith("test_")]
+
+
+def _names(node):
+    """Names ``node`` refers to: Name ids, Attribute attrs and import
+    aliases (string constants do not count)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def unreached_definitions(keep=()):
+    """``path:line name`` of every top-level ``def``/``class`` of the
+    package that no program reaches.  Roots are the program files, the
+    module-level statements of every package module and ``keep``; a
+    reached definition's body reaches the names it refers to."""
+    defs = {}
+    reached = set(keep)
+    for path in PROGRAM_ROOTS:
+        reached |= _names(_parse(path))
+    for path in PACKAGE:
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((path, stmt))
+            else:
+                reached |= _names(stmt)
+    todo = list(reached)
+    while todo:
+        for _, stmt in defs.get(todo.pop(), ()):
+            new = _names(stmt) - reached
+            reached |= new
+            todo.extend(new)
+    return sorted(
+        f"{os.path.relpath(path, REPO)}:{stmt.lineno} {name}"
+        for name, sites in defs.items()
+        if name not in reached and not (name.startswith("__") and name.endswith("__"))
+        for path, stmt in sites)
+
+
+def test_every_package_definition_has_a_program_caller():
+    unreached = unreached_definitions(KEEP)
+    assert not unreached, (
+        f"{len(unreached)} package definitions are reached by no program "
+        "(only by tests); delete each, or add it to KEEP with the reason a "
+        "test needs it:\n  " + "\n  ".join(unreached))
+    # every KEEP entry names a definition that only tests reach
+    only_tests = {site.rsplit(" ", 1)[1] for site in unreached_definitions()}
+    stale = sorted(set(KEEP) - only_tests)
+    assert not stale, f"KEEP entries a program reaches or nothing defines: {stale}"

@@ -84,22 +84,18 @@ def test_metrics_rollup(spark, extracted):
     assert m["ok"].tokens > 0 and m["ok"].main_text_chars > 0
 
 
-def test_salting_spreads_hot_conversations(spark, transcripts):
+def test_salting_spreads_hot_conversations(spark):
     """A hot conversation's turns must land in >1 partition after the
-    salted repartition (the whole point of the salt)."""
+    salted repartition (the whole point of the salt).  The frame plants
+    one 32-turn conversation beside a few short ones."""
     from pyspark.sql import functions as F
 
-    hot = (
-        transcripts.groupBy("conv_id")
-        .count()
-        .orderBy(F.desc("count"))
-        .first()
-    )
-    if hot["count"] < 16:
-        pytest.skip("fixture too small to contain a hot conversation")
+    rows = [("hot", i, f"<p>turn {i} of the hot conversation</p>") for i in range(32)]
+    rows += [(f"c{c}", i, f"<p>turn {i}</p>") for c in range(3) for i in range(2)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     parts = (
-        run_extraction(transcripts, num_partitions=8)
-        .filter(F.col("conv_id") == hot.conv_id)
+        run_extraction(df, num_partitions=8)
+        .filter(F.col("conv_id") == "hot")
         .withColumn("pid", F.spark_partition_id())
         .select("pid")
         .distinct()

@@ -27,14 +27,13 @@ def test_corpus_splits_matches_duckdb(spark, duck):
     assert len(srows) == 500
 
 
-def test_sample_matches_duckdb(spark, duck):
+def test_sample_matches_duckdb(spark, duck, monkeypatch):
+    """The ``in_sample`` flag agrees across engines at more than the one
+    rate the gate row runs."""
     for rate in (1000, 2500):
-        srows = sorted(
-            map(tuple, sampling.sample_documents(spark, SF_DIR, rate_bp=rate).collect())
-        )
-        drows = sorted(
-            map(tuple, duck.execute(sampling.sample_documents_sql(rate_bp=rate)).fetchall())
-        )
+        monkeypatch.setattr(sampling, "SAMPLE_RATE_BP", rate)
+        srows = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR).collect()))
+        drows = sorted(map(tuple, duck.execute(sampling.corpus_splits_sql()).fetchall()))
         assert srows == drows, rate
 
 
@@ -58,21 +57,23 @@ def test_split_is_seed_versioned_and_deterministic(spark):
     assert [r[0] for r in a] == [r[0] for r in c]  # ...but covers the same docs
 
 
-def test_sample_rate_and_subset(spark):
-    full = {r.doc_id for r in sampling.sample_documents(spark, SF_DIR, rate_bp=10000).collect()}
-    ten = {r.doc_id for r in sampling.sample_documents(spark, SF_DIR, rate_bp=1000).collect()}
+def _sampled(spark, monkeypatch, rate):
+    monkeypatch.setattr(sampling, "SAMPLE_RATE_BP", rate)
+    return {r.doc_id for r in sampling.corpus_splits(spark, SF_DIR).collect() if r.in_sample}
+
+
+def test_sample_rate_and_subset(spark, monkeypatch):
+    full = _sampled(spark, monkeypatch, 10000)
+    ten = _sampled(spark, monkeypatch, 1000)
     assert full == set(range(len(full)))  # rate 100% keeps everything
     assert ten <= full
     assert 0.05 < len(ten) / len(full) < 0.16  # ~10% +- binomial noise
 
 
 def test_plans_have_no_shuffle(spark):
-    for df in (
-        sampling.corpus_splits(spark, SF_DIR),
-        sampling.sample_documents(spark, SF_DIR),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
+    df = sampling.corpus_splits(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
 
 
 def test_chunking_matches_duckdb(spark, duck):
@@ -242,15 +243,19 @@ def test_pack_sequences_single_shuffle(spark):
 
 
 def test_splits_in_sample_column_equals_sample_membership(spark):
-    """corpus_splits.in_sample must be exactly sample_documents'
-    membership (the retired gate row's semantics live on, oracled,
-    inside the splits row)."""
+    """corpus_splits.in_sample must be exactly the seeded Bernoulli
+    membership: the first 8 hex digits of md5(SAMPLE_SEED|doc_id) mod
+    10,000 below SAMPLE_RATE_BP, recomputed here in plain Python."""
+    import hashlib
+
     flags = {
         r.doc_id: r.in_sample
         for r in sampling.corpus_splits(spark, SF_DIR).collect()
     }
     members = {
-        r.doc_id for r in sampling.sample_documents(spark, SF_DIR).collect()
+        d for d in flags
+        if int(hashlib.md5(f"{sampling.SAMPLE_SEED}|{d}".encode()).hexdigest()[:8], 16)
+        % 10000 < sampling.SAMPLE_RATE_BP
     }
     assert members == {d for d, f in flags.items() if f == 1}
     assert 0 < len(members) < len(flags)

@@ -1,22 +1,35 @@
-"""HLL sketch accuracy vs exact cardinality."""
+"""Sketch accuracy at sf0.01: the HLL++ and Greenwald-Khanna sketches
+the gate rows ``text_distinct_counts`` / ``text_length_quantiles`` check
+inside their exact twins, recomputed here against exact values, and the
+rows' own error-band flags."""
 
+from pyspark.sql import functions as F
+
+from html_parser_spark.operators.dedup import _norm
 from html_parser_spark.operators.textstats import (
+    HLL_RSD,
+    QUANTILE_ACCURACY,
     distinct_counts,
-    distinct_counts_approx,
+    length_quantiles,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_hll_within_5pct_of_exact(spark):
-    exact = {r.source: r.n_distinct for r in distinct_counts(spark, SF_DIR).collect()}
+    rows = distinct_counts(spark, SF_DIR).collect()
+    exact = {r.source: r.n_distinct for r in rows}
     approx = {
-        r.source: r.n_distinct_approx
-        for r in distinct_counts_approx(spark, SF_DIR).collect()
+        r.source: r.n
+        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .groupBy("source")
+        .agg(F.approx_count_distinct(F.md5(_norm()), HLL_RSD).alias("n"))
+        .collect()
     }
     assert set(exact) == set(approx)
     for src, n in exact.items():
         assert abs(approx[src] - n) <= max(2, 0.05 * n), (src, n, approx[src])
+    assert all(r.approx_within_5pct == 1 for r in rows)
 
 
 def test_approx_quantiles_rank_error_bounded(spark):
@@ -25,8 +38,6 @@ def test_approx_quantiles_rank_error_bounded(spark):
     quantile's rank (accuracy=10000 → 1/accuracy rank error + discrete
     data slack)."""
     import bisect
-
-    from html_parser_spark.operators.textstats import length_quantiles_approx
 
     vals = {}
     for r in (
@@ -37,8 +48,17 @@ def test_approx_quantiles_rank_error_bounded(spark):
         vals.setdefault(r.source, []).append(r.n_chars)
     for v in vals.values():
         v.sort()
-    approx = {r.source: (r.p25, r.p50, r.p90, r.p99)
-              for r in length_quantiles_approx(spark, SF_DIR).collect()}
+    q = F.expr(
+        "approx_percentile(n_chars, array(0.25, 0.5, 0.9, 0.99), "
+        f"{QUANTILE_ACCURACY})"
+    )
+    approx = {
+        r.source: tuple(r.q)
+        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .groupBy("source")
+        .agg(q.alias("q"))
+        .collect()
+    }
     targets = (0.25, 0.5, 0.9, 0.99)
     for src, qs in approx.items():
         v = vals[src]
@@ -47,3 +67,4 @@ def test_approx_quantiles_rank_error_bounded(spark):
             lo = bisect.bisect_left(v, a) / n
             hi = bisect.bisect_right(v, a) / n
             assert lo - 0.03 <= target <= hi + 0.03, (src, target, a, lo, hi)
+    assert all(r.approx_rank_ok == 1 for r in length_quantiles(spark, SF_DIR).collect())
