@@ -26,6 +26,8 @@ from html_parser_spark.goldens import (
 from html_parser_spark.operators import (
     chunking,
     dedup,
+    linkops,
+    linkrank,
     multimodal,
     pdfops,
     relational,
@@ -38,6 +40,7 @@ from html_parser_spark.operators import (
 )
 from html_parser_spark.functions.display import display_expr
 from html_parser_spark.functions.textnorm import SQL_WS
+from html_parser_spark.sources.tables import corpus_path, read_corpus
 from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
     MAX_TURNS,
@@ -55,13 +58,19 @@ from html_parser_spark.operators.pipeline import (
 from html_parser_spark.fixtures import gate_sf_dir, sf_of as _sf_of
 
 
-def _transcripts(spark: SparkSession, sf: float) -> DataFrame:
-    return spark.read.parquet(ensure_transcripts(sf))
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: extract main content from every turn at sf0.001."""
-    return run_extraction(_transcripts(spark, 0.001), num_partitions=8)
+    return run_extraction(
+        spark.read.parquet(ensure_transcripts(0.001)), num_partitions=8
+    )
+
+
+def _over(op, *tables: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Gate row that runs ``op`` over the named corpus tables of the
+    driver's testdata directory, in order."""
+    return lambda spark, sf_dir: op(
+        *(read_corpus(spark, sf_dir, t) for t in tables)
+    )
 
 
 # One extraction stage ("main" plus the token column) shared across the
@@ -71,13 +80,13 @@ def entry(spark: SparkSession) -> DataFrame:
 _FRAME_CACHE: dict = {}
 
 
-def _extracted(spark: SparkSession, sf: float) -> DataFrame:
-    key = (id(spark), sf)
+def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (id(spark), _sf_of(sf_dir))
     df = _FRAME_CACHE.get(key)
     if df is None:
-        df = extract_stage(_transcripts(spark, sf), {"main", "tokens"}).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        df = extract_stage(
+            read_corpus(spark, sf_dir, "transcripts"), {"main", "tokens"}
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         _FRAME_CACHE[key] = df
     return df
 
@@ -91,7 +100,7 @@ def _extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame's token column dropped); ``run_extraction`` keeps the typed
     struct column for real consumers.  Value-oracled against the
     committed reference-binary goldens (goldens.py)."""
-    ext = _extracted(spark, _sf_of(sf_dir))
+    ext = _extracted(spark, sf_dir)
     return ext.select(
         *[c for c in ext.columns if c not in ("spans", "tokens")],
         F.to_json("spans").alias("spans_json"),
@@ -101,21 +110,11 @@ def _extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dom_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOM-heuristic extraction (tree builder + text-density scoring —
     functions/domextract.py), spans serialized like the flagship."""
-    ext = run_dom_extraction(_transcripts(spark, _sf_of(sf_dir)))
+    ext = run_dom_extraction(read_corpus(spark, sf_dir, "transcripts"))
     return ext.select(
         *[c for c in ext.columns if c != "spans"],
         F.to_json("spans").alias("spans_json"),
     )
-
-
-def _extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperlink harvest (href + anchor text + provenance spans) over the
-    transcript corpus — the corpus link graph.  Value-oracled against
-    committed engine goldens (single-process truth over the
-    reference-verified tokenizer; goldens.py)."""
-    from html_parser_spark.operators.linkops import run_link_extraction
-
-    return run_link_extraction(_transcripts(spark, _sf_of(sf_dir)))
 
 
 def _extract_links_oracle() -> str:
@@ -133,16 +132,14 @@ def _link_target_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the live harvest; the DuckDB twin re-derives them entirely from
     the committed engine-golden link rows, so both the harvest AND the
     aggregation/tie-break logic sit under the hash."""
-    from html_parser_spark.operators.linkrank import link_target_stats
-
-    return link_target_stats(spark, sf_dir, top_k=100)
+    return linkrank.link_target_stats(
+        read_corpus(spark, sf_dir, "transcripts"), top_k=100
+    )
 
 
 def _link_target_stats_oracle() -> str:
-    from html_parser_spark.operators.linkrank import link_target_stats_sql
-
     path = link_golden_parquet(_sf_of(gate_sf_dir()))
-    return link_target_stats_sql(path, top_k=100)
+    return linkrank.link_target_stats_sql(path, top_k=100)
 
 
 def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,20 +148,18 @@ def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round sums order-independent, so
     the md5 value gate holds bit-exactly; the float twin stays
     pytest-pinned vs an independent dense NumPy iteration."""
-    from html_parser_spark.operators.linkrank import link_pagerank_fp
-
-    return link_pagerank_fp(spark, sf_dir, iterations=4, top_k=100)
+    return linkrank.link_pagerank_fp(
+        read_corpus(spark, sf_dir, "transcripts"), iterations=4, top_k=100
+    )
 
 
 def _link_pagerank_oracle() -> str:
-    from html_parser_spark.operators.linkrank import link_pagerank_sql
-
     path = link_golden_parquet(_sf_of(gate_sf_dir()))
-    return link_pagerank_sql(path, iterations=4, top_k=100)
+    return linkrank.link_pagerank_sql(path, iterations=4, top_k=100)
 
 
 def _extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return extraction_metrics(_extracted(spark, _sf_of(sf_dir))).orderBy(
+    return extraction_metrics(_extracted(spark, sf_dir)).orderBy(
         "parse_status"
     )
 
@@ -174,7 +169,7 @@ def _token_kind_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (= next_token) -> per-kind counts over the transcript corpus.
     Value-oracled against kind counts of the REFERENCE binary's token
     streams."""
-    tk = _extracted(spark, _sf_of(sf_dir))
+    tk = _extracted(spark, sf_dir)
     return (
         tk.select(F.explode("tokens").alias("tok"))
         .groupBy(F.col("tok.kind").alias("kind"))
@@ -189,7 +184,7 @@ def _display_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Display string, value-oracled against md5 of the REFERENCE BINARY's
     own Display output (a length-only projection would let two wrong
     serializations of equal length pass)."""
-    tk = _extracted(spark, _sf_of(sf_dir))
+    tk = _extracted(spark, sf_dir)
     return tk.select(
         "conv_id",
         "turn_idx",
@@ -206,7 +201,9 @@ def _gate_mh():
 
 
 def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard(spark, sf_dir, **_gate_mh())
+    return dedup.ngram_jaccard(
+        read_corpus(spark, sf_dir, "documents"), **_gate_mh()
+    )
 
 
 def _embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,11 +212,23 @@ def _embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     so without planting the gate row hash-matched on an EMPTY result
     and proved nothing.  Both engines union the
     same k/64-grid literals (similarity.planted_near_dup_vectors)."""
-    return similarity.embedding_near_dups(spark, sf_dir, include_planted=True)
+    return similarity.embedding_near_dups(
+        read_corpus(spark, sf_dir, "embeddings"), include_planted=True
+    )
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-k with the quantizer trained on the same embeddings."""
+    return similarity.ivf_topk(
+        read_corpus(spark, sf_dir, "embeddings"),
+        similarity.trained_centroids(sf_dir),
+    )
 
 
 def _cluster_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.dedup_cluster_keep_list(spark, sf_dir, **_gate_mh())
+    return dedup.dedup_cluster_keep_list(
+        read_corpus(spark, sf_dir, "documents"), **_gate_mh()
+    )
 
 
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,27 +236,24 @@ def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator default is the published 8-gram operating point, but the
     fixture corpus's vocabulary makes 8-gram contamination a 1-row signal
     at sf0.01 (4-gram: ~27 rows — enough to value-check the join)."""
-    return dedup.decontaminate(spark, sf_dir, gram_width=4)
+    return dedup.decontaminate(read_corpus(spark, sf_dir, "documents"), gram_width=4)
 
 
 def _incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-ingest-batch dedup vs the existing corpus at the gate's 8/4
     MinHash geometry (operator default is 128/16)."""
-    return dedup.incremental_dedup(spark, sf_dir, **_gate_mh())
+    return dedup.incremental_dedup(
+        read_corpus(spark, sf_dir, "documents"), **_gate_mh()
+    )
 
 
 def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing at an explicit gate geometry (512-token
     sequences, 4 shards) so the fixture corpus produces plenty of
     boundary-crossing pieces; the operator default is 2048/8."""
-    return chunking.pack_sequences(spark, sf_dir, seq_len=512, n_groups=4)
-
-
-def _conv_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-level corpus assembly (ordered turn concatenation,
-    md5-fingerprinted for the gate; output capped at ``MAX_TURNS`` with
-    an overflow flag)."""
-    return assemble_conversations(_transcripts(spark, _sf_of(sf_dir)))
+    return chunking.pack_sequences(
+        read_corpus(spark, sf_dir, "documents"), seq_len=512, n_groups=4
+    )
 
 
 def _conv_assemble_oracle() -> str:
@@ -286,7 +292,7 @@ def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from html_parser_spark.streaming.stream import run_stream_backfill
 
     sf = _sf_of(sf_dir)
-    in_dir = os.path.dirname(ensure_transcripts(sf))
+    in_dir = os.path.dirname(corpus_path(sf_dir, "transcripts"))
     # deterministic per-sf sink, wiped before each run: repeated gate/
     # snapshot invocations reuse ONE directory instead of accumulating
     # a corpus copy + checkpoint per call under /tmp
@@ -310,12 +316,8 @@ def _stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandas grouped-map rollup over the transcript corpus."""
     return udx.conversation_stats(
-        spark, _transcripts(spark, _sf_of(sf_dir))
+        read_corpus(spark, sf_dir, "transcripts")
     ).orderBy("conv_id")
-
-
-def _token_stats(spark, sf_dir):
-    return textstats.token_stats(spark, sf_dir)
 
 
 TOKEN_STATS_SQL = f"""
@@ -442,66 +444,75 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_turns": _extract_turns,
         "extract_dom_turns": _dom_extract_turns,
         "extract_metrics": _extract_metrics,
-        "extract_links": _extract_links,
+        # hyperlink harvest (href + anchor text + provenance spans), oracled
+        # against committed engine goldens (goldens.py)
+        "extract_links": _over(linkops.run_link_extraction, "transcripts"),
         "link_target_stats": _link_target_stats,
         "tokens_kind_counts": _token_kind_counts,
         "display_roundtrip": _display_roundtrip,
         "stream_extract": _stream_extract,
         "conversation_stats": _conv_stats,
-        "conversation_assembly": _conv_assemble,
+        # ordered turn concatenation, md5-fingerprinted, capped at MAX_TURNS
+        "conversation_assembly": _over(assemble_conversations, "transcripts"),
         # deduplication family
         # (exact-duplicate detection's hash-groupBy core is exercised
         # with values by dedup_keep_list)
-        "dedup_keep_list": dedup.dedup_keep_list,
-        "dedup_shared_substrings": dedup.shared_substrings,
+        "dedup_keep_list": _over(dedup.dedup_keep_list, "documents"),
+        "dedup_shared_substrings": _over(dedup.shared_substrings, "documents"),
         "dedup_ngram_jaccard": _ngram_jaccard,
         "dedup_cluster_keep_list": _cluster_keep_list,
         "dedup_decontaminate": _decontaminate,
         "dedup_incremental": _incremental_dedup,
         "dedup_embedding_cosine": _embedding_cosine,
         # similarity search
-        "ann_cosine_topk": similarity.cosine_topk,
-        "ann_lsh_topk": similarity.lsh_topk,
-        "ann_ivf_topk": similarity.ivf_topk,
+        "ann_cosine_topk": _over(similarity.cosine_topk, "embeddings"),
+        "ann_lsh_topk": _over(similarity.lsh_topk, "embeddings"),
+        "ann_ivf_topk": _ivf_topk,
         # text analysis
-        "text_token_stats": _token_stats,
-        "text_quality_scores": textstats.quality_scores,
-        "text_langid": textstats.langid,
-        "text_length_quantiles": textstats.length_quantiles,
-        "text_distinct_counts": textstats.distinct_counts,
-        "text_ngram_topk": textstats.ngram_topk,
-        "text_repetition_filters": textstats.repetition_filters,
-        "text_vocab_coverage": textstats.vocab_coverage,
+        "text_token_stats": _over(textstats.token_stats, "documents"),
+        "text_quality_scores": _over(textstats.quality_scores, "documents"),
+        "text_langid": _over(textstats.langid, "documents"),
+        "text_length_quantiles": _over(textstats.length_quantiles, "documents"),
+        "text_distinct_counts": _over(textstats.distinct_counts, "documents"),
+        "text_ngram_topk": _over(textstats.ngram_topk, "documents"),
+        "text_repetition_filters": _over(textstats.repetition_filters, "documents"),
+        "text_vocab_coverage": _over(textstats.vocab_coverage, "documents"),
         # deterministic splits / sampling (scan -> project, no shuffle)
-        "corpus_splits": sampling.corpus_splits,
-        "corpus_chunks": chunking.chunk_documents,
+        "corpus_splits": _over(sampling.corpus_splits, "documents"),
+        "corpus_chunks": _over(chunking.chunk_documents, "documents"),
         "corpus_pack": _pack_sequences,
-        "corpus_mix": sampling.mix_documents,
-        "text_pii_scrub": scrub.pii_scrub,
+        "corpus_mix": _over(sampling.mix_documents, "documents"),
+        "text_pii_scrub": _over(scrub.pii_scrub, "documents"),
         # multimodal plumbing (binary payload → mapInPandas sniff +
         # decode; real stdlib PNG/GIF/BMP/WAV codecs, JPEG header walk
         # with honestly-stubbed pixels — all value-oracled)
-        "multimodal_metadata": multimodal.media_metadata,
+        "multimodal_metadata": _over(multimodal.media_metadata, "media_blobs"),
         # PDF/layout parse (writer→parser→layout round trip, oracled)
-        "pdf_page_text": pdfops.pdf_page_text,
+        "pdf_page_text": _over(pdfops.pdf_page_text, "documents"),
         # relational coverage (SURVEY.md §2.6)
-        "rel_pricing_summary": relational.pricing_summary,
-        "rel_top_revenue_nations": relational.top_revenue_nations,
-        "rel_customers_without_orders": relational.customers_without_orders,
-        "rel_parts_with_shipments": relational.parts_with_shipments,
-        "rel_user_event_windows": relational.user_event_windows,
-        "rel_events_daily_rollup": relational.events_daily_rollup,
-        "rel_events_monthly_cube": relational.events_monthly_cube,
-        "rel_event_type_setops": relational.event_type_setops,
-        "rel_json_props_stats": relational.json_props_stats,
+        "rel_pricing_summary": _over(relational.pricing_summary, "lineitem"),
+        "rel_top_revenue_nations": _over(
+            relational.top_revenue_nations, "orders", "customer", "nation"
+        ),
+        "rel_customers_without_orders": _over(
+            relational.customers_without_orders, "customer", "orders"
+        ),
+        "rel_parts_with_shipments": _over(
+            relational.parts_with_shipments, "part", "lineitem"
+        ),
+        "rel_user_event_windows": _over(relational.user_event_windows, "events"),
+        "rel_events_daily_rollup": _over(relational.events_daily_rollup, "events"),
+        "rel_events_monthly_cube": _over(relational.events_monthly_cube, "events"),
+        "rel_event_type_setops": _over(relational.event_type_setops, "events"),
+        "rel_json_props_stats": _over(relational.json_props_stats, "events"),
         # temporal joins Spark lacks natively (scalable decompositions)
-        "rel_asof_join": temporal.asof_last_click,
-        "rel_range_join": temporal.range_join_activity,
-        "rel_sessionize": temporal.sessionize,
-        "udaf_value_median": udx.user_value_median,
+        "rel_asof_join": _over(temporal.asof_last_click, "events"),
+        "rel_range_join": _over(temporal.range_join_activity, "events"),
+        "rel_sessionize": _over(temporal.sessionize, "events"),
+        "udaf_value_median": _over(udx.user_value_median, "events"),
         # §2.6 categories: iterative graph analytics, stateful streaming
         "link_pagerank": _link_pagerank,
-        "stream_sessionize": stateful.run_sessionize_backfill,
+        "stream_sessionize": _over(stateful.run_sessionize_backfill, "events"),
     }
 
 

@@ -15,7 +15,7 @@ documents are — long-doc skew splits itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .dedup import NORM_SQL, _norm
 
@@ -24,8 +24,7 @@ DEFAULT_OVERLAP = 32
 
 
 def chunk_documents(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     chunk_tokens: int = DEFAULT_CHUNK,
     overlap: int = DEFAULT_OVERLAP,
 ) -> DataFrame:
@@ -38,7 +37,6 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.split(_norm(), " ")
     n = F.size(toks)
     n_starts = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
@@ -107,8 +105,7 @@ PACK_SEED = "pack-v1"
 
 
 def pack_sequences(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     seq_len: int = DEFAULT_SEQ_LEN,
     n_groups: int = DEFAULT_PACK_GROUPS,
 ) -> DataFrame:
@@ -136,7 +133,6 @@ def pack_sequences(
 
     from .sampling import _bucket
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sized = docs.select(
         "doc_id",
         _bucket(PACK_SEED, n_groups).alias("group_id"),

@@ -20,7 +20,7 @@ Cluster resolution (:func:`dedup_cluster_keep_list`) unions the
 verified MinHash and SimHash edges of :func:`near_dup_edges` and labels
 components with the one min-label propagation loop
 (:func:`_propagate_min_labels`); the same loop resolves the distinct
-sketch graph inside :func:`simhash_component_edges_of`.  Incremental
+sketch graph inside :func:`simhash_component_edges`.  Incremental
 ingest has one body, :func:`incremental_dedup_against`;
 :func:`incremental_dedup` is its single-table front.
 
@@ -41,7 +41,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -170,7 +170,7 @@ SHINGLES_SQL = f"""
 """
 
 
-def minhash_signatures_of(
+def minhash_signatures(
     docs: DataFrame, n_hashes: int = N_HASHES, hash_family: str = "md5"
 ) -> DataFrame:
     """Per-doc MinHash signature: for seed s, min over shingles of
@@ -312,7 +312,7 @@ def _banded_pairs(keys: DataFrame) -> DataFrame:
     )
 
 
-def minhash_candidates_of(
+def minhash_candidates(
     docs: DataFrame,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
@@ -324,7 +324,7 @@ def minhash_candidates_of(
     (:func:`near_dup_edges`) so its pair count stays linear in docs."""
     return _banded_pairs(
         minhash_band_keys(
-            minhash_signatures_of(docs, n_hashes, hash_family),
+            minhash_signatures(docs, n_hashes, hash_family),
             n_hashes,
             n_bands,
             hash_family,
@@ -365,22 +365,26 @@ def minhash_candidates_sql(
     """
 
 
-def ngram_jaccard_of(
+def ngram_jaccard(
     docs: DataFrame,
     threshold: float = 0.0,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
 ) -> DataFrame:
-    """DataFrame-input core of :func:`ngram_jaccard` — LSH candidates
-    over ``docs`` (doc_id, text) scored with exact shingle-set Jaccard
-    by :func:`_verify_candidates`.  Callers that have already collapsed
-    exact-text groups (:func:`near_dup_edges`) pass one representative
-    per distinct text here, so no exact-duplicate clique ever reaches
-    the verify join."""
+    """Exact shingle-set Jaccard for the LSH candidate pairs of ``docs``
+    (doc_id, text), scored by :func:`_verify_candidates` (verification
+    stage of MinHash dedup).  Only bucket collisions are scored — never
+    the full cross product.
+
+    This is the full-pair REPORTING op (a k-doc exact-dup group
+    contributes k(k−1)/2 scored pairs by contract); cluster resolution
+    goes through :func:`near_dup_edges`, which collapses exact-text
+    groups first and passes one representative per distinct text here,
+    so no exact-duplicate clique ever reaches its verify join."""
     cand = _swap_persist(
         "ngram_jaccard_cand",
-        minhash_candidates_of(docs, n_hashes, n_bands, hash_family),
+        minhash_candidates(docs, n_hashes, n_bands, hash_family),
     )
     return _verify_candidates(docs, cand, threshold)
 
@@ -436,31 +440,6 @@ def _verify_candidates(
     )
 
 
-def ngram_jaccard(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.0,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    hash_family: str = "md5",
-) -> DataFrame:
-    """Exact shingle-set Jaccard for LSH candidate pairs (verification
-    stage of MinHash dedup).  Only bucket collisions are scored — never
-    the full cross product.
-
-    This is the full-pair REPORTING op (a k-doc exact-dup group
-    contributes k(k−1)/2 scored pairs by contract); cluster resolution
-    goes through :func:`near_dup_edges`, which collapses exact-text
-    groups before LSH."""
-    return ngram_jaccard_of(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        threshold,
-        n_hashes,
-        n_bands,
-        hash_family,
-    )
-
-
 def ngram_jaccard_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> str:
     return f"""
     WITH cand AS ({minhash_candidates_sql(n_hashes, n_bands)}),
@@ -475,12 +454,11 @@ def ngram_jaccard_sql(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> str:
     """
 
 
-def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_keep_list(docs: DataFrame) -> DataFrame:
     """The dedup *output*: one row per surviving document (the minimum
     doc_id of each normalized-text group).  Anti-join shape: at 100 TB
     this is the same committed-keys primitive the resume path uses —
     only (hash, keep_id) pairs shuffle, never text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     hashed = docs.select("doc_id", F.md5(_norm()).alias("text_hash"))
     losers = (
         hashed.groupBy("text_hash")
@@ -576,7 +554,7 @@ def _simhash_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield pd.Series(out)
 
 
-def simhash_sketches_of(docs: DataFrame) -> DataFrame:
+def simhash_sketches(docs: DataFrame) -> DataFrame:
     """doc_id → 64-bit SimHash sketch (hex) of ``docs`` (doc_id, text);
     near-duplicates differ in ≤``MAX_HAMMING`` bits.  The sketch is
     a function of ``ascii_words(text.lower())`` word counts, which is
@@ -588,7 +566,7 @@ def simhash_sketches_of(docs: DataFrame) -> DataFrame:
 
 
 def simhash_sketches_sql() -> str:
-    """DuckDB twin of :func:`simhash_sketches_of` — md5 bit-twiddling in SQL.
+    """DuckDB twin of :func:`simhash_sketches` — md5 bit-twiddling in SQL.
 
     Mirrors simhash64 exactly: per word, the first 8 bytes of md5 (hex
     substring parsed as UBIGINT), then a +1/-1 vote per bit position and
@@ -630,7 +608,7 @@ def simhash_near_dups_sql() -> str:
     the oracled sketches: the classic 16-bit-quarter pigeonhole
     bucketing and xor+bit_count scoring.  The cluster twin takes
     components over these full pairs; Spark's component-equivalent star
-    edges (:func:`simhash_component_edges_of`) must match them."""
+    edges (:func:`simhash_component_edges`) must match them."""
     base = simhash_sketches_sql()
     return f"""
     WITH sk AS ({base}),
@@ -696,8 +674,7 @@ def _exact_text_collapse(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def near_dup_edges(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
@@ -706,7 +683,7 @@ def near_dup_edges(
     candidates that PASS the exact-Jaccard verify stage at
     ``JACCARD_THRESHOLD``, unioned with the SimHash
     COMPONENT-EQUIVALENT edge set within ``MAX_HAMMING``
-    (:func:`simhash_component_edges_of` — stars over identical-sketch
+    (:func:`simhash_component_edges` — stars over identical-sketch
     groups plus representative edges, O(docs + sketch pairs) instead of
     the O(k²)-per-group full pair clique; connected components are
     provably identical, which is all cluster resolution consumes).
@@ -726,21 +703,19 @@ def near_dup_edges(
     normalized text, with every other doc starred to its rep
     (:func:`_exact_text_collapse`), so no exact-duplicate clique is
     ever emitted."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     stars, reps = _exact_text_collapse(docs)
-    mh = ngram_jaccard_of(
+    mh = ngram_jaccard(
         reps, threshold=JACCARD_THRESHOLD,
         n_hashes=n_hashes, n_bands=n_bands, hash_family=hash_family,
     ).select("doc_a", "doc_b")
-    sh = simhash_component_edges_of(
-        simhash_sketches_of(reps).select("doc_id", _sh64().alias("sh64"))
+    sh = simhash_component_edges(
+        simhash_sketches(reps).select("doc_id", _sh64().alias("sh64"))
     ).select("doc_a", "doc_b")
     return stars.unionByName(mh).unionByName(sh)
 
 
 def dedup_cluster_keep_list(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     hash_family: str = "md5",
@@ -761,12 +736,10 @@ def dedup_cluster_keep_list(
     count on the changed-label frame — the only driver-side value per
     round; edges and labels are persisted so no round recomputes the
     signature pipelines."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     edges = near_dup_edges(
-        spark, sf_dir, n_hashes=n_hashes, n_bands=n_bands,
-        hash_family=hash_family,
+        docs, n_hashes=n_hashes, n_bands=n_bands, hash_family=hash_family
     )
-    return connected_components(docs, edges)
+    return connected_components(docs.select("doc_id"), edges)
 
 
 def _propagate_min_labels(
@@ -990,7 +963,7 @@ def _sketch_components(nodes: DataFrame) -> DataFrame:
             keyed_static.unpersist()
 
 
-def simhash_component_edges_of(sk: DataFrame) -> DataFrame:
+def simhash_component_edges(sk: DataFrame) -> DataFrame:
     """Component-EQUIVALENT simhash edge set for cluster resolution
     over a ``(doc_id, sh64)`` frame: O(docs) stars, never pair cliques.
     :func:`near_dup_edges` feeds it sketches of one representative per
@@ -1051,9 +1024,7 @@ def _word_ngrams_sql(width: int) -> str:
     """
 
 
-def decontaminate(
-    spark: SparkSession, sf_dir: str, gram_width: int = 8
-) -> DataFrame:
+def decontaminate(docs: DataFrame, gram_width: int = 8) -> DataFrame:
     """Eval-set decontamination: flag training documents that share any
     word ``gram_width``-gram with a held-out evaluation slice (``doc_id %
     EVAL_MODULUS == 0`` stands in for a benchmark suite — deterministic,
@@ -1070,7 +1041,6 @@ def decontaminate(
     Past the limit the semi-join is a shuffled join instead of blowing
     the driver broadcast cap.  Grams are per-doc-distinct, so the count
     is the number of distinct shared grams."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     grams = F.array_distinct(word_ngrams(F.split(_norm(), " "), gram_width))
     is_eval = F.col("doc_id") % EVAL_MODULUS == 0
     eval_grams = _swap_persist(
@@ -1107,8 +1077,7 @@ def decontaminate_sql(gram_width: int = 8) -> str:
 
 
 def incremental_dedup(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
 ) -> DataFrame:
@@ -1121,13 +1090,11 @@ def incremental_dedup(
     matches) where production reads the stored one."""
     from .sampling import _bucket
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = docs.select("doc_id", "text")
     is_batch = _bucket(BATCH_SEED, BATCH_BUCKETS) == 0
     corpus = docs.filter(~is_batch)
     corpus_keys = minhash_band_keys(
-        minhash_signatures_of(corpus, n_hashes), n_hashes, n_bands
+        minhash_signatures(corpus, n_hashes), n_hashes, n_bands
     )
     return incremental_dedup_against(
         docs.filter(is_batch), corpus_keys, corpus, n_hashes, n_bands,
@@ -1228,7 +1195,7 @@ def incremental_dedup_against(
       stage shingles O(candidates) corpus docs, not the corpus.
     """
     batch_keys = minhash_band_keys(
-        minhash_signatures_of(batch_docs, n_hashes, hash_family),
+        minhash_signatures(batch_docs, n_hashes, hash_family),
         n_hashes,
         n_bands,
         hash_family,
@@ -1287,8 +1254,7 @@ def incremental_dedup_against(
 
 
 def shared_substrings(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     window: int = SUBSTRING_WINDOW,
     sample_prefix: str = SUBSTRING_SAMPLE_PREFIX,
 ) -> DataFrame:
@@ -1320,7 +1286,6 @@ def shared_substrings(
     the one hash both engines compute identically (CLAUDE.md
     cross-engine contract).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # Generate barrier (same CollapseProject lesson as the repetition
     # filters, textstats.py): the normalized text is materialized ONCE
     # per row — referenced inline, the regexp_replace would re-run inside

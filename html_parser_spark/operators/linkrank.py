@@ -36,30 +36,21 @@ teleport floor).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..plans.session import free_local_checkpoint
 from .linkops import run_link_extraction
 
 
-def _links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import ensure_transcripts, sf_of
-
-    return run_link_extraction(
-        spark.read.parquet(ensure_transcripts(sf_of(sf_dir)))
-    )
-
-
-def link_target_stats(
-    spark: SparkSession, sf_dir: str, top_k: int = 100
-) -> DataFrame:
-    """Per-target link signals: inlink count, distinct source
-    conversations, distinct anchor texts, and the consensus anchor
+def link_target_stats(transcripts: DataFrame, top_k: int = 100) -> DataFrame:
+    """Per-target link signals of the links harvested from
+    ``transcripts``: inlink count, distinct source conversations,
+    distinct anchor texts, and the consensus anchor
     (most frequent; ties broken to the lexicographically LARGEST anchor
     so both engines agree deterministically).  Top ``top_k`` targets by
     (n_inlinks DESC, href ASC) — TakeOrderedAndProject, never a global
     sort."""
-    return target_stats_from_links(_links(spark, sf_dir), top_k=top_k)
+    return target_stats_from_links(run_link_extraction(transcripts), top_k=top_k)
 
 
 def target_stats_from_links(links: DataFrame, top_k: int = 100) -> DataFrame:
@@ -240,24 +231,25 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
     return ranks
 
 
-def _doc_url_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bipartite (turn-document → href) corpus link graph: node ids
-    ``doc:<conv_id>#<turn_idx>`` and ``url:<href>``."""
-    return _links(spark, sf_dir).select(
+def _doc_url_edges(transcripts: DataFrame) -> DataFrame:
+    """The bipartite (turn-document → href) link graph of
+    ``transcripts``: node ids ``doc:<conv_id>#<turn_idx>`` and
+    ``url:<href>``."""
+    return run_link_extraction(transcripts).select(
         F.concat(F.lit("doc:"), "conv_id", F.lit("#"), "turn_idx").alias("src"),
         F.concat(F.lit("url:"), "href").alias("dst"),
     )
 
 
 def link_pagerank_fp(
-    spark: SparkSession, sf_dir: str, iterations: int = 4, top_k: int = 100
+    transcripts: DataFrame, iterations: int = 4, top_k: int = 100
 ) -> DataFrame:
     """PageRank over the doc→url link graph: documents contribute their
     rank to the targets they cite; targets are sinks whose mass
     recirculates via the dangling term.  Fixed-point ranks, top
     ``top_k`` by (rank_fp DESC, node ASC) — TakeOrderedAndProject, never
     a global sort."""
-    ranks = pagerank_fixed(_doc_url_edges(spark, sf_dir), iterations=iterations)
+    ranks = pagerank_fixed(_doc_url_edges(transcripts), iterations=iterations)
     return ranks.orderBy(F.desc("rank_fp"), F.asc("node")).limit(top_k)
 
 

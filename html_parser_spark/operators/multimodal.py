@@ -24,7 +24,7 @@ import zlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # ----------------------------------------------------- mixed-format media
 
@@ -39,14 +39,6 @@ MEDIA_SCHEMA = (
 # must not kill a 10^12-row stage.  These are the exception classes the
 # pure-stdlib decoders can legitimately raise on hostile bytes.
 _DECODE_ERRORS = (ValueError, struct.error, IndexError, EOFError, zlib.error)
-
-
-def media_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic mixed-format blob table
-    (PNG/GIF/BMP/WAV/JPEG/MP4/AVI/WebP) for the gate's scale factor."""
-    from ..fixtures import ensure_media_blobs, sf_of
-
-    return spark.read.parquet(ensure_media_blobs(sf_of(sf_dir)))
 
 
 def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -126,15 +118,16 @@ def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas over the mixed-format binary column → typed metadata
-    with REAL decoded shape + content fingerprints per modality (image
-    pixels, GIF frame indices, WAV PCM).  Value-oracled: the DuckDB twin
+def media_metadata(blobs: DataFrame) -> DataFrame:
+    """mapInPandas over the mixed-format binary column of ``blobs`` (the
+    deterministic PNG/GIF/BMP/WAV/JPEG/MP4/AVI/WebP ``media_blobs``
+    table) → typed metadata with REAL decoded shape + content
+    fingerprints per modality (image pixels, GIF frame indices, WAV
+    PCM).  Value-oracled: the DuckDB twin
     reads the generator's stored ground truth AND independently detects
     the container from the hex-encoded magic bytes."""
     return (
-        media_blobs(spark, sf_dir)
-        .select("doc_id", "payload")
+        blobs.select("doc_id", "payload")
         .mapInPandas(_media_batches, schema=MEDIA_SCHEMA)
     )
 

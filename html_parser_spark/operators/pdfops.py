@@ -24,7 +24,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.pdftext import build_pdf, extract_pdf_text
 from ..functions.textnorm import SQL_WS, ascii_words
@@ -58,14 +58,12 @@ def doc_to_pdf(text: str, compress: bool) -> bytes:
     return build_pdf(pages, compress=compress)
 
 
-def pdf_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pdf_page_text(docs: DataFrame) -> DataFrame:
     """documents → one row per page of each document's synthesized PDF,
     with the extracted text and layout counts.  Each document's PDF is
     built and parsed inside one ``mapInPandas`` task, so the bytes never
     cross the Arrow boundary."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = docs.select("doc_id", "text")
 
     def pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -15,19 +15,14 @@ ORDER BY is top-k-able (Spark plans TakeOrderedAndProject, no full sort).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate with map-side partial agg.
     The only shuffle carries (flag, status) groups — 6 rows."""
-    li = _t(spark, sf_dir, "lineitem")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             # driver contract: never ROUND on doubles (HALF_UP vs engine
@@ -65,13 +60,14 @@ def pricing_summary_sql() -> str:
     """
 
 
-def top_revenue_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def top_revenue_nations(
+    orders: DataFrame, customer: DataFrame, nation: DataFrame
+) -> DataFrame:
     """customer ⋈ orders ⋈ nation with both dimension sides broadcast —
     the orders fact table never shuffles for the join, only for the final
     25-row aggregate."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cust = customer.select("c_custkey", "c_nationkey")
+    nation = nation.select("n_nationkey", "n_name")
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -107,18 +103,15 @@ def top_revenue_nations_sql() -> str:
 BIG_ORDER_TOTALPRICE = 300_000
 
 
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def customers_without_orders(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """Left-anti join — the same primitive the extraction pipeline's
     resume path uses for committed-keys filtering.  Customers that never
     placed an order above :data:`BIG_ORDER_TOTALPRICE`."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > BIG_ORDER_TOTALPRICE)
-        .select("o_custkey")
+    big = orders.filter(F.col("o_totalprice") > BIG_ORDER_TOTALPRICE).select(
+        "o_custkey"
     )
     return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
+        customer.join(big, customer.c_custkey == big.o_custkey, "left_anti")
         .groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_customers"))
         .orderBy("c_nationkey")
@@ -136,10 +129,9 @@ def customers_without_orders_sql() -> str:
     """
 
 
-def parts_with_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def parts_with_shipments(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Left-semi join + top-k by retail price."""
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey")
+    li = lineitem.select("l_partkey")
     return (
         part.join(li, part.p_partkey == li.l_partkey, "left_semi")
         .select(
@@ -162,14 +154,13 @@ def parts_with_shipments_sql() -> str:
     """
 
 
-def user_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def user_event_windows(events: DataFrame) -> DataFrame:
     """Window functions over the events stream: per-user ordering by ts
     (row_number + lag delta) — the same partitionBy/orderBy discipline as
     per-conversation turn ordering."""
-    ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        ev.select(
+        events.select(
             "user_id",
             "event_id",
             "event_type",
@@ -197,11 +188,10 @@ def user_event_windows_sql() -> str:
     """
 
 
-def events_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_daily_rollup(events: DataFrame) -> DataFrame:
     """ROLLUP grouping sets: (event_type, day), (event_type), ()."""
-    ev = _t(spark, sf_dir, "events")
     return (
-        ev.withColumn("day", F.to_date("ts"))
+        events.withColumn("day", F.to_date("ts"))
         .rollup("event_type", "day")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -222,11 +212,10 @@ def events_daily_rollup_sql() -> str:
     """
 
 
-def events_monthly_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_monthly_cube(events: DataFrame) -> DataFrame:
     """CUBE grouping sets: all four of (type, month), (type), (month), ()."""
-    ev = _t(spark, sf_dir, "events")
     return (
-        ev.withColumn("month", F.month("ts").cast("long"))
+        events.withColumn("month", F.month("ts").cast("long"))
         .cube("event_type", "month")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -255,12 +244,10 @@ def events_monthly_cube_sql() -> str:
 SETOPS_CUTOFF = "2024-01-04"
 
 
-def event_type_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
+def event_type_setops(events: DataFrame) -> DataFrame:
     """Set operations (EXCEPT family): users who clicked before
     :data:`SETOPS_CUTOFF` but had not yet purchased by then."""
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit(SETOPS_CUTOFF).cast("timestamp")
-    )
+    ev = events.filter(F.col("ts") < F.lit(SETOPS_CUTOFF).cast("timestamp"))
     a = ev.filter(F.col("event_type") == "click").select("user_id").distinct()
     b = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
     return a.exceptAll(b).orderBy("user_id")
@@ -277,12 +264,11 @@ def event_type_setops_sql() -> str:
     """
 
 
-def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def json_props_stats(events: DataFrame) -> DataFrame:
     """JSON scalar extraction on the props column + aggregate."""
-    ev = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
-        ev.select("event_type", k.alias("k"))
+        events.select("event_type", k.alias("k"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -16,7 +16,7 @@ safe) — Spark ``conv(substr(...), 16, 10)``, DuckDB
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def _bucket(seed: str, modulus: int):
@@ -43,9 +43,7 @@ SAMPLE_SEED = "sample-v1"
 MIX_SEED = "mix-v1"
 
 
-def corpus_splits(
-    spark: SparkSession, sf_dir: str, seed: str = SPLIT_SEED
-) -> DataFrame:
+def corpus_splits(docs: DataFrame, seed: str = SPLIT_SEED) -> DataFrame:
     """Assign every document to train/val/test by hash bucket, plus the
     independent seeded Bernoulli sample flag in the same projection.
 
@@ -62,7 +60,6 @@ def corpus_splits(
     one md5-bucket expression over the same scan, so they share one
     gate row, and the DuckDB twin computes the identical bucket
     bit-for-bit."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     b = _bucket(seed, 100)
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
@@ -97,8 +94,7 @@ DEFAULT_MIX_REST = 1000
 
 
 def mix_documents(
-    spark: SparkSession,
-    sf_dir: str,
+    docs: DataFrame,
     rates_bp: dict[str, int] | None = None,
     default_bp: int = DEFAULT_MIX_REST,
 ) -> DataFrame:
@@ -112,7 +108,6 @@ def mix_documents(
     of :func:`corpus_splits`, independent seed, so mixing composes with
     (is independent of) the split assignment."""
     rates = DEFAULT_MIX if rates_bp is None else rates_bp
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rate = F.lit(default_bp)
     for src, bp in sorted(rates.items()):
         rate = F.when(F.col("source") == src, F.lit(bp)).otherwise(rate)

@@ -23,7 +23,7 @@ Scale shape: scan → project, zero shuffle, whole-stage codegen
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # (name, pattern, replacement) applied IN ORDER — order matters (an email
 # contains digit runs a later pattern might otherwise nibble at)
@@ -34,10 +34,9 @@ PATTERNS = (
 )
 
 
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Per-doc redaction counts plus the md5 of the scrubbed text (the
     driver gate hashes the fingerprint, not megabytes of text)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     scrubbed = F.col("text")
     counts = []
     for name, pat, repl in PATTERNS:

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.session import swap_persist
+from ..sources.tables import corpus_path
 
 # The operating point the operators and their DuckDB twins both read:
 # query count and k of every top-k; the embedding width (testdata
@@ -106,11 +107,10 @@ def _rescore_topk(pairs: DataFrame) -> DataFrame:
     )
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def cosine_topk(emb: DataFrame) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``N_QUERIES`` vectors:
     the query side is broadcast against every vector, then ranked by
     :func:`_rescore_topk`."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # norms precomputed per side before the join: the identical _norm
     # expression over the identical floats (bitwise-same sim), but the
     # O(dim) aggregate runs once per vector instead of once per
@@ -191,7 +191,7 @@ def _require_dim(col):
     )
 
 
-def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lsh_signatures(emb: DataFrame) -> DataFrame:
     """vec_id → LSH bucket (sign pattern over the hyperplanes).
 
     Planes are inlined as literal arrays: the sign-dot per plane is a
@@ -202,9 +202,7 @@ def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     The embedding width is the constant ``EMB_DIM``, so building the
     plan runs NO Spark job (probing the width with ``.first()`` would
     be a hidden job per plan build)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", _require_dim(F.col("embedding"))
-    )
+    emb = emb.withColumn("embedding", _require_dim(F.col("embedding")))
     planes = _planes(LSH_PLANES, LSH_SEED)
     bucket = F.lit(0)
     for i, p in enumerate(planes):
@@ -214,10 +212,10 @@ def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", "embedding", bucket.alias("bucket"))
 
 
-def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lsh_topk(emb: DataFrame) -> DataFrame:
     """Approximate top-k: exact cosine, but only within the query's LSH
     bucket.  Same output schema as :func:`cosine_topk`."""
-    sig = lsh_signatures(spark, sf_dir)
+    sig = lsh_signatures(emb)
     # per-vector norm precompute before the join (bitwise-same sim,
     # O(dim) aggregate per vector instead of per candidate pair —
     # same rationale as cosine_topk / embedding_near_dups)
@@ -370,8 +368,7 @@ def planted_values_sql() -> str:
 
 
 def embedding_near_dups(
-    spark: SparkSession,
-    sf_dir: str,
+    emb: DataFrame,
     threshold: float = NEAR_DUP_THRESHOLD,
     include_planted: bool = False,
 ) -> DataFrame:
@@ -394,11 +391,9 @@ def embedding_near_dups(
     corpus — the gate wrapper sets it so the driver row verifies real
     pair values (the raw testdata has no pair above any threshold).
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
+    emb = emb.select("vec_id", "embedding")
     if include_planted:
-        emb = emb.unionByName(_planted_df(spark))
+        emb = emb.unionByName(_planted_df(emb.sparkSession))
     bands = band_signature_udf(NEAR_DUP_BANDS, NEAR_DUP_BAND_BITS, NEAR_DUP_SEED)
     # persist the signature frame: without it the physical plan runs
     # the Python band-signature UDF FOUR times — once per self-join
@@ -463,7 +458,7 @@ def embedding_near_dups(
 
 
 def embedding_near_dups_allpairs(
-    spark: SparkSession, sf_dir: str, threshold: float = NEAR_DUP_THRESHOLD
+    emb: DataFrame, threshold: float = NEAR_DUP_THRESHOLD
 ) -> DataFrame:
     """Exact all-pairs form (theta join → BroadcastNestedLoopJoin).
 
@@ -471,7 +466,6 @@ def embedding_near_dups_allpairs(
     plan.  The DuckDB oracle (:func:`embedding_near_dups_sql`) is the same
     all-pairs computation, so the driver check verifies the LSH path's
     recall end-to-end."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     sim = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
@@ -546,7 +540,7 @@ def trained_centroids(sf_dir: str):
     import pyarrow.parquet as pq
 
     t = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+        corpus_path(sf_dir, "embeddings"), columns=["vec_id", "embedding"]
     )
     ids = t.column("vec_id").to_numpy()
     digests = np.array(
@@ -578,7 +572,7 @@ def _sq_dist(a, b):
     )
 
 
-def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ivf_topk(emb: DataFrame, centroids) -> DataFrame:
     """IVF-style approximate top-k: assign every vector to its nearest
     coarse cell (argmin L2 over a broadcast ``IVF_CELLS``-row centroid
     table — n×cells work, one pass), probe each query's ``IVF_NPROBE`` nearest
@@ -588,11 +582,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment shuffles once on cell id (bucketing the corpus), queries
     touch IVF_NPROBE/IVF_CELLS of the data, and more cells trade scan
     fraction for assignment cost.  Same output schema as
-    :func:`cosine_topk` (quantized ranking)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", _require_dim(F.col("embedding"))
-    )
-    cents = trained_centroids(sf_dir)
+    :func:`cosine_topk` (quantized ranking).  ``centroids`` is the coarse
+    quantizer, :func:`trained_centroids` of the same table."""
+    emb = emb.withColumn("embedding", _require_dim(F.col("embedding")))
     # cell assignment as ONE inline expression (sorted array of
     # per-centroid (distance, cell) structs — lexicographic struct sort
     # gives the (d, cell) tie-break): zero joins, zero shuffles — a
@@ -608,7 +600,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("d"),
                 F.lit(i).alias("cell"),
             )
-            for i, c in enumerate(cents)
+            for i, c in enumerate(centroids)
         ]
     )
     cell = F.element_at(F.array_sort(dist_structs), 1)["cell"]

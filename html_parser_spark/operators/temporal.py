@@ -22,24 +22,19 @@ oracle): latest ``ts`` wins; same-instant left rows DO match
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
+def asof_last_click(events: DataFrame) -> DataFrame:
     """For every 'purchase' event: the most recent prior (or
     simultaneous) 'click' by the same user."""
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
+    clicks = events.filter(F.col("event_type") == "click").select(
         "user_id",
         F.col("ts"),
         F.col("event_id"),
         F.lit(0).alias("kind"),
     )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
+    purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", F.lit(1).alias("kind")
     )
     both = clicks.unionByName(purchases)
@@ -81,7 +76,7 @@ def asof_last_click_sql() -> str:
 SESSION_GAP_SEC = 1800  # 30-minute inactivity gap
 
 
-def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: per-user session summaries where a
     >30-minute gap starts a new session.
 
@@ -89,7 +84,6 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag → running sum = session number — no self-join, no state blowup.
     (The streaming twin would be ``F.session_window``; this is the batch
     backfill form.)"""
-    ev = _t(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     is_new = (
@@ -100,7 +94,7 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
     )
-    tagged = ev.select(
+    tagged = events.select(
         "user_id",
         "event_id",
         sec.alias("sec"),
@@ -154,17 +148,16 @@ def sessionize_sql() -> str:
 BUCKET_SEC = 600  # 10-minute buckets = the range width → ≤2 buckets/probe
 
 
-def range_join_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def range_join_activity(events: DataFrame) -> DataFrame:
     """For every 'purchase': how many events the same user produced in
     the preceding 10 minutes (exclusive of the purchase instant)."""
-    ev = _t(spark, sf_dir, "events")
     ts_sec = F.unix_timestamp("ts")
-    left = ev.select(
+    left = events.select(
         F.col("user_id").alias("l_user"),
         ts_sec.alias("l_sec"),
         (ts_sec / BUCKET_SEC).cast("long").alias("l_bucket"),
     )
-    probe = ev.filter(F.col("event_type") == "purchase").select(
+    probe = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("r_user"),
         ts_sec.alias("r_sec"),

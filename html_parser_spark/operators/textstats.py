@@ -15,7 +15,7 @@ for the rollups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.textnorm import SQL_WS
 from .dedup import NORM_SQL, _norm, _ws_tokens, word_ngrams
@@ -41,12 +41,11 @@ def _sql_list(words) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
 
-def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace token counting + length features per document, plus
     the document fingerprint: md5 over the normalized text (the
     exact-dedup key) and its length.  Both are single-projection
     expressions over the same scan, so they share one gate row."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # un-lowered: ``lower`` can change a token's length (U+0130)
     toks = _ws_tokens(F.col("text"))
     avg_len = F.when(
@@ -71,10 +70,9 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """jusText/Boilerpipe-style quality features: punctuation density,
     alphabetic ratio, stopword ratio, and a composite score."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n = F.greatest(F.length("text"), F.lit(1))
     punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,;:!?]", ""))
     alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
@@ -116,10 +114,9 @@ def quality_scores_sql() -> str:
     """
 
 
-def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+def langid(docs: DataFrame) -> DataFrame:
     """n-gram-free heuristic language ID: stopword-hit argmax over
     {en,fr,de,es} with a fixed tie-break order."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = _ws_tokens(F.lower("text"))
     def _hits(stops):
         # NB: the lambda must take exactly one arg — a second parameter
@@ -177,7 +174,7 @@ def langid_sql() -> str:
     """
 
 
-def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def length_quantiles(docs: DataFrame) -> DataFrame:
     """Per-source document-length quantiles — corpus profiling (exact
     ``percentile``: single-pass sort-based; for 100 TB swap to
     ``approx_percentile`` with a documented error bound).  Spark's exact
@@ -195,9 +192,7 @@ def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic sketch + deterministic data → a stable boolean the
     DuckDB twin (which cannot evaluate Spark's sketch) oracles as the
     literal TRUE it must equal."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "source", "n_chars"
-    )
+    docs = docs.select("source", "n_chars")
     qs = (0.25, 0.5, 0.9, 0.99)
     eps = 0.005
     ap = F.expr(
@@ -244,7 +239,7 @@ def length_quantiles_sql() -> str:
     """
 
 
-def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def distinct_counts(docs: DataFrame) -> DataFrame:
     """Exact per-source distinct-fingerprint cardinality (dedup-rate
     profiling) PLUS the HLL++ sketch's error-band check in the same row.
 
@@ -257,7 +252,6 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot evaluate Spark's sketch) oracles it as the literal TRUE it
     must equal, value-checking the sketch's error contract at the
     gate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     exact = F.count_distinct(F.col("fp"))
     approx = F.approx_count_distinct("fp", HLL_RSD)
     within = F.abs(approx - exact) <= F.greatest(
@@ -285,7 +279,7 @@ def distinct_counts_sql() -> str:
     """
 
 
-def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ngram_topk(docs: DataFrame) -> DataFrame:
     """Corpus-wide most-frequent word 3-grams (all occurrences — unlike
     the dedup shingles, NOT per-doc-distinct), the staple corpus-statistics
     pass of a pretraining pipeline (boilerplate discovery, contamination
@@ -295,7 +289,6 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine (one shuffle keyed on the gram) → TakeOrderedAndProject for
     the top slice.  Ties are broken by the gram itself so the result is
     deterministic across engines and partitionings."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     tri = word_ngrams(F.split(_norm(), " "), 3)
     return (
         docs.select(F.explode(tri).alias("gram"))
@@ -306,7 +299,26 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def filter_quality(docs: DataFrame) -> DataFrame:
+    """Gopher-gate a documents frame IN PLACE: same signals as
+    :func:`repetition_filters`, computed inline over ``docs`` with every
+    original column threaded through the projection, then filtered on
+    ``gopher_keep`` — scan → project → filter, ZERO shuffles and ONE
+    scan.  This is the corpus-job form: the keep-list-then-semi-join
+    formulation reads the documents twice and shuffles the full text
+    through a SortMergeJoin (the signals frame's size estimate is
+    unknown, so the join never broadcasts) — measured 7.8× wall per 10×
+    data at sf1.0 (BENCH.md round 4) where every other stage was
+    sub-linear.  Inline, the quality gate is embarrassingly parallel at
+    any scale."""
+    through = tuple(c for c in docs.columns if c != "doc_id")
+    sig = repetition_filters(docs, passthrough=through)
+    return sig.filter(F.col("gopher_keep") == 1).select(*docs.columns)
+
+
+def repetition_filters(
+    docs: DataFrame, passthrough: tuple = ()
+) -> DataFrame:
     """Gopher/C4-style repetition quality signals per document — the
     standard pretraining-corpus filter family (Rae et al. 2021 "Scaling
     Language Models" §A1.1; Raffel et al. 2020 C4 heuristics):
@@ -334,35 +346,11 @@ def repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the top bigram is a single ``F.aggregate`` run-length pass over
     the sorted bigram array.  The DuckDB twin deliberately uses the
     opposite formulation (unnest → GROUP BY → window) so the oracle is
-    an independent derivation, not an echo."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return repetition_signals(docs)
+    an independent derivation, not an echo.
 
-
-def filter_quality(docs: DataFrame) -> DataFrame:
-    """Gopher-gate a documents frame IN PLACE: same signals as
-    :func:`repetition_filters`, computed inline over ``docs`` with every
-    original column threaded through the projection, then filtered on
-    ``gopher_keep`` — scan → project → filter, ZERO shuffles and ONE
-    scan.  This is the corpus-job form: the keep-list-then-semi-join
-    formulation reads the documents twice and shuffles the full text
-    through a SortMergeJoin (the signals frame's size estimate is
-    unknown, so the join never broadcasts) — measured 7.8× wall per 10×
-    data at sf1.0 (BENCH.md round 4) where every other stage was
-    sub-linear.  Inline, the quality gate is embarrassingly parallel at
-    any scale."""
-    through = tuple(c for c in docs.columns if c != "doc_id")
-    sig = repetition_signals(docs, passthrough=through)
-    return sig.filter(F.col("gopher_keep") == 1).select(*docs.columns)
-
-
-def repetition_signals(
-    docs: DataFrame, passthrough: tuple = ()
-) -> DataFrame:
-    """Signal computation shared by :func:`repetition_filters` (bare,
-    gate-oracled) and :func:`filter_quality` (inline, ``passthrough``
-    carries the document columns through the Generate barriers so the
-    caller can filter without re-joining text)."""
+    ``passthrough`` names document columns carried through the Generate
+    barriers, so :func:`filter_quality` filters without re-joining
+    text; the gate row runs it bare."""
     # Generate barriers (same lesson as the MinHash signatures, BENCH.md
     # round-3 session 2): each stage materializes the arrays the next
     # stage references more than once — without them CollapseProject
@@ -588,7 +576,7 @@ def ngram_topk_sql(n_top: int = NGRAM_TOP) -> str:
 
 
 def vocab_coverage(
-    spark: SparkSession, sf_dir: str, vocab_k: int = VOCAB_K
+    docs: DataFrame, vocab_k: int = VOCAB_K
 ) -> DataFrame:
     """CCNet/C4-family vocabulary-coverage quality signal: build the
     top-``vocab_k`` corpus vocabulary (by total occurrence count, ties
@@ -617,7 +605,6 @@ def vocab_coverage(
     → BROADCAST to the scoring join, so the corpus-side explode never
     shuffles for membership; scoring is one partial+final agg keyed on
     doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = (
         docs.select("doc_id", F.explode(F.split(_norm(), " ")).alias("w"))
         .filter(F.col("w") != "")

@@ -20,7 +20,7 @@ operators that are genuinely useful to a transcript pipeline:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import DoubleType, LongType
 
@@ -50,11 +50,10 @@ def count_udaf(v: pd.Series) -> int:
     return int(len(v))
 
 
-def user_value_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+def user_value_median(events: DataFrame) -> DataFrame:
     """Per-event-type median event value via the pandas UDAF."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
-        ev.groupBy("event_type")
+        events.groupBy("event_type")
         .agg(
             count_udaf("value").alias("n_events"),
             median_udaf("value").alias("median_value"),
@@ -95,7 +94,7 @@ def _conv_stats(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def conversation_stats(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
+def conversation_stats(transcripts: DataFrame) -> DataFrame:
     """Grouped-map applyInPandas: per-conversation rollup needing the
     whole group (within-conversation text dedup counting).  At scale the
     group key (conv_id) bounds memory — the largest conversation must

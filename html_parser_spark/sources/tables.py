@@ -14,6 +14,11 @@ the engine's scan patterns prune:
 - ``extracted`` mirrors the transcript bucketing so the resume anti-join
   is a bucket-local join (no shuffle of the 10^12-row output table);
 - ``metrics``/``lineage`` tiny, partitioned by run day.
+
+The corpus tables an operator reads (``documents``, ``embeddings``,
+``events``, the TPC-H tables and the generated ``transcripts`` and
+``media_blobs``) are located by one function, :func:`corpus_path`;
+operators take them as DataFrames from :func:`read_corpus`.
 """
 
 from __future__ import annotations
@@ -26,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..fixtures import ensure_media_blobs, ensure_transcripts, sf_of
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -71,20 +78,21 @@ PARTITIONED BY (bucket(512, conv_id))
 TBLPROPERTIES ('write.target-file-size-bytes' = '134217728')
 """
 
-METRICS_DDL = """
-CREATE TABLE IF NOT EXISTS {catalog}.{db}.extraction_metrics (
-  parse_status    STRING,
-  turns           BIGINT,
-  dropped_end_tags BIGINT,
-  main_text_chars BIGINT,
-  tokens          BIGINT,
-  kept_blocks     BIGINT,
-  blocks          BIGINT,
-  run_id          STRING,
-  run_ts          BIGINT
-) USING iceberg
-PARTITIONED BY (truncate(8, run_id))
-"""
+# tables generated on first use, cached at the scale of the directory
+_GENERATED = {"transcripts": ensure_transcripts, "media_blobs": ensure_media_blobs}
+
+
+def corpus_path(sf_dir: str, name: str) -> str:
+    """Location of corpus table ``name`` for the testdata directory
+    ``sf_dir``: a generated table resolves to its cache at the
+    directory's scale, every other table is ``<sf_dir>/<name>.parquet``."""
+    ensure = _GENERATED.get(name)
+    return ensure(sf_of(sf_dir)) if ensure else f"{sf_dir}/{name}.parquet"
+
+
+def read_corpus(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Corpus table ``name`` of ``sf_dir`` as a DataFrame."""
+    return spark.read.parquet(corpus_path(sf_dir, name))
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:

@@ -128,7 +128,7 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
 _RUN_COUNTER = [0]
 
 
-def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
+def run_sessionize_backfill(events: DataFrame) -> DataFrame:
     """Deterministic catch-up run of :func:`sessionize_stream` over the
     ``events`` table, returned as a batch DataFrame of NON-FINAL
     sessions — the driver-gate form (VERDICT r4 item 5).
@@ -155,8 +155,7 @@ def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    src = f"{sf_dir}/events.parquet"
-    ev = spark.read.parquet(src)
+    spark = events.sparkSession
     stage = tempfile.mkdtemp(prefix="sess_stage_")
     # the memory sink holds the output; the staged files and the
     # checkpoint are scratch once the query has terminated
@@ -169,7 +168,7 @@ def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
         from pyspark.sql import Window
 
         w = Window.orderBy("ts", "event_id")
-        bucketed = ev.withColumn(
+        bucketed = events.withColumn(
             "_b", F.least(F.floor(F.percent_rank().over(w) * 4), F.lit(3))
         )
         k = 0
@@ -186,7 +185,7 @@ def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
         _RUN_COUNTER[0] += 1
         qname = f"sess_gate_{_RUN_COUNTER[0]}"
         stream = (
-            spark.readStream.schema(ev.schema)
+            spark.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(flat)
         )
@@ -204,7 +203,7 @@ def run_sessionize_backfill(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(stage, ignore_errors=True)
     emitted = spark.table(qname)
 
-    last = ev.groupBy("user_id").agg(
+    last = events.groupBy("user_id").agg(
         F.max(F.unix_timestamp("ts")).alias("_last_sec")
     )
     return (

@@ -7,8 +7,13 @@ import duckdb
 import pytest
 
 from html_parser_spark.operators import dedup, textstats
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _docs(spark):
+    return read_corpus(spark, SF_DIR, "documents")
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +27,7 @@ def duck():
 
 
 def test_ngram_topk_matches_duckdb(spark, duck):
-    srows = sorted(map(tuple, textstats.ngram_topk(spark, SF_DIR).collect()))
+    srows = sorted(map(tuple, textstats.ngram_topk(_docs(spark)).collect()))
     drows = sorted(map(tuple, duck.execute(textstats.ngram_topk_sql()).fetchall()))
     assert srows == drows
     assert len(srows) == 20
@@ -44,7 +49,7 @@ def test_ngram_topk_counts_all_occurrences(spark, duck):
 def test_decontaminate_matches_duckdb(spark, duck):
     for width in (3, 8):
         srows = sorted(
-            map(tuple, dedup.decontaminate(spark, SF_DIR, gram_width=width).collect())
+            map(tuple, dedup.decontaminate(_docs(spark), gram_width=width).collect())
         )
         drows = sorted(
             map(tuple, duck.execute(dedup.decontaminate_sql(gram_width=width)).fetchall())
@@ -53,27 +58,27 @@ def test_decontaminate_matches_duckdb(spark, duck):
 
 
 def test_decontaminate_excludes_eval_docs(spark):
-    ids = [r.doc_id for r in dedup.decontaminate(spark, SF_DIR, gram_width=3).collect()]
+    ids = [r.doc_id for r in dedup.decontaminate(_docs(spark), gram_width=3).collect()]
     assert ids == sorted(ids)
     assert all(i % 25 != 0 for i in ids)
 
 
 def test_decontaminate_plan_broadcasts_eval_side(spark):
-    plan = dedup.decontaminate(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = dedup.decontaminate(_docs(spark))._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # the training side must not sort-merge (no full shuffle for the join)
     assert "SortMergeJoin" not in plan
 
 
 def test_ngram_topk_plan_is_partial_agg_topk(spark):
-    plan = textstats.ngram_topk(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = textstats.ngram_topk(_docs(spark))._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     # map-side combine: two HashAggregates (partial + final) around ONE exchange
     assert plan.count("Exchange") - plan.count("ReusedExchange") <= 2
 
 
 def test_repetition_filters_matches_duckdb(spark, duck):
-    srows = sorted(map(tuple, textstats.repetition_filters(spark, SF_DIR).collect()))
+    srows = sorted(map(tuple, textstats.repetition_filters(_docs(spark)).collect()))
     drows = sorted(map(tuple, duck.execute(textstats.repetition_filters_sql()).fetchall()))
     assert srows == drows
     assert len(srows) == len(drows) > 0
@@ -97,7 +102,7 @@ def test_repetition_filters_semantics(spark, tmp_path):
 
     got = {
         r["doc_id"]: r.asDict()
-        for r in textstats.repetition_filters(spark, str(tmp_path)).collect()
+        for r in textstats.repetition_filters(spark.read.parquet(path)).collect()
     }
     # doc 1: n_dup=2/3 lines, 2/3 chars; bigrams "a a","a b" tie -> "a b"
     assert got[1]["dup_line_bp"] == 6666
@@ -134,7 +139,7 @@ def test_repetition_filters_semantics(spark, tmp_path):
 def test_repetition_filters_plan_no_shuffle(spark):
     """Per-doc repetition stats must stay scan -> project: any Exchange
     means 10^12 lines would cross the wire at the target scale."""
-    plan = textstats.repetition_filters(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = textstats.repetition_filters(_docs(spark))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
 
@@ -144,11 +149,11 @@ def test_filter_quality_equals_join_formulation(spark):
     original column intact."""
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = _docs(spark)
     inline = textstats.filter_quality(docs)
     assert inline.columns == docs.columns
     keep = (
-        textstats.repetition_filters(spark, SF_DIR)
+        textstats.repetition_filters(docs)
         .filter(F.col("gopher_keep") == 1)
         .select("doc_id")
     )
@@ -162,7 +167,7 @@ def test_filter_quality_equals_join_formulation(spark):
 def test_filter_quality_plan_no_shuffle_no_join(spark):
     """The inline gate is the reason the quality stage scales: one scan,
     no Exchange, no join anywhere in the physical plan."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = _docs(spark)
     plan = (
         textstats.filter_quality(docs)
         ._jdf.queryExecution()
@@ -173,7 +178,7 @@ def test_filter_quality_plan_no_shuffle_no_join(spark):
     assert "Join" not in plan
 
 
-def test_repetition_filters_random_docs_vs_python(spark, tmp_path):
+def test_repetition_filters_random_docs_vs_python(spark):
     """Property check: the array-op formulation (sort + neighbor equality,
     run-length aggregate) equals a naive pure-Python computation on random
     multi-line docs — guards the O(L log L) trick against off-by-ones."""
@@ -191,11 +196,9 @@ def test_repetition_filters_random_docs_vs_python(spark, tmp_path):
         docs.append((doc_id, "\n".join(lines)))
 
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    path = str(tmp_path / "documents.parquet")
-    df.coalesce(1).write.parquet(path)
     got = {
         r["doc_id"]: r.asDict()
-        for r in textstats.repetition_filters(spark, str(tmp_path)).collect()
+        for r in textstats.repetition_filters(df).collect()
     }
 
     def norm(t):
@@ -228,29 +231,20 @@ def test_repetition_filters_random_docs_vs_python(spark, tmp_path):
         assert have == want, (doc_id, repr(text), have, want)
 
 
-def test_vocab_coverage_semantics(spark, tmp_path):
+def test_vocab_coverage_semantics(spark):
     """Crafted corpus with a known top-K vocabulary: common words are
     in-vocab, rare words are OOV, and the basis-point floor is exact."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [1, 2, 3],
-                # 'the' x5, 'cat' x4, 'sat' x3 dominate; zz/qq/jj are rare
-                "text": [
-                    "the cat sat the cat",
-                    "the cat sat zz",
-                    "the cat sat the qq jj",
-                ],
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
+    docs = spark.createDataFrame(
+        [
+            # 'the' x5, 'cat' x4, 'sat' x3 dominate; zz/qq/jj are rare
+            (1, "the cat sat the cat"),
+            (2, "the cat sat zz"),
+            (3, "the cat sat the qq jj"),
+        ],
+        "doc_id long, text string",
     )
     rows = {
-        r.doc_id: r
-        for r in textstats.vocab_coverage(spark, str(tmp_path), vocab_k=3).collect()
+        r.doc_id: r for r in textstats.vocab_coverage(docs, vocab_k=3).collect()
     }
     assert (rows[1].n_words, rows[1].n_oov, rows[1].oov_bp) == (5, 0, 0)
     assert (rows[2].n_words, rows[2].n_oov, rows[2].oov_bp) == (4, 1, 2500)
@@ -266,7 +260,7 @@ def test_vocab_coverage_broadcasts_vocabulary(spark):
     """The membership join must broadcast the LM-sized vocabulary — the
     corpus-side explode never shuffles for it."""
     plan = (
-        textstats.vocab_coverage(spark, SF_DIR)
+        textstats.vocab_coverage(_docs(spark))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -274,34 +268,24 @@ def test_vocab_coverage_broadcasts_vocabulary(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_shared_substrings_semantics(spark, tmp_path):
+def test_shared_substrings_semantics(spark):
     """Two documents embedding an identical 60-char span must share all
     its 40-char window fingerprints; an unrelated doc contributes none.
     Sampling disabled (empty prefix) so the expectation is exact."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from html_parser_spark.operators.dedup import shared_substrings
 
     boiler = "this exact licensing banner repeats verbatim across documents."
     assert len(boiler) == 62
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [
-                    f"alpha {boiler} omega",
-                    f"gamma gamma {boiler} delta",
-                    "entirely unrelated content with no repeated span at all "
-                    "padded well past the window width for realism",
-                ],
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
+    docs = spark.createDataFrame(
+        [
+            (1, f"alpha {boiler} omega"),
+            (2, f"gamma gamma {boiler} delta"),
+            (3, "entirely unrelated content with no repeated span at all "
+                "padded well past the window width for realism"),
+        ],
+        "doc_id long, text string",
     )
-    rows = shared_substrings(
-        spark, str(tmp_path), window=40, sample_prefix=""
-    ).collect()
+    rows = shared_substrings(docs, window=40, sample_prefix="").collect()
     # every 40-window fully inside the 62-char boiler span is shared;
     # windows straddling the differing prefixes/suffixes are not
     assert len(rows) >= 62 - 40 + 1
@@ -311,20 +295,11 @@ def test_shared_substrings_semantics(spark, tmp_path):
     assert keys == sorted(keys)
 
 
-def test_shared_substrings_short_docs_yield_no_windows(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def test_shared_substrings_short_docs_yield_no_windows(spark):
     from html_parser_spark.operators.dedup import shared_substrings
 
-    pq.write_table(
-        pa.table({"doc_id": [1, 2], "text": ["tiny", "tiny"]}),
-        str(tmp_path / "documents.parquet"),
-    )
-    assert (
-        shared_substrings(spark, str(tmp_path), window=40, sample_prefix="").count()
-        == 0
-    )
+    docs = spark.createDataFrame([(1, "tiny"), (2, "tiny")], "doc_id long, text string")
+    assert shared_substrings(docs, window=40, sample_prefix="").count() == 0
 
 
 def test_operators_on_empty_and_degenerate_corpora(spark, tmp_path):
@@ -341,26 +316,21 @@ def test_operators_on_empty_and_degenerate_corpora(spark, tmp_path):
     schema = "doc_id long, text string, source string, n_chars long"
 
     d_empty = str(tmp_path / "empty")
-    spark.createDataFrame([], schema).write.parquet(
-        f"{d_empty}/documents.parquet"
-    )
-    assert textstats.filter_quality(
-        spark.read.parquet(f"{d_empty}/documents.parquet")
-    ).count() == 0
-    assert textstats.repetition_filters(spark, d_empty).count() == 0
-    assert dedup_cluster_keep_list(spark, d_empty).count() == 0
-    assert decontaminate(spark, d_empty).count() == 0
-    assert sampling.corpus_splits(spark, d_empty).count() == 0
-    assert chunking.pack_sequences(spark, d_empty).count() == 0
+    spark.createDataFrame([], schema).write.parquet(d_empty)
+    empty = spark.read.parquet(d_empty)
+    assert textstats.filter_quality(empty).count() == 0
+    assert textstats.repetition_filters(empty).count() == 0
+    assert dedup_cluster_keep_list(empty).count() == 0
+    assert decontaminate(empty).count() == 0
+    assert sampling.corpus_splits(empty).count() == 0
+    assert chunking.pack_sequences(empty).count() == 0
 
     # all-identical corpus: one cluster, exactly one keeper (min doc_id)
     d_same = str(tmp_path / "same")
     text = "the same document body repeated verbatim across every row " * 8
     rows = [(i, text, "s", len(text)) for i in range(1, 41)]
-    spark.createDataFrame(rows, schema).write.parquet(
-        f"{d_same}/documents.parquet"
-    )
-    cl = dedup_cluster_keep_list(spark, d_same).collect()
+    spark.createDataFrame(rows, schema).write.parquet(d_same)
+    cl = dedup_cluster_keep_list(spark.read.parquet(d_same)).collect()
     assert len(cl) == 40
     assert {r.cluster_id for r in cl} == {1}
     keepers = [r.doc_id for r in cl if r.is_keeper == 1]

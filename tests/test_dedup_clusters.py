@@ -10,6 +10,7 @@ with its arguments.
 import pytest
 
 from html_parser_spark.operators import dedup
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -63,35 +64,26 @@ def test_nonconvergence_raises(spark):
 
 
 def test_minhash_geometry_is_parameterized(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sig_default = dedup.minhash_signatures_of(docs)  # 128 hashes
+    docs = read_corpus(spark, SF_DIR, "documents")
+    sig_default = dedup.minhash_signatures(docs)  # 128 hashes
     assert len(sig_default.columns) == 1 + dedup.N_HASHES == 129
-    sig_gate = dedup.minhash_signatures_of(docs, n_hashes=dedup.GATE_N_HASHES)
+    sig_gate = dedup.minhash_signatures(docs, n_hashes=dedup.GATE_N_HASHES)
     assert len(sig_gate.columns) == 1 + 8
     keys = dedup.minhash_band_keys(sig_default)  # 16 bands
     bands = {r.band for r in keys.select("band").distinct().collect()}
     assert bands == set(range(dedup.N_BANDS)) and len(bands) == 16
 
 
-def test_default_geometry_finds_planted_dup(spark, tmp_path):
+def test_default_geometry_finds_planted_dup(spark):
     """The 128/16 corpus-scale geometry end to end on a planted corpus:
     an exact duplicate has identical signatures at ANY geometry, so the
     banded self-join must surface exactly that pair."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     dup = "the same long document text appears twice in this corpus " * 3
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [dup, dup, "a completely different short text"],
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
+    docs = spark.createDataFrame(
+        [(1, dup), (2, dup), (3, "a completely different short text")],
+        "doc_id long, text string",
     )
-    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    cand = dedup.minhash_candidates_of(docs).collect()
+    cand = dedup.minhash_candidates(docs).collect()
     assert [(r.doc_a, r.doc_b) for r in cand] == [(1, 2)]
 
 
@@ -101,27 +93,19 @@ def test_default_geometry_finds_planted_dup(spark, tmp_path):
 # corpus (precomputed from the md5 bucket definition).
 
 
-def _write_incr_corpus(tmp_path, rows):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ids, texts = zip(*rows)
-    pq.write_table(
-        pa.table({"doc_id": list(ids), "text": list(texts)}),
-        str(tmp_path / "documents.parquet"),
-    )
-    return str(tmp_path)
+def _incr_corpus(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_incremental_dedup_statuses(spark, tmp_path):
+def test_incremental_dedup_statuses(spark):
     """Planted semantics: a batch doc duplicating a corpus doc drops as
     dup_of_corpus; two batch dups of each other resolve greedily by id
     (smaller kept, larger dup_in_batch); corpus wins over batch when a
     doc matches both; unmatched batch docs are kept."""
     dup_a = "alpha beta gamma delta epsilon zeta eta theta " * 4
     dup_b = "one two three four five six seven eight nine ten " * 4
-    sf = _write_incr_corpus(
-        tmp_path,
+    docs = _incr_corpus(
+        spark,
         [
             (1, dup_a),                       # corpus
             (2, "unrelated corpus text that matches nothing else here"),
@@ -131,7 +115,7 @@ def test_incremental_dedup_statuses(spark, tmp_path):
             (38, "a fresh unique batch document with its own words"),
         ],
     )
-    rows = {r.doc_id: r for r in dedup.incremental_dedup(spark, sf).collect()}
+    rows = {r.doc_id: r for r in dedup.incremental_dedup(docs).collect()}
     assert set(rows) == {7, 17, 25, 38}  # corpus docs never appear
     assert (rows[7].status, rows[7].dup_of) == ("dup_of_corpus", 1)
     assert (rows[17].status, rows[17].dup_of) == ("kept", None)
@@ -139,13 +123,13 @@ def test_incremental_dedup_statuses(spark, tmp_path):
     assert (rows[38].status, rows[38].dup_of) == ("kept", None)
 
 
-def test_incremental_dedup_corpus_precedence(spark, tmp_path):
+def test_incremental_dedup_corpus_precedence(spark):
     """A batch doc matching BOTH a corpus doc and a smaller batch doc
     reports the corpus match (the corpus keeper is the survivor that
     already exists downstream)."""
     dup = "same text everywhere in corpus and batch alike repeated " * 4
-    sf = _write_incr_corpus(tmp_path, [(5, dup), (17, dup), (25, dup)])
-    rows = {r.doc_id: r for r in dedup.incremental_dedup(spark, sf).collect()}
+    docs = _incr_corpus(spark, [(5, dup), (17, dup), (25, dup)])
+    rows = {r.doc_id: r for r in dedup.incremental_dedup(docs).collect()}
     assert (rows[17].status, rows[17].dup_of) == ("dup_of_corpus", 5)
     assert (rows[25].status, rows[25].dup_of) == ("dup_of_corpus", 5)
 
@@ -170,7 +154,7 @@ def _against_fixture(spark):
         "doc_id long, text string",
     )
     keys = dedup.minhash_band_keys(
-        dedup.minhash_signatures_of(corpus, 8, "fast"), 8, 4, "fast"
+        dedup.minhash_signatures(corpus, 8, "fast"), 8, 4, "fast"
     )
     return batch, keys, corpus
 
@@ -227,16 +211,16 @@ def test_member_limit_fallback(spark, monkeypatch, op):
     identical.  The
     incremental op's batch-key broadcast against the stored key table is
     not guarded and stays."""
+    docs = read_corpus(spark, SF_DIR, "documents")
     if op == "ngram_jaccard":
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        run = lambda: dedup.ngram_jaccard_of(docs, n_hashes=8, n_bands=4)  # noqa: E731
+        run = lambda: dedup.ngram_jaccard(docs, n_hashes=8, n_bands=4)  # noqa: E731
     elif op == "incremental_against":
         batch, keys, corpus = _against_fixture(spark)
         run = lambda: dedup.incremental_dedup_against(  # noqa: E731
             batch, keys, corpus, n_hashes=8, n_bands=4
         )
     else:
-        run = lambda: dedup.decontaminate(spark, SF_DIR, gram_width=3)  # noqa: E731
+        run = lambda: dedup.decontaminate(docs, gram_width=3)  # noqa: E731
     # only the operators' own hints may broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -258,7 +242,9 @@ def test_incremental_dedup_broadcasts_batch_side(spark):
     """The batch→corpus candidate join must broadcast the batch keys —
     the corpus band-key table never shuffles for it."""
     plan = (
-        dedup.incremental_dedup(spark, SF_DIR, n_hashes=8, n_bands=4)
+        dedup.incremental_dedup(
+            read_corpus(spark, SF_DIR, "documents"), n_hashes=8, n_bands=4
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -23,6 +23,7 @@ the two statistical contracts the scale path must keep:
 import pytest
 
 from html_parser_spark.operators import dedup
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 GEOM = dict(n_hashes=128, n_bands=16)
@@ -41,8 +42,8 @@ def test_cw_coefficients_are_odd_and_seeded():
 
 
 def test_fast_signature_values_are_32bit(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sig = dedup.minhash_signatures_of(docs, n_hashes=8, hash_family="fast")
+    docs = read_corpus(spark, SF_DIR, "documents")
+    sig = dedup.minhash_signatures(docs, n_hashes=8, hash_family="fast")
     row = sig.limit(5).collect()
     assert row, "signatures empty"
     for r in row:
@@ -53,16 +54,17 @@ def test_fast_signature_values_are_32bit(spark):
 
 
 def test_fast_family_recall_and_precision(spark):
+    docs = read_corpus(spark, SF_DIR, "documents")
     md5 = {
         (r.doc_a, r.doc_b): r.jaccard_bp
         for r in dedup.ngram_jaccard(
-            spark, SF_DIR, threshold=0.8, hash_family="md5", **GEOM
+            docs, threshold=0.8, hash_family="md5", **GEOM
         ).collect()
     }
     fast = {
         (r.doc_a, r.doc_b): r.jaccard_bp
         for r in dedup.ngram_jaccard(
-            spark, SF_DIR, threshold=0.8, hash_family="fast", **GEOM
+            docs, threshold=0.8, hash_family="fast", **GEOM
         ).collect()
     }
     # verify stage is family-independent: agreed pairs score identically

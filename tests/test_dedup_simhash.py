@@ -7,24 +7,22 @@ from html_parser_spark.functions.textnorm import ascii_words
 from html_parser_spark.operators.dedup import (
     _sh64,
     simhash64,
-    simhash_component_edges_of,
+    simhash_component_edges,
     simhash_near_dups_sql,
-    simhash_sketches_of,
+    simhash_sketches,
 )
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+def _docs(spark):
+    return read_corpus(spark, SF_DIR, "documents")
 
 
-def _sketches(spark, sf_dir):
+def _sketches(docs):
     """doc_id → sketch as an unsigned int."""
-    return {
-        r.doc_id: int(r.simhash, 16)
-        for r in simhash_sketches_of(_docs(spark, sf_dir)).collect()
-    }
+    return {r.doc_id: int(r.simhash, 16) for r in simhash_sketches(docs).collect()}
 
 
 def _bruteforce_pairs(sk):
@@ -38,19 +36,16 @@ def _bruteforce_pairs(sk):
     }
 
 
-def _component_edges(spark, sf_dir):
-    sk = simhash_sketches_of(_docs(spark, sf_dir)).select(
+def _component_edges(docs):
+    sk = simhash_sketches(docs).select(
         "doc_id", _sh64().alias("sh64")
     )
-    return [(r.doc_a, r.doc_b) for r in simhash_component_edges_of(sk).collect()]
+    return [(r.doc_a, r.doc_b) for r in simhash_component_edges(sk).collect()]
 
 
 def test_udf_matches_python_oracle(spark):
-    docs = {r.doc_id: r.text for r in _docs(spark, SF_DIR).collect()}
-    got = {
-        r.doc_id: r.simhash
-        for r in simhash_sketches_of(_docs(spark, SF_DIR)).collect()
-    }
+    docs = {r.doc_id: r.text for r in _docs(spark).collect()}
+    got = {r.doc_id: r.simhash for r in simhash_sketches(_docs(spark)).collect()}
     assert set(got) == set(docs)
     for doc_id, text in docs.items():
         want = format(
@@ -64,7 +59,7 @@ def test_near_dup_pairs_match_bruteforce(spark):
     find EXACTLY the brute-force ≤3-bit pairs (pigeonhole guarantees
     recall; distinct guarantees no dups), and Spark's component edges
     must span the same components."""
-    sk = _sketches(spark, SF_DIR)
+    sk = _sketches(_docs(spark))
     want = _bruteforce_pairs(sk)
     con = duckdb.connect()
     con.execute(
@@ -76,15 +71,12 @@ def test_near_dup_pairs_match_bruteforce(spark):
     for (a, b), h in got.items():
         assert bin(sk[a] ^ sk[b]).count("1") == h
     ids = sorted(sk)
-    assert _components(ids, _component_edges(spark, SF_DIR)) == _components(ids, want)
+    assert _components(ids, _component_edges(_docs(spark))) == _components(ids, want)
 
 
-def _planted_corpus(tmp_path):
+def _planted_corpus(spark):
     """Identical-sketch groups + one-word variants (small hamming) +
     unrelated texts — exercises the star, rep-edge, and singleton arms."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     base = "the quick brown fox jumps over the lazy dog again and again "
     rows = {
         1: base * 3,
@@ -95,13 +87,7 @@ def _planted_corpus(tmp_path):
         6: "another distinct document mentioning parquet and arrow",
         7: "third loner with its own vocabulary entirely separate",
     }
-    pq.write_table(
-        pa.table(
-            {"doc_id": list(rows), "text": [rows[k] for k in rows]}
-        ),
-        str(tmp_path / "documents.parquet"),
-    )
-    return str(tmp_path)
+    return spark.createDataFrame(list(rows.items()), "doc_id long, text string")
 
 
 def _components(ids, edges):
@@ -123,15 +109,15 @@ def _components(ids, edges):
     )
 
 
-def test_component_edges_equal_full_pair_components(spark, tmp_path):
-    """simhash_component_edges_of (stars + rep edges over distinct
+def test_component_edges_equal_full_pair_components(spark):
+    """simhash_component_edges (stars + rep edges over distinct
     sketch values) must yield EXACTLY the components of the full pair
     set, with no more edges than pairs."""
-    sf = _planted_corpus(tmp_path)
-    sk = _sketches(spark, sf)
+    docs = _planted_corpus(spark)
+    sk = _sketches(docs)
     ids = sorted(sk)
     pairs = _bruteforce_pairs(sk)
-    edges = _component_edges(spark, sf)
+    edges = _component_edges(docs)
     assert pairs, "planted corpus must produce near-dup pairs"
     assert _components(ids, edges) == _components(ids, pairs)
     assert len(edges) <= len(pairs)
@@ -140,15 +126,14 @@ def test_component_edges_equal_full_pair_components(spark, tmp_path):
     assert {1, 2, 3} <= set(next(iter(comp)))
 
 
-def test_near_dups_invariant_in_n_blocks(spark, tmp_path, monkeypatch):
+def test_near_dups_invariant_in_n_blocks(spark, monkeypatch):
     """The generalized pigeonhole is recall-lossless at any geometry: the
     exact hamming filter makes the sketch components invariant in
     ``N_BLOCKS``."""
     from html_parser_spark.operators import dedup
 
-    sf = _planted_corpus(tmp_path)
     nodes = (
-        simhash_sketches_of(_docs(spark, sf))
+        simhash_sketches(_planted_corpus(spark))
         .select(_sh64().alias("sh64"))
         .distinct()
     )

@@ -16,7 +16,12 @@ another script, never a second spelling of a package constant.
 A third census looks for copied code: no two functions in the package,
 ``tools/`` or the entry module have the same body.
 
-A fourth census is reachability: every top-level definition of the
+A path census keeps the corpus layout in one place: no f-string in the
+package, ``tools/`` or the entry module spells ``<dir>/<table>.parquet``
+outside ``sources/tables.py``, whose ``corpus_path`` is the one map
+from a table name to its file.
+
+A fifth census is reachability: every top-level definition of the
 package is reached from a program (the entry module, ``bench.py``,
 ``tools/``, non-test ``perfbench/`` files, or a package module's
 module-level statements), transitively through the bodies of reached
@@ -25,6 +30,7 @@ definitions, or it is on ``KEEP`` with the reason a test needs it.
 import ast
 import glob
 import os
+import re
 
 from conftest import REPO
 
@@ -169,6 +175,36 @@ def test_no_function_body_is_duplicated():
     assert not dups, (
         f"{len(dups)} function bodies are written more than once; keep one "
         "and import it:\n  " + "\n  ".join(", ".join(d) for d in dups))
+
+
+# The one module that maps a corpus table name to its location.
+LAYOUT_HOME = os.path.join(REPO, "html_parser_spark", "sources", "tables.py")
+
+
+def corpus_path_spellings():
+    """``path:line template`` of every f-string in ``PROGRAM`` outside
+    ``LAYOUT_HOME`` that formats a directory into a ``<dir>/<table>.parquet``
+    path (``{}`` marks each formatted value)."""
+    sites = []
+    for path in PROGRAM:
+        if path == LAYOUT_HOME:
+            continue
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.JoinedStr):
+                continue
+            template = "".join(
+                v.value if isinstance(v, ast.Constant) else "{}" for v in node.values)
+            if re.search(r"\{\}/(\w+|\{\})\.parquet$", template):
+                sites.append(f"{os.path.relpath(path, REPO)}:{node.lineno} {template}")
+    return sites
+
+
+def test_only_the_table_reader_spells_a_corpus_path():
+    sites = corpus_path_spellings()
+    assert not sites, (
+        f"{len(sites)} f-strings spell a corpus table's file; read it with "
+        "sources.tables.read_corpus (or corpus_path) instead:\n  "
+        + "\n  ".join(sites))
 
 
 # Package definitions that no program reaches, each a reference or

@@ -12,6 +12,7 @@ from html_parser_spark.operators.linkrank import (
     link_target_stats_sql,
     pagerank_fixed,
 )
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -91,7 +92,7 @@ def test_pagerank_dangling_sink_recirculates(spark):
 def test_corpus_pagerank_runs_and_orders_popular_targets_first(spark):
     from html_parser_spark.operators.linkrank import _doc_url_edges
 
-    edges = _doc_url_edges(spark, SF_DIR)
+    edges = _doc_url_edges(read_corpus(spark, SF_DIR, "transcripts"))
     n_edges = edges.count()
     ranks = {r.node: r.rank_fp for r in pagerank_fixed(edges, iterations=4).collect()}
     urls = {k: v for k, v in ranks.items() if k.startswith("url:")}
@@ -113,7 +114,7 @@ def test_target_stats_match_duckdb_twin_on_goldens(spark):
     from html_parser_spark.goldens import link_golden_parquet
 
     golden = link_golden_parquet(0.001)
-    got = link_target_stats(spark, SF_DIR, top_k=50).collect()
+    got = link_target_stats(read_corpus(spark, SF_DIR, "transcripts"), top_k=50).collect()
     want = duckdb.sql(link_target_stats_sql(golden, top_k=50)).fetchall()
     got_rows = [
         (
@@ -131,7 +132,7 @@ def test_target_stats_reuses_the_harvest_exchange(spark):
     executes once — the executed adaptive plan shows a ReusedExchange
     (without the shared pre-agg, each grouping keyed its own exchange
     and the UDF ran twice)."""
-    df = link_target_stats(spark, SF_DIR, top_k=10)
+    df = link_target_stats(read_corpus(spark, SF_DIR, "transcripts"), top_k=10)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ReusedExchange") >= 1, plan[:2000]

@@ -12,6 +12,7 @@ from html_parser_spark.operators.resume import (
 )
 
 CORPUS_JOB = os.path.join(REPO, "tools", "submit", "corpus_job.py")
+INCREMENTAL_JOB = os.path.join(REPO, "tools", "submit", "incremental_job.py")
 
 
 @pytest.fixture(scope="module")
@@ -111,10 +112,12 @@ def test_corpus_job_stage_resume(tmp_path_factory):
     assert not any(m.get("skipped") for m in fresh)
 
     # kill simulation: split + pack artifacts never committed
-    for d in (f"{out}/splits", f"{out}/documents", f"{out}/sequences",
-              f"{work}/train"):
+    for d in (f"{out}/splits", f"{out}/documents", f"{out}/sequences"):
         shutil.rmtree(d, ignore_errors=True)
     resumed = run("--resume")
+    # the pack stage reads the train split as a frame, never a re-write
+    assert sorted(os.listdir(work)) == [
+        "clean", "deduped", "extracted", "fused", "quality"]
 
     by = {m["stage"]: m for m in resumed}
     for st in ("extract", "linkrank", "quality", "dedup", "decontaminate"):
@@ -145,3 +148,53 @@ def test_corpus_job_stage_resume(tmp_path_factory):
     )
     assert p.returncode != 0
     assert "bucket_docs=8" in (p.stdout + p.stderr)
+
+
+def test_incremental_job_stage_flow(tmp_path):
+    """The incremental ingest CLI over an sf0.001 corpus and an sf0.001
+    transcripts batch: every stage's rows out are the next stage's rows
+    in, each kept document appends one band key per band, and a
+    band-key bootstrap killed before its job commit (a directory
+    holding only ``_temporary``) is rebuilt, then reused verbatim by
+    the next submit."""
+    import json
+    import shutil
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    from html_parser_spark.operators.dedup import N_BANDS
+
+    docs = "/root/testdata/sf0.001/documents.parquet"
+    batch = ensure_transcripts(0.001)
+    corpus = tmp_path / "corpus"
+    (corpus / "band_keys.parquet" / "_temporary" / "0").mkdir(parents=True)
+    shutil.copy(docs, corpus / "documents.parquet")
+    out = str(tmp_path / "out")
+
+    def run():
+        env = dict(os.environ, PYTHONPATH=REPO)
+        p = subprocess.run(
+            [sys.executable, INCREMENTAL_JOB, "--corpus", str(corpus),
+             "--batch-input", batch, "--output", out],
+            capture_output=True, text=True, env=env, timeout=900,
+        )
+        assert p.returncode == 0, p.stderr[-2000:]
+        with open(os.path.join(out, "metrics.json")) as f:
+            return {m["stage"]: (m["rows_in"], m["rows_out"])
+                    for m in map(json.loads, f)}
+
+    first = run()
+    committed = corpus / "band_keys.parquet" / "_SUCCESS"
+    assert committed.exists()
+    assert list(first) == ["keys", "extract", "dedup", "append"]
+    n_docs, n_turns = pq.read_metadata(docs).num_rows, pq.read_metadata(batch).num_rows
+    assert first["keys"] == (n_docs, n_docs * N_BANDS)
+    assert first["extract"][0] == n_turns >= first["extract"][1] > 0
+    assert first["dedup"][0] == first["extract"][1] >= first["dedup"][1] > 0
+    assert first["append"] == (first["dedup"][1], first["dedup"][1] * N_BANDS)
+
+    stamp = committed.stat().st_mtime_ns
+    assert run() == first
+    assert committed.stat().st_mtime_ns == stamp

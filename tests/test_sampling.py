@@ -6,8 +6,13 @@ import duckdb
 import pytest
 
 from html_parser_spark.operators import sampling
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _docs(spark):
+    return read_corpus(spark, SF_DIR, "documents")
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +26,7 @@ def duck():
 
 
 def test_corpus_splits_matches_duckdb(spark, duck):
-    srows = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR).collect()))
+    srows = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
     drows = sorted(map(tuple, duck.execute(sampling.corpus_splits_sql()).fetchall()))
     assert srows == drows
     assert len(srows) == 500
@@ -32,13 +37,13 @@ def test_sample_matches_duckdb(spark, duck, monkeypatch):
     rate the gate row runs."""
     for rate in (1000, 2500):
         monkeypatch.setattr(sampling, "SAMPLE_RATE_BP", rate)
-        srows = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR).collect()))
+        srows = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
         drows = sorted(map(tuple, duck.execute(sampling.corpus_splits_sql()).fetchall()))
         assert srows == drows, rate
 
 
 def test_splits_partition_the_corpus(spark):
-    rows = sampling.corpus_splits(spark, SF_DIR).collect()
+    rows = sampling.corpus_splits(_docs(spark)).collect()
     assert len({r.doc_id for r in rows}) == len(rows) == 500
     frac = {s: sum(r.split == s for r in rows) / len(rows) for s in ("train", "val", "test")}
     assert sum(frac.values()) == 1.0
@@ -49,17 +54,17 @@ def test_splits_partition_the_corpus(spark):
 
 
 def test_split_is_seed_versioned_and_deterministic(spark):
-    a = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR).collect()))
-    b = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR).collect()))
+    a = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
+    b = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
     assert a == b
-    c = sorted(map(tuple, sampling.corpus_splits(spark, SF_DIR, seed="split-v2").collect()))
+    c = sorted(map(tuple, sampling.corpus_splits(_docs(spark), seed="split-v2").collect()))
     assert a != c  # bumping the seed reshuffles
     assert [r[0] for r in a] == [r[0] for r in c]  # ...but covers the same docs
 
 
 def _sampled(spark, monkeypatch, rate):
     monkeypatch.setattr(sampling, "SAMPLE_RATE_BP", rate)
-    return {r.doc_id for r in sampling.corpus_splits(spark, SF_DIR).collect() if r.in_sample}
+    return {r.doc_id for r in sampling.corpus_splits(_docs(spark)).collect() if r.in_sample}
 
 
 def test_sample_rate_and_subset(spark, monkeypatch):
@@ -71,7 +76,7 @@ def test_sample_rate_and_subset(spark, monkeypatch):
 
 
 def test_plans_have_no_shuffle(spark):
-    df = sampling.corpus_splits(spark, SF_DIR)
+    df = sampling.corpus_splits(_docs(spark))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
@@ -80,7 +85,7 @@ def test_chunking_matches_duckdb(spark, duck):
     from html_parser_spark.operators import chunking
 
     for ct, ov in ((128, 32), (16, 4)):
-        srows = sorted(map(tuple, chunking.chunk_documents(spark, SF_DIR, ct, ov).collect()))
+        srows = sorted(map(tuple, chunking.chunk_documents(_docs(spark), ct, ov).collect()))
         drows = sorted(map(tuple, duck.execute(chunking.chunk_documents_sql(chunk_tokens=ct, overlap=ov)).fetchall()))
         assert srows == drows, (ct, ov)
         assert len(srows) >= 500  # every doc yields >= 1 chunk
@@ -89,7 +94,7 @@ def test_chunking_matches_duckdb(spark, duck):
 def test_chunking_window_invariants(spark):
     from html_parser_spark.operators import chunking
 
-    rows = chunking.chunk_documents(spark, SF_DIR, 16, 4).collect()
+    rows = chunking.chunk_documents(_docs(spark), 16, 4).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -124,16 +129,16 @@ def test_chunking_rejects_bad_overlap(spark):
     from html_parser_spark.operators import chunking
 
     with pytest.raises(ValueError):
-        chunking.chunk_documents(spark, SF_DIR, 16, 16)
+        chunking.chunk_documents(_docs(spark), 16, 16)
 
 
 def test_mix_matches_duckdb(spark, duck):
-    srows = sorted(map(tuple, sampling.mix_documents(spark, SF_DIR).collect()))
+    srows = sorted(map(tuple, sampling.mix_documents(_docs(spark)).collect()))
     drows = sorted(map(tuple, duck.execute(sampling.mix_documents_sql()).fetchall()))
     assert srows == drows
     custom = {"src3": 10000, "src4": 0}
     srows = sorted(
-        map(tuple, sampling.mix_documents(spark, SF_DIR, rates_bp=custom, default_bp=500).collect())
+        map(tuple, sampling.mix_documents(_docs(spark), rates_bp=custom, default_bp=500).collect())
     )
     drows = sorted(
         map(tuple, duck.execute(sampling.mix_documents_sql(rates_bp=custom, default_bp=500)).fetchall())
@@ -143,7 +148,7 @@ def test_mix_matches_duckdb(spark, duck):
 
 def test_mix_respects_rates(spark):
     rows = sampling.mix_documents(
-        spark, SF_DIR, rates_bp={"src0": 10000, "src1": 0}, default_bp=0
+        _docs(spark), rates_bp={"src0": 10000, "src1": 0}, default_bp=0
     ).collect()
     srcs = {r.source for r in rows}
     assert srcs == {"src0"}  # rate-0 sources vanish, rate-10000 keeps all
@@ -161,8 +166,8 @@ def test_mix_independent_of_split(spark):
     """Different seeds: the mixing decision must not correlate with the
     split assignment (both are md5 buckets but over different keys)."""
     mix_ids = {r.doc_id for r in sampling.mix_documents(
-        spark, SF_DIR, rates_bp={}, default_bp=5000).collect()}
-    splits = {r.doc_id: r.split for r in sampling.corpus_splits(spark, SF_DIR).collect()}
+        _docs(spark), rates_bp={}, default_bp=5000).collect()}
+    splits = {r.doc_id: r.split for r in sampling.corpus_splits(_docs(spark)).collect()}
     picked_train = sum(1 for i in mix_ids if splits[i] == "train")
     # ~90% of the mixed half should be train; gross correlation would skew it
     assert 0.8 < picked_train / len(mix_ids) < 1.0
@@ -173,7 +178,7 @@ def test_pack_sequences_matches_duckdb(spark, duck):
 
     for sl, ng in ((512, 4), (64, 2)):
         srows = sorted(
-            map(tuple, chunking.pack_sequences(spark, SF_DIR, sl, ng).collect())
+            map(tuple, chunking.pack_sequences(_docs(spark), sl, ng).collect())
         )
         drows = sorted(
             map(
@@ -194,7 +199,7 @@ def test_pack_sequences_invariants(spark):
     from html_parser_spark.operators import chunking
 
     seq_len = 256
-    rows = chunking.pack_sequences(spark, SF_DIR, seq_len=seq_len, n_groups=4).collect()
+    rows = chunking.pack_sequences(_docs(spark), seq_len=seq_len, n_groups=4).collect()
 
     # (a) sequences are full except each group's final one
     per_seq = {}
@@ -231,7 +236,7 @@ def test_pack_sequences_single_shuffle(spark):
     """One Exchange total (the group window); text never enters the plan."""
     from html_parser_spark.operators import chunking
 
-    df = chunking.pack_sequences(spark, SF_DIR)
+    df = chunking.pack_sequences(_docs(spark))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     # the shuffle moves (group_id, doc_id, n_tokens) only: the text column
@@ -250,7 +255,7 @@ def test_splits_in_sample_column_equals_sample_membership(spark):
 
     flags = {
         r.doc_id: r.in_sample
-        for r in sampling.corpus_splits(spark, SF_DIR).collect()
+        for r in sampling.corpus_splits(_docs(spark)).collect()
     }
     members = {
         d for d in flags

@@ -8,8 +8,14 @@ import duckdb
 import pytest
 
 from html_parser_spark.operators import scrub
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _docs(spark):
+    return read_corpus(spark, SF_DIR, "documents")
+
 
 CRAFTED = [
     (1, "mail bob.smith+x@ex-ample.co.uk now"),
@@ -25,7 +31,7 @@ def test_three_way_agreement_crafted(spark, tmp_path):
     df = spark.createDataFrame(CRAFTED, "doc_id int, text string")
     path = str(tmp_path / "documents.parquet")
     df.coalesce(1).write.parquet(path)
-    got = {r.doc_id: r for r in scrub.pii_scrub(spark, str(tmp_path)).collect()}
+    got = {r.doc_id: r for r in scrub.pii_scrub(spark.read.parquet(path)).collect()}
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
@@ -41,11 +47,9 @@ def test_three_way_agreement_crafted(spark, tmp_path):
         assert g.chars_removed == len(text) - len(py)
 
 
-def test_counts_crafted(spark, tmp_path):
+def test_counts_crafted(spark):
     df = spark.createDataFrame(CRAFTED, "doc_id int, text string")
-    path = str(tmp_path / "documents.parquet")
-    df.coalesce(1).write.parquet(path)
-    got = {r.doc_id: r for r in scrub.pii_scrub(spark, str(tmp_path)).collect()}
+    got = {r.doc_id: r for r in scrub.pii_scrub(df).collect()}
     assert (got[1].n_email, got[1].n_ipv4, got[1].n_phone) == (1, 0, 0)
     assert (got[2].n_email, got[2].n_ipv4, got[2].n_phone) == (0, 2, 0)
     assert (got[3].n_email, got[3].n_ipv4, got[3].n_phone) == (0, 0, 2)
@@ -55,7 +59,7 @@ def test_counts_crafted(spark, tmp_path):
 
 
 def test_matches_duckdb_on_corpus(spark):
-    srows = sorted(map(tuple, scrub.pii_scrub(spark, SF_DIR).collect()))
+    srows = sorted(map(tuple, scrub.pii_scrub(_docs(spark)).collect()))
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
     drows = sorted(map(tuple, con.execute(scrub.pii_scrub_sql()).fetchall()))
@@ -65,5 +69,5 @@ def test_matches_duckdb_on_corpus(spark):
 
 
 def test_plan_no_shuffle(spark):
-    plan = scrub.pii_scrub(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = scrub.pii_scrub(_docs(spark))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

@@ -15,13 +15,14 @@ from html_parser_spark.operators.similarity import (
     embedding_near_dups,
     embedding_near_dups_allpairs,
 )
+from html_parser_spark.sources.tables import corpus_path, read_corpus
 
 DIM = 64
 
 
 @pytest.fixture(scope="module")
-def planted_dir(spark, tmp_path_factory):
-    """Parquet embeddings table with 25 planted near-dup pairs."""
+def planted(spark):
+    """Embeddings table with 25 planted near-dup pairs."""
     rng = np.random.default_rng(20260817)
     base = rng.standard_normal((120, DIM))
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
@@ -32,34 +33,32 @@ def planted_dir(spark, tmp_path_factory):
         noise = rng.standard_normal(DIM)
         noise = noise / np.linalg.norm(noise) * np.linalg.norm(v) * eps
         rows.append((1000 + j, [float(x) for x in (v + noise)]))
-    d = tmp_path_factory.mktemp("planted")
-    spark.createDataFrame(rows, "vec_id: long, embedding: array<float>").coalesce(
-        1
-    ).write.parquet(f"{d}/embeddings.parquet")
-    return str(d)
+    return spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
 
 
 def _pairs(df):
     return {(r.vec_a, r.vec_b, r.cosine_bp) for r in df.collect()}
 
 
-def test_lsh_near_dups_match_allpairs_on_planted(spark, planted_dir):
-    exact = _pairs(embedding_near_dups_allpairs(spark, planted_dir, threshold=0.9))
-    lsh = _pairs(embedding_near_dups(spark, planted_dir, threshold=0.9))
+def test_lsh_near_dups_match_allpairs_on_planted(planted):
+    exact = _pairs(embedding_near_dups_allpairs(planted, threshold=0.9))
+    lsh = _pairs(embedding_near_dups(planted, threshold=0.9))
     assert len(exact) >= 15  # the plant actually produced near-dups
     assert lsh == exact
 
 
-def test_lsh_near_dups_recall_at_lower_threshold(spark, planted_dir):
+def test_lsh_near_dups_recall_at_lower_threshold(planted):
     """Pairs barely above the threshold (worst case for band recall)."""
-    exact = _pairs(embedding_near_dups_allpairs(spark, planted_dir, threshold=0.87))
-    lsh = _pairs(embedding_near_dups(spark, planted_dir, threshold=0.87))
+    exact = _pairs(embedding_near_dups_allpairs(planted, threshold=0.87))
+    lsh = _pairs(embedding_near_dups(planted, threshold=0.87))
     assert lsh == exact
 
 
 def test_near_dups_plan_has_no_nested_loop(spark):
     plan = (
-        embedding_near_dups(spark, "/root/testdata/sf0.01")
+        embedding_near_dups(
+            read_corpus(spark, "/root/testdata/sf0.01", "embeddings")
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -78,14 +77,19 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     100% of the corpus: brute force in disguise.  The trained index scans
     ~26% — see test_ivf_cells_balanced — so recall here is a real
     pruned-search figure, floor set from measured 32/50.)"""
-    from html_parser_spark.operators.similarity import cosine_topk, ivf_topk
+    from html_parser_spark.operators.similarity import (
+        cosine_topk,
+        ivf_topk,
+        trained_centroids,
+    )
 
     sf = "/root/testdata/sf0.01"
     exact = {}
-    for r in cosine_topk(spark, sf).collect():
+    emb = read_corpus(spark, sf, "embeddings")
+    for r in cosine_topk(emb).collect():
         exact.setdefault(r.query_id, {})[r.neighbor_id] = r.cosine_bp
     ivf = {}
-    for r in ivf_topk(spark, sf).collect():
+    for r in ivf_topk(emb, trained_centroids(sf)).collect():
         ivf.setdefault(r.query_id, {})[r.neighbor_id] = r.cosine_bp
     hits = total = 0
     for q, nbrs in exact.items():
@@ -108,7 +112,7 @@ def test_ivf_cells_balanced():
     from html_parser_spark.operators.similarity import trained_centroids
 
     sf = "/root/testdata/sf0.01"
-    t = pq.read_table(f"{sf}/embeddings.parquet", columns=["embedding"])
+    t = pq.read_table(corpus_path(sf, "embeddings"), columns=["embedding"])
     x = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
     cents = trained_centroids(sf)
     d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
@@ -129,7 +133,8 @@ def test_lsh_near_dups_runs_one_udf_stage(spark):
     cached frame."""
     from html_parser_spark.operators.similarity import embedding_near_dups
 
-    df = embedding_near_dups(spark, "/root/testdata/sf0.001")
+    emb = read_corpus(spark, "/root/testdata/sf0.001", "embeddings")
+    df = embedding_near_dups(emb)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
     # the only ArrowEvalPython nodes allowed are inside the (single)

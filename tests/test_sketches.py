@@ -12,16 +12,17 @@ from html_parser_spark.operators.textstats import (
     distinct_counts,
     length_quantiles,
 )
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_hll_within_5pct_of_exact(spark):
-    rows = distinct_counts(spark, SF_DIR).collect()
+    rows = distinct_counts(read_corpus(spark, SF_DIR, "documents")).collect()
     exact = {r.source: r.n_distinct for r in rows}
     approx = {
         r.source: r.n
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in read_corpus(spark, SF_DIR, "documents")
         .groupBy("source")
         .agg(F.approx_count_distinct(F.md5(_norm()), HLL_RSD).alias("n"))
         .collect()
@@ -41,7 +42,7 @@ def test_approx_quantiles_rank_error_bounded(spark):
 
     vals = {}
     for r in (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        read_corpus(spark, SF_DIR, "documents")
         .select("source", "n_chars")
         .collect()
     ):
@@ -54,7 +55,7 @@ def test_approx_quantiles_rank_error_bounded(spark):
     )
     approx = {
         r.source: tuple(r.q)
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in read_corpus(spark, SF_DIR, "documents")
         .groupBy("source")
         .agg(q.alias("q"))
         .collect()
@@ -67,4 +68,5 @@ def test_approx_quantiles_rank_error_bounded(spark):
             lo = bisect.bisect_left(v, a) / n
             hi = bisect.bisect_right(v, a) / n
             assert lo - 0.03 <= target <= hi + 0.03, (src, target, a, lo, hi)
-    assert all(r.approx_rank_ok == 1 for r in length_quantiles(spark, SF_DIR).collect())
+    docs = read_corpus(spark, SF_DIR, "documents")
+    assert all(r.approx_rank_ok == 1 for r in length_quantiles(docs).collect())

@@ -22,8 +22,8 @@ N_SINGLETONS = 200
 
 
 @pytest.fixture(scope="module")
-def skewed_docs_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("skew_docs"))
+def skewed_docs(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("skew") / "docs")
     rows = [
         (i, "the exact duplicated boilerplate body text " * 5)
         for i in range(DUP_DEPTH)
@@ -33,16 +33,14 @@ def skewed_docs_dir(spark, tmp_path_factory):
                         f"{'x' * (j % 17)} tail {j * 31}")
         for j in range(N_SINGLETONS)
     ]
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
-        f"{d}/documents.parquet"
-    )
-    return d
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(d)
+    return spark.read.parquet(d)
 
 
-def test_deep_exact_dup_group_yields_linear_edges(spark, skewed_docs_dir):
+def test_deep_exact_dup_group_yields_linear_edges(skewed_docs):
     from html_parser_spark.operators.dedup import near_dup_edges
 
-    edges = near_dup_edges(spark, skewed_docs_dir).collect()
+    edges = near_dup_edges(skewed_docs).collect()
     n_docs = DUP_DEPTH + N_SINGLETONS
     # stars: DUP_DEPTH-1 rows for the big group; the clique form would
     # emit ~k²/2 ≈ 500k rows
@@ -53,10 +51,10 @@ def test_deep_exact_dup_group_yields_linear_edges(spark, skewed_docs_dir):
     assert len(star) == DUP_DEPTH - 1
 
 
-def test_deep_exact_dup_group_resolves_to_one_keeper(spark, skewed_docs_dir):
+def test_deep_exact_dup_group_resolves_to_one_keeper(skewed_docs):
     from html_parser_spark.operators.dedup import dedup_cluster_keep_list
 
-    cc = dedup_cluster_keep_list(spark, skewed_docs_dir).collect()
+    cc = dedup_cluster_keep_list(skewed_docs).collect()
     group = [r for r in cc if r.doc_id < DUP_DEPTH]
     assert all(r.cluster_id == 0 for r in group)
     assert sum(r.is_keeper for r in group) == 1

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.operators.temporal import sessionize
+from html_parser_spark.sources.tables import read_corpus
 from html_parser_spark.streaming.stateful import sessionize_stream
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -21,7 +22,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture()
 def event_files(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ev_stream"))
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").orderBy("ts")
+    ev = read_corpus(spark, SF_DIR, "events").orderBy("ts")
     n = ev.count()
     rows = ev.collect()
     per = (n + 3) // 4
@@ -52,7 +53,7 @@ def event_files(spark, tmp_path_factory):
 
 
 def test_stateful_sessionize_matches_batch(spark, event_files, tmp_path):
-    ev_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
+    ev_schema = read_corpus(spark, SF_DIR, "events").schema
     stream = (
         spark.readStream.schema(ev_schema)
         .option("maxFilesPerTrigger", 1)
@@ -73,7 +74,7 @@ def test_stateful_sessionize_matches_batch(spark, event_files, tmp_path):
         for r in spark.sql("SELECT * FROM sess").collect()
     }
 
-    batch = sessionize(spark, SF_DIR).collect()
+    batch = sessionize(read_corpus(spark, SF_DIR, "events")).collect()
     batch_keys = {
         (r.user_id, r.start_sec, r.end_sec, r.n_events) for r in batch
     }
@@ -111,6 +112,6 @@ def test_sessionize_backfill_removes_staging(spark, tmp_path, monkeypatch):
     from html_parser_spark.streaming.stateful import run_sessionize_backfill
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    out = run_sessionize_backfill(spark, SF_DIR)
+    out = run_sessionize_backfill(read_corpus(spark, SF_DIR, "events"))
     assert list(tmp_path.glob("sess_stage_*")) == []
     assert out.count() > 0

@@ -162,7 +162,7 @@ def test_token_ops_parity_on_hostile_whitespace(spark, tmp_path, op):
         textstats, f"{op}_sql")()
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
-    got = getattr(textstats, op)(spark, str(tmp_path))
+    got = getattr(textstats, op)(spark.read.parquet(str(tmp_path / "documents.parquet")))
     want = con.execute(twin).fetchall()
     if op == "token_stats":
         got = got.select("doc_id", "char_count", "token_count", "avg_token_len_bp")

@@ -10,6 +10,7 @@ from html_parser_spark.operators.udx import (
     conversation_stats,
     user_value_median,
 )
+from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -39,7 +40,7 @@ def test_median_udaf_matches_duckdb(spark):
 
     got = {
         r.event_type: r.median_value
-        for r in user_value_median(spark, SF_DIR).collect()
+        for r in user_value_median(read_corpus(spark, SF_DIR, "events")).collect()
     }
     con = duckdb.connect()
     want = dict(
@@ -53,7 +54,7 @@ def test_median_udaf_matches_duckdb(spark):
 
 def test_conversation_stats_applyinpandas(spark):
     t = spark.read.parquet(ensure_transcripts(0.001))
-    stats = conversation_stats(spark, t)
+    stats = conversation_stats(t)
     agg = stats.agg(
         F.sum("n_turns").alias("turns"), F.count(F.lit(1)).alias("convs")
     ).first()

@@ -106,7 +106,7 @@ def main() -> None:
     from html_parser_spark.operators.pipeline import extract_stage
     from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
-    from html_parser_spark.sources.tables import read_transcripts
+    from html_parser_spark.sources.tables import corpus_path, read_transcripts
 
     # zstd shuffle/spill blocks: the sf10 dedup stage's transient scratch
     # is ~38 GB with zstd against >80 GB with lz4
@@ -129,11 +129,13 @@ def main() -> None:
     def docs_dir(stage_name: str) -> str:
         return os.path.join(args.work, stage_name)
 
+    def docs_path(stage_name: str) -> str:
+        return corpus_path(docs_dir(stage_name), "documents")
+
     DOCS_SCHEMA = "doc_id BIGINT, text STRING, source STRING, n_chars BIGINT"
 
-    def write_docs(df, stage_name: str) -> str:
-        d = docs_dir(stage_name)
-        path = os.path.join(d, "documents.parquet")
+    def write_docs(df, stage_name: str) -> None:
+        path = docs_path(stage_name)
         if args.bucket_docs:
             tbl = f"docs_{stage_name}"
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -144,11 +146,11 @@ def main() -> None:
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
-            with open(os.path.join(d, "bucket_spec.json"), "w") as f:
+            spec_path = os.path.join(docs_dir(stage_name), "bucket_spec.json")
+            with open(spec_path, "w") as f:
                 json.dump({"buckets": args.bucket_docs, "key": "doc_id"}, f)
         else:
             df.write.mode("overwrite").parquet(path)
-        return d
 
     def _check_bucket_spec(stage_name: str) -> None:
         """Registering a bucket layout the files don't actually have
@@ -173,7 +175,7 @@ def main() -> None:
         this (text) side; re-registered from the path when resuming in a
         fresh session (the in-memory catalog does not survive restarts,
         the files + bucket layout do)."""
-        path = os.path.join(docs_dir(stage_name), "documents.parquet")
+        path = docs_path(stage_name)
         _check_bucket_spec(stage_name)
         if args.bucket_docs:
             tbl = f"docs_{stage_name}"
@@ -190,10 +192,9 @@ def main() -> None:
     # the SAME tokenize pass harvests the link graph (written once here,
     # before dedup — provenance should cover removed near-dups too)
     t0 = time.time()
-    d1 = docs_dir("extracted")
     if committed(
         os.path.join(args.work, "fused"),
-        f"{d1}/documents.parquet",
+        docs_path("extracted"),
         f"{args.output}/links",
     ):
         n_turns = read_transcripts(spark, args.input).count()
@@ -218,7 +219,7 @@ def main() -> None:
             F.lit("transcripts").alias("source"),
             F.length("main_text").cast("long").alias("n_chars"),
         )
-        d1 = write_docs(docs, "extracted")
+        write_docs(docs, "extracted")
         n1 = read_docs("extracted").count()
         record.stage("extract", n_turns, n1, t0)
 
@@ -247,34 +248,25 @@ def main() -> None:
     # + left_semi form scans the stage input twice and shuffles the full
     # text through a SortMergeJoin (7.8× per 10× at sf1.0, BENCH.md).
     t0 = time.time()
-    d2 = docs_dir("quality")
-    if committed(f"{d2}/documents.parquet"):
+    if committed(docs_path("quality")):
         n2 = read_docs("quality").count()
         record.stage("quality", n1, n2, t0, skipped=True)
     else:
-        q = textstats.filter_quality(
-            read_docs("extracted")
-        )
-        d2 = write_docs(q, "quality")
+        write_docs(textstats.filter_quality(read_docs("extracted")), "quality")
         n2 = read_docs("quality").count()
         record.stage("quality", n1, n2, t0)
 
     # 3. DEDUP — exact + verified near-dup clusters, keep representatives
     t0 = time.time()
-    d3 = docs_dir("deduped")
-    if committed(f"{d3}/documents.parquet", f"{args.output}/clusters"):
+    if committed(docs_path("deduped"), f"{args.output}/clusters"):
         n3 = read_docs("deduped").count()
         record.stage("dedup", n2, n3, t0, skipped=True)
     else:
-        clusters = dedup_cluster_keep_list(
-            spark, d2, hash_family="fast"
-        ).persist()
+        quality = read_docs("quality")
+        clusters = dedup_cluster_keep_list(quality, hash_family="fast").persist()
         clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
         keepers = clusters.filter(F.col("is_keeper") == 1).select("doc_id")
-        deduped = read_docs("quality").join(
-            keepers, "doc_id", "left_semi"
-        )
-        d3 = write_docs(deduped, "deduped")
+        write_docs(quality.join(keepers, "doc_id", "left_semi"), "deduped")
         clusters.unpersist()
         # the edge builders persist their sketch/signature frames
         # internally (each is read 2-3× inside one stage); nothing cached
@@ -289,13 +281,12 @@ def main() -> None:
     # (ADVICE r03: leaving the held-out docs in the corpus trains on
     # them).  The eval docs land in <output>/heldout for eval builds.
     t0 = time.time()
-    d4 = docs_dir("clean")
-    if committed(f"{d4}/documents.parquet", f"{args.output}/heldout"):
+    if committed(docs_path("clean"), f"{args.output}/heldout"):
         n4 = read_docs("clean").count()
         record.stage("decontaminate", n3, n4, t0, skipped=True)
     else:
-        contaminated = decontaminate(spark, d3).select("doc_id")
         d3_docs = read_docs("deduped")
+        contaminated = decontaminate(d3_docs).select("doc_id")
         is_eval = F.col("doc_id") % EVAL_MODULUS == 0
         d3_docs.filter(is_eval).write.mode("overwrite").parquet(
             f"{args.output}/heldout"
@@ -303,7 +294,7 @@ def main() -> None:
         clean = d3_docs.filter(~is_eval).join(
             contaminated, "doc_id", "left_anti"
         )
-        d4 = write_docs(clean, "clean")
+        write_docs(clean, "clean")
         n4 = read_docs("clean").count()
         record.stage("decontaminate", n3, n4, t0)
 
@@ -314,11 +305,11 @@ def main() -> None:
         n_train = splits.filter(F.col("split") == "train").count()
         record.stage("split", n4, n_train, t0, skipped=True)
     else:
-        splits = sampling.corpus_splits(spark, d4)
-        splits.write.mode("overwrite").parquet(f"{args.output}/splits")
-        read_docs("clean").write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/documents")
+        clean = read_docs("clean")
+        sampling.corpus_splits(clean).write.mode("overwrite").parquet(
+            f"{args.output}/splits"
+        )
+        clean.write.mode("overwrite").parquet(f"{args.output}/documents")
         splits = spark.read.parquet(f"{args.output}/splits")
         n_train = splits.filter(F.col("split") == "train").count()
         record.stage("split", n4, n_train, t0)
@@ -336,13 +327,12 @@ def main() -> None:
         )
         record.stage("pack", n_train, n_seq, t0, skipped=True)
     else:
-        train_dir = docs_dir("train")
-        read_docs("clean").join(
+        train = read_docs("clean").join(
             splits.filter(F.col("split") == "train").select("doc_id"),
             "doc_id",
             "left_semi",
-        ).write.mode("overwrite").parquet(f"{train_dir}/documents.parquet")
-        packed = chunking.pack_sequences(spark, train_dir)
+        )
+        packed = chunking.pack_sequences(train)
         packed.write.mode("overwrite").parquet(f"{args.output}/sequences")
         n_seq = (
             spark.read.parquet(f"{args.output}/sequences")

@@ -59,7 +59,11 @@ def main() -> None:
     from html_parser_spark.operators.pipeline import run_extraction
     from html_parser_spark.plans.runrecord import StageRecord
     from html_parser_spark.plans.session import get_spark
-    from html_parser_spark.sources.tables import read_transcripts
+    from html_parser_spark.sources.tables import (
+        corpus_path,
+        read_corpus,
+        read_transcripts,
+    )
 
     spark = get_spark(
         app_name="incremental-ingest",
@@ -71,15 +75,17 @@ def main() -> None:
     def band_keys(docs):
         """(doc_id, band, band_key) of ``docs`` in the fast MinHash family."""
         return dedup.minhash_band_keys(
-            dedup.minhash_signatures_of(docs, hash_family="fast"),
+            dedup.minhash_signatures(docs, hash_family="fast"),
             hash_family="fast",
         )
 
-    # 1. KEYS — bootstrap the stored corpus band-key table if absent
+    # 1. KEYS — bootstrap the stored corpus band-key table unless a
+    # committed one is there (a bootstrap killed before its job commit
+    # leaves a directory holding only _temporary)
     t0 = time.time()
-    corpus_docs = spark.read.parquet(f"{args.corpus}/documents.parquet")
-    keys_dir = f"{args.corpus}/band_keys.parquet"
-    if not os.path.exists(keys_dir):
+    corpus_docs = read_corpus(spark, args.corpus, "documents")
+    keys_dir = corpus_path(args.corpus, "band_keys")
+    if not os.path.exists(os.path.join(keys_dir, "_SUCCESS")):
         band_keys(corpus_docs).write.mode("overwrite").parquet(keys_dir)
     corpus_keys = spark.read.parquet(keys_dir)
     n_corpus = corpus_docs.count()
