@@ -35,7 +35,10 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from html_parser_spark.fixtures import ensure_transcripts
-    from html_parser_spark.operators.pipeline import run_extraction
+    from html_parser_spark.operators.pipeline import (
+        exchange_partitions,
+        run_extraction,
+    )
     from html_parser_spark.plans.session import DEFAULT_CPUS, get_spark
     from pyspark.sql import functions as F
 
@@ -162,11 +165,16 @@ def main() -> None:
         "bytes": int(n_bytes),
         "mb_per_sec": round(n_bytes / extract_sec / 1e6, 2),
         "extract_wall_sec": round(extract_sec, 3),
+        # the salted exchange's default partition count (the count
+        # run_extraction plans) beside the session's task slots
+        "extract_exchange_partitions": exchange_partitions(
+            transcripts.select("conv_id", "turn_idx", "text")
+        ),
+        "parallelism": ncores,
         "extract_passes_sec": passes,
         "extract_passes_steal": steals,
         "master": spark.sparkContext.master,
         "cpu_budget": DEFAULT_CPUS,
-        "parallelism": ncores,
     }
     print(json.dumps(out))
     spark.stop()

@@ -24,9 +24,10 @@ __version__ = "0.2.0"
 # a function that refers to package code (every extraction, link, dedup
 # and media stage does), so from its next task on no task re-reads an
 # archive; a function shipped by value that refers to no package code
-# (the ``udx`` UDAFs) does not import it.  Only Python workers (the JVM
-# sets PYTHON_WORKER_FACTORY_SECRET for them) are patched; a driver or a
-# pure-Python consumer of the tokenizer keeps the stock behaviour.
+# (the ``udx`` UDAFs, ``similarity``'s ``_bands``) imports it in its
+# body.  Only Python workers (the JVM sets PYTHON_WORKER_FACTORY_SECRET
+# for them) are patched; a driver or a pure-Python consumer of the
+# tokenizer keeps the stock behaviour.
 if sys.version_info < (3, 13) and "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
     zipimport.zipimporter.invalidate_caches = lambda self: None
 

@@ -49,8 +49,7 @@ def run_link_extraction(
                     rows["src_end"].append(r["src_end"])
             yield pd.DataFrame(rows)
 
-    pruned = df.select("conv_id", "turn_idx", "text")
-    return salted_exchange(pruned, num_partitions).mapInPandas(
+    return salted_exchange(df, num_partitions).mapInPandas(
         _flat,
         schema=(
             "conv_id string, turn_idx int, link_idx int, href string, "

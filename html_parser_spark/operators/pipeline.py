@@ -207,26 +207,58 @@ def _projection(outputs: frozenset) -> list:
     return cols
 
 
-def salted_exchange(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Repartition on (conv_id, salt) into an EXPLICIT partition count,
-    then sort each partition by (conv_id, turn_idx).
+def partitions_for(
+    size_bytes: int, slots: int, split_bytes: int, unknown_bytes: int
+) -> int:
+    """Partitions for an input of ``size_bytes``: one per ``split_bytes``
+    (the session's file-split size), never fewer than ``slots`` (one
+    wave).  An estimate at or above ``unknown_bytes`` is no estimate
+    (Catalyst's ``spark.sql.defaultSizeInBytes``, which a plan without
+    statistics such as a ``createDataFrame`` input reads) and gets one
+    wave."""
+    if size_bytes >= unknown_bytes:
+        return slots
+    return max(slots, -(-size_bytes // split_bytes))
 
-    The count must be explicit: a column-only
-    repartition is AQE-coalescible, and AQE merges compressed-text
-    shuffle partitions under the Python compute it cannot see.  The
-    default is the larger of ``spark.sql.shuffle.partitions`` and two
-    tasks per task slot (2 × ``defaultParallelism``), so a slot that
-    draws a long-text task is not left alone with it while the others
-    idle.  The salt spreads one conversation's turns over up to
-    ``SALT_K`` partitions."""
+
+def exchange_partitions(turns: DataFrame) -> int:
+    """The salted exchange's default partition count for the pruned
+    ``(conv_id, turn_idx, text)`` frame ``turns``: :func:`partitions_for`
+    its optimized plan's size estimate, the session's
+    ``spark.sql.files.maxPartitionBytes`` and ``defaultParallelism``."""
+    spark = turns.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    return partitions_for(
+        turns._jdf.queryExecution().optimizedPlan().stats().sizeInBytes(),
+        spark.sparkContext.defaultParallelism,
+        conf.filesMaxPartitionBytes(),
+        conf.defaultSizeInBytes(),
+    )
+
+
+def salted_exchange(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Prune ``df`` to (conv_id, turn_idx, text), repartition it on
+    (conv_id, salt) into an EXPLICIT partition count, then sort each
+    partition by (conv_id, turn_idx).
+
+    The count must be explicit: a column-only repartition is
+    AQE-coalescible, and AQE merges compressed-text shuffle partitions
+    under the Python compute it cannot see.  The default,
+    :func:`exchange_partitions`, is one partition per 128 MB of input
+    (the session's file-split size) and at least one per task slot, so
+    inputs below 128 MB per slot run one wave of Python tasks.  On
+    local[4] one wave beat two at the benchmark's 2,309 turns (1.07 s
+    at 4 partitions against 1.24 s at 8 and 1.48 s at 2) but lost at
+    100,000 sf0.1 turns (``bench.py`` best of 3: 13.0–13.2 s against
+    11.6 s at 8), most likely because the slowest of four ~12 s tasks
+    then runs alone.
+    ``spark.sql.shuffle.partitions`` does not size it.  The salt spreads
+    one conversation's turns over up to ``SALT_K`` partitions."""
+    turns = df.select("conv_id", "turn_idx", "text")
     if num_partitions is None:
-        spark = df.sparkSession
-        num_partitions = max(
-            spark.sparkContext.defaultParallelism * 2,
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
+        num_partitions = exchange_partitions(turns)
     salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_K))
-    parted = df.repartition(num_partitions, F.col("conv_id"), salt)
+    parted = turns.repartition(num_partitions, F.col("conv_id"), salt)
     return parted.sortWithinPartitions("conv_id", "turn_idx")
 
 
@@ -261,8 +293,7 @@ def extract_stage(
       it for the ``next_token`` stream).
 
     One salted exchange, one Arrow UDF stage, whatever the outputs."""
-    pruned = df.select("conv_id", "turn_idx", "text")
-    return extract_columns(salted_exchange(pruned, num_partitions), outputs)
+    return extract_columns(salted_exchange(df, num_partitions), outputs)
 
 
 def run_extraction(

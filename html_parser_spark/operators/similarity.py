@@ -252,6 +252,10 @@ def band_signature_udf(n_bands: int, band_bits: int, seed: int):
 
     @pandas_udf(ArrayType(IntegerType()))
     def _bands(embs: pd.Series) -> pd.Series:
+        # shipped by value: the import makes its worker skip the per-task
+        # archive re-read (html_parser_spark/__init__.py)
+        import html_parser_spark  # noqa: F401
+
         mat = np.array(embs.tolist(), dtype=np.float64)
         if mat.size and mat.shape[1] != EMB_DIM:
             raise ValueError(f"embedding dim {mat.shape[1]} != expected {EMB_DIM}")

@@ -41,12 +41,18 @@ class TokenizeUDTF:
 def median_udaf(v: pd.Series) -> float:
     """Exact median as a grouped-agg pandas UDAF (numpy linear
     interpolation == DuckDB ``median`` on doubles)."""
+    # shipped by value: the import makes its worker skip the per-task
+    # archive re-read (html_parser_spark/__init__.py)
+    import html_parser_spark  # noqa: F401
+
     return float(v.median())
 
 
 @pandas_udf(LongType())
 def count_udaf(v: pd.Series) -> int:
     # grouped-agg pandas UDFs cannot mix with JVM aggregates in one agg
+    import html_parser_spark  # noqa: F401  (as in median_udaf)
+
     return int(len(v))
 
 

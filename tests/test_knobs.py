@@ -36,11 +36,12 @@ from conftest import REPO
 
 # Settings a deployment passes in; a test or production call need not.
 DEPLOYMENT = {"catalog", "run_id"}
-# Flags a deployment passes in: paths, the cluster master, partition
-# counts and the ingest label.  Positional arguments are paths too.
+# Flags a deployment passes in: paths, the cluster master, the shuffle
+# partition count and the ingest label.  Positional arguments are paths
+# too.
 DEPLOYMENT_FLAGS = {
     "--input", "--work", "--output", "--corpus", "--batch-input", "--sf-dir",
-    "--master", "--shuffle-partitions", "--num-partitions", "--ingest-label",
+    "--master", "--shuffle-partitions", "--ingest-label",
 }
 SCRIPTS = sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"),
                            recursive=True)) + [os.path.join(REPO, "bench.py")]

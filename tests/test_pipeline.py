@@ -7,6 +7,7 @@ the driver applies against reference goldens.
 """
 
 import os
+import re
 
 import pytest
 
@@ -151,6 +152,52 @@ def test_source_partitioned_skips_shuffle(spark, transcripts, monkeypatch):
     assert got == rows(run_extraction(transcripts, num_partitions=8))
     monkeypatch.setattr(pipeline, "SALT_K", 1)
     assert got == rows(run_extraction(transcripts, num_partitions=8))
+
+
+MB = 1024 * 1024
+UNKNOWN = 2**63 - 1  # spark.sql.defaultSizeInBytes: a plan without statistics
+
+
+@pytest.mark.parametrize(
+    "size_bytes, want",
+    [
+        (UNKNOWN, 4),  # createDataFrame: no estimate → one wave, not 68.7e9
+        (0, 4),
+        (1_820_000, 4),  # the benchmark's extract input
+        (4 * 128 * MB, 4),
+        (10 * 128 * MB + 1, 11),
+    ],
+)
+def test_exchange_sizing_rule(size_bytes, want):
+    """One partition per 128 MB split, never fewer than the 4 task slots."""
+    assert pipeline.partitions_for(size_bytes, 4, 128 * MB, UNKNOWN) == want
+
+
+def _planned_exchange_partitions(frame) -> list:
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in re.findall(r", (\d+)\), REPARTITION_BY_NUM", plan)]
+
+
+@pytest.mark.parametrize("source", ["parquet", "createDataFrame"])
+def test_exchange_sizes_itself_not_from_shuffle_partitions(spark, transcripts, source):
+    """The default exchange plans one wave (``defaultParallelism``
+    partitions) for the sf0.001 parquet and for a ``createDataFrame``
+    input with no size estimate, whatever ``spark.sql.shuffle.partitions``
+    says."""
+    df = transcripts
+    if source == "createDataFrame":
+        df = spark.createDataFrame(
+            [("c0", 0, "<p>x</p>")], "conv_id string, turn_idx int, text string"
+        )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        planned = _planned_exchange_partitions(extract_stage(df, {"main"}))
+        assert planned == [spark.sparkContext.defaultParallelism]
+        assert _planned_exchange_partitions(
+            extract_stage(df, {"main"}, num_partitions=7)) == [7]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_edge_inputs_flow_through(spark, check_stage):

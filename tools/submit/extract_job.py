@@ -6,11 +6,14 @@
         tools/submit/extract_job.py \
         --input  <transcripts path: parquet, or .json/.jsonl/.csv> \
         --output <output dir> \
-        [--num-partitions N] [--shuffle-partitions N]
+        [--shuffle-partitions N]
 
-On a real cluster pass the usual --master/--num-executors etc.;
-``--shuffle-partitions`` should be ≈ input_bytes / 128 MB (SURVEY.md
-§4.2).  The job is resumable: re-submitting after a failure processes
+On a real cluster pass the usual --master/--num-executors etc.  The
+extraction's salted exchange sizes itself from the input (128 MB per
+partition, at least one per task slot); ``--shuffle-partitions`` sizes
+only the job's other shuffles (the resume anti-join, the metrics and
+lineage aggregates), which AQE coalesces down from it.  The job is
+resumable: re-submitting after a failure processes
 only uncommitted (conv_id, turn_idx) keys.
 """
 
@@ -24,7 +27,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
@@ -39,9 +41,7 @@ def main() -> None:
         shuffle_partitions=args.shuffle_partitions,
     )
     transcripts = read_transcripts(spark, args.input)
-    summary = run_resumable(
-        spark, transcripts, args.output, num_partitions=args.num_partitions
-    )
+    summary = run_resumable(spark, transcripts, args.output)
     print(json.dumps(summary))
     spark.stop()
 
