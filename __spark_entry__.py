@@ -59,7 +59,11 @@ from html_parser_spark.fixtures import gate_sf_dir, sf_of as _sf_of
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: extract main content from every turn at sf0.001."""
+    """Flagship: extract main content from every turn at sf0.001.
+
+    The explicit count keeps the flagship's row order (its partition
+    layout) the same on every box; the default count follows the
+    session's task slots."""
     return run_extraction(
         spark.read.parquet(ensure_transcripts(0.001)), num_partitions=8
     )

@@ -49,6 +49,21 @@ from ..functions.display import TOKENS, _token_rows
 # partitions one conversation's turns can spread over
 SALT_K = 8
 
+# Plan size estimate per task slot up to which the salted exchange runs
+# one wave of Python tasks (see ``salted_exchange``).  The estimate is
+# Catalyst's: the parquet file length scaled to the pruned columns.  It
+# costs a few ms to read; a row count would track the Python work more
+# closely but costs a Spark job, ~170 ms on local[4], a sixth of a pass
+# over the extract benchmark's input.  Measured on local[4], one wave
+# against two: 0.43 MiB per slot (the extract benchmark, 10 alternated
+# reps) 1.07 s against 1.24 s; 1.00 MiB (sf0.01, 8 reps) 2.65 s against
+# 2.92 s.  At 9.7 MiB (sf0.1) bench.py read 13.0-13.2 s against 11.6 s,
+# and another 4-rep probe 17.4 s against 18.1 s (a busier host, passes
+# spread 14-22 s).  The threshold sits between the sizes where one wave
+# was faster in the median and the size where it once lost, so sf0.1
+# keeps two waves.
+ONE_WAVE_BYTES_PER_SLOT = 2 * 1024 * 1024
+
 OUTPUTS = ("main", "dom", "links", "tokens")
 
 # Spans travel from the Python worker as ONE int64 per span (start<<32 |
@@ -207,32 +222,28 @@ def _projection(outputs: frozenset) -> list:
     return cols
 
 
-def partitions_for(
-    size_bytes: int, slots: int, split_bytes: int, unknown_bytes: int
-) -> int:
-    """Partitions for an input of ``size_bytes``: one per ``split_bytes``
-    (the session's file-split size), never fewer than ``slots`` (one
-    wave).  An estimate at or above ``unknown_bytes`` is no estimate
-    (Catalyst's ``spark.sql.defaultSizeInBytes``, which a plan without
-    statistics such as a ``createDataFrame`` input reads) and gets one
-    wave."""
-    if size_bytes >= unknown_bytes:
+def partitions_for(size_bytes: int, slots: int, shuffle_partitions: int) -> int:
+    """The salted exchange's default partition count for an input whose
+    plan estimates ``size_bytes``: one wave (``slots``) up to
+    ``ONE_WAVE_BYTES_PER_SLOT`` per slot, else the larger of two waves
+    and ``shuffle_partitions``.  A plan without statistics (a
+    ``createDataFrame`` input) estimates ``spark.sql.defaultSizeInBytes``,
+    2^63 - 1, and so gets the larger count."""
+    if size_bytes <= slots * ONE_WAVE_BYTES_PER_SLOT:
         return slots
-    return max(slots, -(-size_bytes // split_bytes))
+    return max(2 * slots, shuffle_partitions)
 
 
 def exchange_partitions(turns: DataFrame) -> int:
-    """The salted exchange's default partition count for the pruned
-    ``(conv_id, turn_idx, text)`` frame ``turns``: :func:`partitions_for`
-    its optimized plan's size estimate, the session's
-    ``spark.sql.files.maxPartitionBytes`` and ``defaultParallelism``."""
+    """:func:`partitions_for` the pruned ``(conv_id, turn_idx, text)``
+    frame ``turns``: its optimized plan's size estimate, the session's
+    ``defaultParallelism`` and ``spark.sql.shuffle.partitions``."""
     spark = turns.sparkSession
-    conf = spark._jsparkSession.sessionState().conf()
+    stats = turns._jdf.queryExecution().optimizedPlan().stats()
     return partitions_for(
-        turns._jdf.queryExecution().optimizedPlan().stats().sizeInBytes(),
+        stats.sizeInBytes(),
         spark.sparkContext.defaultParallelism,
-        conf.filesMaxPartitionBytes(),
-        conf.defaultSizeInBytes(),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
 
 
@@ -243,17 +254,14 @@ def salted_exchange(df: DataFrame, num_partitions: int | None = None) -> DataFra
 
     The count must be explicit: a column-only repartition is
     AQE-coalescible, and AQE merges compressed-text shuffle partitions
-    under the Python compute it cannot see.  The default,
-    :func:`exchange_partitions`, is one partition per 128 MB of input
-    (the session's file-split size) and at least one per task slot, so
-    inputs below 128 MB per slot run one wave of Python tasks.  On
-    local[4] one wave beat two at the benchmark's 2,309 turns (1.07 s
-    at 4 partitions against 1.24 s at 8 and 1.48 s at 2) but lost at
-    100,000 sf0.1 turns (``bench.py`` best of 3: 13.0–13.2 s against
-    11.6 s at 8), most likely because the slowest of four ~12 s tasks
-    then runs alone.
-    ``spark.sql.shuffle.partitions`` does not size it.  The salt spreads
-    one conversation's turns over up to ``SALT_K`` partitions."""
+    under the Python compute it cannot see.  The default is
+    :func:`exchange_partitions`: one wave of Python tasks for a small
+    input, where a second wave costs more task start-up than it saves
+    in balance, and otherwise two tasks per slot (or
+    ``spark.sql.shuffle.partitions`` when larger), so a slot that draws
+    a long-text task is not left alone with it while the others idle.
+    The salt spreads one conversation's turns over up to ``SALT_K``
+    partitions."""
     turns = df.select("conv_id", "turn_idx", "text")
     if num_partitions is None:
         num_partitions = exchange_partitions(turns)

@@ -87,7 +87,6 @@ def run_resumable(
     transcripts: DataFrame,
     out_dir: str,
     *,
-    num_partitions: int | None = None,
     run_id: str | None = None,
 ) -> dict:
     """One resumable extraction pass.
@@ -107,9 +106,7 @@ def run_resumable(
     todo = filter_uncommitted(transcripts, done)
 
     # THE extraction job — the only pass over the input text
-    extracted = run_extraction(todo, num_partitions=num_partitions).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    extracted = run_extraction(todo).withColumn("run_id", F.lit(run_id))
     append_table(extracted, out_path)
 
     # lineage + metrics from the committed files of this run (column-pruned

@@ -14,9 +14,8 @@ spark-submit job all run the same plan shape (SURVEY.md §4.2):
 - ``shuffle_partitions`` sizes the AQE-coalescible shuffles (aggregates,
   joins, column-only repartitions; AQE coalesces down from it, never
   up); it defaults to one partition per task slot.  The extraction's
-  salted exchange does not read it: it sizes itself from its input at
-  128 MB per partition, one wave at least
-  (``pipeline.exchange_partitions``).
+  salted exchange reads it only for an input too large for one wave of
+  Python tasks (``pipeline.exchange_partitions``).
 - task slots: one per core of the CPU budget — ``SPARK_GRAFT_CPUS`` when
   set, else the cores this process may run on (``sched_getaffinity``),
   so an unset budget never oversubscribes a small box (a full budget
@@ -62,9 +61,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 128 MB parquet split target — the salted exchange sizes its
-        # partitions by the same figure (pipeline.exchange_partitions), so
-        # scan and exchange parallelism stay aligned
+        # 128 MB parquet split target
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # compress serialized RDD blocks (persist/localCheckpoint spill):
         # Spark writes block-store disk RAW by default, and the dedup

@@ -159,18 +159,22 @@ UNKNOWN = 2**63 - 1  # spark.sql.defaultSizeInBytes: a plan without statistics
 
 
 @pytest.mark.parametrize(
-    "size_bytes, want",
+    "size_bytes, shuffle_partitions, want",
     [
-        (UNKNOWN, 4),  # createDataFrame: no estimate → one wave, not 68.7e9
-        (0, 4),
-        (1_820_000, 4),  # the benchmark's extract input
-        (4 * 128 * MB, 4),
-        (10 * 128 * MB + 1, 11),
+        (0, 8, 4),
+        (1_820_000, 8, 4),  # the extract benchmark's input: one wave
+        (4_203_166, 64, 4),  # sf0.01: one wave, whatever shuffle.partitions says
+        (4 * pipeline.ONE_WAVE_BYTES_PER_SLOT, 8, 4),
+        (4 * pipeline.ONE_WAVE_BYTES_PER_SLOT + 1, 4, 8),
+        (40_695_997, 4, 8),  # sf0.1: two waves
+        (40_695_997, 64, 64),
+        (UNKNOWN, 4, 8),  # createDataFrame: no estimate, not a small input
     ],
 )
-def test_exchange_sizing_rule(size_bytes, want):
-    """One partition per 128 MB split, never fewer than the 4 task slots."""
-    assert pipeline.partitions_for(size_bytes, 4, 128 * MB, UNKNOWN) == want
+def test_exchange_sizing_rule(size_bytes, shuffle_partitions, want):
+    """One wave on 4 task slots up to ONE_WAVE_BYTES_PER_SLOT per slot,
+    else two waves or ``spark.sql.shuffle.partitions``, the larger."""
+    assert pipeline.partitions_for(size_bytes, 4, shuffle_partitions) == want
 
 
 def _planned_exchange_partitions(frame) -> list:
@@ -178,24 +182,25 @@ def _planned_exchange_partitions(frame) -> list:
     return [int(n) for n in re.findall(r", (\d+)\), REPARTITION_BY_NUM", plan)]
 
 
-@pytest.mark.parametrize("source", ["parquet", "createDataFrame"])
-def test_exchange_sizes_itself_not_from_shuffle_partitions(spark, transcripts, source):
+def test_exchange_plans_one_wave_for_a_small_input(spark, transcripts):
     """The default exchange plans one wave (``defaultParallelism``
-    partitions) for the sf0.001 parquet and for a ``createDataFrame``
-    input with no size estimate, whatever ``spark.sql.shuffle.partitions``
-    says."""
-    df = transcripts
-    if source == "createDataFrame":
-        df = spark.createDataFrame(
-            [("c0", 0, "<p>x</p>")], "conv_id string, turn_idx int, text string"
-        )
+    partitions) for the sf0.001 parquet, whatever
+    ``spark.sql.shuffle.partitions`` says; a ``createDataFrame`` input
+    has no size estimate and gets the larger of two waves and
+    ``spark.sql.shuffle.partitions``; an explicit count wins."""
+    slots = spark.sparkContext.defaultParallelism
+    tiny = spark.createDataFrame(
+        [("c0", 0, "<p>x</p>")], "conv_id string, turn_idx int, text string"
+    )
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     try:
-        planned = _planned_exchange_partitions(extract_stage(df, {"main"}))
-        assert planned == [spark.sparkContext.defaultParallelism]
         assert _planned_exchange_partitions(
-            extract_stage(df, {"main"}, num_partitions=7)) == [7]
+            extract_stage(transcripts, {"main"})) == [slots]
+        assert _planned_exchange_partitions(
+            extract_stage(tiny, {"main"})) == [max(2 * slots, 64)]
+        assert _planned_exchange_partitions(
+            extract_stage(transcripts, {"main"}, num_partitions=7)) == [7]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 

@@ -8,11 +8,11 @@
         --output <output dir> \
         [--shuffle-partitions N]
 
-On a real cluster pass the usual --master/--num-executors etc.  The
-extraction's salted exchange sizes itself from the input (128 MB per
-partition, at least one per task slot); ``--shuffle-partitions`` sizes
-only the job's other shuffles (the resume anti-join, the metrics and
-lineage aggregates), which AQE coalesces down from it.  The job is
+On a real cluster pass the usual --master/--num-executors etc.
+``--shuffle-partitions`` sizes the job's AQE-coalescible shuffles (the
+resume anti-join, the metrics and lineage aggregates) and, for an input
+too large for one wave of tasks, the extraction's salted exchange too
+(``pipeline.exchange_partitions``).  The job is
 resumable: re-submitting after a failure processes
 only uncommitted (conv_id, turn_idx) keys.
 """
