@@ -30,6 +30,7 @@ from html_parser_spark.operators import (
     linkrank,
     multimodal,
     pdfops,
+    pipeline,
     relational,
     sampling,
     scrub,
@@ -43,7 +44,6 @@ from html_parser_spark.functions.textnorm import SQL_WS
 from html_parser_spark.sources.tables import corpus_path, read_corpus
 from html_parser_spark.streaming import stateful
 from html_parser_spark.operators.pipeline import (
-    MAX_TURNS,
     assemble_conversations,
     extract_stage,
     extraction_metrics,
@@ -147,11 +147,11 @@ def _link_target_stats_oracle() -> str:
 
 
 def _link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point-integer PageRank over the doc→url link graph — the
-    gate form of the float production scorer.  Integer mass makes the
-    per-round sums order-independent, so
-    the md5 value gate holds bit-exactly; the float twin stays
-    pytest-pinned vs an independent dense NumPy iteration."""
+    """Fixed-point-integer PageRank over the doc→url link graph, the one
+    PageRank operator.  Integer mass makes the per-round sums
+    order-independent, so the md5 value gate holds bit-exactly; pytest
+    pins it within the floor-loss bound of an independent dense NumPy
+    float iteration."""
     return linkrank.link_pagerank_fp(
         read_corpus(spark, sf_dir, "transcripts"), iterations=4, top_k=100
     )
@@ -275,10 +275,10 @@ def _conv_assemble_oracle() -> str:
              md5(string_agg(text, chr(10) ORDER BY rn)) AS text_md5,
              CAST(length(string_agg(text, chr(10) ORDER BY rn)) AS BIGINT)
                AS n_chars
-      FROM ranked WHERE rn <= {MAX_TURNS} GROUP BY conv_id
+      FROM ranked WHERE rn <= {pipeline.MAX_TURNS} GROUP BY conv_id
     )
     SELECT t.conv_id, t.n_turns, a.text_md5, a.n_chars,
-           CAST(t.n_turns > {MAX_TURNS} AS BIGINT) AS overflow
+           CAST(t.n_turns > {pipeline.MAX_TURNS} AS BIGINT) AS overflow
     FROM tot t JOIN agg a USING (conv_id) ORDER BY conv_id
     """
 

@@ -23,19 +23,16 @@ DEFAULT_CHUNK = 128
 DEFAULT_OVERLAP = 32
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = DEFAULT_CHUNK,
-    overlap: int = DEFAULT_OVERLAP,
-) -> DataFrame:
-    """One row per ``chunk_tokens``-token window at stride
-    ``chunk_tokens - overlap`` over the whitespace/case-normalized text
-    (the dedup normalizer, so chunk identity is stable across the
+def chunk_documents(docs: DataFrame) -> DataFrame:
+    """One row per ``DEFAULT_CHUNK``-token window at stride
+    ``DEFAULT_CHUNK - DEFAULT_OVERLAP`` over the whitespace/case-normalized
+    text (the dedup normalizer, so chunk identity is stable across the
     family).  The final window clamps; every document yields ≥ 1 chunk
     (an empty doc yields one empty chunk — keeps the chunk table
     left-total over documents)."""
+    chunk_tokens, overlap = DEFAULT_CHUNK, DEFAULT_OVERLAP
     if not 0 <= overlap < chunk_tokens:
-        raise ValueError("need 0 <= overlap < chunk_tokens")
+        raise ValueError("need 0 <= DEFAULT_OVERLAP < DEFAULT_CHUNK")
     stride = chunk_tokens - overlap
     toks = F.split(_norm(), " ")
     n = F.size(toks)
@@ -66,9 +63,8 @@ def chunk_documents(
     )
 
 
-def chunk_documents_sql(
-    chunk_tokens: int = DEFAULT_CHUNK, overlap: int = DEFAULT_OVERLAP
-) -> str:
+def chunk_documents_sql() -> str:
+    chunk_tokens, overlap = DEFAULT_CHUNK, DEFAULT_OVERLAP
     stride = chunk_tokens - overlap
     return f"""
     WITH t AS (

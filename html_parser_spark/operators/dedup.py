@@ -798,9 +798,7 @@ def _propagate_min_labels(
     )
 
 
-def connected_components(
-    docs: DataFrame, edges: DataFrame, max_iter: int = MAX_ITER
-) -> DataFrame:
+def connected_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components of ``edges`` (doc_a, doc_b undirected) by
     :func:`_propagate_min_labels` over the doc adjacency table; returns
     ``(doc_id, cluster_id, is_keeper)`` for every row of ``docs``
@@ -821,7 +819,7 @@ def connected_components(
         )
 
     labels = _propagate_min_labels(
-        docs, "doc_id", "cluster_id", neighbours, max_iter
+        docs, "doc_id", "cluster_id", neighbours, MAX_ITER
     )
     # the surviving labels frame is checkpointed, so the adjacency
     # table's blocks are dead weight from here on
@@ -1253,21 +1251,17 @@ def incremental_dedup_against(
 # ------------------------------------------- substring-level (winnowing)
 
 
-def shared_substrings(
-    docs: DataFrame,
-    window: int = SUBSTRING_WINDOW,
-    sample_prefix: str = SUBSTRING_SAMPLE_PREFIX,
-) -> DataFrame:
+def shared_substrings(docs: DataFrame) -> DataFrame:
     """Cross-document repeated-substring detection — the substring-level
     dedup family (Lee et al. 2021 "Deduplicating Training Data Makes
     Language Models Better": verbatim boilerplate — licenses, headers,
     templated spans — recurs across documents BELOW the whole-document
     grain that MinHash/SimHash operate at).  The scalable stand-in for
     their suffix array is fingerprint sampling in the winnowing / MOSS
-    lineage (Schleimer et al. 2003): hash every ``window``-char sliding
-    window of the normalized text, keep the deterministic sample whose
-    md5 starts with ``sample_prefix`` (1/16 of windows), and report
-    every sampled fingerprint seen in more than one document.
+    lineage (Schleimer et al. 2003): hash every ``SUBSTRING_WINDOW``-char
+    sliding window of the normalized text, keep the deterministic sample
+    whose md5 starts with ``SUBSTRING_SAMPLE_PREFIX`` (1/16 of windows),
+    and report every sampled fingerprint seen in more than one document.
 
     Output: ``(h, n_docs, n_occ)`` per shared fingerprint, ordered
     (n_docs DESC, n_occ DESC, h ASC) — the discovery table a cutting
@@ -1296,8 +1290,9 @@ def shared_substrings(
         F.explode(F.array(F.struct(_norm().alias("t")))).alias("b"),
     ).select("doc_id", F.col("b.t").alias("t"))
     t = F.col("t")
+    window, prefix = SUBSTRING_WINDOW, SUBSTRING_SAMPLE_PREFIX
     n_win = F.length(t) - window + 1
-    # md5 of every window, 1-based start; texts shorter than ``window``
+    # md5 of every window, 1-based start; texts shorter than a window
     # have none
     wins = F.when(n_win < 1, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -1305,7 +1300,7 @@ def shared_substrings(
             lambda i: F.md5(t.substr(i, F.lit(window))),
         )
     )
-    sel = F.filter(wins, lambda h: h.startswith(sample_prefix))
+    sel = F.filter(wins, lambda h: h.startswith(prefix))
     per_doc = (
         normed.select("doc_id", F.explode(sel).alias("h"))
         .repartition(F.col("h"))

@@ -18,9 +18,7 @@ from ..functions.links import extract_links
 from .pipeline import salted_exchange
 
 
-def run_link_extraction(
-    df: DataFrame, *, num_partitions: int | None = None
-) -> DataFrame:
+def run_link_extraction(df: DataFrame) -> DataFrame:
     """transcripts DataFrame → (conv_id, turn_idx, link_idx, href,
     anchor_text, src_start, src_end), one row per harvested link."""
     # flat mapInPandas instead of array<struct> UDF + explode: building a
@@ -49,7 +47,7 @@ def run_link_extraction(
                     rows["src_end"].append(r["src_end"])
             yield pd.DataFrame(rows)
 
-    return salted_exchange(df, num_partitions).mapInPandas(
+    return salted_exchange(df).mapInPandas(
         _flat,
         schema=(
             "conv_id string, turn_idx int, link_idx int, href string, "

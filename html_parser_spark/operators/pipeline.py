@@ -312,13 +312,11 @@ def run_extraction(
     return extract_stage(df, {"main"}, num_partitions=num_partitions)
 
 
-def run_dom_extraction(
-    df: DataFrame, *, num_partitions: int | None = None
-) -> DataFrame:
+def run_dom_extraction(df: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, main_text, spans, err_count, parse_status,
     n_blocks, n_kept_blocks) — the DOM-heuristic extraction (tree
     builder + text-density scoring)."""
-    return extract_stage(df, {"dom"}, num_partitions=num_partitions)
+    return extract_stage(df, {"dom"})
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
@@ -340,7 +338,7 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
 MAX_TURNS = 4096
 
 
-def assemble_conversations(df: DataFrame, max_turns: int = MAX_TURNS) -> DataFrame:
+def assemble_conversations(df: DataFrame) -> DataFrame:
     """Conversation-level corpus assembly: one row per conversation with
     its turns joined in (conv_id, turn_idx) order — the unit a
     conversation-tuned training run actually consumes.
@@ -357,9 +355,9 @@ def assemble_conversations(df: DataFrame, max_turns: int = MAX_TURNS) -> DataFra
     atomic output unit here, so it must land on one reducer by
     definition.
 
-    ``max_turns`` caps the assembled output (one
+    ``MAX_TURNS`` caps the assembled output (one
     pathological conversation must not widen downstream rows without
-    bound): only the first ``max_turns`` turns are concatenated and
+    bound): only the first ``MAX_TURNS`` turns are concatenated and
     ``overflow=1`` flags the truncation — the parse_status-style signal
     a pipeline uses to route monsters to a dedicated pass.  The cap
     bounds the OUTPUT row, not the collect_list buffer itself; if an
@@ -372,12 +370,12 @@ def assemble_conversations(df: DataFrame, max_turns: int = MAX_TURNS) -> DataFra
         .groupBy("conv_id")
         .agg(F.collect_list(F.struct("turn_idx", "text")).alias("turns"))
     )
-    kept = F.slice(F.array_sort("turns"), 1, max_turns)
+    kept = F.slice(F.array_sort("turns"), 1, MAX_TURNS)
     full_text = F.concat_ws("\n", F.transform(kept, lambda s: s["text"]))
     return collected.select(
         "conv_id",
         F.size("turns").cast("long").alias("n_turns"),
         F.md5(full_text).alias("text_md5"),
         F.length(full_text).cast("long").alias("n_chars"),
-        (F.size("turns") > max_turns).cast("long").alias("overflow"),
+        (F.size("turns") > MAX_TURNS).cast("long").alias("overflow"),
     ).orderBy("conv_id")

@@ -43,11 +43,11 @@ SAMPLE_SEED = "sample-v1"
 MIX_SEED = "mix-v1"
 
 
-def corpus_splits(docs: DataFrame, seed: str = SPLIT_SEED) -> DataFrame:
+def corpus_splits(docs: DataFrame) -> DataFrame:
     """Assign every document to train/val/test by hash bucket, plus the
     independent seeded Bernoulli sample flag in the same projection.
 
-    The seed string versions the split: bump it and the whole corpus
+    ``SPLIT_SEED`` versions the split: bump it and the whole corpus
     reshuffles; keep it and incremental ingests extend each split
     consistently.  Holdout leakage across near-duplicate documents is the
     dedup family's job (cluster keep-list first, then split).
@@ -60,7 +60,7 @@ def corpus_splits(docs: DataFrame, seed: str = SPLIT_SEED) -> DataFrame:
     one md5-bucket expression over the same scan, so they share one
     gate row, and the DuckDB twin computes the identical bucket
     bit-for-bit."""
-    b = _bucket(seed, 100)
+    b = _bucket(SPLIT_SEED, 100)
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
         .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))
@@ -93,12 +93,9 @@ DEFAULT_MIX = {"src0": 10000, "src1": 5000, "src2": 2500}
 DEFAULT_MIX_REST = 1000
 
 
-def mix_documents(
-    docs: DataFrame,
-    rates_bp: dict[str, int] | None = None,
-    default_bp: int = DEFAULT_MIX_REST,
-) -> DataFrame:
-    """Domain mixing: per-source Bernoulli rates (basis points) in one
+def mix_documents(docs: DataFrame) -> DataFrame:
+    """Domain mixing: per-source Bernoulli rates (basis points,
+    ``DEFAULT_MIX``; ``DEFAULT_MIX_REST`` for every other source) in one
     deterministic pass — the pretraining knob that up-weights curated
     sources and down-samples crawl bulk.
 
@@ -107,9 +104,8 @@ def mix_documents(
     scan's codegen.  Same md5-bucket machinery as the ``in_sample`` flag
     of :func:`corpus_splits`, independent seed, so mixing composes with
     (is independent of) the split assignment."""
-    rates = DEFAULT_MIX if rates_bp is None else rates_bp
-    rate = F.lit(default_bp)
-    for src, bp in sorted(rates.items()):
+    rate = F.lit(DEFAULT_MIX_REST)
+    for src, bp in sorted(DEFAULT_MIX.items()):
         rate = F.when(F.col("source") == src, F.lit(bp)).otherwise(rate)
     return docs.where(_bucket(MIX_SEED, 10000) < rate).select(
         "doc_id",
@@ -118,15 +114,12 @@ def mix_documents(
     )
 
 
-def mix_documents_sql(
-    rates_bp: dict[str, int] | None = None, default_bp: int = DEFAULT_MIX_REST
-) -> str:
-    rates = DEFAULT_MIX if rates_bp is None else rates_bp
+def mix_documents_sql() -> str:
     arms = " ".join(
         f"WHEN source = '{src}' THEN {bp}"
-        for src, bp in sorted(rates.items(), reverse=True)
+        for src, bp in sorted(DEFAULT_MIX.items(), reverse=True)
     )
-    rate = f"CASE {arms} ELSE {default_bp} END"
+    rate = f"CASE {arms} ELSE {DEFAULT_MIX_REST} END"
     return f"""
     SELECT doc_id, source, CAST({rate} AS BIGINT) AS rate_bp
     FROM documents

@@ -372,11 +372,10 @@ def planted_values_sql() -> str:
 
 
 def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = NEAR_DUP_THRESHOLD,
-    include_planted: bool = False,
+    emb: DataFrame, include_planted: bool = False
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs above ``threshold``.
+    """Embedding-cosine near-duplicate pairs at or above
+    ``NEAR_DUP_THRESHOLD``.
 
     Scale path (round-2 rewrite; round 1 shipped the all-pairs theta join
     = BroadcastNestedLoopJoin, quadratic): banded random-hyperplane LSH —
@@ -452,7 +451,7 @@ def embedding_near_dups(
         pairs.join(ea, "vec_a")
         .join(eb, "vec_b")
         .select("vec_a", "vec_b", sim.alias("sim_exact"))
-        .filter(F.col("sim_exact") >= threshold)
+        .filter(F.col("sim_exact") >= NEAR_DUP_THRESHOLD)
         .select(
             "vec_a",
             "vec_b",
@@ -461,9 +460,7 @@ def embedding_near_dups(
     )
 
 
-def embedding_near_dups_allpairs(
-    emb: DataFrame, threshold: float = NEAR_DUP_THRESHOLD
-) -> DataFrame:
+def embedding_near_dups_allpairs(emb: DataFrame) -> DataFrame:
     """Exact all-pairs form (theta join → BroadcastNestedLoopJoin).
 
     CI-scale truth for the recall test ONLY — quadratic, never the shipped
@@ -476,7 +473,7 @@ def embedding_near_dups_allpairs(
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", sim.alias("sim_exact"))
-        .filter(F.col("sim_exact") >= threshold)
+        .filter(F.col("sim_exact") >= NEAR_DUP_THRESHOLD)
         .select(
             "vec_a",
             "vec_b",

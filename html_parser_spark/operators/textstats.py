@@ -556,7 +556,7 @@ def repetition_filters_sql() -> str:
     """
 
 
-def ngram_topk_sql(n_top: int = NGRAM_TOP) -> str:
+def ngram_topk_sql() -> str:
     return f"""
     WITH g AS (
       SELECT unnest(
@@ -571,15 +571,13 @@ def ngram_topk_sql(n_top: int = NGRAM_TOP) -> str:
       FROM documents)
     SELECT gram, count(*) AS n_occurrences
     FROM g GROUP BY gram
-    ORDER BY n_occurrences DESC, gram LIMIT {n_top}
+    ORDER BY n_occurrences DESC, gram LIMIT {NGRAM_TOP}
     """
 
 
-def vocab_coverage(
-    docs: DataFrame, vocab_k: int = VOCAB_K
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame) -> DataFrame:
     """CCNet/C4-family vocabulary-coverage quality signal: build the
-    top-``vocab_k`` corpus vocabulary (by total occurrence count, ties
+    top-``VOCAB_K`` corpus vocabulary (by total occurrence count, ties
     broken lexicographically so both engines agree), then score every
     document by how much of it falls OUTSIDE that vocabulary —
     high-OOV documents are gibberish, boilerplate soup, or the wrong
@@ -613,7 +611,7 @@ def vocab_coverage(
         words.groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("w"))
-        .limit(vocab_k)
+        .limit(VOCAB_K)
         .select("w", "cnt")
     )
     return (

@@ -33,15 +33,16 @@ def test_ngram_topk_matches_duckdb(spark, duck):
     assert len(srows) == 20
 
 
-def test_ngram_topk_counts_all_occurrences(spark, duck):
+def test_ngram_topk_counts_all_occurrences(spark, duck, monkeypatch):
     """Unlike dedup shingles, frequency counting must NOT dedupe grams
     within a document."""
+    monkeypatch.setattr(textstats, "NGRAM_TOP", 10**9)
     total_grams = duck.execute(
         "SELECT sum(greatest(len(string_split(trim(regexp_replace(lower(text),"
         " '[ \t\n\x0b\f\r]+', ' ', 'g')), ' ')) - 2, 0)) FROM documents"
     ).fetchone()[0]
     counted = duck.execute(
-        f"SELECT sum(n_occurrences) FROM ({textstats.ngram_topk_sql(n_top=10**9)})"
+        f"SELECT sum(n_occurrences) FROM ({textstats.ngram_topk_sql()})"
     ).fetchone()[0]
     assert counted == total_grams
 
@@ -231,7 +232,7 @@ def test_repetition_filters_random_docs_vs_python(spark):
         assert have == want, (doc_id, repr(text), have, want)
 
 
-def test_vocab_coverage_semantics(spark):
+def test_vocab_coverage_semantics(spark, monkeypatch):
     """Crafted corpus with a known top-K vocabulary: common words are
     in-vocab, rare words are OOV, and the basis-point floor is exact."""
     docs = spark.createDataFrame(
@@ -243,9 +244,8 @@ def test_vocab_coverage_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {
-        r.doc_id: r for r in textstats.vocab_coverage(docs, vocab_k=3).collect()
-    }
+    monkeypatch.setattr(textstats, "VOCAB_K", 3)
+    rows = {r.doc_id: r for r in textstats.vocab_coverage(docs).collect()}
     assert (rows[1].n_words, rows[1].n_oov, rows[1].oov_bp) == (5, 0, 0)
     assert (rows[2].n_words, rows[2].n_oov, rows[2].oov_bp) == (4, 1, 2500)
     assert (rows[3].n_words, rows[3].n_oov, rows[3].oov_bp) == (6, 2, 3333)
@@ -268,11 +268,14 @@ def test_vocab_coverage_broadcasts_vocabulary(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_shared_substrings_semantics(spark):
+def test_shared_substrings_semantics(spark, monkeypatch):
     """Two documents embedding an identical 60-char span must share all
     its 40-char window fingerprints; an unrelated doc contributes none.
     Sampling disabled (empty prefix) so the expectation is exact."""
     from html_parser_spark.operators.dedup import shared_substrings
+
+    monkeypatch.setattr(dedup, "SUBSTRING_WINDOW", 40)
+    monkeypatch.setattr(dedup, "SUBSTRING_SAMPLE_PREFIX", "")
 
     boiler = "this exact licensing banner repeats verbatim across documents."
     assert len(boiler) == 62
@@ -285,7 +288,7 @@ def test_shared_substrings_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    rows = shared_substrings(docs, window=40, sample_prefix="").collect()
+    rows = shared_substrings(docs).collect()
     # every 40-window fully inside the 62-char boiler span is shared;
     # windows straddling the differing prefixes/suffixes are not
     assert len(rows) >= 62 - 40 + 1
@@ -295,11 +298,13 @@ def test_shared_substrings_semantics(spark):
     assert keys == sorted(keys)
 
 
-def test_shared_substrings_short_docs_yield_no_windows(spark):
+def test_shared_substrings_short_docs_yield_no_windows(spark, monkeypatch):
     from html_parser_spark.operators.dedup import shared_substrings
 
+    monkeypatch.setattr(dedup, "SUBSTRING_WINDOW", 40)
+    monkeypatch.setattr(dedup, "SUBSTRING_SAMPLE_PREFIX", "")
     docs = spark.createDataFrame([(1, "tiny"), (2, "tiny")], "doc_id long, text string")
-    assert shared_substrings(docs, window=40, sample_prefix="").count() == 0
+    assert shared_substrings(docs).count() == 0
 
 
 def test_operators_on_empty_and_degenerate_corpora(spark, tmp_path):

@@ -52,14 +52,14 @@ def test_bridge_merges_components(spark):
     assert sum(v[1] for v in got.values()) == 1
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "MAX_ITER", 2)  # label needs 5 hops down the chain
     with pytest.raises(RuntimeError):
         _cc_long = dedup.connected_components(
             spark.createDataFrame([(i,) for i in range(6)], "doc_id long"),
             spark.createDataFrame(
                 [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
             ),
-            max_iter=2,  # label needs 5 hops down the chain
         ).collect()
 
 

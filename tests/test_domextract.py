@@ -77,14 +77,16 @@ def test_whitespace_normalized():
     assert r["main_text"].startswith("a b c d")
 
 
-def test_spark_udf_matches_pure_python(spark):
+def test_spark_udf_matches_pure_python(spark, monkeypatch):
     from html_parser_spark.fixtures import ensure_transcripts
+    from html_parser_spark.operators import pipeline
     from html_parser_spark.operators.pipeline import run_dom_extraction
 
+    monkeypatch.setattr(pipeline, "exchange_partitions", lambda turns: 4)
     t = spark.read.parquet(ensure_transcripts(0.001)).limit(200)
     got = {
         (r["conv_id"], r["turn_idx"]): r["main_text"]
-        for r in run_dom_extraction(t, num_partitions=4).collect()
+        for r in run_dom_extraction(t).collect()
     }
     for row in t.select("conv_id", "turn_idx", "text").collect():
         exp = dom_extract(row["text"])["main_text"]

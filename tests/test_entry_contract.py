@@ -1,6 +1,9 @@
 """Mirror of the driver's correctness gate: run every ``queries()`` entry
 on Spark and its ``oracle_sql()`` twin on DuckDB over the same parquet,
-compare row count, column names, and order-insensitive values.
+compare row count, column names, and order-insensitive values.  Each
+row's final physical plan must also run Python once per row: no Python
+stage reads another Python stage's output without an exchange or a
+cache between them.
 
 Runs at sf0.001 by default for speed (the driver uses sf0.01 — set
 SPARK_GRAFT_TEST_SF_DIR to match it exactly)."""
@@ -54,6 +57,44 @@ def _rowset(cols, rows):
     )
 
 
+# Physical operators that run Python (MapInPandas, ArrowEvalPython,
+# FlatMapGroupsInPandas, AggregateInPandas, ...) all live in this package.
+PYTHON_EXEC = "org.apache.spark.sql.execution.python."
+
+
+def python_chains(plan):
+    """``"<upper> over <lower>"`` for every pair of Python exec nodes in
+    the py4j physical ``plan`` where ``lower``'s rows reach ``upper``
+    without crossing an exchange or an in-memory table scan (a checkpoint
+    scan of an existing RDD is a leaf).  Walks into the final plan of
+    each ``AdaptiveSparkPlanExec``, each query stage's plan, each reused
+    exchange's child and each cached relation's plan."""
+    chains, todo = [], [(plan, None)]
+    while todo:
+        node, above = todo.pop()
+        cls = node.getClass().getName()
+        name = cls.rsplit(".", 1)[-1]
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif name == "ReusedExchangeExec":
+            kids = [node.child()]
+        elif name == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        else:
+            seq = node.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        if cls.startswith(PYTHON_EXEC):
+            if above is not None:
+                chains.append(f"{above} over {name}")
+            above = name
+        if name.endswith("ExchangeExec") or name == "InMemoryTableScanExec":
+            above = None
+        todo.extend((kid, above) for kid in kids)
+    return chains
+
+
 ORACLED = sorted(entry_mod.oracle_sql())
 
 
@@ -63,6 +104,8 @@ def test_query_matches_oracle(spark, duck, name):
     sdf = q(spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
+    chains = python_chains(sdf._jdf.queryExecution().executedPlan())
+    assert not chains, f"{name}: Python stages chained without an exchange: {chains}"
 
     res = duck.execute(entry_mod.oracle_sql()[name])
     dcols = [d[0] for d in res.description]
@@ -75,6 +118,18 @@ def test_query_matches_oracle(spark, duck, name):
         (a, b) for a, b in zip(sset, dset) if a != b
     ]
     assert not mismatches, f"{name}: {len(mismatches)} value mismatches; first: {mismatches[0]}"
+
+
+def test_plan_check_flags_chained_python_stages(spark):
+    """The plan check can fail: a ``mapInPandas`` over a
+    ``mapInPandas`` runs Python twice per row with no exchange between."""
+    def ident(batches):
+        yield from batches
+
+    df = spark.range(4).mapInPandas(ident, "id long").mapInPandas(ident, "id long")
+    df.collect()
+    assert python_chains(df._jdf.queryExecution().executedPlan()) == [
+        "MapInPandasExec over MapInPandasExec"]
 
 
 def test_every_query_is_oracled_within_the_snapshot():

@@ -1,13 +1,16 @@
 """Knob census: every defaulted parameter of a top-level function in the
-package or the entry module is set by some call.
+package or the entry module is set by some program call.
 
 A parameter that no call sets is an operating point, not a knob: it
 belongs in a module constant that the operator and its DuckDB twin both
-read.  The scan is static (AST): a parameter counts as set when a call by
-the same function name anywhere in the package, ``tools/``,
-``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or ``tests/`` passes
-it by keyword, passes enough positionals to reach it, or unpacks ``*`` /
-``**`` arguments.  Deployment settings are allowed without a caller.
+read in their bodies.  The scan is static (AST): a parameter counts as
+set when a call by the same function name in the package or a program
+file (``PROGRAM_ROOTS``: ``__spark_entry__.py``, ``bench.py``,
+``tools/`` and non-test ``perfbench/`` files) passes it by keyword,
+passes enough positionals to reach it, or unpacks ``*`` / ``**``
+arguments.  Tests are not callers: a test that needs another value
+monkeypatches the constant, which reaches the operator and its twin at
+once.  Deployment settings are allowed without a caller.
 
 Every command line in ``tools/`` and ``bench.py`` gets the same census:
 a flag is either a deployment setting or passed by some test or by
@@ -22,10 +25,10 @@ outside ``sources/tables.py``, whose ``corpus_path`` is the one map
 from a table name to its file.
 
 A fifth census is reachability: every top-level definition of the
-package is reached from a program (the entry module, ``bench.py``,
-``tools/``, non-test ``perfbench/`` files, or a package module's
-module-level statements), transitively through the bodies of reached
-definitions, or it is on ``KEEP`` with the reason a test needs it.
+package is reached from a program (``PROGRAM_ROOTS``, or a package
+module's module-level statements), transitively through the bodies of
+reached definitions, or it is on ``KEEP`` with the reason a test needs
+it.
 """
 import ast
 import glob
@@ -43,14 +46,20 @@ DEPLOYMENT_FLAGS = {
     "--input", "--work", "--output", "--corpus", "--batch-input", "--sf-dir",
     "--master", "--shuffle-partitions", "--ingest-label",
 }
-SCRIPTS = sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"),
-                           recursive=True)) + [os.path.join(REPO, "bench.py")]
+PACKAGE = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
+                           recursive=True))
+ENTRY = os.path.join(REPO, "__spark_entry__.py")
+BENCH = os.path.join(REPO, "bench.py")
+TOOLS = sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"), recursive=True))
+# The files a run starts from; tests are not among them.
+PROGRAM_ROOTS = [ENTRY, BENCH] + TOOLS + [
+    p for p in sorted(glob.glob(os.path.join(REPO, "perfbench", "**", "*.py"),
+                                recursive=True))
+    if not os.path.basename(p).startswith("test_")]
 
-DEFINED = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
-                           recursive=True)) + [os.path.join(REPO, "__spark_entry__.py")]
-CALLERS = DEFINED + [os.path.join(REPO, "bench.py")] + [
-    p for d in ("tools", "perfbench", "tests")
-    for p in glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)]
+SCRIPTS = TOOLS + [BENCH]
+DEFINED = PACKAGE + [ENTRY]
+CALLERS = PACKAGE + PROGRAM_ROOTS
 
 
 def _parse(path):
@@ -108,8 +117,9 @@ def unset_parameters():
 def test_every_defaulted_parameter_has_a_caller():
     unset = unset_parameters()
     assert not unset, (
-        f"{len(unset)} defaulted parameters are set by no call; make each a "
-        "module constant shared with its DuckDB twin:\n  " + "\n  ".join(unset))
+        f"{len(unset)} defaulted parameters are set by no program call; drop "
+        "each and read the module constant; tests monkeypatch it:\n  "
+        + "\n  ".join(unset))
 
 
 def _strings(path):
@@ -148,8 +158,7 @@ def test_every_job_flag_is_deployment_or_tested():
 
 # Bodies this small (a one-line return, a guard) may repeat by design.
 MIN_BODY_NODES = 25
-PROGRAM = DEFINED + sorted(glob.glob(os.path.join(REPO, "tools", "**", "*.py"),
-                                     recursive=True))
+PROGRAM = DEFINED + TOOLS
 
 
 def duplicate_bodies():
@@ -217,14 +226,6 @@ KEEP = {
     "serialize_tree": "html5lib tree-dump format the treebuilder tests compare",
     "TokenizeUDTF": "the only UDTF surface (COVERAGE UDF-surface row)",
 }
-PACKAGE = sorted(glob.glob(os.path.join(REPO, "html_parser_spark", "**", "*.py"),
-                           recursive=True))
-PROGRAM_ROOTS = [os.path.join(REPO, "__spark_entry__.py"),
-                 os.path.join(REPO, "bench.py")] + sorted(
-    glob.glob(os.path.join(REPO, "tools", "**", "*.py"), recursive=True)) + [
-    p for p in sorted(glob.glob(os.path.join(REPO, "perfbench", "**", "*.py"),
-                                recursive=True))
-    if not os.path.basename(p).startswith("test_")]
 
 
 def _names(node):

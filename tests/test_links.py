@@ -71,19 +71,19 @@ def test_spans_cover_anchor_text_runs():
     assert (e["src_start"], e["src_end"]) == (-1, -1)
 
 
-def test_spark_matches_pure_python(spark):
+def test_spark_matches_pure_python(spark, monkeypatch):
     rows = [
         ("c0", 0, 'x <a href="/a?p=1&amp;q=2">link &amp; co</a> y <a href=b>z</a>'),
         ("c0", 1, "no links here"),
         ("c1", 0, '<a href=only>open till eof'),
         ("c1", 1, None),
     ]
+    from html_parser_spark.operators import pipeline
     from html_parser_spark.operators.linkops import run_link_extraction
 
+    monkeypatch.setattr(pipeline, "exchange_partitions", lambda turns: 4)
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    got = sorted(
-        map(tuple, run_link_extraction(df, num_partitions=4).collect())
-    )
+    got = sorted(map(tuple, run_link_extraction(df).collect()))
     want = sorted(
         (cid, tid, r["link_idx"], r["href"], r["anchor_text"],
          r["src_start"], r["src_end"])

@@ -269,7 +269,7 @@ def test_assemble_conversations_orders_turns(spark):
     assert got["c2"].text_md5 == hashlib.md5(b"solo").hexdigest()
 
 
-def test_assemble_conversations_caps_mega_conversation(spark):
+def test_assemble_conversations_caps_mega_conversation(spark, monkeypatch):
     """A pathological conversation past max_turns is truncated to the
     first max_turns turns and flagged overflow=1; normal conversations
     pass through overflow=0 untouched (VERDICT r03 item 7)."""
@@ -282,7 +282,8 @@ def test_assemble_conversations_caps_mega_conversation(spark):
     df = spark.createDataFrame(
         mega + tiny, "conv_id string, turn_idx int, text string"
     )
-    got = {r.conv_id: r for r in assemble_conversations(df, max_turns=4).collect()}
+    monkeypatch.setattr(pipeline, "MAX_TURNS", 4)
+    got = {r.conv_id: r for r in assemble_conversations(df).collect()}
     kept = "\n".join(f"t{i}" for i in range(4))
     assert got["mega"].n_turns == 10           # true size still reported
     assert got["mega"].overflow == 1

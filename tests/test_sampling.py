@@ -53,11 +53,12 @@ def test_splits_partition_the_corpus(spark):
     assert abs(frac["test"] - 0.05) < 0.04
 
 
-def test_split_is_seed_versioned_and_deterministic(spark):
+def test_split_is_seed_versioned_and_deterministic(spark, monkeypatch):
     a = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
     b = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
     assert a == b
-    c = sorted(map(tuple, sampling.corpus_splits(_docs(spark), seed="split-v2").collect()))
+    monkeypatch.setattr(sampling, "SPLIT_SEED", "split-v2")
+    c = sorted(map(tuple, sampling.corpus_splits(_docs(spark)).collect()))
     assert a != c  # bumping the seed reshuffles
     assert [r[0] for r in a] == [r[0] for r in c]  # ...but covers the same docs
 
@@ -81,20 +82,24 @@ def test_plans_have_no_shuffle(spark):
     assert "Exchange" not in plan
 
 
-def test_chunking_matches_duckdb(spark, duck):
+def test_chunking_matches_duckdb(spark, duck, monkeypatch):
     from html_parser_spark.operators import chunking
 
     for ct, ov in ((128, 32), (16, 4)):
-        srows = sorted(map(tuple, chunking.chunk_documents(_docs(spark), ct, ov).collect()))
-        drows = sorted(map(tuple, duck.execute(chunking.chunk_documents_sql(chunk_tokens=ct, overlap=ov)).fetchall()))
+        monkeypatch.setattr(chunking, "DEFAULT_CHUNK", ct)
+        monkeypatch.setattr(chunking, "DEFAULT_OVERLAP", ov)
+        srows = sorted(map(tuple, chunking.chunk_documents(_docs(spark)).collect()))
+        drows = sorted(map(tuple, duck.execute(chunking.chunk_documents_sql()).fetchall()))
         assert srows == drows, (ct, ov)
         assert len(srows) >= 500  # every doc yields >= 1 chunk
 
 
-def test_chunking_window_invariants(spark):
+def test_chunking_window_invariants(spark, monkeypatch):
     from html_parser_spark.operators import chunking
 
-    rows = chunking.chunk_documents(_docs(spark), 16, 4).collect()
+    monkeypatch.setattr(chunking, "DEFAULT_CHUNK", 16)
+    monkeypatch.setattr(chunking, "DEFAULT_OVERLAP", 4)
+    rows = chunking.chunk_documents(_docs(spark)).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -125,31 +130,30 @@ def test_chunking_window_invariants(spark):
         assert covered == set(range(n))
 
 
-def test_chunking_rejects_bad_overlap(spark):
+def test_chunking_rejects_bad_overlap(spark, monkeypatch):
     from html_parser_spark.operators import chunking
 
+    monkeypatch.setattr(chunking, "DEFAULT_CHUNK", 16)
+    monkeypatch.setattr(chunking, "DEFAULT_OVERLAP", 16)
     with pytest.raises(ValueError):
-        chunking.chunk_documents(_docs(spark), 16, 16)
+        chunking.chunk_documents(_docs(spark))
 
 
-def test_mix_matches_duckdb(spark, duck):
+def test_mix_matches_duckdb(spark, duck, monkeypatch):
     srows = sorted(map(tuple, sampling.mix_documents(_docs(spark)).collect()))
     drows = sorted(map(tuple, duck.execute(sampling.mix_documents_sql()).fetchall()))
     assert srows == drows
-    custom = {"src3": 10000, "src4": 0}
-    srows = sorted(
-        map(tuple, sampling.mix_documents(_docs(spark), rates_bp=custom, default_bp=500).collect())
-    )
-    drows = sorted(
-        map(tuple, duck.execute(sampling.mix_documents_sql(rates_bp=custom, default_bp=500)).fetchall())
-    )
+    monkeypatch.setattr(sampling, "DEFAULT_MIX", {"src3": 10000, "src4": 0})
+    monkeypatch.setattr(sampling, "DEFAULT_MIX_REST", 500)
+    srows = sorted(map(tuple, sampling.mix_documents(_docs(spark)).collect()))
+    drows = sorted(map(tuple, duck.execute(sampling.mix_documents_sql()).fetchall()))
     assert srows == drows
 
 
-def test_mix_respects_rates(spark):
-    rows = sampling.mix_documents(
-        _docs(spark), rates_bp={"src0": 10000, "src1": 0}, default_bp=0
-    ).collect()
+def test_mix_respects_rates(spark, monkeypatch):
+    monkeypatch.setattr(sampling, "DEFAULT_MIX", {"src0": 10000, "src1": 0})
+    monkeypatch.setattr(sampling, "DEFAULT_MIX_REST", 0)
+    rows = sampling.mix_documents(_docs(spark)).collect()
     srcs = {r.source for r in rows}
     assert srcs == {"src0"}  # rate-0 sources vanish, rate-10000 keeps all
     import duckdb as d
@@ -162,11 +166,12 @@ def test_mix_respects_rates(spark):
     assert len(rows) == n_src0
 
 
-def test_mix_independent_of_split(spark):
+def test_mix_independent_of_split(spark, monkeypatch):
     """Different seeds: the mixing decision must not correlate with the
     split assignment (both are md5 buckets but over different keys)."""
-    mix_ids = {r.doc_id for r in sampling.mix_documents(
-        _docs(spark), rates_bp={}, default_bp=5000).collect()}
+    monkeypatch.setattr(sampling, "DEFAULT_MIX", {})
+    monkeypatch.setattr(sampling, "DEFAULT_MIX_REST", 5000)
+    mix_ids = {r.doc_id for r in sampling.mix_documents(_docs(spark)).collect()}
     splits = {r.doc_id: r.split for r in sampling.corpus_splits(_docs(spark)).collect()}
     picked_train = sum(1 for i in mix_ids if splits[i] == "train")
     # ~90% of the mixed half should be train; gross correlation would skew it

@@ -11,6 +11,7 @@ nested-loop / cartesian join.
 import numpy as np
 import pytest
 
+from html_parser_spark.operators import similarity
 from html_parser_spark.operators.similarity import (
     embedding_near_dups,
     embedding_near_dups_allpairs,
@@ -40,17 +41,19 @@ def _pairs(df):
     return {(r.vec_a, r.vec_b, r.cosine_bp) for r in df.collect()}
 
 
-def test_lsh_near_dups_match_allpairs_on_planted(planted):
-    exact = _pairs(embedding_near_dups_allpairs(planted, threshold=0.9))
-    lsh = _pairs(embedding_near_dups(planted, threshold=0.9))
+def test_lsh_near_dups_match_allpairs_on_planted(planted, monkeypatch):
+    monkeypatch.setattr(similarity, "NEAR_DUP_THRESHOLD", 0.9)
+    exact = _pairs(embedding_near_dups_allpairs(planted))
+    lsh = _pairs(embedding_near_dups(planted))
     assert len(exact) >= 15  # the plant actually produced near-dups
     assert lsh == exact
 
 
-def test_lsh_near_dups_recall_at_lower_threshold(planted):
+def test_lsh_near_dups_recall_at_lower_threshold(planted, monkeypatch):
     """Pairs barely above the threshold (worst case for band recall)."""
-    exact = _pairs(embedding_near_dups_allpairs(planted, threshold=0.87))
-    lsh = _pairs(embedding_near_dups(planted, threshold=0.87))
+    monkeypatch.setattr(similarity, "NEAR_DUP_THRESHOLD", 0.87)
+    exact = _pairs(embedding_near_dups_allpairs(planted))
+    lsh = _pairs(embedding_near_dups(planted))
     assert lsh == exact
 
 
