@@ -20,9 +20,12 @@ Scale shape:
   the node set, the out-degrees and every round read stored blocks and
   never re-run the link-harvest UDF that produced the edges.  Edges
   join ranks on the source key, contributions aggregate on the
-  destination key, and a ``localCheckpoint`` every few rounds truncates
-  the ranks' lineage.  The dangling mass is a lazy 1-row aggregate, so
-  no round runs a Spark action of its own.
+  destination key, and a ``localCheckpoint`` every round truncates the
+  ranks' lineage, so every round after the first runs one plan of one
+  shape and reuses the code Spark generated for it.  The dangling mass
+  is a lazy 1-row aggregate inside that plan, never a value collected
+  to the driver: Spark writes literal values into the generated Java,
+  so a per-round literal would compile new classes every round.
 
 PageRank is integer-only because float summation order differs across
 engines, so a float rank could not ride the bit-exact md5 gate (and the
@@ -127,9 +130,6 @@ def link_target_stats_sql(golden_path: str, top_k: int = 100) -> str:
 FP_SCALE = 10**12
 FP_DAMP_NUM = 85
 FP_DAMP_DEN = 100
-# localCheckpoint the ranks every this many rounds, so no round's plan
-# holds more than this many rounds of joins for Catalyst to re-analyze
-CHECKPOINT_EVERY = 3
 
 
 def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
@@ -155,8 +155,11 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
     the lineage that produced ``edges`` (the link-harvest UDF).
     Physical shape per round: edges ⋈ ranks on src (both sides keyed by
     node id), groupBy dst partial+final agg, one lazy 1-row dangling
-    aggregate.  Returns (node, rank_fp) for every node that appears in
-    the graph."""
+    aggregate, and a checkpoint every round: each round reads the
+    previous round's stored ranks, so rounds 2..k plan the same shape
+    and hit Spark's generated-code cache instead of compiling a growing
+    multi-round plan.  Returns (node, rank_fp) for every node that
+    appears in the graph."""
     spark = edges.sparkSession
     edges = edges.select(
         F.col(edges.columns[0]).cast("string").alias("src"),
@@ -188,16 +191,13 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
     ranks = nodes.select(
         "node", F.lit(FP_SCALE // n_nodes).cast("long").alias("rank_fp")
     )
-    prev_ckpt = None
     for i in range(iterations):
         # ONE ranks⋈out_deg join per round feeds both the dangling mass
         # and the per-edge shares
         with_deg = ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
         # dangling mass: rank held by nodes with no out-edges — a lazy
-        # 1-row aggregate broadcast into the update instead of a per-round
-        # .collect(): each round adds plan depth but NO action, so the
-        # uncheckpointed lineage is evaluated once per checkpoint window
-        # rather than re-run by every round's driver scalar
+        # 1-row aggregate broadcast into the update, never a .collect()ed
+        # scalar, whose per-round literal would compile new classes
         dangling = with_deg.filter(F.col("deg").isNull()).agg(
             F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling")
         )
@@ -208,22 +208,20 @@ def pagerank_fixed(edges: DataFrame, *, iterations: int = 4) -> DataFrame:
             F.col("dst").alias("node"), F.col("share")
         )
         summed = contribs.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (
+        new_ranks = (
             nodes.join(summed, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select("node", update.alias("rank_fp"))
+            .localCheckpoint()
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
-            new_ranks = ranks.localCheckpoint()
-            # the new checkpoint is materialized; the superseded one's
-            # blocks are dead weight (unpersist() alone is a no-op on
-            # local checkpoints — see free_local_checkpoint)
-            if prev_ckpt is not None:
-                free_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_ranks
-            ranks = new_ranks
-    # the returned frame reads only its own checkpoint (the last round
-    # always checkpoints) or, with iterations=0, nodes — free the rest
+        # the new checkpoint is materialized; the superseded one's
+        # blocks are dead weight (unpersist() alone is a no-op on
+        # local checkpoints — see free_local_checkpoint)
+        if i > 0:
+            free_local_checkpoint(ranks)
+        ranks = new_ranks
+    # the returned frame reads only its own checkpoint or, with
+    # iterations=0, nodes — free the rest
     free_local_checkpoint(edges)
     free_local_checkpoint(out_deg)
     if iterations > 0:

@@ -79,6 +79,18 @@ def get_spark(
     return b.getOrCreate()
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Spark has compiled (through Janino) in this JVM
+    since it started: the count of Spark's ``CodegenMetrics`` compilation
+    histogram.  A plan whose generated code is already in Spark's
+    codegen cache compiles nothing, so the change of this count across
+    a piece of work shows whether it reused generated code.  One class
+    can count twice in local mode: the cache is keyed by class loader,
+    and the driver and the executor's task threads use different ones."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def free_local_checkpoint(df) -> bool:
     """Best-effort release of a ``localCheckpoint()``'ed DataFrame's
     storage blocks.

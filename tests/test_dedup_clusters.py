@@ -305,8 +305,8 @@ def test_pagerank_releases_superseded_checkpoints(spark):
     )
     spark.catalog.clearCache()
     base = n_stored()
-    # 9 rounds at CHECKPOINT_EVERY=3 → 3 checkpoints; only the final
-    # one (the returned frame) may remain, nodes/out_deg must be freed
+    # 9 rounds → 9 checkpoints, one per round; only the final one (the
+    # returned frame) may remain, nodes/out_deg must be freed
     ranks = pagerank_fixed(edges, iterations=9)
     total = sum(r.rank_fp for r in ranks.collect())
     assert abs(total - FP_SCALE) <= FP_SCALE * 1e-3

@@ -12,6 +12,7 @@ from html_parser_spark.operators.linkrank import (
     link_target_stats_sql,
     pagerank_fixed,
 )
+from html_parser_spark.plans.session import codegen_compiles
 from html_parser_spark.sources.tables import read_corpus
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -190,16 +191,18 @@ def test_pagerank_fixed_tracks_float_and_conserves_integer_mass(spark):
         assert abs(fp[v] / FP_SCALE - fl[v]) < 1e-6
 
 
+EDGES_8 = [
+    ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+    ("d", "c"), ("d", "a"), ("e", "d"), ("c", "f"),
+]
+
+
 def test_pagerank_runs_the_edge_source_once(spark):
     """A PageRank call evaluates its edge frame's lineage once: the
     ids-only edges are materialized before the first action, so the
     node set, the out-degrees and every round read stored blocks
     instead of re-running the upstream Python stage (the link harvest in
     production).  A ``mapInPandas`` source counts the rows it emits."""
-    pairs = [
-        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
-        ("d", "c"), ("d", "a"), ("e", "d"), ("c", "f"),
-    ]
     emitted = spark.sparkContext.accumulator(0)
 
     def source(batches):
@@ -207,11 +210,56 @@ def test_pagerank_runs_the_edge_source_once(spark):
             emitted.add(len(pdf))
             yield pdf
 
-    edges = spark.createDataFrame(pairs, "src string, dst string").mapInPandas(
+    edges = spark.createDataFrame(EDGES_8, "src string, dst string").mapInPandas(
         source, schema="src string, dst string"
     )
     rows = pagerank_fixed(edges, iterations=4).collect()
     assert len(rows) == 6
-    assert emitted.value == len(pairs), (
-        f"the edge source emitted {emitted.value} rows for {len(pairs)} edges"
+    assert emitted.value == len(EDGES_8), (
+        f"the edge source emitted {emitted.value} rows for {len(EDGES_8)} edges"
+    )
+
+
+# classes a 6-round call may compile beyond a repeat of itself, after a
+# 2-round call ran rounds 1 and 2.  Each class counts twice in local
+# mode (Spark keys its codegen cache by class loader, and the driver
+# and the task threads use different ones).  Measured on local[4]:
+# - 4: round 3 reads a checkpoint whose inherited size estimate differs
+#   from round 2's input, so its two broadcast joins can run in the
+#   other order (2 classes); rounds 4+ plan as round 3 does;
+# - 12: AQE numbers whole-stage-codegen stages in the order it plans
+#   them, which follows task timing, and the number is part of the
+#   generated source, so a same-shaped stage compiles again under a new
+#   number; a first 6-round call read up to 10 such compiles.
+# The first call minus its repeat read 0-14 over 25 trials.  With a
+# checkpoint every 3 rounds instead, the first call compiled 36-41 and
+# its repeat 0-17, a gap of 20-36.
+ROUND_CODEGEN_MARGIN = 16
+
+
+def test_pagerank_rounds_reuse_generated_code(spark):
+    """Every PageRank round ends in a checkpoint, so rounds 2..k run one
+    plan shape and reuse its generated classes: after a 2-round call, a
+    6-round call on the same edges compiles no more than a repeat of
+    it does, plus ``ROUND_CODEGEN_MARGIN``.  Rounds left uncheckpointed
+    build a longer plan each round, and each compiles new classes."""
+    # Spark's codegen cache is JVM-wide: empty it, so classes that
+    # earlier PageRank calls compiled cannot hide what these calls need
+    cache = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    cache.setAccessible(True)
+    cache.get(None).invalidateAll()
+    edges = spark.createDataFrame(EDGES_8, "src string, dst string")
+
+    def compiles(iterations):
+        before = codegen_compiles(spark)
+        assert len(pagerank_fixed(edges, iterations=iterations).collect()) == 6
+        return codegen_compiles(spark) - before
+
+    compiles(2)
+    first, repeat = compiles(6), compiles(6)
+    assert first <= repeat + ROUND_CODEGEN_MARGIN, (
+        f"a 6-round call compiled {first} generated classes after a "
+        f"2-round call; its repeat compiled {repeat}"
     )

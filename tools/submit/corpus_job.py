@@ -35,7 +35,8 @@ reader prunes to the columns it uses.  Document ids are
 xxhash64(conv_id, turn_idx) — stable under reprocessing and cheap at
 10^12 turns (collision odds ~n²/2⁶⁵; a 128-bit md5 pair upgrade is the
 documented path if that ever matters).  Metrics: one JSON line per
-stage (rows in/out, wall seconds) in <output>/metrics.json.
+stage (rows in/out, wall seconds, generated classes compiled) in
+<output>/metrics.json.
 
 In local[...] mode the driver heap IS the whole cluster's memory —
 spark-submit defaults to 1g, which OOMs on the clustering persist; pass
@@ -116,7 +117,7 @@ def main() -> None:
         shuffle_partitions=args.shuffle_partitions,
         extra_conf={"spark.io.compression.codec": "zstd"},
     )
-    record = StageRecord()
+    record = StageRecord(spark)
 
     def committed(*paths: str) -> bool:
         """True iff --resume and every artifact has its job-commit

@@ -70,7 +70,7 @@ def main() -> None:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    record = StageRecord()
+    record = StageRecord(spark)
 
     def band_keys(docs):
         """(doc_id, band, band_key) of ``docs`` in the fast MinHash family."""
